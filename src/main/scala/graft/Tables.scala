@@ -80,7 +80,12 @@ object Tables {
     * memory late in the run. persist() gives the same compute-once
     * behavior for a one-shot consumer set while letting the blocks go
     * the moment the last consumer inside `body` finishes. Lazy: the
-    * first action (the writer's own pre-flight) populates the cache. */
+    * first action (the writer's own pre-flight) populates the cache.
+    *
+    * `body` must fully CONSUME `df` before it returns (run its actions,
+    * finish its writes): the blocks are freed on return, so a lazy
+    * DataFrame handed back out of `body` that still depends on `df`
+    * would silently recompute the whole lineage downstream. */
   def withPersisted[T](df: DataFrame)(body: DataFrame => T): T = {
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try body(df) finally df.unpersist(blocking = false)

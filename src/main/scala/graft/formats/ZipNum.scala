@@ -5,7 +5,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.{TaskContext, TaskKilledException}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.connector.write.WriterCommitMessage
 import org.apache.spark.sql.functions._
 
 /** ZipNum cluster format (SURVEY.md §1.4): shards `cdx-NNNNN.gz` of
@@ -36,21 +38,25 @@ object ZipNum {
     * FileSystem listings from seeing half-written state) */
   private[graft] def sideIdxName(pid: Int): String = f".idx-$pid%05d"
 
+  /** shard file name for range partition `pid` */
+  private[graft] def shardName(pid: Int): String = f"cdx-$pid%05d.gz"
+
   /** gzip-member compression threads per shard writer. Blocks are
     * independent members, so deflating them concurrently while writing
     * strictly in block order is free parallelism whenever the job runs
-    * fewer shard tasks than it has cores (the 8-shard local bench; a
-    * 300-shard production write saturates cores with tasks alone and a
-    * pool of 1 would do — the in-flight window keeps memory O(threads ×
-    * block) either way, never O(partition)). */
-  private[graft] val DefaultCompressThreads = 4
+    * fewer shard tasks than it has cores (the 8-shard local bench); when
+    * tasks alone saturate the cores the extra threads only queue. The
+    * in-flight window keeps memory O(threads × block), never
+    * O(partition). */
+  private val DefaultCompressThreads = 4
 
   /** Streams `linesPerBlock`-line gzip members to a shard file while
     * appending one `firstKey\tshard\toffset\tlength` line per block to a
-    * side idx stream. THE shard-writing kernel — the library writer
-    * ([[write]]) and the V2 task writer ([[graft.sources.ZipNumDataWriter]])
-    * both drive it, so block framing, idx accounting, and the compression
-    * pipeline have a single implementation.
+    * side idx stream. THE shard-writing kernel, driven only by the V2
+    * task writer ([[graft.sources.ZipNumDataWriter]]) — every cluster
+    * write ([[write]], [[mergeSorted]], `format("zipnum")`) goes through
+    * that one writer, so block framing, idx accounting, and the
+    * compression pipeline have a single implementation.
     *
     * Global `seq` is NOT assigned here: tasks know only their own blocks.
     * The committer concatenates side files in numeric shard order and
@@ -62,9 +68,8 @@ object ZipNum {
   private[graft] final class BlockStreamWriter(
       openOut: () => java.io.OutputStream,
       openIdx: () => java.io.OutputStream,
-      shardName: String, linesPerBlock: Int,
-      threads: Int = DefaultCompressThreads) {
-    require(linesPerBlock > 0 && threads > 0)
+      shardName: String, linesPerBlock: Int) {
+    require(linesPerBlock > 0)
 
     private var out: java.io.OutputStream = _
     private var idxOut: java.io.OutputStream = _
@@ -90,15 +95,11 @@ object ZipNum {
       val bytes = payload.toByteArray
       val firstKey = pending.head.split(" ", 3).take(2).mkString(" ")
       pending.clear()
-      if (pool == null && threads > 1)
-        pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-      val fut =
-        if (pool == null) java.util.concurrent.CompletableFuture
-          .completedFuture(Gzip.compressMember(bytes))
-        else pool.submit(() => Gzip.compressMember(bytes))
-      inFlight.add((fut, firstKey))
+      if (pool == null)
+        pool = java.util.concurrent.Executors.newFixedThreadPool(DefaultCompressThreads)
+      inFlight.add((pool.submit(() => Gzip.compressMember(bytes)), firstKey))
       // bounded pipeline: drain the oldest once the window is full
-      if (inFlight.size >= threads * 2) drainOne()
+      if (inFlight.size >= DefaultCompressThreads * 2) drainOne()
     }
 
     private def drainOne(): Unit = {
@@ -208,51 +209,25 @@ object ZipNum {
   }
 
   /** Write `df` (must have a `line` STRING column whose prefix is the sort
-    * key) as a ZipNum cluster under `dir`.
+    * key) as a ZipNum cluster under `dir`: the typed entry to the V2
+    * writer (`df.write.format("zipnum")`, [[graft.sources.ZipNumWrite]]).
+    * Catalyst plans the range exchange + per-partition sort; each task
+    * streams one shard into attempt-keyed temps and renames them on
+    * commit; `cluster.idx` is assembled only after every task committed.
+    * Only `line` is selected, so extra columns never ride the exchange.
     *
-    * Task retries overwrite whole files here (`create(overwrite=true)` on
-    * the final names) — safe because content is deterministic and the
-    * idx is only assembled after the job succeeds, but a ZOMBIE attempt
-    * racing the winner could interleave bytes. The V2 write path
-    * (`df.write.format("zipnum")`) is the hardened form: attempt-keyed
-    * temps + rename-on-commit. Prefer it on real clusters. */
-  def write(
-      df: DataFrame, dir: String, shards: Int, linesPerBlock: Int,
-      compressThreads: Int = DefaultCompressThreads): Unit = {
+    * Overwrite deletes the previous cluster at `dir` BEFORE the job runs
+    * (`ZipNumWrite.toBatch`), so a failed write leaves NO cluster there:
+    * not the old one, and not a partial new one (the job abort removes
+    * the shards its committed tasks published). Staging the new cluster
+    * beside the old one is not implemented. */
+  def write(df: DataFrame, dir: String, shards: Int, linesPerBlock: Int): Unit = {
     require(df.columns.contains("line"),
       s"ZipNum.write needs a 'line' STRING column; got [${df.columns.mkString(", ")}]")
     require(shards > 0 && linesPerBlock > 0, "shards and linesPerBlock must be positive")
-    val spark = df.sparkSession
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dirPath)) fs.delete(dirPath, true)
-    fs.mkdirs(dirPath)
-
-    val sorted = df.select(col("line"))
-      .repartitionByRange(shards, col("line"))
-      .sortWithinPartitions("line")
-
-    // per-partition shard write; each task leaves a side idx file and
-    // reports only its pid — entries never ride through the driver
-    val sconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val writtenPids: Array[Int] = sorted.rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          val taskFs = new Path(dir).getFileSystem(sconf.value)
-          val w = new BlockStreamWriter(
-            () => taskFs.create(new Path(dir, f"cdx-$pid%05d.gz"), true),
-            () => taskFs.create(new Path(dir, sideIdxName(pid)), true),
-            f"cdx-$pid%05d.gz", linesPerBlock, compressThreads)
-          try {
-            it.foreach(r => w.add(r.getString(0)))
-            w.finish()
-          } catch { case e: Throwable => w.abort(); throw e }
-          Iterator.single(pid)
-        }
-      }.collect()
-
-    assembleIdx(fs, dirPath, writtenPids.toSeq)
+    df.select(col("line")).write.format("zipnum")
+      .option("shards", shards).option("linesPerBlock", linesPerBlock)
+      .mode("overwrite").save(dir)
   }
 
   /** Merge clusters into one (the reference's operational loop: last
@@ -290,6 +265,11 @@ object ZipNum {
     *    per-input sorted line streams, and feeds the shard writer.
     *
     * Data moves exactly once: input block bytes → task → output shard.
+    * Each output shard goes through the V2 task writer
+    * ([[graft.sources.ZipNumDataWriter]]: attempt-keyed temps, rename on
+    * commit, abort on failure) and the job commits or aborts through
+    * [[graft.sources.ZipNumBatchWrite]] — the same protocol as [[write]],
+    * driven by hand because there is no exchange for Catalyst to plan.
     * Boundary blocks straddle ranges, so lines are re-filtered by FULL
     * line against the bounds — every line lands in exactly one shard
     * because the bounds partition the line space under the same UTF-8
@@ -307,7 +287,6 @@ object ZipNum {
   def mergeSorted(
       spark: SparkSession, dirs: Seq[String], outDir: String,
       shards: Int, linesPerBlock: Int,
-      compressThreads: Int = DefaultCompressThreads,
       excludePrefixes: Seq[String] = Nil): Unit = {
     require(dirs.nonEmpty, "mergeSorted needs at least one input cluster")
     require(shards > 0 && linesPerBlock > 0, "shards and linesPerBlock must be positive")
@@ -335,33 +314,34 @@ object ZipNum {
       (pid, lo, hi, idxs.map { case (d, idx) => (d, selectBlocks(idx, lo, hi)) })
     }
     val sconf = new SerializableHadoopConf(conf)
-    val writtenPids = spark.sparkContext
-      .parallelize(work, work.size)
-      .map { case (pid, lo, hi, inputs) =>
-        val taskConf = sconf.value
-        def inRange(line: String): Boolean =
-          lo.forall(l => utf8Compare(line, l) >= 0) &&
-            hi.forall(h => utf8Compare(line, h) < 0)
-        // takedown tombstones apply inside the same streaming pass
-        def kept(line: String): Boolean =
-          excludePrefixes.isEmpty || !excludePrefixes.exists(line.startsWith)
-        // one sorted, range-filtered line stream per input cluster
-        val streams = inputs.map { case (d, entries) =>
-          blockLineIterator(d, entries, taskConf)
-            .filter(l => inRange(l) && kept(l)).buffered
-        }.filter(_.hasNext)
-        if (streams.isEmpty) -1
-        else {
-          val taskFs = new Path(outDir).getFileSystem(taskConf)
-          val w = new BlockStreamWriter(
-            () => taskFs.create(new Path(outDir, f"cdx-$pid%05d.gz"), true),
-            () => taskFs.create(new Path(outDir, sideIdxName(pid)), true),
-            f"cdx-$pid%05d.gz", linesPerBlock, compressThreads)
+    val job = new graft.sources.ZipNumBatchWrite(outDir, 0, linesPerBlock, sconf)
+    // what Spark's V2 write exec does for format("zipnum"): collect each
+    // committed task's message as it lands, so a failed job can abort
+    // (delete) exactly the shards that were published
+    val messages = new Array[WriterCommitMessage](work.size)
+    try {
+      spark.sparkContext.runJob(
+        spark.sparkContext.parallelize(work, work.size),
+        (ctx: TaskContext, it: Iterator[MergeWork]) => {
+          val (pid, lo, hi, inputs) = it.next()
+          val taskConf = sconf.value
+          def inRange(line: String): Boolean =
+            lo.forall(l => utf8Compare(line, l) >= 0) &&
+              hi.forall(h => utf8Compare(line, h) < 0)
+          // takedown tombstones apply inside the same streaming pass
+          def kept(line: String): Boolean =
+            excludePrefixes.isEmpty || !excludePrefixes.exists(line.startsWith)
+          // one sorted, range-filtered line stream per input cluster
+          val live = scala.collection.mutable.ArrayBuffer.from(inputs.map { case (d, entries) =>
+            blockLineIterator(d, entries, taskConf)
+              .filter(l => inRange(l) && kept(l)).buffered
+          }.filter(_.hasNext))
+          val w = new graft.sources.ZipNumDataWriter(
+            outDir, pid, ctx.taskAttemptId(), 0, linesPerBlock, sconf)
           try {
             // k-way merge: smallest head first; ties by input order (ties
             // are identical key prefixes — any stable choice is correct,
             // fixed order keeps reruns byte-identical)
-            val live = scala.collection.mutable.ArrayBuffer.from(streams)
             while (live.nonEmpty) {
               var best = 0
               var i = 1
@@ -372,13 +352,21 @@ object ZipNum {
               w.add(live(best).next())
               if (!live(best).hasNext) live.remove(best)
             }
-            w.finish()
+            // no commit coordinator guards this job: once it has failed
+            // (its tasks are killed), a shard not yet published must not be
+            if (ctx.isInterrupted()) throw new TaskKilledException("mergeSorted job failed")
+            w.commit()
           } catch { case e: Throwable => w.abort(); throw e }
-          pid
-        }
-      }.collect().filter(_ >= 0)
-    assembleIdx(fs, outPath, writtenPids.toSeq)
+        },
+        (i: Int, m: WriterCommitMessage) => messages(i) = m)
+      job.commit(messages)
+    } catch { case e: Throwable => job.abort(messages); throw e }
   }
+
+  /** one [[mergeSorted]] task: output pid, its [lo, hi) bounds, and each
+    * input cluster's overlapping idx blocks */
+  private type MergeWork =
+    (Int, Option[String], Option[String], Seq[(String, Seq[IdxEntry])])
 
   /** Sorted line stream over the given idx blocks of one cluster (task
     * side; entries must be in idx order). Forward-only: one open handle

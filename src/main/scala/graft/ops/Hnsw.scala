@@ -881,25 +881,27 @@ object Hnsw {
       // prevDir (parquet schema inference fails) and wedges the stream —
       // skipping leaves the previous version newest, and a replay skips
       // identically
-      if (b.filter(size(col("ed")) === dim &&
-          !expr("exists(ed, x -> x IS NULL)")).isEmpty) return
-      b.write.mode("overwrite").parquet(f"$baseDir/vectors/batch-$batchId%05d")
-      val fs = new org.apache.hadoop.fs.Path(baseDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val prev = versionDirs(fs, new org.apache.hadoop.fs.Path(s"$baseDir/index"))
-        .filter(_._1 < batchId).lastOption
-      val adj = prev match {
-        case None => adjacency(b, dim, nShards, m, efC, seed)
-        case Some((_, prevDir)) =>
-          // the vector relation spans every batch ≤ this one (batch dirs
-          // beyond it cannot exist — offsets commit after foreachBatch);
-          // extra current-batch rows drop in appendStored's inner join
-          val allVecs = spark.read.parquet(s"$baseDir/vectors/batch-*")
-          appendStored(spark.read.parquet(prevDir), allVecs, b,
-            dim, nShards, m, efC, seed)
+      val anyValid = !b.filter(size(col("ed")) === dim &&
+        !expr("exists(ed, x -> x IS NULL)")).isEmpty
+      if (anyValid) {
+        b.write.mode("overwrite").parquet(f"$baseDir/vectors/batch-$batchId%05d")
+        val fs = new org.apache.hadoop.fs.Path(baseDir)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val prev = versionDirs(fs, new org.apache.hadoop.fs.Path(s"$baseDir/index"))
+          .filter(_._1 < batchId).lastOption
+        val adj = prev match {
+          case None => adjacency(b, dim, nShards, m, efC, seed)
+          case Some((_, prevDir)) =>
+            // the vector relation spans every batch ≤ this one (batch dirs
+            // beyond it cannot exist — offsets commit after foreachBatch);
+            // extra current-batch rows drop in appendStored's inner join
+            val allVecs = spark.read.parquet(s"$baseDir/vectors/batch-*")
+            appendStored(spark.read.parquet(prevDir), allVecs, b,
+              dim, nShards, m, efC, seed)
+        }
+        adj.write.mode("overwrite").partitionBy("shard")
+          .parquet(f"$baseDir/index/v$batchId%05d")
       }
-      adj.write.mode("overwrite").partitionBy("shard")
-        .parquet(f"$baseDir/index/v$batchId%05d")
     }
   }
 

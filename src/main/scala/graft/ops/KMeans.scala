@@ -90,65 +90,64 @@ object KMeans {
     val sampled =
       if (sampleFraction < 1.0) base.sample(withReplacement = false, sampleFraction, seed)
       else base
+    def lloyd(sample: DataFrame): Array[Array[Double]] = {
+      var book = initBook
+      var iter = 0
+      var shift = Double.MaxValue
+      while (iter < maxIters && shift > tol) {
+        val bookLit = typedLit(book.map(_.toSeq).toSeq)
+        // COMPUTE pq_encode IN ITS OWN PROJECT BELOW THE GENERATE: the
+        // previous one-select shape (`select(pq_encode(…) AS codes,
+        // posexplode(v))`) made the analyzer's generator extraction place
+        // the pq_encode EXPRESSION in the Project ABOVE the Generate, so
+        // Catalyst evaluated the full argmin kernel once per exploded
+        // ELEMENT — dim× per vector per round (the duplicated-expression
+        // trap of optimization guide §7.2; at dim=64 that was 64× the
+        // assignment CPU of every Lloyd's round, at any corpus size).
+        // With codes computed first, the post-explode projection only
+        // references the ATTRIBUTE (carried through the Generate, never
+        // re-evaluated). The group/avg shape is unchanged from the
+        // original — same contributions in the same row order — so the
+        // trained book is bit-identical (dump-diffed across every trained-
+        // model consumer at sf0.01 and sf0.1). A wide per-(j,code) variant
+        // with subDim avg columns was tried and measured 2.4× slower per
+        // round — 64 aggregate expressions cost more to plan than the
+        // exploded rows cost to aggregate.
+        val j = (col("pos") / subDim).cast("int")
+        val means = sample
+          .select(
+            call_udf("pq_encode", col("v"), bookLit, lit(subDim), lit(nCent)).as("codes"),
+            col("v"))
+          .filter(col("codes").isNotNull) // rows not tiling the codebook
+          .select(col("codes"), posexplode(col("v")))
+          .select(j.as("j"),
+            element_at(col("codes"), j + 1).as("code"),
+            (col("pos") % subDim).as("spos"), col("col"))
+          .groupBy("j", "code", "spos").agg(avg("col").as("m"))
+          .collect()
+        // zero assignments on the FIRST pass = no vector tiled the
+        // codebook (empty sample / fully damaged corpus): returning the
+        // init book as "trained" would be a silent no-op
+        require(iter > 0 || means.nonEmpty,
+          "trainSubspaces: no vector matched the codebook shape — training would be a no-op")
+        val next = book.map(_.clone())
+        means.foreach(r =>
+          next(r.getInt(0) * nCent + r.getInt(1))(r.getInt(2)) = r.getDouble(3))
+        shift = book.indices.map(i =>
+          graft.functions.VecAlg.l2DistArr(book(i), next(i))).max
+        book = next
+        iter += 1
+      }
+      book
+    }
     // persist, not localCheckpoint (guide §5): the sample is re-read by
     // every Lloyd's round but dead after the last one — persist serves
     // the rounds from the same materialized blocks (the first round's
-    // action populates it; no separate eager checkpoint job) and the
-    // finally below RELEASES them; a checkpoint's blocks would outlive
-    // the training for the rest of the session. Single-partition order
-    // is unchanged either way, so the trained book is bit-identical.
-    val sample =
-      if (checkpointInput)
-        sampled.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sampled
-    var book = initBook
-    var iter = 0
-    var shift = Double.MaxValue
-    while (iter < maxIters && shift > tol) {
-      val bookLit = typedLit(book.map(_.toSeq).toSeq)
-      // COMPUTE pq_encode IN ITS OWN PROJECT BELOW THE GENERATE: the
-      // previous one-select shape (`select(pq_encode(…) AS codes,
-      // posexplode(v))`) made the analyzer's generator extraction place
-      // the pq_encode EXPRESSION in the Project ABOVE the Generate, so
-      // Catalyst evaluated the full argmin kernel once per exploded
-      // ELEMENT — dim× per vector per round (the duplicated-expression
-      // trap of optimization guide §7.2; at dim=64 that was 64× the
-      // assignment CPU of every Lloyd's round, at any corpus size).
-      // With codes computed first, the post-explode projection only
-      // references the ATTRIBUTE (carried through the Generate, never
-      // re-evaluated). The group/avg shape is unchanged from the
-      // original — same contributions in the same row order — so the
-      // trained book is bit-identical (dump-diffed across every trained-
-      // model consumer at sf0.01 and sf0.1). A wide per-(j,code) variant
-      // with subDim avg columns was tried and measured 2.4× slower per
-      // round — 64 aggregate expressions cost more to plan than the
-      // exploded rows cost to aggregate.
-      val j = (col("pos") / subDim).cast("int")
-      val means = sample
-        .select(
-          call_udf("pq_encode", col("v"), bookLit, lit(subDim), lit(nCent)).as("codes"),
-          col("v"))
-        .filter(col("codes").isNotNull) // rows not tiling the codebook
-        .select(col("codes"), posexplode(col("v")))
-        .select(j.as("j"),
-          element_at(col("codes"), j + 1).as("code"),
-          (col("pos") % subDim).as("spos"), col("col"))
-        .groupBy("j", "code", "spos").agg(avg("col").as("m"))
-        .collect()
-      // zero assignments on the FIRST pass = no vector tiled the
-      // codebook (empty sample / fully damaged corpus): returning the
-      // init book as "trained" would be a silent no-op
-      require(iter > 0 || means.nonEmpty,
-        "trainSubspaces: no vector matched the codebook shape — training would be a no-op")
-      val next = book.map(_.clone())
-      means.foreach(r =>
-        next(r.getInt(0) * nCent + r.getInt(1))(r.getInt(2)) = r.getDouble(3))
-      shift = book.indices.map(i =>
-        graft.functions.VecAlg.l2DistArr(book(i), next(i))).max
-      book = next
-      iter += 1
-    }
-    if (checkpointInput) sample.unpersist(blocking = false)
-    book
+    // action populates it; no separate eager checkpoint job) and
+    // withPersisted RELEASES them on every exit, failures included; a
+    // checkpoint's blocks would outlive the training for the rest of the
+    // session. Single-partition order is unchanged either way, so the
+    // trained book is bit-identical.
+    if (checkpointInput) graft.Tables.withPersisted(sampled)(lloyd) else lloyd(sampled)
   }
 }

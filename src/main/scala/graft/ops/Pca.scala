@@ -39,33 +39,34 @@ object Pca {
       // s² sum covers — counting them would silently deflate λ by the
       // damaged fraction (the direction v was never affected)
       .filter(col("cd").isNotNull)
-      // persist, not localCheckpoint (guide §5; the KMeans.trainSubspaces
-      // rationale): re-read by every power iteration, dead after the
-      // last — the unpersist below frees the blocks, and round 1's
-      // aggregation populates the cache without a separate eager job
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // persisted, not localCheckpointed (guide §5; the
+    // KMeans.trainSubspaces rationale): re-read by every power iteration,
+    // dead after the last — withPersisted frees the blocks on every exit,
+    // failures included, and round 1's aggregation populates the cache
+    // without a separate eager job
     var v = Array.fill(dim)(1.0 / math.sqrt(dim))
     var lambda = 0.0
-    var it = 0
-    while (it < iters) {
-      // vec_dot kernel, not aggregate(zip_with(...)): the HOF is
-      // CodegenFallback — interpreted per row, per iteration, over the
-      // whole corpus. Same array-order accumulation, bit-equal values.
-      val row = centered
-        .withColumn("s", call_udf("vec_dot", col("cd"), typedLit(v.toSeq)))
-        .agg(
-          array((0 until dim).map(i => sum(col("cd")(i) * col("s"))): _*).as("w"),
-          sum(col("s") * col("s")).as("ss"),
-          count(lit(1)).as("n"))
-        .head()
-      val w = row.getSeq[Double](0).toArray
-      val norm = math.sqrt(w.map(x => x * x).sum)
-      require(norm > 0, "degenerate corpus: X^T X v vanished")
-      v = w.map(_ / norm)
-      lambda = row.getDouble(1) / row.getLong(2)
-      it += 1
+    graft.Tables.withPersisted(centered) { _ =>
+      var it = 0
+      while (it < iters) {
+        // vec_dot kernel, not aggregate(zip_with(...)): the HOF is
+        // CodegenFallback — interpreted per row, per iteration, over the
+        // whole corpus. Same array-order accumulation, bit-equal values.
+        val row = centered
+          .withColumn("s", call_udf("vec_dot", col("cd"), typedLit(v.toSeq)))
+          .agg(
+            array((0 until dim).map(i => sum(col("cd")(i) * col("s"))): _*).as("w"),
+            sum(col("s") * col("s")).as("ss"),
+            count(lit(1)).as("n"))
+          .head()
+        val w = row.getSeq[Double](0).toArray
+        val norm = math.sqrt(w.map(x => x * x).sum)
+        require(norm > 0, "degenerate corpus: X^T X v vanished")
+        v = w.map(_ / norm)
+        lambda = row.getDouble(1) / row.getLong(2)
+        it += 1
+      }
     }
-    centered.unpersist(blocking = false)
     // sign canonicalization: v and -v span the same component
     val k = v.indices.maxBy(i => math.abs(v(i)))
     if (v(k) < 0) v = v.map(-_)

@@ -7,11 +7,14 @@ import org.apache.spark.sql.connector.distributions.{Distribution, Distributions
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write._
 
-/** V2 write path for ZipNum clusters (SURVEY §4 custom-work item 3, the
-  * "promote" form of [[graft.formats.ZipNum.write]]):
+/** THE ZipNum cluster writer (SURVEY §4 custom-work item 3):
   *
   * `df.write.format("zipnum").option("shards", 8)
   *    .option("linesPerBlock", 3000).mode("overwrite").save(dir)`
+  *
+  * [[graft.formats.ZipNum.write]] is the typed entry to this path, and
+  * [[graft.formats.ZipNum.mergeSorted]] drives the same task writer and
+  * job commit/abort by hand (it has no exchange to plan).
   *
   * [[ZipNumWrite]] declares `RequiresDistributionAndOrdering` — an
   * ordered distribution on `line` with `shards` partitions — so CATALYST
@@ -25,7 +28,8 @@ import org.apache.spark.sql.connector.write._
   * the reference, whose reducer emits idx lines as job output:
   * zipnumclusterjob.py §reducer, recon ~L90–170). A failed job never
   * publishes an idx, so readers (which always start from cluster.idx)
-  * cannot observe partial output.
+  * cannot observe partial output, and its abort deletes the shards the
+  * already-committed tasks published.
   */
 final case class ZipNumCommit(pid: Int, blocks: Long) extends WriterCommitMessage
 
@@ -45,19 +49,14 @@ final class ZipNumWriteBuilder(
         "failing here beats a per-task ClassCastException after the exchange has run")
     val shards = Option(info.options.get("shards")).map(_.toInt).getOrElse(8)
     val linesPerBlock = Option(info.options.get("linesPerBlock")).map(_.toInt).getOrElse(3000)
-    // a saturated 300-shard production write wants 1 (tasks alone fill the
-    // cores); the default suits benches where shards < cores
-    val compressThreads = Option(info.options.get("compressThreads")).map(_.toInt)
-      .getOrElse(graft.formats.ZipNum.DefaultCompressThreads)
-    require(shards > 0 && linesPerBlock > 0 && compressThreads > 0,
-      "shards, linesPerBlock, and compressThreads must be positive")
-    new ZipNumWrite(dir, lineIdx, shards, linesPerBlock, compressThreads, doTruncate, sconf)
+    require(shards > 0 && linesPerBlock > 0, "shards and linesPerBlock must be positive")
+    new ZipNumWrite(dir, lineIdx, shards, linesPerBlock, doTruncate, sconf)
   }
 }
 
 final class ZipNumWrite(
     dir: String, lineIdx: Int, shards: Int, linesPerBlock: Int,
-    compressThreads: Int, doTruncate: Boolean, sconf: SerializableHadoopConf)
+    doTruncate: Boolean, sconf: SerializableHadoopConf)
   extends Write with RequiresDistributionAndOrdering {
 
   private def sortOrders: Array[SortOrder] =
@@ -78,17 +77,16 @@ final class ZipNumWrite(
         "global sort order; use mode(\"overwrite\") to replace it, or " +
         "ZipNum.merge(spark, Seq(old, new), out, ...) to combine clusters")
     fs.mkdirs(p)
-    new ZipNumBatchWrite(dir, lineIdx, linesPerBlock, compressThreads, sconf)
+    new ZipNumBatchWrite(dir, lineIdx, linesPerBlock, sconf)
   }
 }
 
 final class ZipNumBatchWrite(
-    dir: String, lineIdx: Int, linesPerBlock: Int, compressThreads: Int,
-    sconf: SerializableHadoopConf)
+    dir: String, lineIdx: Int, linesPerBlock: Int, sconf: SerializableHadoopConf)
   extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new ZipNumWriterFactory(dir, lineIdx, linesPerBlock, compressThreads, sconf)
+    new ZipNumWriterFactory(dir, lineIdx, linesPerBlock, sconf)
 
   /** driver-side: stream the committed tasks' side idx files into
     * cluster.idx in NUMERIC pid order (which the range exchange made
@@ -100,23 +98,38 @@ final class ZipNumBatchWrite(
     ZipNum.assembleIdx(dirPath.getFileSystem(sconf.value), dirPath, pids.toSeq)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+  /** driver-side, after a failed job: delete the shard and side idx
+    * file of EVERY pid of the job (`messages` has one slot per partition),
+    * not only those whose message arrived — the scheduler drops the
+    * result of a task that finishes after the job failed, so its slot is
+    * null although its files were published. Uncommitted attempts removed
+    * their own temps in [[ZipNumDataWriter.abort]]. toBatch left no
+    * cluster.idx behind, so one present now was published by this job's
+    * commit (which then failed while removing side files): the shards
+    * are served and must stay. */
+  override def abort(messages: Array[WriterCommitMessage]): Unit = {
+    val dirPath = new Path(dir)
+    val fs = dirPath.getFileSystem(sconf.value)
+    if (!fs.exists(new Path(dirPath, "cluster.idx"))) messages.indices.foreach { pid =>
+      fs.delete(new Path(dirPath, ZipNum.shardName(pid)), false)
+      fs.delete(new Path(dirPath, ZipNum.sideIdxName(pid)), false)
+    }
+  }
 }
 
 final class ZipNumWriterFactory(
-    dir: String, lineIdx: Int, linesPerBlock: Int, compressThreads: Int,
-    sconf: SerializableHadoopConf)
+    dir: String, lineIdx: Int, linesPerBlock: Int, sconf: SerializableHadoopConf)
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ZipNumDataWriter(dir, partitionId, taskId, lineIdx, linesPerBlock, compressThreads, sconf)
+    new ZipNumDataWriter(dir, partitionId, taskId, lineIdx, linesPerBlock, sconf)
 }
 
-/** One sorted shard per task, driven through the shared
-  * [[graft.formats.ZipNum.BlockStreamWriter]] kernel: lines buffered into
-  * `linesPerBlock` groups, each flushed as an independent gzip member
-  * (compressed on a small task-local pool, written in block order) with
-  * streaming offset accounting — memory is O(threads × block), never
-  * O(partition). Idx lines stream to a per-shard side file; only the pid
+/** One sorted shard per task, driven through the
+  * [[graft.formats.ZipNum.BlockStreamWriter]] kernel (this is its only
+  * caller): lines buffered into `linesPerBlock` groups, each flushed as
+  * an independent gzip member (compressed on a small task-local pool,
+  * written in block order) with streaming offset accounting — memory is
+  * O(threads × block), never O(partition). Idx lines stream to a per-shard side file; only the pid
   * rides in the commit message.
   *
   * Attempt isolation: both the shard bytes and the idx lines stream into
@@ -128,11 +141,11 @@ final class ZipNumWriterFactory(
   * message to BatchWrite.commit. */
 final class ZipNumDataWriter(
     dir: String, pid: Int, taskId: Long, lineIdx: Int, linesPerBlock: Int,
-    compressThreads: Int, sconf: SerializableHadoopConf)
+    sconf: SerializableHadoopConf)
   extends DataWriter[InternalRow] {
 
-  private val shardName = f"cdx-$pid%05d.gz"
-  private val tempShard = f".cdx-$pid%05d.gz.attempt-$taskId"
+  private val shardName = ZipNum.shardName(pid)
+  private val tempShard = s".$shardName.attempt-$taskId"
   private val tempIdx = ZipNum.sideIdxName(pid) + s".attempt-$taskId"
 
   private def fs = new Path(dir).getFileSystem(sconf.value)
@@ -140,10 +153,13 @@ final class ZipNumDataWriter(
   private val w = new ZipNum.BlockStreamWriter(
     () => fs.create(new Path(dir, tempShard), true),
     () => fs.create(new Path(dir, tempIdx), true),
-    shardName, linesPerBlock, compressThreads)
+    shardName, linesPerBlock)
 
-  override def write(row: InternalRow): Unit =
-    w.add(row.getUTF8String(lineIdx).toString)
+  override def write(row: InternalRow): Unit = add(row.getUTF8String(lineIdx).toString)
+
+  /** one already-decoded line (the [[graft.formats.ZipNum.mergeSorted]]
+    * entry; rows go through [[write]]) */
+  def add(line: String): Unit = w.add(line)
 
   private def publish(temp: String, fin: String): Unit = {
     val from = new Path(dir, temp)

@@ -43,9 +43,100 @@ class ZipNumSpec extends SparkSpec {
         .option("shards", "4").option("linesPerBlock", "50")
         .mode("append").save(dir)
     }
-    val messages = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+    assert(messages(e).exists(_.contains("already exists")), messages(e).mkString(" | "))
+  }
+
+  /** the message of `e` and of every cause below it */
+  private def messages(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
       .map(t => Option(t.getMessage).getOrElse("")).toSeq
-    assert(messages.exists(_.contains("already exists")), messages.mkString(" | "))
+
+  private def freshDir(d: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(d)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(p, true)
+    fs.mkdirs(p)
+  }
+
+  private def listing(d: String): Seq[String] =
+    Option(new java.io.File(d).list()).toSeq.flatten.sorted
+
+  private lazy val sconf =
+    new graft.formats.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+
+  test("a non-STRING 'line' fails at planning with the V2 builder's message") {
+    import spark.implicits._
+    val e = intercept[Exception](
+      ZipNum.write(Seq(1, 2).toDF("line"), "/tmp/graft_test/zipnum_int", 1, 10))
+    assert(messages(e).exists(_.contains("'line' must be STRING")), messages(e).mkString(" | "))
+  }
+
+  test("a failed write leaves no cluster.idx, side idx or attempt temp; a rerun == a fresh write") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, udf}
+    val dir = "/tmp/graft_test/zipnum_failed"
+    val fresh = "/tmp/graft_test/zipnum_failed_fresh"
+    val lines = (0 until 400).map(i => f"k${(i * 131) % 400}%04d 2015 x$i")
+    ZipNum.write(lines.toDF("line"), dir, shards = 4, linesPerBlock = 10) // a previous cluster
+    val poisoned = lines(237) // record k, in exactly one input partition
+    val boom = udf { (l: String) =>
+      if (l == poisoned) throw new IllegalStateException("injected failure") else l
+    }
+    val e = intercept[Exception](ZipNum.write(
+      lines.toDF("raw").repartition(4).select(boom(col("raw")).as("line")),
+      dir, shards = 4, linesPerBlock = 10))
+    assert(messages(e).exists(_.contains("injected failure")), messages(e).mkString(" | "))
+    val left = listing(dir)
+    assert(!left.exists(n => n == "cluster.idx" || n.startsWith(".idx-") || n.contains(".attempt-")),
+      s"failed write left: $left")
+    ZipNum.write(lines.toDF("line"), dir, shards = 4, linesPerBlock = 10)
+    ZipNum.write(lines.toDF("line"), fresh, shards = 4, linesPerBlock = 10)
+    // lines, not bytes: the RangePartitioner seeds its sample from the RDD
+    // id, so shard bounds may differ between two writes in one session
+    assert(ZipNum.readLines(spark, dir).as[String].collect().toSeq ==
+      ZipNum.readLines(spark, fresh).as[String].collect().toSeq)
+  }
+
+  test("job abort deletes every shard and side idx the committed tasks published") {
+    import graft.sources.{ZipNumBatchWrite, ZipNumDataWriter}
+    val d = "/tmp/graft_test/zipnum_abort"
+    freshDir(d)
+    val committed = (0 until 3).map { pid =>
+      val w = new ZipNumDataWriter(d, pid, taskId = 10L + pid, 0, 10, sconf)
+      (0 until 35).foreach(i => w.add(f"k$pid$i%03d 2015 x"))
+      w.commit()
+    }
+    assert(listing(d).count(_.matches("cdx-\\d+\\.gz")) == 3, listing(d))
+    // pid 2 published after the job failed, so the scheduler dropped its
+    // message; pid 3's attempt failed. Both slots reach the abort as null.
+    new ZipNumBatchWrite(d, 0, 10, sconf).abort(Array(committed(0), committed(1), null, null))
+    assert(listing(d).isEmpty, s"abort left: ${listing(d)}")
+  }
+
+  test("duplicate attempts of one shard publish one byte-identical shard, in either commit order") {
+    import graft.sources.ZipNumDataWriter
+    val lines = (0 until 250).map(i => f"k$i%04d 2015 x$i")
+    // 25 blocks: both attempts hold open temps while the other writes
+    def attempt(d: String, taskId: Long): ZipNumDataWriter = {
+      val w = new ZipNumDataWriter(d, 0, taskId, 0, 10, sconf)
+      lines.foreach(w.add)
+      w
+    }
+    def bytes(d: String, name: String): Seq[Byte] =
+      Files.readAllBytes(Paths.get(d, name)).toSeq
+    val single = "/tmp/graft_test/zipnum_dup_single"
+    freshDir(single)
+    attempt(single, 1L).commit()
+    for ((order, i) <- Seq(Seq(1L, 2L), Seq(2L, 1L)).zipWithIndex) {
+      val d = s"/tmp/graft_test/zipnum_dup_$i"
+      freshDir(d)
+      order.map(attempt(d, _)).foreach(_.commit())
+      val names = listing(d)
+      assert(!names.exists(_.contains(".attempt-")), s"order $order left temps: $names")
+      assert(names.filterNot(_.endsWith(".crc")) == Seq(".idx-00000", "cdx-00000.gz"), names)
+      for (n <- Seq(".idx-00000", "cdx-00000.gz"))
+        assert(bytes(d, n) == bytes(single, n), s"order $order: $n differs from one attempt")
+    }
   }
 
   test("block pruning compares keys in UTF-8 byte order, not UTF-16") {
@@ -275,12 +366,14 @@ class ZipNumSpec extends SparkSpec {
     import spark.implicits._
     val d1 = "/tmp/graft_test/zipnum_clean1"
     val d2 = "/tmp/graft_test/zipnum_clean2"
+    val d3 = "/tmp/graft_test/zipnum_clean3"
     val lines = (0 until 100).map(i => f"k$i%03d 2015 x$i")
     ZipNum.write(lines.toDF("line"), d1, shards = 3, linesPerBlock = 10)
     lines.toDF("line").write.format("zipnum")
       .option("shards", "3").option("linesPerBlock", "10")
       .mode("overwrite").save(d2)
-    for (d <- Seq(d1, d2)) {
+    ZipNum.mergeSorted(spark, Seq(d1, d2), d3, shards = 2, linesPerBlock = 10)
+    for (d <- Seq(d1, d2, d3)) {
       val names = new java.io.File(d).list().toSeq
       assert(names.contains("cluster.idx"), s"$d: $names")
       assert(!names.exists(n => n.startsWith(".idx-") || n.contains(".attempt-")),
