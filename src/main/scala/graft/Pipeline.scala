@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   *
   * One shuffle total — the range exchange — exactly the reference's single
   * Hadoop shuffle, with job 2's sample pass folded into it. At 100 TB the
-  * WARC scan parallelizes per file (gzip members are not splittable
-  * mid-file), the exchange is skew-managed by AQE, and the driver only
-  * ever holds cluster.idx (~1/linesPerBlock of the data).
+  * WARC scan parallelizes per file, or per byte range for a file larger
+  * than its share of the input, the exchange is skew-managed by AQE, and
+  * the driver only ever holds cluster.idx (~1/linesPerBlock of the data).
   */
 object Pipeline {
 

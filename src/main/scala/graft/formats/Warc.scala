@@ -20,10 +20,11 @@ import org.apache.spark.sql.types._
   * SURVEY.md §1.1): type, target URI, date, payload digest, HTTP status,
   * payload mime, compressed offset/length, filename.
   *
-  * Scale notes: gzip members are not splittable mid-file, so parallelism is
-  * per WARC file (`scan`'s unit of work) — the crawl reality of many
-  * ~1 GB WARCs per segment makes that the natural partitioning; AQE
-  * coalesces small files.
+  * Scale notes: parallelism is per WARC file (`scan`'s unit of work) —
+  * the crawl reality of many ~1 GB WARCs per segment makes that the
+  * natural partitioning — except that a file larger than its fair share
+  * of the input is read as byte ranges re-synchronized on member
+  * boundaries (`graft.sources.WarcScan`).
   */
 object Warc {
 
@@ -208,26 +209,20 @@ object Warc {
     first +: conts
   }
 
-  /** Parse one decompressed member into raw per-record fields
-    * (record_type, url, ts14, digest, status (nullable), mime, payload)
-    * for EVERY record in it (multi-record members — see
-    * [[parseWarcRecords]]); the V2 source's per-member unit. */
-  private[graft] def parseRows(
-      bytes: Array[Byte], offset: Long, length: Long, filename: String)
-      : Seq[(String, String, String, String, java.lang.Integer, String, Array[Byte])] =
-    parseRecords(bytes, offset, length, filename).map { r =>
-      (r.getString(0), r.getString(1), r.getString(2), r.getString(3),
-        r.get(4).asInstanceOf[java.lang.Integer], r.getString(5),
-        r.get(9).asInstanceOf[Array[Byte]])
-    }
+  /** Receives one parsed record's own fields (record_type, url, ts14,
+    * digest, status (nullable), mime, payload); the member it came from
+    * supplies (offset, length, filename). The row builders sit behind it:
+    * the V2 reader builds InternalRows, [[parseRecords]] external Rows. */
+  private[graft] type Emit =
+    (String, String, String, String, Integer, String, Array[Byte]) => Unit
 
-  /** Parse one decompressed WARC record into a row-shaped tuple. */
-  /** byte index of the first CRLF CRLF, or -1 — header/body split MUST be
-    * found on bytes: non-ASCII header values (UTF-8 URLs are common in
-    * real crawls) make char indexes diverge from byte offsets. */
-  private def crlfCrlf(bytes: Array[Byte], from: Int = 0): Int = {
+  /** byte index of the first CRLF CRLF in [from, until), or -1 — the
+    * header/body split MUST be found on bytes: non-ASCII header values
+    * (UTF-8 URLs are common in real crawls) make char indexes diverge
+    * from byte offsets. */
+  private def crlfCrlf(bytes: Array[Byte], from: Int, until: Int): Int = {
     var i = from
-    while (i + 3 < bytes.length) {
+    while (i + 3 < until) {
       if (bytes(i) == '\r' && bytes(i + 1) == '\n' &&
         bytes(i + 2) == '\r' && bytes(i + 3) == '\n') return i
       i += 1
@@ -235,11 +230,18 @@ object Warc {
     -1
   }
 
-  /** Parse the embedded HTTP response: (status, mime, payload). */
-  private def parseHttp(body: Array[Byte]): (Integer, String, Array[Byte]) = {
-    val httpEnd = crlfCrlf(body)
-    if (httpEnd < 0) return (null, null, body)
-    val httpHead = new String(body, 0, httpEnd, UTF_8).split("\r\n")
+  private def slice(bytes: Array[Byte], from: Int, until: Int): Array[Byte] =
+    java.util.Arrays.copyOfRange(bytes, from, until)
+
+  /** Parse the HTTP response embedded in bytes[from, until): (status,
+    * mime, payload). The payload is copied out only `withPayload`; a
+    * scan that never reads it (the CDX derive) gets null. */
+  private def parseHttp(
+      b: Array[Byte], from: Int, until: Int, withPayload: Boolean)
+      : (Integer, String, Array[Byte]) = {
+    val httpEnd = crlfCrlf(b, from, until)
+    if (httpEnd < 0) return (null, null, if (withPayload) slice(b, from, until) else null)
+    val httpHead = new String(b, from, httpEnd - from, UTF_8).split("\r\n")
     val statusLine = httpHead.headOption.getOrElse("")
     val parts = statusLine.split(" ")
     // length cap: an all-digit token can still overflow Int (a hostile
@@ -257,17 +259,20 @@ object Warc {
       else None
     }.headOption
     val mime = header("Content-Type").orNull
-    val raw = body.drop(httpEnd + 4)
     // chunked-transfer-encoded payloads (capture-time proxies record the
     // wire form; warcio/pywb de-chunk on read, so the indexed payload —
     // and any digest recomputation — must be the DECODED bytes): strip
     // the framing; a malformed framing keeps the raw bytes (a mis-labeled
     // Transfer-Encoding header must not destroy a payload)
     val payload =
-      if (header("Transfer-Encoding").exists(_.toLowerCase.contains("chunked"))) {
-        val d = dechunk(raw)
-        if (d != null) d else raw
-      } else raw
+      if (!withPayload) null
+      else {
+        val raw = slice(b, httpEnd + 4, until)
+        if (header("Transfer-Encoding").exists(_.toLowerCase.contains("chunked"))) {
+          val d = dechunk(raw)
+          if (d != null) d else raw
+        } else raw
+      }
     (status, mime, payload)
   }
 
@@ -307,19 +312,29 @@ object Warc {
     bytes.length >= 5 && bytes(0) == 'W' && bytes(1) == 'A' &&
       bytes(2) == 'R' && bytes(3) == 'C' && bytes(4) == '/'
 
-  /** One decompressed member -> ALL its rows (see [[parseWarcRecords]];
-    * ARC members are always single-record); sniffs WARC vs legacy ARC. */
+  /** One decompressed member -> ALL its records (see [[parseWarc]]; ARC
+    * members are always single-record); sniffs WARC vs legacy ARC. */
+  private[graft] def parseMember(bytes: Array[Byte], withPayload: Boolean, emit: Emit): Unit =
+    if (isWarc(bytes)) parseWarc(bytes, withPayload, emit)
+    else parseArc(bytes, withPayload, emit)
+
+  /** [[parseMember]] as external Rows — the replay paths
+    * ([[fetchRecords]], WACZ) that build DataFrames from Rows. */
   private[graft] def parseRecords(
       bytes: Array[Byte], offset: Long, length: Long, filename: String): Seq[Row] =
-    if (isWarc(bytes)) parseWarcRecords(bytes, offset, length, filename)
-    else Seq(parseArcRecord(bytes, offset, length, filename))
+    rowsOf(offset, length, filename)(parseMember(bytes, withPayload = true, _))
+
+  private def rowsOf(offset: Long, length: Long, filename: String)(parse: Emit => Unit): Seq[Row] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+    parse((t, u, ts, d, st, m, p) => out += Row(t, u, ts, d, st, m, offset, length, filename, p))
+    out.toSeq
+  }
 
   /** ARC v1 (5-field) / v2 (10-field) URL-record:
     * `url ip date mime length` / `url ip date mime result checksum
     * location offset filename length`, LF, then the raw HTTP response
     * (filedesc:// members carry the version block instead). */
-  private[graft] def parseArcRecord(
-      bytes: Array[Byte], offset: Long, length: Long, filename: String): Row = {
+  private def parseArc(bytes: Array[Byte], withPayload: Boolean, emit: Emit): Unit = {
     var nl = 0
     while (nl < bytes.length && bytes(nl) != '\n') nl += 1
     val header = new String(bytes, 0, nl, UTF_8).trim
@@ -331,25 +346,27 @@ object Warc {
     // response/revisit filter) instead of fabricating a response row
     val looksArc = f.length >= 5 && url != null && url.contains("://") &&
       ts != null && ts.length == 14 && ts.forall(_.isDigit)
-    if (!looksArc)
-      return Row("unknown", null, null, null, null, null, offset, length, filename, bytes)
+    if (!looksArc) {
+      emit("unknown", null, null, null, null, null, if (withPayload) bytes else null)
+      return
+    }
     val headerMime = if (f.length >= 4 && f(3) != "-") f(3) else null
     val digest = if (f.length >= 10 && f(5) != "-") f(5) else null
-    val body = if (nl < bytes.length) bytes.drop(nl + 1) else Array.emptyByteArray
+    val bodyFrom = math.min(nl + 1, bytes.length)
     if (url.startsWith("filedesc://"))
       // ARC file header record — the warcinfo analog
-      Row("arcinfo", url, ts, digest, null, headerMime, offset, length, filename, body)
+      emit("arcinfo", url, ts, digest, null, headerMime,
+        if (withPayload) slice(bytes, bodyFrom, bytes.length) else null)
     else {
-      val (httpStatus, httpMime, payload) = parseHttp(body)
+      val (httpStatus, httpMime, payload) = parseHttp(bytes, bodyFrom, bytes.length, withPayload)
       val status: Integer =
         if (httpStatus != null) httpStatus
         else if (f.length >= 10 && f(4).nonEmpty && f(4).length <= 5 &&
           f(4).forall(_.isDigit)) f(4).toInt
         else null
       // ARC has no revisit/request records: every URL record is a response
-      Row("response", url, ts, digest, status,
-        if (httpMime != null) httpMime else headerMime,
-        offset, length, filename, payload)
+      emit("response", url, ts, digest, status,
+        if (httpMime != null) httpMime else headerMime, payload)
     }
   }
 
@@ -357,28 +374,28 @@ object Warc {
     p + 4 < bytes.length && bytes(p) == 'W' && bytes(p + 1) == 'A' &&
       bytes(p + 2) == 'R' && bytes(p + 3) == 'C' && bytes(p + 4) == '/'
 
-  /** Parse EVERY record in one decompressed member. Conforming writers put
-    * one record per gzip member, but warcio's permissive reader — and
-    * therefore real Common Crawl-adjacent corpora — also accepts members
-    * holding several concatenated records (wget- and proxy-written files
-    * do this monthly); one member must then yield N rows, not one row
-    * whose payload swallows the successors. The split honors the record's
-    * own Content-Length ONLY when what follows the block (after the
-    * record-terminating CRLFs) is another `WARC/` header or end-of-member
-    * — a wrong Content-Length (e.g. a `WARC-Truncated` record cut mid-
-    * payload by a crashed writer) keeps today's whole-remainder behavior
-    * instead of fabricating a phantom second record. All rows in a member
-    * share its (offset, compressedLength): that pair is the re-fetch unit
-    * for auditing, and sub-member byte offsets don't survive gzip. */
-  /** split one decompressed member into (headers, body) record chunks —
-    * the shared walk under [[parseWarcRecords]] (pipeline rows) and
-    * [[parseWarcRecordsMeta]] (segment-aware rows) */
+  /** Split one decompressed member into (headers, bodyFrom, bodyUntil)
+    * record chunks — the shared walk under [[parseWarc]] (pipeline rows)
+    * and [[parseWarcRecordsMeta]] (segment-aware rows). Conforming
+    * writers put one record per gzip member, but warcio's permissive
+    * reader — and therefore real Common Crawl-adjacent corpora — also
+    * accepts members holding several concatenated records (wget- and
+    * proxy-written files do this monthly); one member must then yield N
+    * rows, not one row whose payload swallows the successors. The split
+    * honors the record's own Content-Length ONLY when what follows the
+    * block (after the record-terminating CRLFs) is another `WARC/` header
+    * or end-of-member — a wrong Content-Length (e.g. a `WARC-Truncated`
+    * record cut mid-payload by a crashed writer) keeps the
+    * whole-remainder behavior instead of fabricating a phantom second
+    * record. All rows in a member share its (offset, compressedLength):
+    * that pair is the re-fetch unit for auditing, and sub-member byte
+    * offsets don't survive gzip. */
   private def splitWarcChunks(
-      bytes: Array[Byte]): Seq[(Map[String, String], Array[Byte])] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Map[String, String], Array[Byte])]
+      bytes: Array[Byte]): Seq[(Map[String, String], Int, Int)] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Map[String, String], Int, Int)]
     var pos = 0
     while (pos < bytes.length) {
-      val headerEnd = crlfCrlf(bytes, pos)
+      val headerEnd = crlfCrlf(bytes, pos, bytes.length)
       val hEnd = if (headerEnd >= 0) headerEnd else bytes.length
       val headerBlock = new String(bytes, pos, hEnd - pos, UTF_8)
       val headers = headerBlock.split("\r\n").drop(1).flatMap { line =>
@@ -401,16 +418,15 @@ object Warc {
             nextPos = p
           }
         }
-      val body = java.util.Arrays.copyOfRange(bytes, math.min(bodyStart, bytes.length), bodyEnd)
-      out += ((headers, body))
+      out += ((headers, math.min(bodyStart, bytes.length), bodyEnd))
       pos = nextPos
     }
     out.toSeq
   }
 
-  private[graft] def parseWarcRecords(
-      bytes: Array[Byte], offset: Long, length: Long, filename: String): Seq[Row] = {
-    val out = splitWarcChunks(bytes).map { case (headers, body) =>
+  /** Every record of one WARC member (see [[splitWarcChunks]]). */
+  private def parseWarc(bytes: Array[Byte], withPayload: Boolean, emit: Emit): Unit =
+    splitWarcChunks(bytes).foreach { case (headers, from, until) =>
       val recordType = headers.getOrElse("warc-type", "")
       val url = headers.getOrElse("warc-target-uri", null)
       val ts = headers.get("warc-date").map(_.replaceAll("[^0-9]", "").take(14)).orNull
@@ -426,15 +442,11 @@ object Warc {
       // payload's mime in the WARC Content-Type header itself — surface
       // it (pywb indexes it this way) instead of a blanket null
       val (status, mime, payload) =
-        if (isHttpResponse) parseHttp(body)
-        else (null: Integer, headers.get("content-type").orNull, body)
-      Row(recordType, url, ts, digest, status, mime, offset, length, filename, payload)
+        if (isHttpResponse) parseHttp(bytes, from, until, withPayload)
+        else (null: Integer, headers.get("content-type").orNull,
+          if (withPayload) slice(bytes, from, until) else null)
+      emit(recordType, url, ts, digest, status, mime, payload)
     }
-    if (out.isEmpty) // zero-length member: keep the one-row-per-member contract
-      Seq(Row("unknown", null, null, null, null, null, offset, length, filename,
-        Array.emptyByteArray))
-    else out
-  }
 
   /** [[Warc.schema]] + the ISO 28500 §5 segmentation metadata columns the
     * reassembly shuffle keys on */
@@ -444,7 +456,7 @@ object Warc {
     StructField("seg_origin", StringType),
     StructField("seg_total", LongType)))
 
-  /** Segment-aware member parse: [[parseWarcRecords]]'s rows widened with
+  /** Segment-aware member parse: [[parseWarc]]'s rows widened with
     * (record_id, seg_num, seg_origin, seg_total). SEGMENTED records
     * (WARC-Segment-Number present) keep their RAW block as payload with
     * status/mime null — a first segment's HTTP head can only be parsed
@@ -452,7 +464,7 @@ object Warc {
     * unsegmented records are bit-identical to the plain parse. */
   private[graft] def parseWarcRecordsMeta(
       bytes: Array[Byte], offset: Long, length: Long, filename: String): Seq[Row] = {
-    val out = splitWarcChunks(bytes).map { case (headers, body) =>
+    val out = splitWarcChunks(bytes).map { case (headers, from, until) =>
       val recordType = headers.getOrElse("warc-type", "")
       val url = headers.getOrElse("warc-target-uri", null)
       val ts = headers.get("warc-date").map(_.replaceAll("[^0-9]", "").take(14)).orNull
@@ -468,9 +480,8 @@ object Warc {
       val isHttpResponse = (recordType == "response" || recordType == "revisit") &&
         headers.getOrElse("content-type", "").startsWith("application/http")
       val (status, mime, payload) =
-        if (segNum != null) (null: Integer, headers.get("content-type").orNull, body)
-        else if (isHttpResponse) parseHttp(body)
-        else (null: Integer, headers.get("content-type").orNull, body)
+        if (segNum == null && isHttpResponse) parseHttp(bytes, from, until, withPayload = true)
+        else (null: Integer, headers.get("content-type").orNull, slice(bytes, from, until))
       Row(recordType, url, ts, digest, status, mime, offset, length, filename, payload,
         recordId, segNum, segOrigin, segTotal)
     }
@@ -517,55 +528,24 @@ object Warc {
     ArcFixtureRecord("http://sub.iana.org/x", "192.0.2.1",
       "20040510235959", "text/html", 301, "<a>arc moved</a>".getBytes(UTF_8)))
 
-  /** Distributed scan: one task per WARC file, iterating compressed
-    * members inside the partition (SURVEY §2.1 `scan_warc`). The member
-    * reader dispatches on the file extension: `.zst` files walk zstd
-    * frames ([[ZstdMembers]] — the warcio `.warc.zst` convention), all
-    * others walk gzip members; both feed the SAME record parser, so a
-    * compression swap is invisible downstream. Permissive by default:
-    * crawl archives at 100 TB always carry some damaged members, and one
-    * bad byte must cost one `record_type='corrupt'` row (offset + skipped
-    * length preserved for auditing), never the job — pipelines filter on
-    * record_type anyway. Pass permissive=false to fail fast. */
-  def scan(spark: SparkSession, pathGlob: String, permissive: Boolean = true): DataFrame = {
-    val rows = spark.sparkContext.binaryFiles(pathGlob).flatMap {
-      case (file, pds) =>
-        val in = pds.open()
-        val shortName = file.substring(file.lastIndexOf('/') + 1)
-        val entries: Iterator[Gzip.Entry] =
-          if (shortName.endsWith(".zst")) ZstdMembers.entries(in, permissive)
-          else Gzip.entries(in, permissive)
-        // close BOTH the stream and the entry iterator even when the
-        // downstream stops consuming early (limit, error): the zstd
-        // iterator holds a reused native decompress context with no
-        // finalizer — an unclosed one leaks for the executor's lifetime
-        def closeAll(): Unit = {
-          try in.close() catch { case _: Throwable => }
-          entries match {
-            case c: java.io.Closeable => try c.close() catch { case _: Throwable => }
-            case _ =>
-          }
-        }
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => closeAll()))
-        val it = entries.flatMap {
-          case m: Gzip.Member =>
-            parseRecords(m.bytes, m.offset, m.compressedLength, shortName)
-          case s: Gzip.CorruptSpan =>
-            Seq(Row("corrupt", null, null, null, null, null,
-              s.offset, s.compressedLength, shortName, null))
-        }
-        new Iterator[Row] {
-          override def hasNext: Boolean = {
-            val h = it.hasNext
-            if (!h) closeAll()
-            h
-          }
-          override def next(): Row = it.next()
-        }
-    }
-    spark.createDataFrame(rows, schema)
-  }
+  /** Distributed scan — the typed entry to the V2 `format("warc")`
+    * source ([[graft.sources.WarcSource]]), the one WARC reader. The
+    * member reader dispatches on the file extension: `.zst` files walk
+    * zstd frames ([[ZstdMembers]] — the warcio `.warc.zst` convention),
+    * all others walk gzip members; both feed the SAME record parser, so a
+    * compression swap is invisible downstream. Each file is one task
+    * unless it is larger than ⌈total bytes / default parallelism⌉; then
+    * it is read as byte ranges of that size (the few-huge-files archive
+    * shape — see the source for the ownership rule). Columns a query
+    * never reads are never built: the CDX derive gets no payload bytes.
+    * Permissive by default: crawl archives at 100 TB always carry some
+    * damaged members, and one bad byte must cost one
+    * `record_type='corrupt'` row (offset + skipped length preserved for
+    * auditing), never the job — pipelines filter on record_type anyway.
+    * Pass permissive=false to fail fast. A glob matching no archive fails
+    * at planning. */
+  def scan(spark: SparkSession, pathGlob: String, permissive: Boolean = true): DataFrame =
+    spark.read.format("warc").option("permissive", permissive).load(pathGlob)
 
   /** [[scan]] widened with the ISO 28500 §5 segmentation columns
     * ([[segMetaSchema]]): the raw per-fragment view — segmented records
@@ -593,9 +573,8 @@ object Warc {
             if (isWarc(m.bytes))
               parseWarcRecordsMeta(m.bytes, m.offset, m.compressedLength, shortName)
             else // ARC predates segmentation: plain row + null meta
-              Seq(Row.fromSeq(
-                parseArcRecord(m.bytes, m.offset, m.compressedLength, shortName)
-                  .toSeq ++ Seq(null, null, null, null)))
+              parseRecords(m.bytes, m.offset, m.compressedLength, shortName)
+                .map(r => Row.fromSeq(r.toSeq ++ Seq(null, null, null, null)))
           case s: Gzip.CorruptSpan =>
             Seq(Row("corrupt", null, null, null, null, null,
               s.offset, s.compressedLength, shortName, null, null, null, null, null))
@@ -674,7 +653,7 @@ object Warc {
         val isHttp = (head._3 == "response" || head._3 == "revisit") &&
           head._7 != null && head._7.startsWith("application/http")
         val (status, mime, payload) =
-          if (isHttp) parseHttp(block)
+          if (isHttp) parseHttp(block, 0, block.length, withPayload = true)
           else (null: Integer, head._7, block)
         // length = Σ over DISTINCT (filename, offset) members: fragments
         // sharing one gzip member (a foreign multi-record member) must
@@ -696,113 +675,16 @@ object Warc {
       .unionByName(plain)
   }
 
-  /** SPLITTABLE `.warc.gz` scan — byte-range splits WITHIN files. The
-    * plain [[scan]] parallelizes per file, which is right for the crawl
-    * reality of many ~1 GB WARCs; but an archive of FEW HUGE files (a
-    * national-library 500 GB WARC) starves a 1000-executor cluster at
-    * one task per file. Gzip members are self-delimiting, so a mid-file
-    * split can re-synchronize: scan forward for the member magic
-    * (`1f 8b 08`, FLG reserved bits clear — the resync heuristic the
-    * corrupt-recovery path already uses) and VALIDATE the candidate by
-    * strictly decoding one full member from it (CRC32 + ISIZE checked by
-    * the decoder), seeking on; a false magic inside deflate data fails
-    * the decode and the scan continues. Ownership: a member belongs to
-    * the split containing its START offset — the owner decodes past its
-    * range end to finish a straddling member, the next split syncs past
-    * that member's interior. Rows are bit-identical to [[scan]]'s
-    * (WarcSpec pins parity across split sizes); the one documented
-    * divergence: corrupt BYTES overlapping a split boundary are skipped
-    * by the syncing split rather than attributed to a span, so corrupt-
-    * row extents can tile differently — record rows never differ.
-    * Residual risk: a false candidate whose bytes decode as a valid
-    * member AND pass CRC32+ISIZE (~2⁻³² on content that already looks
-    * like a gzip header) would emit phantom rows; at that probability
-    * the failure mode is the same class as undetected bit rot.
-    *
-    * `.warc.zst` splits the same way (frame/skippable magic resync,
-    * strict one-frame decode validation); a dict-mode archive's
-    * dictionary lives in the offset-0 skippable frame — outside every
-    * mid-file range — so splits preload it by positioned read, the
-    * fetchRecords discipline. */
-  def scanSplit(
-      spark: SparkSession, pathGlob: String, splitBytes: Long,
-      permissive: Boolean = true): DataFrame = {
-    require(splitBytes > 0, s"scanSplit: splitBytes must be positive, got $splitBytes")
-    val sc = spark.sparkContext
-    val sconf = new SerializableHadoopConf(sc.hadoopConfiguration)
-    val glob = new org.apache.hadoop.fs.Path(pathGlob)
-    val fs = glob.getFileSystem(sc.hadoopConfiguration)
-    val files = fs.globStatus(glob)
-    require(files != null && files.nonEmpty, s"scanSplit: no files match $pathGlob")
-    // driver artifact is one tuple per split — bounded by corpus/splitBytes
-    val splits = files.toSeq.filter(_.isFile).flatMap { st =>
-      val size = st.getLen
-      val n = math.max(1L, (size + splitBytes - 1) / splitBytes)
-      (0L until n).map(i =>
-        (st.getPath.toString, i * splitBytes, math.min((i + 1) * splitBytes, size)))
-    }
-    val rows = sc.parallelize(splits, math.max(splits.size, 1)).flatMap {
-      case (file, start, end) =>
-        val shortName = file.substring(file.lastIndexOf('/') + 1)
-        val p = new org.apache.hadoop.fs.Path(file)
-        val pfs = p.getFileSystem(sconf.value)
-        val isZst = shortName.endsWith(".zst")
-        // a dict-mode .warc.zst parks its dictionary in the offset-0
-        // skippable frame — OUTSIDE every mid-file split's range, so
-        // splits preload it by positioned read (the fetchRecords path)
-        val presetDict: Array[Byte] =
-          if (isZst && start > 0L) {
-            val din = pfs.open(p)
-            try ZstdMembers.leadingDict((pos, buf) => { din.readFully(pos, buf); () })
-            finally { try din.close() catch { case _: Throwable => } }
-          } else null
-        val synced =
-          if (start == 0L) 0L
-          else syncToMemberBoundary(pfs, p, start, end, isZst, presetDict)
-        if (synced < 0 || synced >= end) Iterator.empty
-        else {
-          val in = pfs.open(p)
-          in.seek(synced)
-          val entries: Iterator[Gzip.Entry] =
-            if (isZst) ZstdMembers.entries(in, permissive, presetDict)
-            else Gzip.entries(in, permissive)
-          def closeAll(): Unit = {
-            try in.close() catch { case _: Throwable => }
-            entries match {
-              case c: java.io.Closeable => try c.close() catch { case _: Throwable => }
-              case _ =>
-            }
-          }
-          Option(org.apache.spark.TaskContext.get())
-            .foreach(_.addTaskCompletionListener[Unit](_ => closeAll()))
-          // entry offsets are relative to the seek point; rebase to the
-          // file, and stop at the first entry STARTING at/after range end
-          val it = entries
-            .takeWhile(e => synced + e.offset < end)
-            .flatMap {
-              case m: Gzip.Member =>
-                parseRecords(m.bytes, synced + m.offset, m.compressedLength, shortName)
-              case s: Gzip.CorruptSpan =>
-                Seq(Row("corrupt", null, null, null, null, null,
-                  synced + s.offset, s.compressedLength, shortName, null))
-            }
-          new Iterator[Row] {
-            override def hasNext: Boolean = {
-              val h = it.hasNext
-              if (!h) closeAll()
-              h
-            }
-            override def next(): Row = it.next()
-          }
-        }
-    }
-    spark.createDataFrame(rows, schema)
-  }
-
-  /** First TRUE member/frame boundary at offset in [from, end), or -1.
-    * Pattern scan (gzip member magic, or the zstd frame/skippable magics)
-    * + strict one-member decode validation per candidate. */
-  private def syncToMemberBoundary(
+  /** First TRUE member/frame boundary at offset in [from, end), or -1
+    * (`end` = Long.MaxValue searches to EOF). Pattern scan (gzip member
+    * magic `1f 8b 08` with the FLG reserved bits clear, or the zstd
+    * frame/skippable magics) + strict one-member decode validation per
+    * candidate (CRC32 + ISIZE checked by the gzip decoder); a false magic
+    * inside deflate data fails the decode and the scan moves on. Residual
+    * risk: a false candidate whose bytes decode as a valid member AND
+    * pass CRC32+ISIZE (~2⁻³² on content that already looks like a gzip
+    * header) — the same class as undetected bit rot. */
+  private[graft] def syncToMemberBoundary(
       fs: org.apache.hadoop.fs.FileSystem, path: org.apache.hadoop.fs.Path,
       from: Long, end: Long, isZst: Boolean, presetDict: Array[Byte]): Long = {
     val probe = fs.open(path)
@@ -872,7 +754,7 @@ object Warc {
   }
 
   /** Deterministic many-record fixture (≈300 records, tens of KB) so a
-    * small-splitBytes [[scanSplit]] genuinely cuts mid-file. */
+    * byte-range read genuinely cuts mid-file. */
   def splitFixtureRecords: Seq[FixtureRecord] = (0 until 300).map { i =>
     FixtureRecord("response", s"http://www.example.com/split/$i",
       f"2016-02-01T${(i / 60) % 24}%02d:${i % 60}%02d:00Z",

@@ -738,11 +738,16 @@ object GraftFunctions {
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo("graft.functions.NativeExpressions", name),
         builder))
     }
+    ext.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
+      override def preColumnarTransitions =
+        graft.sources.NameWarcScanRdds
+    })
+  }
 }

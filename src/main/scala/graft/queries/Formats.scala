@@ -910,17 +910,18 @@ object Formats extends QueryModule {
     }),
 
     // SPLITTABLE gzip WARC scan — the few-huge-files shape (a 500 GB
-    // national-library WARC starves a cluster at one task per file):
-    // byte-range splits re-synchronize on the gzip member magic with
-    // strict one-member decode validation, ownership by member START
-    // offset. 4 KB splits over a ~40 KB 300-record fixture force many
-    // mid-file cuts; oracle-exempt like every binary-fixture scan —
-    // WarcSpec pins split==whole parity across split sizes (records AND
-    // payload bytes), including on a corrupted corpus.
+    // national-library WARC starves a cluster at one task per file): a
+    // single-file input is larger than its fair share of the input, so
+    // the scan reads it as ⌈size / parallelism⌉ byte ranges that
+    // re-synchronize on the gzip member magic with strict one-member
+    // decode validation, ownership by member START offset. Oracle-exempt
+    // like every binary-fixture scan — WarcSpec pins range==whole parity
+    // across range sizes (records AND payload bytes), including on a
+    // corrupted corpus.
     "scan_warc_split" -> ((s, d) => {
       val file = tmp(d, "split_fixture.warc.gz")
       Warc.writeFixture(file, Warc.splitFixtureRecords)
-      Warc.scanSplit(s, file, splitBytes = 4096)
+      Warc.scan(s, file)
         .select("record_type", "url", "ts", "digest", "status", "mime", "offset", "length")
         .orderBy("offset")
     }),

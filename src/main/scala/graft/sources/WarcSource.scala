@@ -2,24 +2,39 @@ package graft.sources
 
 import java.util
 
-import graft.formats.{Gzip, SerializableHadoopConf, Warc}
+import scala.annotation.switch
+
+import graft.formats.{Gzip, SerializableHadoopConf, Warc, ZstdMembers}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 for WARC files: `spark.read.format("warc").load(glob)`.
-  * One input partition per WARC file (gzip members are not splittable
-  * mid-file — SURVEY §2.1 scan_warc); the partition reader iterates
-  * members and parses records, so executors stream records without
-  * materializing whole files.
+/** DataSource V2 for WARC/ARC archives:
+  * `spark.read.format("warc").load(glob)` — the one WARC scan
+  * ([[graft.formats.Warc.scan]] is its typed entry). `.zst` files walk
+  * zstd frames, everything else gzip members; both feed the same record
+  * parser. Option `permissive` (default true): damaged bytes become
+  * `record_type='corrupt'` rows; false fails on the first corrupt span.
+  *
+  * Partitioning is derived from the input, never set: with target =
+  * ⌈total bytes / defaultParallelism⌉, a file larger than target is read
+  * as byte ranges of that size and every other file is one partition —
+  * many small crawl files stay one task each, while a few huge ones (a
+  * national-library 500 GB WARC) still fill the cluster. Columns the
+  * query never reads are pruned in the reader: without `payload` no
+  * payload bytes are copied into a row.
   */
 class WarcSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "warc"
@@ -37,106 +52,270 @@ final class WarcTable(path: String) extends Table with SupportsRead {
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val p = Option(options.get("path")).filter(_.nonEmpty).getOrElse(path)
-    // capture the session's Hadoop conf HERE (analysis time, session
-    // thread), exactly like ZipNumSource: planInputPartitions can run on
-    // AQE threads where getActiveSession is empty, and a bare
-    // `new Configuration()` fallback silently drops every
-    // spark.hadoop.* setting (S3 credentials, custom FS)
-    val conf = new SerializableHadoopConf(
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
-    () => new WarcScan(p, conf)
+    // capture the session's Hadoop conf and parallelism HERE (analysis
+    // time, session thread), exactly like ZipNumSource:
+    // planInputPartitions can run on AQE threads where getActiveSession
+    // is empty, and a bare `new Configuration()` fallback silently drops
+    // every spark.hadoop.* setting (S3 credentials, custom FS)
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    new WarcScanBuilder(p, options.getBoolean("permissive", true),
+      sc.defaultParallelism, new SerializableHadoopConf(sc.hadoopConfiguration))
   }
 }
 
-final class WarcScan(pathGlob: String, sconf0: SerializableHadoopConf)
+final class WarcScanBuilder(
+    pathGlob: String, permissive: Boolean, parallelism: Int, conf: SerializableHadoopConf)
+  extends ScanBuilder with SupportsPushDownRequiredColumns {
+
+  private var required: StructType = Warc.schema
+
+  // keep canonical field order: readSchema must agree with what the
+  // reader emits positionally, independent of projection order
+  override def pruneColumns(requiredSchema: StructType): Unit =
+    required = StructType(Warc.schema.filter(f => requiredSchema.fieldNames.contains(f.name)))
+
+  override def build(): Scan = new WarcScan(pathGlob, required, permissive, parallelism, conf)
+}
+
+final class WarcScan(
+    val pathGlob: String, required: StructType, permissive: Boolean, parallelism: Int,
+    conf: SerializableHadoopConf)
   extends Scan with Batch {
-  override def readSchema(): StructType = Warc.schema
-  override def description(): String = s"WarcScan[$pathGlob]"
+  override def readSchema(): StructType = required
+  override def description(): String =
+    s"WarcScan[$pathGlob, cols=${required.fieldNames.mkString(",")}" +
+      (if (permissive) "" else ", strict") + "]"
   override def toBatch: Batch = this
 
-  private def sessionConf: Configuration = sconf0.value
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new MembersReadMetric, new CorruptSpansMetric, new BytesReadMetric)
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val path = new Path(pathGlob)
-    val fs = path.getFileSystem(sessionConf)
-    // a glob match may be a directory (load("/data/warcs") — the common
-    // idiom every builtin file source supports): expand one level to its
-    // archive files. The expansion skips hidden/metadata names (_SUCCESS,
-    // .warc.open in-progress files) and non-.gz sidecars — one stray
-    // README would otherwise fail the whole scan on bad gzip magic.
-    // An EXPLICIT glob/file is taken verbatim (the user asked for it).
-    def isArchive(name: String): Boolean =
-      !name.startsWith("_") && !name.startsWith(".") && name.endsWith(".gz")
-    // directories expand RECURSIVELY (crawls ship as
-    // /crawl/seg-N/*.warc.gz — one-level listing silently returned zero
-    // partitions for the standard layout); depth-capped so a filesystem
-    // loop can't hang planning
-    def expand(s: org.apache.hadoop.fs.FileStatus, depth: Int)
-        : Seq[org.apache.hadoop.fs.FileStatus] =
-      if (s.isFile) {
-        if (isArchive(s.getPath.getName)) Seq(s) else Seq.empty
-      } else if (depth >= 16) Seq.empty
-      else fs.listStatus(s.getPath).toSeq
-        .filterNot(c => c.getPath.getName.startsWith("_") ||
-          c.getPath.getName.startsWith("."))
-        .flatMap(c => expand(c, depth + 1))
-    val statuses = Option(fs.globStatus(path))
-      .map(_.toSeq).getOrElse(Seq.empty)
-      .flatMap { s =>
-        // an EXPLICIT glob/file match is taken verbatim (the user asked
-        // for that exact file); directories expand to their archives
-        if (s.isFile) Seq(s) else expand(s, 0)
-      }
-    statuses.map(s => WarcFilePartition(s.getPath.toString): InputPartition).toArray
+    val files = WarcScan.archives(pathGlob, conf.value)
+    val target = math.max(1L, (files.map(_.getLen).sum + parallelism - 1) / parallelism)
+    files.flatMap { st =>
+      val file = st.getPath.toString
+      val len = st.getLen
+      if (len <= target) Seq(WarcFilePartition(file, 0L, len, len))
+      else (0L until len by target).map(s =>
+        WarcFilePartition(file, s, math.min(s + target, len), len))
+    }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val sconf = new SerializableHadoopConf(sessionConf)
+    val sconf = conf
+    val fields = required.fieldNames
+    val lenient = permissive
     (partition: InputPartition) =>
-      new WarcPartitionReader(partition.asInstanceOf[WarcFilePartition].file, sconf)
+      new WarcPartitionReader(partition.asInstanceOf[WarcFilePartition], fields, lenient, sconf)
   }
 }
 
-final case class WarcFilePartition(file: String) extends InputPartition
+object WarcScan {
 
-final class WarcPartitionReader(file: String, sconf: SerializableHadoopConf)
-  extends PartitionReader[InternalRow] {
-  private val path = new Path(file)
-  private val in = path.getFileSystem(sconf.value).open(path)
-  private val shortName = file.substring(file.lastIndexOf('/') + 1)
-  // permissive like Warc.scan: damaged members surface as
-  // record_type='corrupt' rows, not task failures
-  private val entries = Gzip.entries(in, permissive = true)
-  private var row: InternalRow = _
-  // a (non-conforming but real) multi-record gzip member yields several
-  // rows from one entry — buffer the member's remainder between next()s
-  private val pending = new scala.collection.mutable.Queue[InternalRow]()
-
-  override def next(): Boolean = {
-    while (pending.isEmpty) {
-      if (!entries.hasNext) return false
-      entries.next() match {
-        case m: Gzip.Member =>
-          Warc.parseRows(m.bytes, m.offset, m.compressedLength, shortName).foreach { r =>
-            pending.enqueue(new GenericInternalRow(Array[Any](
-              utf8(r._1), utf8(r._2), utf8(r._3), utf8(r._4),
-              r._5, utf8(r._6), m.offset, m.compressedLength,
-              UTF8String.fromString(shortName), r._7)))
-          }
-        case s: Gzip.CorruptSpan =>
-          pending.enqueue(new GenericInternalRow(Array[Any](
-            utf8("corrupt"), null, null, null,
-            null, null, s.offset, s.compressedLength,
-            UTF8String.fromString(shortName), null)))
-      }
-    }
-    row = pending.dequeue()
-    true
+  /** The archive files `pathGlob` names. A glob match may be a directory
+    * (load("/data/warcs") — the idiom every builtin file source
+    * supports): directories expand RECURSIVELY (crawls ship as one
+    * subdirectory of archives per segment), depth-capped so a filesystem loop can't
+    * hang planning, to their `.gz`/`.zst` files, skipping hidden and
+    * metadata names (_SUCCESS, .warc.open in-progress files) and
+    * sidecars — one stray README would otherwise fail the scan on bad
+    * magic. An EXPLICIT glob/file match is taken verbatim (the user asked
+    * for that exact file). Matching nothing fails, naming the glob: a
+    * mistyped crawl path must not build an empty index. */
+  private[sources] def archives(pathGlob: String, conf: Configuration): Seq[FileStatus] = {
+    val path = new Path(pathGlob)
+    val fs = path.getFileSystem(conf)
+    def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
+    def expand(s: FileStatus, depth: Int): Seq[FileStatus] =
+      if (s.isFile) {
+        val name = s.getPath.getName
+        if (!hidden(name) && (name.endsWith(".gz") || name.endsWith(".zst"))) Seq(s)
+        else Seq.empty
+      } else if (depth >= 16) Seq.empty
+      else fs.listStatus(s.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName))
+        .flatMap(c => expand(c, depth + 1))
+    val files = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
+      .flatMap(s => if (s.isFile) Seq(s) else expand(s, 0))
+    require(files.nonEmpty, s"format(warc): no WARC/ARC archive matches $pathGlob")
+    files
   }
+}
+
+/** Bytes [start, end) of `file` (`fileLength` bytes at planning); a
+  * partition with end == fileLength reads to EOF. */
+final case class WarcFilePartition(file: String, start: Long, end: Long, fileLength: Long)
+  extends InputPartition
+
+/** Reads one [[WarcFilePartition]]. A range owns the members that START
+  * inside it, with both edges moved to true member boundaries: it begins
+  * at the first boundary at or after `start` (offset 0 for the first
+  * range) and stops before the first boundary at or after `end`, where
+  * the next range begins — so a straddling member is finished by the
+  * range holding its start, and every byte, corrupt ones included, is
+  * read by exactly one range: the ranges' rows are the whole-file rows.
+  * (One exception: a corrupt span the decoder cannot end at the next
+  * member magic — a failed gzip attempt past the 1 MiB replay window, a
+  * zstd frame whose damaged header overstates its size — may cover a
+  * boundary; the span's row and counters are then cut there.)
+  * Boundaries are found by [[Warc.syncToMemberBoundary]] (magic scan +
+  * strict one-member decode).
+  * A dict-mode `.warc.zst` keeps its dictionary in the offset-0 skippable
+  * frame, outside every mid-file range, so ranges preload it by
+  * positioned read (the fetchRecords discipline).
+  *
+  * Task metrics: `membersRead`, `corruptSpans`, and
+  * `compressedBytesRead` = the file bytes from the range's first
+  * boundary to the end of its last member or span. */
+final class WarcPartitionReader(
+    part: WarcFilePartition, fields: Array[String], permissive: Boolean,
+    sconf: SerializableHadoopConf)
+  extends PartitionReader[InternalRow] {
+
+  private val path = new Path(part.file)
+  private val fs = path.getFileSystem(sconf.value)
+  private val shortName = part.file.substring(part.file.lastIndexOf('/') + 1)
+  private val filename = UTF8String.fromString(shortName)
+  private val isZst = shortName.endsWith(".zst")
+  private val toEof = part.end >= part.fileLength
+
+  private val presetDict: Array[Byte] =
+    if (isZst && !(part.start == 0L && toEof)) {
+      val din = fs.open(path)
+      try ZstdMembers.leadingDict((pos, buf) => din.readFully(pos, buf))
+      finally din.close()
+    } else null
+
+  private def boundary(from: Long, until: Long): Long =
+    Warc.syncToMemberBoundary(fs, path, from, until, isZst, presetDict)
+
+  /** absolute offset of the range's first member; the range is empty
+    * when no boundary lies inside it */
+  private val start: Long = if (part.start == 0L) 0L else boundary(part.start, part.end)
+  private val empty = start < 0 || start >= part.end
+  /** first offset the NEXT range owns */
+  private val stop: Long =
+    if (empty || toEof) Long.MaxValue
+    else { val n = boundary(part.end, Long.MaxValue); if (n < 0) Long.MaxValue else n }
+
+  private var done = empty
+  private val in = if (empty) null else fs.open(path)
+  private val entries: Iterator[Gzip.Entry] =
+    if (empty) Iterator.empty
+    else {
+      in.seek(start)
+      if (isZst) ZstdMembers.entries(in, permissive, if (start > 0L) presetDict else null)
+      else Gzip.entries(in, permissive)
+    }
+
+  private var membersRead = 0L
+  private var corruptSpans = 0L
+  private var bytesRead = 0L
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    Array(new TaskMetric("membersRead", membersRead),
+      new TaskMetric("corruptSpans", corruptSpans),
+      new TaskMetric("compressedBytesRead", bytesRead))
+
+  // positions in Warc.schema of the columns to emit, in output order
+  private val cols: Array[Int] = fields.map(Warc.schema.fieldIndex)
+  private val withPayload = cols.contains(Warc.schema.fieldIndex("payload"))
+
+  // a (non-conforming but real) multi-record member yields several rows
+  // from one entry — buffered between next()s
+  private val pending = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+  private var pendingAt = 0
+  private var row: InternalRow = _
+  private var memberOffset = 0L
+  private var memberLength = 0L
 
   private def utf8(s: String): UTF8String =
     if (s == null) null else UTF8String.fromString(s)
 
+  private val emit: Warc.Emit = (recordType, url, ts, digest, status, mime, payload) => {
+    val v = new Array[Any](cols.length)
+    var i = 0
+    while (i < cols.length) {
+      v(i) = (cols(i): @switch) match {
+        case 0 => utf8(recordType)
+        case 1 => utf8(url)
+        case 2 => utf8(ts)
+        case 3 => utf8(digest)
+        case 4 => status
+        case 5 => utf8(mime)
+        case 6 => memberOffset
+        case 7 => memberLength
+        case 8 => filename
+        case _ => payload
+      }
+      i += 1
+    }
+    pending += new GenericInternalRow(v)
+  }
+
+  override def next(): Boolean = {
+    while (pendingAt >= pending.length) {
+      pending.clear()
+      pendingAt = 0
+      if (done || !entries.hasNext) return false
+      val e = entries.next()
+      memberOffset = start + e.offset
+      if (memberOffset >= stop) { done = true; return false }
+      e match {
+        case m: Gzip.Member =>
+          membersRead += 1
+          memberLength = m.compressedLength
+          Warc.parseMember(m.bytes, withPayload, emit)
+        case s: Gzip.CorruptSpan =>
+          corruptSpans += 1
+          memberLength = math.min(s.compressedLength, stop - memberOffset)
+          emit("corrupt", null, null, null, null, null, null)
+      }
+      bytesRead = memberOffset + memberLength - start
+    }
+    row = pending(pendingAt)
+    pendingAt += 1
+    true
+  }
+
   override def get(): InternalRow = row
-  override def close(): Unit = in.close()
+
+  // the zstd iterator holds a reused native decompress context with no
+  // finalizer: close it too, not only the stream
+  override def close(): Unit = {
+    entries match {
+      case c: java.io.Closeable => try c.close() catch { case _: Throwable => }
+      case _ =>
+    }
+    if (in != null) in.close()
+  }
+}
+
+final class MembersReadMetric extends CustomSumMetric {
+  override def name(): String = "membersRead"
+  override def description(): String = "archive members decoded"
+}
+final class CorruptSpansMetric extends CustomSumMetric {
+  override def name(): String = "corruptSpans"
+  override def description(): String = "undecodable byte spans skipped"
+}
+
+/** Names each WARC scan's input RDD after its glob, as SparkContext's
+  * own file RDDs are named after their path: the Spark UI's stage DAG
+  * and any `SparkListener` (StageInfo.rddInfos) then show which archives
+  * a stage reads instead of a bare `DataSourceRDD`. Runs as a
+  * pre-columnar physical rule ([[graft.functions.GraftExtensions]]),
+  * which Spark applies to every plan and to every adaptive query stage
+  * before it executes. */
+object NameWarcScanRdds extends Rule[SparkPlan] {
+  override def apply(plan: SparkPlan): SparkPlan = {
+    plan.foreach {
+      case b: BatchScanExec => b.scan match {
+        case w: WarcScan => b.inputRDD.setName(w.pathGlob)
+        case _ =>
+      }
+      case _ =>
+    }
+    plan
+  }
 }

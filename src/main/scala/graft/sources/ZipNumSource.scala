@@ -371,7 +371,7 @@ final class BlocksReadMetric extends org.apache.spark.sql.connector.metric.Custo
 }
 final class BytesReadMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
   override def name(): String = "compressedBytesRead"
-  override def description(): String = "compressed bytes fetched from shards"
+  override def description(): String = "compressed bytes read"
 }
 private final class TaskMetric(metricName: String, v: Long)
   extends org.apache.spark.sql.connector.metric.CustomTaskMetric {

@@ -20,16 +20,178 @@ class SourceV2Spec extends SparkSpec {
     Pipeline.warcToZipNum(spark, warcFile, zipDir, shards = 2, linesPerBlock = 2)
   }
 
-  test("format(warc) matches Warc.scan") {
+  test("format(warc) returns the fixture records in file order, offsets tiling the file") {
     setup()
-    val v2 = spark.read.format("warc").load(warcFile)
-      .select("record_type", "url", "ts", "status", "offset", "length")
-      .orderBy("offset").collect().map(_.toSeq).toSeq
-    val rdd = Warc.scan(spark, warcFile)
-      .select("record_type", "url", "ts", "status", "offset", "length")
-      .orderBy("offset").collect().map(_.toSeq).toSeq
-    assert(v2 == rdd)
-    assert(v2.size == Warc.fixtureRecords.size)
+    val rows = spark.read.format("warc").load(warcFile)
+      .select("record_type", "url", "ts", "digest", "status", "payload", "offset", "length")
+      .collect().toSeq
+    val expected = Warc.fixtureRecords
+    assert(rows.size == expected.size)
+    rows.zip(expected).foreach { case (r, e) =>
+      assert(r.getString(0) == e.recordType && r.getString(1) == e.url, r.toString)
+      assert(r.getString(2) == e.isoDate.replaceAll("[^0-9]", ""), r.toString)
+      assert(r.getString(3) == e.digest, r.toString)
+      // only HTTP responses carry a status; the other types have none
+      assert(r.get(4) == (if (e.recordType == "response") e.status else null), r.toString)
+      assert(r.getAs[Array[Byte]](5).sameElements(e.payload), r.toString)
+    }
+    val extents = rows.map(r => (r.getLong(6), r.getLong(7)))
+    assert(extents.head._1 == 0L)
+    extents.sliding(2).foreach { case Seq((o, l), (next, _)) => assert(o + l == next) }
+    assert(extents.last._1 + extents.last._2 == Files.size(Paths.get(warcFile)))
+  }
+
+  test("format(warc) on a glob matching nothing fails at planning, naming the glob") {
+    val glob = "/tmp/graft_test/no_such_crawl/*.warc.gz"
+    def failsNaming(path: String, df: () => org.apache.spark.sql.DataFrame): Unit = {
+      val e = intercept[Exception](df().count())
+      val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .map(t => Option(t.getMessage).getOrElse("")).toSeq
+      assert(msgs.exists(_.contains(path)), msgs.mkString(" | "))
+    }
+    failsNaming(glob, () => spark.read.format("warc").load(glob))
+    failsNaming(glob, () => Warc.scan(spark, glob))
+    // a directory holding no archive is the same mistake
+    val empty = "/tmp/graft_test/v2_empty_warcdir"
+    Files.createDirectories(Paths.get(empty))
+    Files.write(Paths.get(empty, "README"), "not an archive".getBytes("UTF-8"))
+    failsNaming(empty, () => spark.read.format("warc").load(empty))
+  }
+
+  test("format(warc) directory loads include .warc.zst archives") {
+    val dir = "/tmp/graft_test/v2_zstdir"
+    Files.createDirectories(Paths.get(dir))
+    Files.list(Paths.get(dir)).forEach(p => Files.delete(p))
+    Warc.writeFixture(s"$dir/a.warc.gz", Warc.fixtureRecords.take(3))
+    Warc.writeFixtureZst(s"$dir/b.warc.zst", Warc.fixtureRecords.drop(3))
+    Files.write(Paths.get(dir, "README"), "sidecar".getBytes("UTF-8"))
+    val byFile = spark.read.format("warc").load(dir).groupBy("filename").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(byFile == Map("a.warc.gz" -> 3L, "b.warc.zst" -> (Warc.fixtureRecords.size - 3L)),
+      byFile.toString)
+  }
+
+  private def warcScan(glob: String): graft.sources.WarcScan =
+    new graft.sources.WarcTable(glob)
+      .newScanBuilder(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Collections.emptyMap()))
+      .build().asInstanceOf[graft.sources.WarcScan]
+
+  test("warc planner: a 1-file glob splits into ranges, 64 small files plan 64") {
+    import graft.sources.WarcFilePartition
+    val dir = Files.createTempDirectory("warc_plan")
+    val big = dir.resolve("big.warc.gz").toString
+    Warc.writeFixture(big, Warc.splitFixtureRecords)
+    val len = Files.size(Paths.get(big))
+    // one file is the whole input, so it is larger than its share
+    val ranges = warcScan(big).planInputPartitions().map(_.asInstanceOf[WarcFilePartition]).toSeq
+    assert(ranges.size > 1 && ranges.size <= spark.sparkContext.defaultParallelism, ranges.toString)
+    assert(ranges.head.start == 0L && ranges.last.end == len)
+    ranges.sliding(2).foreach { case Seq(a, b) => assert(a.end == b.start) }
+
+    val small = Files.createDirectories(dir.resolve("small"))
+    (0 until 64).foreach(i => Warc.writeFixture(small.resolve(f"f$i%02d.warc.gz").toString,
+      Warc.fixtureRecords))
+    val parts = warcScan(s"$small/*.warc.gz").planInputPartitions()
+      .map(_.asInstanceOf[WarcFilePartition]).toSeq
+    assert(parts.size == 64)
+    assert(parts.forall(p => p.start == 0L && p.end == p.fileLength))
+    assert(spark.read.format("warc").load(s"$small/*.warc.gz").count() ==
+      64L * Warc.fixtureRecords.size)
+  }
+
+  test("format(warc) reports membersRead/corruptSpans/compressedBytesRead; every byte is accounted for") {
+    import graft.formats.Gzip
+    import graft.sources.{WarcFilePartition, WarcScan}
+    import org.apache.spark.sql.connector.read.InputPartition
+    val dir = Files.createTempDirectory("warc_metrics")
+    val file = dir.resolve("corrupt.warc.gz").toString
+    Warc.writeFixture(file, Warc.splitFixtureRecords)
+    val bytes = Files.readAllBytes(Paths.get(file))
+    for (i <- 5000 until 5040) bytes(i) = 0x5a // 40 flipped bytes inside one member
+    Files.write(Paths.get(file), bytes)
+    val len = bytes.length.toLong
+    // reference: the member decoder walking the whole file by itself
+    val ref = Gzip.entries(new java.io.ByteArrayInputStream(bytes), permissive = true).toSeq
+    val members = ref.count(_.isInstanceOf[Gzip.Member]).toLong
+    val spans = ref.count(_.isInstanceOf[Gzip.CorruptSpan]).toLong
+    assert(members == 299L && spans == 1L, s"members=$members spans=$spans")
+    assert(ref.map(_.compressedLength).sum == len)
+
+    val scan = warcScan(file)
+    assert(scan.supportedCustomMetrics().map(_.name()).toSeq ==
+      Seq("membersRead", "corruptSpans", "compressedBytesRead"))
+    def metricsOf(parts: Seq[InputPartition]): Map[String, Long] = {
+      val factory = scan.createReaderFactory()
+      parts.map { p =>
+        val r = factory.createReader(p)
+        try { while (r.next()) r.get(); r.currentMetricsValues().map(t => t.name() -> t.value()).toMap }
+        finally r.close()
+      }.reduce((a, b) => a.map { case (k, v) => k -> (v + b(k)) })
+    }
+    val expected = Map("membersRead" -> members, "corruptSpans" -> spans, "compressedBytesRead" -> len)
+    val split = scan.planInputPartitions().toSeq
+    assert(split.size > 1)
+    assert(metricsOf(Seq(WarcFilePartition(file, 0L, len, len))) == expected, "whole-file plan")
+    assert(metricsOf(split) == expected, "split plan")
+
+    // the same sums through Spark's SQL metrics of an executed scan
+    val df = spark.read.format("warc").load(file)
+    df.collect()
+    val exec = df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.head
+    assert(exec.scan.isInstanceOf[WarcScan])
+    assert(expected.forall { case (k, v) => exec.metrics(k).value == v },
+      exec.metrics.map { case (k, m) => k -> m.value }.toString)
+  }
+
+  test("format(warc) prunes columns: the CDX derive reads 9 of 10, never the payload") {
+    setup()
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def readSchemaOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.queryExecution.executedPlan.collect { case b: BatchScanExec => b.scan }
+        .map(_.readSchema().fieldNames.toSeq).head
+    assert(readSchemaOf(Pipeline.cdxLines(spark, warcFile)) ==
+      Warc.schema.fieldNames.filterNot(_ == "payload").toSeq)
+    assert(readSchemaOf(Warc.scan(spark, warcFile).select("url", "payload")) == Seq("url", "payload"))
+    // pruned rows carry exactly the pruned columns, values unchanged
+    val pruned = Warc.scan(spark, warcFile).select("url", "offset").collect().toSeq
+    val full = Warc.scan(spark, warcFile).collect().map(r => (r.getString(1), r.getLong(6))).toSeq
+    assert(pruned.map(r => (r.getString(0), r.getLong(1))) == full)
+  }
+
+  test("WARC scan RDDs carry the glob as their name (stage attribution)") {
+    setup()
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val plan = graft.sources.NameWarcScanRdds(
+      spark.read.format("warc").load(warcFile).queryExecution.executedPlan)
+    assert(plan.collect { case b: BatchScanExec => b.inputRDD.name } == Seq(warcFile))
+    // end to end: a session built with GraftExtensions (shares this
+    // SparkContext) shows the glob in the scan stage's RDD names
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        e.stageInfo.rddInfos.foreach(r => names.add(r.name))
+    }
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val ext = SparkSession.builder().withExtensions(new graft.functions.GraftExtensions).getOrCreate()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(ext ne spark)
+      assert(Warc.scan(ext, warcFile).count() == Warc.fixtureRecords.size)
+      // listener events arrive asynchronously
+      val deadline = System.currentTimeMillis() + 10000
+      while (!names.contains(warcFile) && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(names.contains(warcFile), names.toString)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
   }
 
   test("format(warc) loads a directory of WARCs, not just file globs") {

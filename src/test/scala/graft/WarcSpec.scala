@@ -723,68 +723,87 @@ class WarcSpec extends SparkSpec {
       ("http://h.example/b", "http://d.example/2")), hlinks.toString)
   }
 
-  test("scanSplit: byte-range splits return rows bit-identical to the whole-file scan") {
+  test("byte-range reads return rows bit-identical to the whole-file read (gz, corrupt gz, zst, zst-dict)") {
+    import graft.formats.SerializableHadoopConf
+    import graft.sources.{WarcFilePartition, WarcPartitionReader}
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("warc_split")
-    val file = dir.resolve("big.warc.gz").toString
-    Warc.writeFixture(file, Warc.splitFixtureRecords)
+    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
     def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
       df.select(col("record_type"), col("url"), col("ts"), col("digest"),
         col("status"), col("mime"), col("offset"), col("length"),
         sha2(col("payload"), 256).as("psha"))
         .orderBy("offset").collect().toSeq.map(_.toSeq)
-    val whole = rowsOf(Warc.scan(spark, file))
-    assert(whole.size == 300)
-    // split sizes chosen to cut mid-member constantly (977 is prime and
-    // smaller than most members; 4096/16384 cut every few members); a
-    // splitBytes larger than the file degenerates to the whole scan
-    for (sb <- Seq(977L, 4096L, 16384L, 1L << 30)) {
-      val split = rowsOf(Warc.scanSplit(spark, file, sb))
-      assert(split == whole, s"splitBytes=$sb diverged from the whole-file scan")
+    def sha(b: Array[Byte]): String =
+      if (b == null) null
+      else java.security.MessageDigest.getInstance("SHA-256").digest(b)
+        .map(x => f"${x & 0xff}%02x").mkString
+    // the same columns as rowsOf, straight from the partition reader over
+    // consecutive `rangeBytes` ranges (file length = the whole-file read)
+    def readRanges(path: String, rangeBytes: Long): Seq[Seq[Any]] = {
+      val len = new java.io.File(path).length
+      (0L until len by rangeBytes).flatMap { s =>
+        val r = new WarcPartitionReader(
+          WarcFilePartition(path, s, math.min(s + rangeBytes, len), len),
+          Warc.schema.fieldNames, permissive = true, conf)
+        def str(i: Int): String = Option(r.get().getUTF8String(i)).map(_.toString).orNull
+        try Iterator.continually(r.next()).takeWhile(identity).map { _ =>
+          val row = r.get()
+          Seq(str(0), str(1), str(2), str(3), if (row.isNullAt(4)) null else row.getInt(4),
+            str(5), row.getLong(6), row.getLong(7), sha(row.getBinary(9)))
+        }.toVector
+        finally r.close()
+      }
     }
+    def whole(path: String): Seq[Seq[Any]] = readRanges(path, new java.io.File(path).length)
 
-    // corruption: record rows must still match the whole scan's records
-    // (corrupt-SPAN extents may tile differently across splits — the
-    // documented divergence); flip bytes inside one member's deflate data
+    val file = dir.resolve("big.warc.gz").toString
+    Warc.writeFixture(file, Warc.splitFixtureRecords)
+    val wholeGz = whole(file)
+    assert(wholeGz.size == 300)
+    // range sizes chosen to cut mid-member constantly (977 is prime and
+    // smaller than most members; 4096/16384 cut every few members)
+    for (rb <- Seq(977L, 4096L, 16384L))
+      assert(readRanges(file, rb) == wholeGz, s"rangeBytes=$rb diverged from the whole-file read")
+    // the planned scan splits a single-file input into ranges too
+    assert(rowsOf(Warc.scan(spark, file)) == wholeGz)
+
+    // corruption: flip bytes inside one member's deflate data. Ranges
+    // start and stop on true member boundaries, so every byte is read by
+    // exactly one range — corrupt-span rows match the whole read too
     val corrupted = dir.resolve("corrupt.warc.gz").toString
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file))
     for (i <- 5000 until 5040) bytes(i) = 0x5a
     java.nio.file.Files.write(java.nio.file.Paths.get(corrupted), bytes)
-    def records(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
-      rowsOf(df.where(col("record_type") =!= "corrupt"))
-    val wholeRec = records(Warc.scan(spark, corrupted))
-    assert(wholeRec.size < 300 && wholeRec.size > 290, s"got ${wholeRec.size}")
-    for (sb <- Seq(977L, 4096L)) {
-      val splitRec = records(Warc.scanSplit(spark, corrupted, sb))
-      assert(splitRec == wholeRec, s"splitBytes=$sb record rows diverged on the corrupt corpus")
-    }
+    val wholeCorrupt = whole(corrupted)
+    val records = wholeCorrupt.count(_.head != "corrupt")
+    assert(records < 300 && records > 290, s"got $records")
+    assert(wholeCorrupt.exists(_.head == "corrupt"))
+    for (rb <- Seq(977L, 4096L, 16384L))
+      assert(readRanges(corrupted, rb) == wholeCorrupt,
+        s"rangeBytes=$rb diverged from the whole read on the corrupt corpus")
 
     // the index contract: CDX pointers built FROM a split scan replay
-    // through fetchRecords exactly like pointers from the whole scan —
-    // split offsets are absolute file offsets, not split-relative
-    val ptrs = Warc.scanSplit(spark, file, 4096L)
+    // through fetchRecords exactly like pointers from the whole read —
+    // range offsets are absolute file offsets, not range-relative
+    val ptrs = Warc.scan(spark, file)
       .select(col("filename"), col("offset"), col("length")).distinct()
     val fetched = Warc.fetchRecords(spark, ptrs, dir.toString)
-    assert(rowsOf(fetched) == whole, "split-scan pointers must replay bit-identically")
+    assert(rowsOf(fetched) == wholeGz, "split-scan pointers must replay bit-identically")
 
     // zstd: same parity through the frame-magic resync — plain frames AND
     // dict mode, where every frame needs the offset-0 dictionary that mid
-    // splits can only get by positioned preload
+    // ranges can only get by positioned preload
     val zst = dir.resolve("big.warc.zst").toString
     Warc.writeFixtureZst(zst, Warc.splitFixtureRecords)
-    val wholeZst = rowsOf(Warc.scan(spark, zst))
-    assert(wholeZst.size == 300)
-    for (sb <- Seq(977L, 4096L)) {
-      val split = rowsOf(Warc.scanSplit(spark, zst, sb))
-      assert(split == wholeZst, s"zst splitBytes=$sb diverged from the whole-file scan")
-    }
     val zstDict = dir.resolve("dict.warc.zst").toString
     Warc.writeFixtureZstDict(zstDict, Warc.splitFixtureRecords, compressedDict = true)
-    val wholeDict = rowsOf(Warc.scan(spark, zstDict))
-    assert(wholeDict.size == 300)
-    for (sb <- Seq(977L, 4096L)) {
-      val split = rowsOf(Warc.scanSplit(spark, zstDict, sb))
-      assert(split == wholeDict, s"zst-dict splitBytes=$sb diverged from the whole-file scan")
+    for (path <- Seq(zst, zstDict)) {
+      val w = whole(path)
+      assert(w.size == 300)
+      for (rb <- Seq(977L, 4096L, 16384L))
+        assert(readRanges(path, rb) == w, s"$path rangeBytes=$rb diverged from the whole-file read")
+      assert(rowsOf(Warc.scan(spark, path)) == w)
     }
   }
 

@@ -97,6 +97,39 @@ class ZipNumSpec extends SparkSpec {
       ZipNum.readLines(spark, fresh).as[String].collect().toSeq)
   }
 
+  test("a shard failing in the write stage leaves no cluster, shard, side idx or temp; a rerun == a fresh write") {
+    import spark.implicits._
+    val local = "/tmp/graft_test/zipnum_write_stage_fail"
+    val fresh = "/tmp/graft_test/zipnum_write_stage_fail_fresh"
+    val dir = "failfs://" + local
+    val lines = (0 until 400).map(i => f"k${(i * 131) % 400}%04d 2015 x$i")
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.failfs.impl", classOf[FailingCreateFs].getName)
+    hconf.setBoolean("fs.failfs.impl.disable.cache", true)
+    try {
+      freshDir(local)
+      // shard 1's temp create throws once shard 0 is published: the job
+      // fails inside the write stage with one shard already committed
+      FailingCreateFs.arm(".cdx-00001.gz.attempt-", new java.io.File(local, "cdx-00000.gz"))
+      val e = intercept[Exception](
+        ZipNum.write(lines.toDF("line"), dir, shards = 2, linesPerBlock = 10))
+      assert(FailingCreateFs.fired, "the injected failure never fired")
+      assert(messages(e).exists(_.contains("injected create failure")), messages(e).mkString(" | "))
+      val left = listing(local)
+      assert(!left.exists(n => n == "cluster.idx" || n.matches("cdx-\\d+\\.gz") ||
+        n.startsWith(".idx-") || n.contains(".attempt-")), s"failed write left: $left")
+      FailingCreateFs.disarm()
+      ZipNum.write(lines.toDF("line"), dir, shards = 2, linesPerBlock = 10)
+    } finally {
+      FailingCreateFs.disarm()
+      hconf.unset("fs.failfs.impl")
+      hconf.unset("fs.failfs.impl.disable.cache")
+    }
+    ZipNum.write(lines.toDF("line"), fresh, shards = 2, linesPerBlock = 10)
+    assert(ZipNum.readLines(spark, local).as[String].collect().toSeq ==
+      ZipNum.readLines(spark, fresh).as[String].collect().toSeq)
+  }
+
   test("job abort deletes every shard and side idx the committed tasks published") {
     import graft.sources.{ZipNumBatchWrite, ZipNumDataWriter}
     val d = "/tmp/graft_test/zipnum_abort"
