@@ -1,6 +1,7 @@
 package graft
 
 import graft.formats.ZipNum
+import graft.sources.ZipNumScan
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,7 +42,20 @@ final class CdxServer(spark: SparkSession, clusterDir: String) {
     // server response (caught by the CdxMatrixSpec parameter sweep)
     val df = spark.read.format("zipnum").load(clusterDir)
       .select("urlkey", "ts", "json")
-    prefixKey.map(p => df.filter(col("urlkey").startsWith(p))).getOrElse(df)
+    prefixKey match {
+      case None => df
+      case Some(p) =>
+        val pruned = df.filter(col("urlkey").startsWith(p))
+        // The scan selects the same idx range (further pushed filters only
+        // narrow it), so a selection of at most BlocksPerPartition blocks
+        // plans one input partition. coalesce(1) over it is narrow and
+        // reports SinglePartition, which satisfies every orderBy, window
+        // and aggregate above: the lookup runs as ONE job, with no
+        // RangePartitioner sample re-reading the blocks and no shuffle.
+        // Costs one more bounded idx search (the scan runs its own).
+        if (idxFor(p).size <= ZipNumScan.BlocksPerPartition) pruned.coalesce(1)
+        else pruned
+    }
   }
 
   /** all captures of one canonical URL key, oldest first */

@@ -3,6 +3,7 @@ package graft.formats
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
+import graft.sources.ZipNumScan
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.{TaskContext, TaskKilledException}
@@ -609,7 +610,9 @@ object ZipNum {
 
   /** Read exactly the given idx blocks (the pagination path — pywb zipnum
     * §pagination: a page is a run of idx blocks), filtering lines to
-    * `prefix` when given. */
+    * `prefix` when given. At most [[ZipNumScan.BlocksPerPartition]] blocks
+    * are read by one task and ordered within it (one job, no exchange);
+    * more are spread over tasks and ordered by a range exchange. */
   def readBlockLines(
       spark: SparkSession, dir: String, selected: Seq[IdxEntry],
       prefix: Option[String], ordered: Boolean = true): DataFrame = {
@@ -620,8 +623,12 @@ object ZipNum {
     val work = selected.map(e => (dir + "/" + e.shard, e.offset, e.length, e.seq))
       .sortBy(w => (w._1, w._2))
     val sconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val slices = math.max(1,
-      math.min(work.size, math.max(32, spark.sparkContext.defaultParallelism)))
+    // a selection that fits one scan partition is read by one task and
+    // sorted within it: no range exchange, one job
+    val onePartition = work.size <= ZipNumScan.BlocksPerPartition
+    val slices =
+      if (onePartition) 1
+      else math.min(work.size, math.max(32, spark.sparkContext.defaultParallelism))
     val lines = spark.sparkContext
       .parallelize(work, slices)
       .mapPartitions { it =>
@@ -663,7 +670,8 @@ object ZipNum {
       case Some(p) => pruned.filter(col("line").startsWith(p))
       case None => pruned
     }
-    if (ordered) filtered.orderBy("blockseq", "lineno").select("line")
-    else filtered.select("line")
+    if (!ordered) filtered.select("line")
+    else if (onePartition) filtered.sortWithinPartitions("blockseq", "lineno").select("line")
+    else filtered.orderBy("blockseq", "lineno").select("line")
   }
 }

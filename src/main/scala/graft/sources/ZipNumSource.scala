@@ -334,10 +334,10 @@ final class ZipNumScan(
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     Array(new BlocksReadMetric, new BytesReadMetric)
 
-  /** grouped ≤64 contiguous blocks per partition so a huge cluster
-    * doesn't explode the task count */
+  /** grouped ≤[[ZipNumScan.BlocksPerPartition]] contiguous blocks per
+    * partition so a huge cluster doesn't explode the task count */
   override def planInputPartitions(): Array[InputPartition] =
-    selectedBlocks.grouped(64).map { group =>
+    selectedBlocks.grouped(ZipNumScan.BlocksPerPartition).map { group =>
       ZipNumBlockPartition(
         group.map(e => (dir + "/" + e.shard, e.offset, e.length, e.seq)).toArray): InputPartition
     }.toArray
@@ -354,6 +354,12 @@ final class ZipNumScan(
 object ZipNumScan {
   /** runtime-filter key budget: each key costs O(log idx) driver seeks */
   val MaxRuntimeKeys = 1024
+
+  /** contiguous blocks per input partition. A selection of at most this
+    * many blocks plans ONE partition — the fact `CdxServer` and
+    * `ZipNum.readBlockLines` use to plan a lookup without a range
+    * exchange. */
+  val BlocksPerPartition = 64
 
   /** driver-side idx read — delegates to the single idx parser */
   def readIdxStatic(

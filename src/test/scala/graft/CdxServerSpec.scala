@@ -2,13 +2,19 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.formats.Warc
+import graft.formats.{Warc, ZipNum}
+import graft.sources.ZipNumScan
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.col
 
 /** pywb cdx-server semantics over a ZipNum cluster built by the pipeline
   * (SURVEY §2.9): exact/prefix/domain lookup, time range, closest,
   * collapse, latest, pagination. */
-class CdxServerSpec extends SparkSpec {
+class CdxServerSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val warcFile = "/tmp/graft_test/server.warc.gz"
@@ -19,6 +25,32 @@ class CdxServerSpec extends SparkSpec {
     Pipeline.warcToZipNum(spark, warcFile, dir, shards = 2, linesPerBlock = 2)
     new CdxServer(spark, dir)
   }
+
+  /** (jobs, most tasks in one stage) of one `df.collect()`, counted
+    * through a listener on a job group of its own */
+  private def jobsAndWidth(df: DataFrame): (Int, Int) = {
+    val sc = spark.sparkContext
+    val group = s"cdx-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val width = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          jobs.incrementAndGet()
+          e.stageInfos.foreach(s => width.accumulateAndGet(s.numTasks, math.max))
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "CdxServerSpec job count")
+    try { df.collect(); ListenerBusDrain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    (jobs.get, width.get)
+  }
+
+  /** (jobs of one collect, shuffle exchanges in its final plan) */
+  private def jobsAndShuffles(df: DataFrame): (Int, Int) =
+    (jobsAndWidth(df)._1,
+      collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }.size)
 
   test("exactUrl returns every capture of the key, oldest first") {
     val rows = server.exactUrl("com,example)/path?a=1&b=2")
@@ -158,6 +190,55 @@ class CdxServerSpec extends SparkSpec {
     assert(all.sorted == full.sorted, "union of pages == full prefix result")
     // out-of-range page is empty, not an error
     assert(server.page(pre, bpp, n).count() == 0)
+    // a page fits one partition: one task, sorted in place, no exchange
+    (0 until n).foreach { i =>
+      assert(jobsAndShuffles(server.page(pre, bpp, i)) == (1, 0), s"page $i")
+    }
+  }
+
+  test("lookups whose idx selection fits one scan partition run one job, no exchange") {
+    val key = "com,example)/path?a=1&b=2"
+    val lookups = Seq[(String, () => DataFrame)](
+      "exactUrl" -> (() => server.exactUrl(key)),
+      "host" -> (() => server.host("com,example")),
+      "prefix" -> (() => server.prefix("com,example)/")),
+      "domain" -> (() => server.domain("org,iana")),
+      "closest" -> (() => server.closest(key, "20150301000000", 1)),
+      "captures" -> (() => server.captures(key, "20150101000000", "20151231000000")),
+      "collapse" -> (() => server.collapse("com,example)/", 6)),
+      "latest" -> (() => server.latest("com,example)/")),
+      "timemap" -> (() => server.timemap(key)),
+      "miss" -> (() => server.exactUrl("com,absent)/")))
+    lookups.foreach { case (name, df) =>
+      assert(jobsAndShuffles(df()) == (1, 0), name)
+    }
+  }
+
+  test("a prefix spanning more than one scan partition keeps a parallel scan") {
+    // 200 lines under one host at one line per block: the host selects
+    // 200 blocks and the hot URL's 120 captures over 64, so both lookups
+    // keep their multi-partition scan (and its range exchange)
+    val dir = "/tmp/graft_test/server_zipnum_wide"
+    val hot = "com,wide)/hot"
+    val lines =
+      (0 until 120).map(i => f"""$hot 2020${i / 28 + 1}%02d${i % 28 + 1}%02d000000 {"n":$i}""") ++
+        (0 until 80).map(i => f"""com,wide)/p$i%03d 20210101000000 {"n":$i}""") ++
+        Seq("com,before)/ 20200101000000 {}", "com,wide,sub)/ 20200101000000 {}",
+          "org,after)/ 20200101000000 {}")
+    ZipNum.write(new scala.util.Random(7).shuffle(lines).toDF("line"), dir, shards = 2, linesPerBlock = 1)
+    val srv = new CdxServer(spark, dir)
+    def key(l: String): (String, String) = { val f = l.split(" ", 3); (f(0), f(1)) }
+    // the blocks are read by at least 2 tasks, not coalesced into one
+    def scanTasks(df: DataFrame): Int = jobsAndWidth(df)._2
+    assert(srv.numPages("com,wide)", 1) > 2 * ZipNumScan.BlocksPerPartition)
+    val prefix = srv.prefix("com,wide)")
+    assert(scanTasks(prefix) >= 2)
+    assert(prefix.select("urlkey", "ts").as[(String, String)].collect().toSeq ==
+      lines.filter(_.startsWith("com,wide)")).map(key).sorted)
+    val exact = srv.exactUrl(hot)
+    assert(scanTasks(exact) >= 2)
+    assert(exact.select("urlkey", "ts").as[(String, String)].collect().toSeq ==
+      lines.filter(_.startsWith(hot + " ")).map(key).sortBy(_._2))
   }
 
   test("pageByKey: cursor walk reproduces the prefix listing exactly") {
@@ -188,7 +269,6 @@ class CdxServerSpec extends SparkSpec {
   }
 
   test("pageByKey 3-field cursor is lossless across duplicate (urlkey, ts) runs") {
-    import graft.formats.ZipNum
     // real CDX data: several captures of one URL inside the same second,
     // distinguishable only by payload — a page boundary lands mid-run
     val dir = "/tmp/graft_test/server_zipnum_dups"
@@ -225,7 +305,6 @@ class CdxServerSpec extends SparkSpec {
   }
 
   test("pageByKey cursor distinguishes NULL json from empty json (sort-consistent)") {
-    import graft.formats.ZipNum
     // a (urlkey, ts) run holding BOTH a 2-field line (json scans as NULL)
     // and a 3-field line with an empty json: the sort keeps them distinct
     // (NULLS FIRST), so the cursor comparison must too — the old

@@ -210,7 +210,14 @@ class SourceV2Spec extends SparkSpec {
     // not carry, whose old fallback silently dropped custom FS settings)
     setup()
     val key = "graft.test.conf.key"
-    spark.sparkContext.hadoopConfiguration.set(key, "survives")
+    val longKey = "graft.test.conf.long"
+    val utfKey = "graft.test.conf.utf8"
+    val long = "x" * 70000 // past DataOutput.writeUTF's 65,535-byte limit
+    val utf = "caf\u00e9 \u6f22\u5b57 " + new String(Character.toChars(0x1F600))
+    val session = spark.sparkContext.hadoopConfiguration
+    session.set(key, "survives")
+    session.set(longKey, long)
+    session.set(utfKey, utf)
     try {
       val table = new graft.sources.ZipNumTable(zipDir, null)
       val scan = table
@@ -218,7 +225,25 @@ class SourceV2Spec extends SparkSpec {
           java.util.Collections.emptyMap()))
         .build().asInstanceOf[graft.sources.ZipNumScan]
       assert(scan.hadoopConf.get(key) == "survives")
-    } finally spark.sparkContext.hadoopConfiguration.unset(key)
+      // the wire form tasks receive: a Java-serialization round trip
+      // keeps exactly the session's key/value set
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(new graft.formats.SerializableHadoopConf(session))
+      out.close()
+      val back = new java.io.ObjectInputStream(
+        new java.io.ByteArrayInputStream(bytes.toByteArray))
+        .readObject().asInstanceOf[graft.formats.SerializableHadoopConf].value
+      def entries(c: org.apache.hadoop.conf.Configuration): Map[String, String] = {
+        val m = Map.newBuilder[String, String]
+        c.iterator().forEachRemaining(e => m += e.getKey -> e.getValue)
+        m.result()
+      }
+      val sent = entries(session)
+      assert(sent.size > 100, "the session conf carries Hadoop's defaults")
+      assert(entries(back) == sent)
+      assert(back.get(key) == "survives" && back.get(longKey) == long && back.get(utfKey) == utf)
+    } finally Seq(key, longKey, utfKey).foreach(session.unset)
   }
 
   test("format(wacz) parses the CDXJ index and agrees with Wacz.scanIndex") {
