@@ -68,23 +68,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // events.parquet carries nanos timestamps; set the legacy flag once,
-      // up front, so no query mutates session conf mid-run
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // transformWithState (stream_frontier) requires the RocksDB state
-      // store provider even batch-run; inert for every other query
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // pin UTC like Verify/GraftSession — the CDX derivations assume it,
-      // so an unpinned TZ would bench a different row set than the one
-      // correctness-verified (build.sbt sets the -D too; belt-and-braces)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.harness()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warm-up: JIT + codegen + shuffle/window machinery + parquet
     // footer caches (one representative query per physical-plan family).

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query bench harness (diagnostic sibling of [[Bench]]): runs one
   * named [[SparkEntry.queries]] entry N times under the exact Bench session
   * config and prints per-rep wall times. Exists so a bench outlier can be
@@ -15,21 +13,7 @@ object BenchOne {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default must MATCH Bench's ("4") — this tool exists to reproduce a
-    // Bench line under the exact same session config; an 8× parallelism
-    // difference would make the per-rep times silently incomparable
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // transformWithState (stream_frontier) requires the RocksDB state
-      // store provider even batch-run; inert for every other query
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.harness()
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries.getOrElse(name,
       throw new IllegalArgumentException(s"unknown query '$name'"))

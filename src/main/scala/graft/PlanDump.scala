@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-artifact dumper (diagnostic sibling of [[BenchOne]]): writes
   * `explain("formatted")` for named [[SparkEntry.queries]] keys to
   * `<outDir>/<key>.txt` under the exact Bench session config — the
@@ -16,16 +14,7 @@ object PlanDump {
     require(args.length >= 3, "usage: PlanDump <sfDir> <outDir> key1,key2,...")
     val Array(sfDir, outDir) = args.take(2)
     val keys = args(2).split(',').map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.harness()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     keys.foreach { k =>

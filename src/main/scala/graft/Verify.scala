@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -25,27 +24,14 @@ object Verify {
       case other =>
         sys.error(s"usage: Verify <sfDir> <outDir> [name,name,...] — got ${other.length} args")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // set once up front — queries must not mutate session conf from the
-      // worker pool while other queries plan concurrently
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // transformWithState (stream_frontier) requires the RocksDB state
-      // store provider even batch-run; inert for every other query
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.harness()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // run queries on a small pool — Spark's scheduler interleaves the jobs,
     // hiding per-query planning latency (outputs are independent dirs);
     // pool scales with the executor thread count
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(4, math.min(12, cpus.toInt / 4)))
+      math.max(4, math.min(12, spark.sparkContext.defaultParallelism / 4)))
     // A failed dump must be LOUD: the driver's gate counts only the output
     // dirs that exist, so a query that throws here silently shrinks the
     // denominator (round 6 lost all five §2.8 window queries this way and

@@ -676,11 +676,12 @@ object Wacz {
     }
   }
 
-  /** Resolve an archive glob to (path, length) pairs. Directory matches
-    * expand to their `.wacz` children (the V2 source's
-    * planInputPartitions rule) so a dir-only glob fails loudly here
-    * instead of silently yielding an empty frame downstream. */
-  private def archiveFiles(
+  /** Resolve an archive glob to (path, length) pairs — the one lister of
+    * the readers here and the V2 source ([[graft.sources.WaczSource]]).
+    * Directory matches expand to their non-hidden `.wacz` children, so a
+    * dir-only glob fails loudly (naming `what`, the caller) instead of
+    * silently yielding an empty frame downstream. */
+  private[graft] def archiveFiles(
       fs: org.apache.hadoop.fs.FileSystem, glob: Path, what: String): Seq[(String, Long)] = {
     val files = Option(fs.globStatus(glob)).map(_.toSeq).getOrElse(Seq.empty)
     val paths = files.flatMap { st =>
@@ -690,7 +691,7 @@ object Wacz {
         c.isFile && !n.startsWith("_") && !n.startsWith(".") && n.endsWith(".wacz")
       }
     }.map(st => (st.getPath.toString, st.getLen))
-    require(paths.nonEmpty, s"Wacz.$what: no archive files match $glob")
+    require(paths.nonEmpty, s"$what: no archive files match $glob")
     paths
   }
 
@@ -708,7 +709,7 @@ object Wacz {
     val sconf = new SerializableHadoopConf(sc.hadoopConfiguration)
     val glob = new Path(pathGlob)
     val fs = glob.getFileSystem(sc.hadoopConfiguration)
-    val paths = archiveFiles(fs, glob, what)
+    val paths = archiveFiles(fs, glob, s"Wacz.$what")
     val rows = sc.parallelize(paths, math.max(paths.size, 1)).flatMap {
       case (file, len) =>
         val shortName = file.substring(file.lastIndexOf('/') + 1)
@@ -851,7 +852,7 @@ object Wacz {
     val sconf = new SerializableHadoopConf(sc.hadoopConfiguration)
     val glob = new Path(pathGlob)
     val fs = glob.getFileSystem(sc.hadoopConfiguration)
-    val paths = archiveFiles(fs, glob, "verify")
+    val paths = archiveFiles(fs, glob, "Wacz.verify")
     val rows = sc.parallelize(paths, math.max(paths.size, 1)).flatMap {
       case (file, len) =>
         val shortName = file.substring(file.lastIndexOf('/') + 1)

@@ -210,11 +210,19 @@ object Warc {
   }
 
   /** Receives one parsed record's own fields (record_type, url, ts14,
-    * digest, status (nullable), mime, payload); the member it came from
-    * supplies (offset, length, filename). The row builders sit behind it:
-    * the V2 reader builds InternalRows, [[parseRecords]] external Rows. */
+    * digest, status (nullable), mime, payload, segment); the member it
+    * came from supplies (offset, length, filename). `segment` is null
+    * unless the walk is segment-aware and the record is WARC. The row
+    * builders sit behind it: the V2 reader builds InternalRows,
+    * [[parseRecords]] external Rows. */
   private[graft] type Emit =
-    (String, String, String, String, Integer, String, Array[Byte]) => Unit
+    (String, String, String, String, Integer, String, Array[Byte], Segment) => Unit
+
+  /** A WARC record's identity and ISO 28500 §5 segmentation headers —
+    * the (record_id, seg_num, seg_origin, seg_total) columns of
+    * [[segMetaSchema]]; `num` is null on an unsegmented record. */
+  private[graft] final case class Segment(
+      recordId: String, num: Integer, origin: String, total: java.lang.Long)
 
   /** byte index of the first CRLF CRLF in [from, until), or -1 — the
     * header/body split MUST be found on bytes: non-ASCII header values
@@ -313,20 +321,20 @@ object Warc {
       bytes(2) == 'R' && bytes(3) == 'C' && bytes(4) == '/'
 
   /** One decompressed member -> ALL its records (see [[parseWarc]]; ARC
-    * members are always single-record); sniffs WARC vs legacy ARC. */
-  private[graft] def parseMember(bytes: Array[Byte], withPayload: Boolean, emit: Emit): Unit =
-    if (isWarc(bytes)) parseWarc(bytes, withPayload, emit)
+    * members are always single-record, and predate segmentation: their
+    * segment is null); sniffs WARC vs legacy ARC. */
+  private[graft] def parseMember(
+      bytes: Array[Byte], withPayload: Boolean, segments: Boolean, emit: Emit): Unit =
+    if (isWarc(bytes)) parseWarc(bytes, withPayload, segments, emit)
     else parseArc(bytes, withPayload, emit)
 
   /** [[parseMember]] as external Rows — the replay paths
     * ([[fetchRecords]], WACZ) that build DataFrames from Rows. */
   private[graft] def parseRecords(
-      bytes: Array[Byte], offset: Long, length: Long, filename: String): Seq[Row] =
-    rowsOf(offset, length, filename)(parseMember(bytes, withPayload = true, _))
-
-  private def rowsOf(offset: Long, length: Long, filename: String)(parse: Emit => Unit): Seq[Row] = {
+      bytes: Array[Byte], offset: Long, length: Long, filename: String): Seq[Row] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-    parse((t, u, ts, d, st, m, p) => out += Row(t, u, ts, d, st, m, offset, length, filename, p))
+    parseMember(bytes, withPayload = true, segments = false,
+      (t, u, ts, d, st, m, p, _) => out += Row(t, u, ts, d, st, m, offset, length, filename, p))
     out.toSeq
   }
 
@@ -347,7 +355,7 @@ object Warc {
     val looksArc = f.length >= 5 && url != null && url.contains("://") &&
       ts != null && ts.length == 14 && ts.forall(_.isDigit)
     if (!looksArc) {
-      emit("unknown", null, null, null, null, null, if (withPayload) bytes else null)
+      emit("unknown", null, null, null, null, null, if (withPayload) bytes else null, null)
       return
     }
     val headerMime = if (f.length >= 4 && f(3) != "-") f(3) else null
@@ -356,7 +364,7 @@ object Warc {
     if (url.startsWith("filedesc://"))
       // ARC file header record — the warcinfo analog
       emit("arcinfo", url, ts, digest, null, headerMime,
-        if (withPayload) slice(bytes, bodyFrom, bytes.length) else null)
+        if (withPayload) slice(bytes, bodyFrom, bytes.length) else null, null)
     else {
       val (httpStatus, httpMime, payload) = parseHttp(bytes, bodyFrom, bytes.length, withPayload)
       val status: Integer =
@@ -366,7 +374,7 @@ object Warc {
         else null
       // ARC has no revisit/request records: every URL record is a response
       emit("response", url, ts, digest, status,
-        if (httpMime != null) httpMime else headerMime, payload)
+        if (httpMime != null) httpMime else headerMime, payload, null)
     }
   }
 
@@ -375,8 +383,7 @@ object Warc {
       bytes(p + 2) == 'R' && bytes(p + 3) == 'C' && bytes(p + 4) == '/'
 
   /** Split one decompressed member into (headers, bodyFrom, bodyUntil)
-    * record chunks — the shared walk under [[parseWarc]] (pipeline rows)
-    * and [[parseWarcRecordsMeta]] (segment-aware rows). Conforming
+    * record chunks — the walk under [[parseWarc]]. Conforming
     * writers put one record per gzip member, but warcio's permissive
     * reader — and therefore real Common Crawl-adjacent corpora — also
     * accepts members holding several concatenated records (wget- and
@@ -424,19 +431,28 @@ object Warc {
     out.toSeq
   }
 
-  /** Every record of one WARC member (see [[splitWarcChunks]]). */
-  private def parseWarc(bytes: Array[Byte], withPayload: Boolean, emit: Emit): Unit =
+  /** Every record of one WARC member (see [[splitWarcChunks]]). With
+    * `segments`, each record also reports its [[Segment]] headers, and a
+    * SEGMENTED record (WARC-Segment-Number present) keeps its RAW block
+    * as payload with null status and the WARC Content-Type as mime — a
+    * first segment's HTTP head can only be parsed against the ASSEMBLED
+    * body ([[reassembleSegments]] does it there). Every other record
+    * parses the same either way. */
+  private def parseWarc(
+      bytes: Array[Byte], withPayload: Boolean, segments: Boolean, emit: Emit): Unit =
     splitWarcChunks(bytes).foreach { case (headers, from, until) =>
       val recordType = headers.getOrElse("warc-type", "")
       val url = headers.getOrElse("warc-target-uri", null)
       val ts = headers.get("warc-date").map(_.replaceAll("[^0-9]", "").take(14)).orNull
       val digest = headers.get("warc-payload-digest").map(_.stripPrefix("sha1:")).orNull
+      val seg = if (segments) segmentOf(headers) else null
       // revisit records in the identical-payload-digest profile carry the
       // duplicate capture's HTTP head (and nothing else) as their block —
       // parse it the same way, so a deduplicated corpus surfaces each
       // revisit's own status/mime while the payload resolves via the
       // digest join (join_revisit_resolve / sink_warc_revisit_write)
-      val isHttpResponse = (recordType == "response" || recordType == "revisit") &&
+      val isHttpResponse = (seg == null || seg.num == null) &&
+        (recordType == "response" || recordType == "revisit") &&
         headers.getOrElse("content-type", "").startsWith("application/http")
       // non-HTTP records (resource/conversion/metadata) carry their
       // payload's mime in the WARC Content-Type header itself — surface
@@ -445,51 +461,30 @@ object Warc {
         if (isHttpResponse) parseHttp(bytes, from, until, withPayload)
         else (null: Integer, headers.get("content-type").orNull,
           if (withPayload) slice(bytes, from, until) else null)
-      emit(recordType, url, ts, digest, status, mime, payload)
+      emit(recordType, url, ts, digest, status, mime, payload, seg)
     }
 
+  /** the [[Segment]] headers of one record; a number or total length
+    * that is not a short all-digit token is null, never a task failure */
+  private def segmentOf(headers: Map[String, String]): Segment =
+    Segment(
+      headers.getOrElse("warc-record-id", null),
+      headers.get("warc-segment-number")
+        .filter(s => s.nonEmpty && s.length <= 9 && s.forall(_.isDigit))
+        .map(s => Integer.valueOf(s.toInt)).orNull,
+      headers.getOrElse("warc-segment-origin-id", null),
+      headers.get("warc-segment-total-length")
+        .filter(s => s.nonEmpty && s.length <= 18 && s.forall(_.isDigit))
+        .map(s => java.lang.Long.valueOf(s.toLong)).orNull)
+
   /** [[Warc.schema]] + the ISO 28500 §5 segmentation metadata columns the
-    * reassembly shuffle keys on */
+    * reassembly shuffle keys on — the reader's second column set
+    * ([[scanMeta]]) */
   val segMetaSchema: StructType = StructType(schema.fields ++ Seq(
     StructField("record_id", StringType),
     StructField("seg_num", IntegerType),
     StructField("seg_origin", StringType),
     StructField("seg_total", LongType)))
-
-  /** Segment-aware member parse: [[parseWarc]]'s rows widened with
-    * (record_id, seg_num, seg_origin, seg_total). SEGMENTED records
-    * (WARC-Segment-Number present) keep their RAW block as payload with
-    * status/mime null — a first segment's HTTP head can only be parsed
-    * against the ASSEMBLED body ([[reassembleSegments]] does it there);
-    * unsegmented records are bit-identical to the plain parse. */
-  private[graft] def parseWarcRecordsMeta(
-      bytes: Array[Byte], offset: Long, length: Long, filename: String): Seq[Row] = {
-    val out = splitWarcChunks(bytes).map { case (headers, from, until) =>
-      val recordType = headers.getOrElse("warc-type", "")
-      val url = headers.getOrElse("warc-target-uri", null)
-      val ts = headers.get("warc-date").map(_.replaceAll("[^0-9]", "").take(14)).orNull
-      val digest = headers.get("warc-payload-digest").map(_.stripPrefix("sha1:")).orNull
-      val recordId = headers.getOrElse("warc-record-id", null)
-      val segNum: Integer = headers.get("warc-segment-number")
-        .filter(s => s.nonEmpty && s.length <= 9 && s.forall(_.isDigit))
-        .map(s => Integer.valueOf(s.toInt)).orNull
-      val segOrigin = headers.getOrElse("warc-segment-origin-id", null)
-      val segTotal: java.lang.Long = headers.get("warc-segment-total-length")
-        .filter(s => s.nonEmpty && s.length <= 18 && s.forall(_.isDigit))
-        .map(s => java.lang.Long.valueOf(s.toLong)).orNull
-      val isHttpResponse = (recordType == "response" || recordType == "revisit") &&
-        headers.getOrElse("content-type", "").startsWith("application/http")
-      val (status, mime, payload) =
-        if (segNum == null && isHttpResponse) parseHttp(bytes, from, until, withPayload = true)
-        else (null: Integer, headers.get("content-type").orNull, slice(bytes, from, until))
-      Row(recordType, url, ts, digest, status, mime, offset, length, filename, payload,
-        recordId, segNum, segOrigin, segTotal)
-    }
-    if (out.isEmpty)
-      Seq(Row("unknown", null, null, null, null, null, offset, length, filename,
-        Array.emptyByteArray, null, null, null, null))
-    else out
-  }
 
   final case class ArcFixtureRecord(
       url: String,
@@ -549,47 +544,14 @@ object Warc {
 
   /** [[scan]] widened with the ISO 28500 §5 segmentation columns
     * ([[segMetaSchema]]): the raw per-fragment view — segmented records
-    * keep raw blocks. Most callers want [[scanSegments]]. */
+    * keep raw blocks. The same `format("warc")` source reads it (splits,
+    * pruning, metrics and the empty-glob check included); the schema
+    * alone makes the walk segment-aware. Most callers want
+    * [[scanSegments]]. */
   def scanMeta(
-      spark: SparkSession, pathGlob: String, permissive: Boolean = true): DataFrame = {
-    val rows = spark.sparkContext.binaryFiles(pathGlob).flatMap {
-      case (file, pds) =>
-        val in = pds.open()
-        val shortName = file.substring(file.lastIndexOf('/') + 1)
-        val entries: Iterator[Gzip.Entry] =
-          if (shortName.endsWith(".zst")) ZstdMembers.entries(in, permissive)
-          else Gzip.entries(in, permissive)
-        def closeAll(): Unit = {
-          try in.close() catch { case _: Throwable => }
-          entries match {
-            case c: java.io.Closeable => try c.close() catch { case _: Throwable => }
-            case _ =>
-          }
-        }
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => closeAll()))
-        val it = entries.flatMap {
-          case m: Gzip.Member =>
-            if (isWarc(m.bytes))
-              parseWarcRecordsMeta(m.bytes, m.offset, m.compressedLength, shortName)
-            else // ARC predates segmentation: plain row + null meta
-              parseRecords(m.bytes, m.offset, m.compressedLength, shortName)
-                .map(r => Row.fromSeq(r.toSeq ++ Seq(null, null, null, null)))
-          case s: Gzip.CorruptSpan =>
-            Seq(Row("corrupt", null, null, null, null, null,
-              s.offset, s.compressedLength, shortName, null, null, null, null, null))
-        }
-        new Iterator[Row] {
-          override def hasNext: Boolean = {
-            val h = it.hasNext
-            if (!h) closeAll()
-            h
-          }
-          override def next(): Row = it.next()
-        }
-    }
-    spark.createDataFrame(rows, segMetaSchema)
-  }
+      spark: SparkSession, pathGlob: String, permissive: Boolean = true): DataFrame =
+    spark.read.format("warc").schema(segMetaSchema)
+      .option("permissive", permissive).load(pathGlob)
 
   /** [[scan]] with CONTINUATION-RECORD REASSEMBLY (ISO 28500 §5): a
     * record too large for one WARC file is written as a first segment

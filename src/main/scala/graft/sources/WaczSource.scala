@@ -141,17 +141,8 @@ final class WaczScan(
 
   override def planInputPartitions(): Array[InputPartition] = {
     val path = new Path(pathGlob)
-    val fs = path.getFileSystem(sessionConf)
-    def isArchive(name: String): Boolean =
-      !name.startsWith("_") && !name.startsWith(".") && name.endsWith(".wacz")
-    val statuses = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
-      .flatMap { s =>
-        if (s.isFile) Seq(s)
-        else fs.listStatus(s.getPath).toSeq.filter(c => c.isFile && isArchive(c.getPath.getName))
-      }
-    require(statuses.nonEmpty, s"wacz scan: no files match $pathGlob")
-    statuses.map(s =>
-      WaczFilePartition(s.getPath.toString, s.getLen): InputPartition).toArray
+    Wacz.archiveFiles(path.getFileSystem(sessionConf), path, "format(wacz)")
+      .map { case (file, len) => WaczFilePartition(file, len): InputPartition }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {

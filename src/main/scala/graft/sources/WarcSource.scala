@@ -35,19 +35,41 @@ import org.apache.spark.unsafe.types.UTF8String
   * national-library 500 GB WARC) still fill the cluster. Columns the
   * query never reads are pruned in the reader: without `payload` no
   * payload bytes are copied into a row.
+  *
+  * Two column sets: [[Warc.schema]] (the default) and, given as
+  * `.schema(Warc.segMetaSchema)`, the ISO 28500 §5 segment view
+  * ([[graft.formats.Warc.scanMeta]]). The TABLE schema makes the record
+  * walk segment-aware, never the pruned columns, so a segment-view query
+  * reading only `payload` still gets first segments' raw blocks.
   */
 class WarcSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "warc"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = Warc.schema
+  override def supportsExternalMetadata(): Boolean = true
   override def getTable(
       schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new WarcTable(properties.getOrDefault("path", ""))
+    new WarcTable(properties.getOrDefault("path", ""), WarcSource.columnSet(schema))
 }
 
-final class WarcTable(path: String) extends Table with SupportsRead {
+object WarcSource {
+
+  /** The column set `schema` names: [[Warc.schema]] or
+    * [[Warc.segMetaSchema]], compared by field names and types. Any other
+    * schema fails, naming both. */
+  private[sources] def columnSet(schema: StructType): StructType = {
+    def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
+    Seq(Warc.schema, Warc.segMetaSchema).find(c => shape(c) == shape(schema)).getOrElse(
+      throw new IllegalArgumentException(
+        s"format(warc) reads Warc.schema ${Warc.schema.simpleString} or " +
+          s"Warc.segMetaSchema ${Warc.segMetaSchema.simpleString}; got ${schema.simpleString}"))
+  }
+}
+
+final class WarcTable(path: String, tableSchema: StructType = Warc.schema)
+  extends Table with SupportsRead {
   override def name(): String = s"warc:$path"
-  override def schema(): StructType = Warc.schema
+  override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
@@ -58,33 +80,35 @@ final class WarcTable(path: String) extends Table with SupportsRead {
     // is empty, and a bare `new Configuration()` fallback silently drops
     // every spark.hadoop.* setting (S3 credentials, custom FS)
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-    new WarcScanBuilder(p, options.getBoolean("permissive", true),
+    new WarcScanBuilder(p, tableSchema, options.getBoolean("permissive", true),
       sc.defaultParallelism, new SerializableHadoopConf(sc.hadoopConfiguration))
   }
 }
 
 final class WarcScanBuilder(
-    pathGlob: String, permissive: Boolean, parallelism: Int, conf: SerializableHadoopConf)
+    pathGlob: String, tableSchema: StructType, permissive: Boolean, parallelism: Int,
+    conf: SerializableHadoopConf)
   extends ScanBuilder with SupportsPushDownRequiredColumns {
 
-  private var required: StructType = Warc.schema
+  private var required: StructType = tableSchema
 
   // keep canonical field order: readSchema must agree with what the
   // reader emits positionally, independent of projection order
   override def pruneColumns(requiredSchema: StructType): Unit =
-    required = StructType(Warc.schema.filter(f => requiredSchema.fieldNames.contains(f.name)))
+    required = StructType(tableSchema.filter(f => requiredSchema.fieldNames.contains(f.name)))
 
-  override def build(): Scan = new WarcScan(pathGlob, required, permissive, parallelism, conf)
+  override def build(): Scan = new WarcScan(pathGlob, required,
+    segments = tableSchema == Warc.segMetaSchema, permissive, parallelism, conf)
 }
 
 final class WarcScan(
-    val pathGlob: String, required: StructType, permissive: Boolean, parallelism: Int,
-    conf: SerializableHadoopConf)
+    val pathGlob: String, required: StructType, segments: Boolean, permissive: Boolean,
+    parallelism: Int, conf: SerializableHadoopConf)
   extends Scan with Batch {
   override def readSchema(): StructType = required
   override def description(): String =
     s"WarcScan[$pathGlob, cols=${required.fieldNames.mkString(",")}" +
-      (if (permissive) "" else ", strict") + "]"
+      (if (segments) ", segments" else "") + (if (permissive) "" else ", strict") + "]"
   override def toBatch: Batch = this
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
@@ -105,9 +129,10 @@ final class WarcScan(
   override def createReaderFactory(): PartitionReaderFactory = {
     val sconf = conf
     val fields = required.fieldNames
+    val segmentAware = segments
     val lenient = permissive
-    (partition: InputPartition) =>
-      new WarcPartitionReader(partition.asInstanceOf[WarcFilePartition], fields, lenient, sconf)
+    (partition: InputPartition) => new WarcPartitionReader(
+      partition.asInstanceOf[WarcFilePartition], fields, segmentAware, lenient, sconf)
   }
 }
 
@@ -165,11 +190,15 @@ final case class WarcFilePartition(file: String, start: Long, end: Long, fileLen
   * frame, outside every mid-file range, so ranges preload it by
   * positioned read (the fetchRecords discipline).
   *
+  * `fields` are column names of [[Warc.segMetaSchema]] (whose first ten
+  * are [[Warc.schema]]); `segments` makes the record walk read the §5
+  * segment headers (the table's column set decides it, not `fields`).
+  *
   * Task metrics: `membersRead`, `corruptSpans`, and
   * `compressedBytesRead` = the file bytes from the range's first
   * boundary to the end of its last member or span. */
 final class WarcPartitionReader(
-    part: WarcFilePartition, fields: Array[String], permissive: Boolean,
+    part: WarcFilePartition, fields: Array[String], segments: Boolean, permissive: Boolean,
     sconf: SerializableHadoopConf)
   extends PartitionReader[InternalRow] {
 
@@ -217,8 +246,8 @@ final class WarcPartitionReader(
       new TaskMetric("corruptSpans", corruptSpans),
       new TaskMetric("compressedBytesRead", bytesRead))
 
-  // positions in Warc.schema of the columns to emit, in output order
-  private val cols: Array[Int] = fields.map(Warc.schema.fieldIndex)
+  // positions in Warc.segMetaSchema of the columns to emit, in output order
+  private val cols: Array[Int] = fields.map(Warc.segMetaSchema.fieldIndex)
   private val withPayload = cols.contains(Warc.schema.fieldIndex("payload"))
 
   // a (non-conforming but real) multi-record member yields several rows
@@ -232,7 +261,7 @@ final class WarcPartitionReader(
   private def utf8(s: String): UTF8String =
     if (s == null) null else UTF8String.fromString(s)
 
-  private val emit: Warc.Emit = (recordType, url, ts, digest, status, mime, payload) => {
+  private val emit: Warc.Emit = (recordType, url, ts, digest, status, mime, payload, seg) => {
     val v = new Array[Any](cols.length)
     var i = 0
     while (i < cols.length) {
@@ -246,7 +275,11 @@ final class WarcPartitionReader(
         case 6 => memberOffset
         case 7 => memberLength
         case 8 => filename
-        case _ => payload
+        case 9 => payload
+        case 10 => if (seg == null) null else utf8(seg.recordId)
+        case 11 => if (seg == null) null else seg.num
+        case 12 => if (seg == null) null else utf8(seg.origin)
+        case 13 => if (seg == null) null else seg.total
       }
       i += 1
     }
@@ -265,11 +298,11 @@ final class WarcPartitionReader(
         case m: Gzip.Member =>
           membersRead += 1
           memberLength = m.compressedLength
-          Warc.parseMember(m.bytes, withPayload, emit)
+          Warc.parseMember(m.bytes, withPayload, segments, emit)
         case s: Gzip.CorruptSpan =>
           corruptSpans += 1
           memberLength = math.min(s.compressedLength, stop - memberOffset)
-          emit("corrupt", null, null, null, null, null, null)
+          emit("corrupt", null, null, null, null, null, null, null)
       }
       bytesRead = memberOffset + memberLength - start
     }

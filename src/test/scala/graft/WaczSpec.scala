@@ -483,6 +483,11 @@ class WaczSpec extends SparkSpec {
       Wacz.scanIndex(spark, empty)
     }
     assert(ex.getMessage.contains("no archive files"), ex.getMessage)
+    // the V2 source lists archives through the same rule
+    val ev = intercept[Exception](spark.read.format("wacz").load(empty).count())
+    val msgs = Iterator.iterate(ev: Throwable)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).toSeq
+    assert(msgs.exists(_.contains("no archive files")), msgs.mkString(" | "))
   }
 
   test("verify reports a corrupt DEFLATED resource as ok=false instead of aborting the glob") {

@@ -729,10 +729,12 @@ class WarcSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("warc_split")
     val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
-      df.select(col("record_type"), col("url"), col("ts"), col("digest"),
+    val segCols = Seq("record_id", "seg_num", "seg_origin", "seg_total")
+    def rowsOf(df: org.apache.spark.sql.DataFrame, segments: Boolean = false): Seq[Seq[Any]] =
+      df.select(Seq(col("record_type"), col("url"), col("ts"), col("digest"),
         col("status"), col("mime"), col("offset"), col("length"),
-        sha2(col("payload"), 256).as("psha"))
+        sha2(col("payload"), 256).as("psha")) ++
+        (if (segments) segCols.map(col) else Nil): _*)
         .orderBy("offset").collect().toSeq.map(_.toSeq)
     def sha(b: Array[Byte]): String =
       if (b == null) null
@@ -740,22 +742,27 @@ class WarcSpec extends SparkSpec {
         .map(x => f"${x & 0xff}%02x").mkString
     // the same columns as rowsOf, straight from the partition reader over
     // consecutive `rangeBytes` ranges (file length = the whole-file read)
-    def readRanges(path: String, rangeBytes: Long): Seq[Seq[Any]] = {
+    def readRanges(path: String, rangeBytes: Long, segments: Boolean = false): Seq[Seq[Any]] = {
       val len = new java.io.File(path).length
+      val fields = (if (segments) Warc.segMetaSchema else Warc.schema).fieldNames
       (0L until len by rangeBytes).flatMap { s =>
         val r = new WarcPartitionReader(
           WarcFilePartition(path, s, math.min(s + rangeBytes, len), len),
-          Warc.schema.fieldNames, permissive = true, conf)
+          fields, segments, permissive = true, conf)
         def str(i: Int): String = Option(r.get().getUTF8String(i)).map(_.toString).orNull
         try Iterator.continually(r.next()).takeWhile(identity).map { _ =>
           val row = r.get()
           Seq(str(0), str(1), str(2), str(3), if (row.isNullAt(4)) null else row.getInt(4),
-            str(5), row.getLong(6), row.getLong(7), sha(row.getBinary(9)))
+            str(5), row.getLong(6), row.getLong(7), sha(row.getBinary(9))) ++
+            (if (segments) Seq(str(10), if (row.isNullAt(11)) null else row.getInt(11),
+              str(12), if (row.isNullAt(13)) null else row.getLong(13))
+            else Nil)
         }.toVector
         finally r.close()
       }
     }
-    def whole(path: String): Seq[Seq[Any]] = readRanges(path, new java.io.File(path).length)
+    def whole(path: String, segments: Boolean = false): Seq[Seq[Any]] =
+      readRanges(path, new java.io.File(path).length, segments)
 
     val file = dir.resolve("big.warc.gz").toString
     Warc.writeFixture(file, Warc.splitFixtureRecords)
@@ -805,6 +812,25 @@ class WarcSpec extends SparkSpec {
         assert(readRanges(path, rb) == w, s"$path rangeBytes=$rb diverged from the whole-file read")
       assert(rowsOf(Warc.scan(spark, path)) == w)
     }
+
+    // the segment column set: a corpus of ISO 28500 §5 chains (every
+    // record whose block exceeds 128 bytes split into segments, one
+    // member each) — first segments and continuations keep raw blocks
+    // and carry their seg_* headers over every range size too
+    val segmented = dir.resolve("segmented.warc.gz").toString
+    val out = java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(segmented))
+    try Warc.splitFixtureRecords.foreach(r =>
+      Warc.renderSegments(r, maxSegment = 128).foreach(graft.formats.Gzip.writeMember(out, _)))
+    finally out.close()
+    val wholeSeg = whole(segmented, segments = true)
+    assert(wholeSeg.count(_(10) == null) > 0 && wholeSeg.count(_(10) == 1) > 0 &&
+      wholeSeg.exists(_.head == "continuation"), "the fixture must mix plain and segmented records")
+    assert(wholeSeg.filter(_(10) == 1).forall(r => r(4) == null && r(5) != null),
+      "a first segment keeps its raw block: no status, the WARC Content-Type as mime")
+    for (rb <- Seq(977L, 4096L, 16384L))
+      assert(readRanges(segmented, rb, segments = true) == wholeSeg,
+        s"rangeBytes=$rb diverged from the whole-file segment read")
+    assert(rowsOf(Warc.scanMeta(spark, segmented), segments = true) == wholeSeg)
   }
 
   test("WarcSink revisit dedup: profile headers, digest override, lossless resolve, smaller files") {
@@ -1118,6 +1144,64 @@ class WarcSpec extends SparkSpec {
       }).sortBy(_.toString)
     assert(viaSeg.toSeq == viaScan.toSeq,
       "scanSegments must be scan's identity on unsegmented data")
+  }
+
+  test("scanMeta reading only payload keeps a first segment's raw block") {
+    val dir = java.nio.file.Files.createTempDirectory("warc_segview")
+    val file = dir.resolve("one.warc.gz").toString
+    val big = Warc.FixtureRecord("response", "http://seg.example/big", "2020-01-01T00:00:00Z",
+      "BIGDIGEST", 200, "text/plain", ("0123456789abcdef" * 40).getBytes("UTF-8"))
+    val segs = Warc.renderSegments(big, maxSegment = 256)
+    val out = Files.newOutputStream(Paths.get(file))
+    try segs.foreach(graft.formats.Gzip.writeMember(out, _))
+    finally out.close()
+    // the first segment's block holds the WHOLE HTTP head plus part of
+    // the body: an HTTP parse would return only the body part
+    val first = segs.head
+    val blockAt = new String(first, "ISO-8859-1").indexOf("\r\n\r\n") + 4
+    val rawBlock = first.drop(blockAt)
+    assert(new String(rawBlock, "UTF-8").startsWith("HTTP/1.1 200 OK\r\n") &&
+      new String(rawBlock, "UTF-8").contains("\r\n\r\n0123"), "fixture shape")
+    val got = Warc.scanMeta(spark, file).select("offset", "payload")
+      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
+    assert(got.size == segs.size)
+    assert(got(0L).sameElements(rawBlock),
+      "a payload-only segment-view read must not HTTP-parse a first segment")
+  }
+
+  test("scanMeta: empty glob and foreign schema fail loudly; ARC rows carry null seg_*") {
+    import org.apache.spark.sql.types._
+    def messages(e: Throwable): Seq[String] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(t => Option(t.getMessage).getOrElse("")).toSeq
+    val glob = "/tmp/graft_test/no_such_segmented_crawl/*.warc.gz"
+    val e1 = intercept[Exception](Warc.scanMeta(spark, glob).count())
+    assert(messages(e1).exists(_.contains(glob)), messages(e1).mkString(" | "))
+
+    Files.createDirectories(Paths.get(file).getParent)
+    Warc.writeFixture(file, Warc.fixtureRecords)
+    val foreign = StructType(Seq(StructField("url", StringType), StructField("ts", StringType)))
+    val e2 = intercept[Exception](spark.read.format("warc").schema(foreign).load(file).count())
+    assert(messages(e2).exists(m => m.contains("Warc.schema") && m.contains("Warc.segMetaSchema")),
+      messages(e2).mkString(" | "))
+    // the two column sets themselves are accepted, given explicitly
+    assert(spark.read.format("warc").schema(Warc.schema).load(file).count() ==
+      Warc.fixtureRecords.size)
+
+    val arc = "/tmp/graft_test/segview.arc.gz"
+    Warc.writeArcFixture(arc, Warc.arcFixtureRecords)
+    val plain = Warc.schema.fieldNames.toSeq
+    val meta = Warc.scanMeta(spark, arc).orderBy("offset").collect()
+    assert(meta.length == Warc.arcFixtureRecords.size + 1)
+    assert(meta.forall(r => Seq("record_id", "seg_num", "seg_origin", "seg_total")
+      .forall(c => r.isNullAt(r.fieldIndex(c)))), meta.toSeq.toString)
+    def cells(rs: Seq[org.apache.spark.sql.Row]): Seq[Seq[Any]] = rs.map(r => plain.map(c =>
+      r.get(r.fieldIndex(c)) match {
+        case b: Array[Byte] => b.toSeq
+        case x => x
+      }))
+    assert(cells(meta.toSeq) == cells(Warc.scan(spark, arc).orderBy("offset").collect().toSeq),
+      "ARC rows in the segment view are the plain scan's rows")
   }
 
   test("sink segmentation: oversized blocks write as §5 chains; round trip is exact; within-budget stays byte-identical") {
