@@ -6,19 +6,23 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The reference's whole three-job pipeline as ONE lazy Spark plan
+/** The reference's whole three-job pipeline as Spark plans
   * (SURVEY §3.3 "Spark shape"):
   *
   *   indexwarcsjob.py  -> [[cdxLines]]   (scan WARC members, derive CDX)
-  *   samplecdxjob.py   -> (deleted)      (RangePartitioner samples internally)
+  *   samplecdxjob.py   -> (deleted)      (RangePartitioner samples the
+  *                                        persisted lines)
   *   zipnumclusterjob  -> [[ZipNum.write]] (range exchange + local sort +
   *                                          gzip blocks + cluster.idx)
   *
-  * One shuffle total — the range exchange — exactly the reference's single
-  * Hadoop shuffle, with job 2's sample pass folded into it. At 100 TB the
-  * WARC scan parallelizes per file, or per byte range for a file larger
-  * than its share of the input, the exchange is skew-managed by AQE, and
-  * the driver only ever holds cluster.idx (~1/linesPerBlock of the data).
+  * [[warcToZipNum]] materializes job 1 as the reference does: it persists
+  * the CDX lines, so the range sampler and the map stage both read them
+  * instead of decoding every archive twice. One shuffle total — the range
+  * exchange — exactly the reference's single Hadoop shuffle. At 100 TB
+  * the WARC scan parallelizes per packed group of small files, or per
+  * byte range for a file larger than its share of the input, the
+  * exchange is skew-managed by AQE, and the driver only ever holds
+  * cluster.idx (~1/linesPerBlock of the data).
   */
 object Pipeline {
 
@@ -306,11 +310,14 @@ object Pipeline {
       .select("doc_id", "lang", "quality", "cluster_id", "cluster_size")
   }
 
-  /** full pipeline: WARC glob -> ZipNum cluster under `outDir`. */
+  /** full pipeline: WARC glob -> ZipNum cluster under `outDir`. The CDX
+    * lines are derived once and persisted for the write, whose range
+    * sampler and map stage both read them; the blocks are freed when the
+    * write returns or throws. */
   def warcToZipNum(
       spark: SparkSession, warcGlob: String, outDir: String,
       shards: Int = 8, linesPerBlock: Int = 3000): Unit =
-    ZipNum.write(cdxLines(spark, warcGlob), outDir, shards, linesPerBlock)
+    Tables.withPersisted(cdxLines(spark, warcGlob))(ZipNum.write(_, outDir, shards, linesPerBlock))
 
   /** The reference's mrjob `increment_counter` calls as Spark-native
     * observed metrics (indexwarcsjob.py §mapper counters, recon ~L90–110):

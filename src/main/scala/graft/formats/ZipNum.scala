@@ -217,6 +217,10 @@ object ZipNum {
     * commit; `cluster.idx` is assembled only after every task committed.
     * Only `line` is selected, so extra columns never ride the exchange.
     *
+    * `df` is evaluated twice (see [[graft.sources.ZipNumWrite]]); a caller
+    * whose derive is expensive persists it around the call, as
+    * [[graft.Pipeline.warcToZipNum]] does.
+    *
     * Overwrite deletes the previous cluster at `dir` BEFORE the job runs
     * (`ZipNumWrite.toBatch`), so a failed write leaves NO cluster there:
     * not the old one, and not a partial new one (the job abort removes

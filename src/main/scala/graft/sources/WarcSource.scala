@@ -30,9 +30,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Partitioning is derived from the input, never set: with target =
   * ⌈total bytes / defaultParallelism⌉, a file larger than target is read
-  * as byte ranges of that size and every other file is one partition —
-  * many small crawl files stay one task each, while a few huge ones (a
-  * national-library 500 GB WARC) still fill the cluster. Columns the
+  * as byte ranges of that size, and consecutive smaller files are packed,
+  * next-fit in listing order, into partitions of at most target bytes —
+  * so 64 half-megabyte crawl files run as about defaultParallelism
+  * core-sized tasks, while a few huge ones (a national-library 500 GB
+  * WARC) still fill the cluster. Every partition is a [[WarcPartition]]
+  * of whole-file or byte-range [[WarcFilePartition]]s, read in order;
+  * packing keeps the scan's row order the listing order. Columns the
   * query never reads are pruned in the reader: without `payload` no
   * payload bytes are copied into a row.
   *
@@ -117,13 +121,31 @@ final class WarcScan(
   override def planInputPartitions(): Array[InputPartition] = {
     val files = WarcScan.archives(pathGlob, conf.value)
     val target = math.max(1L, (files.map(_.getLen).sum + parallelism - 1) / parallelism)
-    files.flatMap { st =>
+    // next-fit in listing order, as Spark's FilePartition.getFilePartitions
+    // packs small files: the scan's row order stays the listing order
+    val parts = Array.newBuilder[InputPartition]
+    val bin = scala.collection.mutable.ArrayBuffer.empty[WarcFilePartition]
+    var binBytes = 0L
+    def closeBin(): Unit = if (bin.nonEmpty) {
+      parts += WarcPartition(bin.toList)
+      bin.clear()
+      binBytes = 0L
+    }
+    files.foreach { st =>
       val file = st.getPath.toString
       val len = st.getLen
-      if (len <= target) Seq(WarcFilePartition(file, 0L, len, len))
-      else (0L until len by target).map(s =>
-        WarcFilePartition(file, s, math.min(s + target, len), len))
-    }.toArray
+      if (len > target) {
+        closeBin()
+        (0L until len by target).foreach(s =>
+          parts += WarcPartition(Seq(WarcFilePartition(file, s, math.min(s + target, len), len))))
+      } else {
+        if (binBytes + len > target) closeBin()
+        bin += WarcFilePartition(file, 0L, len, len)
+        binBytes += len
+      }
+    }
+    closeBin()
+    parts.result()
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -131,8 +153,9 @@ final class WarcScan(
     val fields = required.fieldNames
     val segmentAware = segments
     val lenient = permissive
-    (partition: InputPartition) => new WarcPartitionReader(
-      partition.asInstanceOf[WarcFilePartition], fields, segmentAware, lenient, sconf)
+    (partition: InputPartition) => new WarcRangesReader(
+      partition.asInstanceOf[WarcPartition].ranges,
+      new WarcPartitionReader(_, fields, segmentAware, lenient, sconf))
   }
 }
 
@@ -169,9 +192,50 @@ object WarcScan {
 }
 
 /** Bytes [start, end) of `file` (`fileLength` bytes at planning); a
-  * partition with end == fileLength reads to EOF. */
+  * range with end == fileLength reads to EOF. */
 final case class WarcFilePartition(file: String, start: Long, end: Long, fileLength: Long)
   extends InputPartition
+
+/** One planned scan task: one byte range of a large file, or several
+  * whole small files, read in order. */
+final case class WarcPartition(ranges: Seq[WarcFilePartition]) extends InputPartition
+
+/** Reads `ranges` in order through one [[WarcPartitionReader]] at a time,
+  * each closed before the next opens, and reports their task metrics
+  * summed. */
+final class WarcRangesReader(
+    ranges: Seq[WarcFilePartition], open: WarcFilePartition => WarcPartitionReader)
+  extends PartitionReader[InternalRow] {
+
+  private val pending = ranges.iterator
+  private var current: WarcPartitionReader = _
+  private val closedTotals = new Array[Long](3)
+
+  override def next(): Boolean = {
+    while (current == null || !current.next()) {
+      closeCurrent()
+      if (!pending.hasNext) return false
+      current = open(pending.next())
+    }
+    true
+  }
+
+  override def get(): InternalRow = current.get()
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] = WarcPartitionReader.metrics(
+    if (current == null) closedTotals
+    else closedTotals.zip(current.counts).map { case (a, b) => a + b })
+
+  private def closeCurrent(): Unit = if (current != null) {
+    val c = current.counts
+    c.indices.foreach(i => closedTotals(i) += c(i))
+    val r = current
+    current = null
+    r.close()
+  }
+
+  override def close(): Unit = closeCurrent()
+}
 
 /** Reads one [[WarcFilePartition]]. A range owns the members that START
   * inside it, with both edges moved to true member boundaries: it begins
@@ -241,10 +305,8 @@ final class WarcPartitionReader(
   private var membersRead = 0L
   private var corruptSpans = 0L
   private var bytesRead = 0L
-  override def currentMetricsValues(): Array[CustomTaskMetric] =
-    Array(new TaskMetric("membersRead", membersRead),
-      new TaskMetric("corruptSpans", corruptSpans),
-      new TaskMetric("compressedBytesRead", bytesRead))
+  private[sources] def counts: Array[Long] = Array(membersRead, corruptSpans, bytesRead)
+  override def currentMetricsValues(): Array[CustomTaskMetric] = WarcPartitionReader.metrics(counts)
 
   // positions in Warc.segMetaSchema of the columns to emit, in output order
   private val cols: Array[Int] = fields.map(Warc.segMetaSchema.fieldIndex)
@@ -322,6 +384,12 @@ final class WarcPartitionReader(
     }
     if (in != null) in.close()
   }
+}
+
+object WarcPartitionReader {
+  private[sources] def metrics(counts: Array[Long]): Array[CustomTaskMetric] =
+    Array[CustomTaskMetric](new TaskMetric("membersRead", counts(0)),
+      new TaskMetric("corruptSpans", counts(1)), new TaskMetric("compressedBytesRead", counts(2)))
 }
 
 final class MembersReadMetric extends CustomSumMetric {

@@ -30,6 +30,12 @@ import org.apache.spark.sql.connector.write._
   * publishes an idx, so readers (which always start from cluster.idx)
   * cannot observe partial output, and its abort deletes the shards the
   * already-committed tasks published.
+  *
+  * The input is evaluated TWICE: the range exchange's sampling job runs
+  * the whole child plan, then the map stage runs it again. A DSv2
+  * `Write` cannot persist its own input, so a caller with an expensive
+  * derive persists it first ([[graft.Pipeline.warcToZipNum]] does);
+  * cheap inputs (`merge`, the streaming batches) are read twice.
   */
 final case class ZipNumCommit(pid: Int, blocks: Long) extends WriterCommitMessage
 

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.formats.{Warc, ZipNum}
+import org.apache.spark.ListenerBusDrain
 
 /** End-to-end: WARC fixture -> CDXJ -> ZipNum cluster -> indexed lookup.
   * This is the reference's whole workflow in one plan (SURVEY §3.3). */
@@ -29,6 +30,72 @@ class PipelineSpec extends SparkSpec {
     val keys = lines.map(_.split(" ", 2).head)
     assert(keys.contains("com,example)/path?a=1&b=2"), keys.mkString(", "))
     assert(keys.contains("org,iana,sub)/x"))
+  }
+
+  /** A multi-file glob (small and larger archives) and its gzip member
+    * count, taken by the member decoder walking each file by itself. */
+  private def multiFileGlob(): (String, Long) = {
+    import graft.formats.Gzip
+    val dir = Files.createTempDirectory("pipeline_multi")
+    val files = (0 until 6).map { i =>
+      val f = dir.resolve(f"part-$i%02d.warc.gz").toString
+      Warc.writeFixture(f, if (i % 3 == 0) Warc.splitFixtureRecords else Warc.fixtureRecords)
+      f
+    }
+    val members = files.map { f =>
+      Gzip.entries(new java.io.ByteArrayInputStream(Files.readAllBytes(Paths.get(f))),
+        permissive = true).count(_.isInstanceOf[Gzip.Member]).toLong
+    }.sum
+    (s"$dir/*.warc.gz", members)
+  }
+
+  test("warcToZipNum decodes each archive member once and frees the cached lines") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val (glob, members) = multiFileGlob()
+    val out = Files.createTempDirectory("pipeline_once").resolve("zipnum").toString
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val decoded = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        e.taskInfo.accumulables.foreach { a =>
+          if (a.name.contains("archive members decoded"))
+            a.update.foreach(v => decoded.addAndGet(v.toString.toLong))
+        }
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { Pipeline.warcToZipNum(spark, glob, out, shards = 3, linesPerBlock = 20); ListenerBusDrain(sc) }
+    finally sc.removeSparkListener(listener)
+    assert(members > 300L)
+    assert(decoded.get == members, s"decoded ${decoded.get} members, the archives hold $members")
+    assert(spark.sharedState.cacheManager.isEmpty)
+    val lines = ZipNum.readLines(spark, out).as[String].collect().toSeq
+    assert(lines == Pipeline.cdxLines(spark, glob).as[String].collect().toSeq.sorted)
+  }
+
+  test("warcToZipNum failing in the write stage leaves no cluster.idx, no cached lines") {
+    val (glob, _) = multiFileGlob()
+    val local = Files.createTempDirectory("pipeline_fail").resolve("zipnum").toString
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.failfs.impl", classOf[FailingCreateFs].getName)
+    hconf.setBoolean("fs.failfs.impl.disable.cache", true)
+    spark.catalog.clearCache()
+    try {
+      // shard 1's temp create throws once shard 0 is published
+      FailingCreateFs.arm(".cdx-00001.gz.attempt-", new java.io.File(local, "cdx-00000.gz"))
+      val e = intercept[Exception](
+        Pipeline.warcToZipNum(spark, glob, "failfs://" + local, shards = 2, linesPerBlock = 20))
+      assert(FailingCreateFs.fired, "the injected failure never fired")
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => Option(c.getMessage).exists(_.contains("injected create failure"))))
+    } finally {
+      FailingCreateFs.disarm()
+      hconf.unset("fs.failfs.impl")
+      hconf.unset("fs.failfs.impl.disable.cache")
+    }
+    assert(!new java.io.File(local, "cluster.idx").exists())
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("observed metrics report the mrjob-counter analogs in one pass") {

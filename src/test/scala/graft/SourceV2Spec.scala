@@ -77,32 +77,72 @@ class SourceV2Spec extends SparkSpec {
         java.util.Collections.emptyMap()))
       .build().asInstanceOf[graft.sources.WarcScan]
 
-  test("warc planner: a 1-file glob splits into ranges, 64 small files plan 64") {
-    import graft.sources.WarcFilePartition
+  test("warc planner: a 1-file glob splits into ranges, 64 small files pack to ~cores") {
+    import graft.sources.{WarcFilePartition, WarcPartition}
     val dir = Files.createTempDirectory("warc_plan")
     val big = dir.resolve("big.warc.gz").toString
     Warc.writeFixture(big, Warc.splitFixtureRecords)
     val len = Files.size(Paths.get(big))
     // one file is the whole input, so it is larger than its share
-    val ranges = warcScan(big).planInputPartitions().map(_.asInstanceOf[WarcFilePartition]).toSeq
+    val planned = warcScan(big).planInputPartitions().map(_.asInstanceOf[WarcPartition]).toSeq
+    assert(planned.forall(_.ranges.size == 1), planned.toString)
+    val ranges = planned.flatMap(_.ranges)
     assert(ranges.size > 1 && ranges.size <= spark.sparkContext.defaultParallelism, ranges.toString)
     assert(ranges.head.start == 0L && ranges.last.end == len)
     ranges.sliding(2).foreach { case Seq(a, b) => assert(a.end == b.start) }
 
     val small = Files.createDirectories(dir.resolve("small"))
-    (0 until 64).foreach(i => Warc.writeFixture(small.resolve(f"f$i%02d.warc.gz").toString,
-      Warc.fixtureRecords))
+    val names = (0 until 64).map(i => small.resolve(f"f$i%02d.warc.gz").toString)
+    names.foreach(Warc.writeFixture(_, Warc.fixtureRecords))
     val parts = warcScan(s"$small/*.warc.gz").planInputPartitions()
-      .map(_.asInstanceOf[WarcFilePartition]).toSeq
-    assert(parts.size == 64)
-    assert(parts.forall(p => p.start == 0L && p.end == p.fileLength))
+      .map(_.asInstanceOf[WarcPartition]).toSeq
+    assert(parts.size <= spark.sparkContext.defaultParallelism + 1, parts.map(_.ranges.size))
+    val files = parts.flatMap(_.ranges)
+    assert(files.forall(p => p.start == 0L && p.end == p.fileLength && p.fileLength ==
+      Files.size(Paths.get(new java.net.URI(p.file)))), files.toString)
+    assert(files.map(p => new java.net.URI(p.file).getPath) == names)
     assert(spark.read.format("warc").load(s"$small/*.warc.gz").count() ==
       64L * Warc.fixtureRecords.size)
   }
 
+  test("warc planner: a big file keeps its ranges, small ones pack; rows in file order") {
+    import graft.sources.{WarcFilePartition, WarcPartition}
+    val dir = Files.createTempDirectory("warc_mixed")
+    val smallA = (0 until 6).map(i => dir.resolve(f"a$i%02d.warc.gz").toString)
+    val big = dir.resolve("m_big.warc.gz").toString
+    val smallZ = (0 until 6).map(i => dir.resolve(f"z$i%02d.warc.gz").toString)
+    (smallA ++ smallZ).foreach(Warc.writeFixture(_, Warc.fixtureRecords))
+    Warc.writeFixture(big, Warc.splitFixtureRecords)
+    val all = smallA ++ Seq(big) ++ smallZ
+    val lens = all.map(f => Files.size(Paths.get(f)))
+    val target = (lens.sum + spark.sparkContext.defaultParallelism - 1) /
+      spark.sparkContext.defaultParallelism
+    assert(lens(6) > target, s"fixture sizes $lens vs target $target")
+
+    val parts = warcScan(s"$dir/*.warc.gz").planInputPartitions()
+      .map(_.asInstanceOf[WarcPartition].ranges).toSeq
+    def path(p: WarcFilePartition) = new java.net.URI(p.file).getPath
+    val bigRanges = parts.filter(_.exists(p => path(p) == big))
+    // the big file: exactly the byte ranges a 1-file plan of that target cuts
+    assert(bigRanges.forall(_.size == 1))
+    assert(bigRanges.flatten.map(p => (p.start, p.end)) ==
+      (0L until lens(6) by target).map(s => (s, math.min(s + target, lens(6)))))
+    // the small files: whole, packed, never beside a range of the big file
+    val packed = parts.filterNot(bigRanges.contains)
+    assert(packed.exists(_.size > 1) && packed.size < smallA.size + smallZ.size, packed.toString)
+    assert(packed.forall(_.forall(p => p.start == 0L && p.end == p.fileLength)))
+    assert(packed.forall(b => b.map(_.fileLength).sum <= target))
+    assert(parts.flatten.map(path).distinct == all)
+
+    val rows = spark.read.format("warc").load(s"$dir/*.warc.gz").collect().toSeq
+    val perFile = all.flatMap(f => spark.read.format("warc").load(f).collect().toSeq)
+    assert(rows.size == perFile.size)
+    assert(rows == perFile)
+  }
+
   test("format(warc) reports membersRead/corruptSpans/compressedBytesRead; every byte is accounted for") {
     import graft.formats.Gzip
-    import graft.sources.{WarcFilePartition, WarcScan}
+    import graft.sources.{WarcFilePartition, WarcPartition, WarcScan}
     import org.apache.spark.sql.connector.read.InputPartition
     val dir = Files.createTempDirectory("warc_metrics")
     val file = dir.resolve("corrupt.warc.gz").toString
@@ -132,7 +172,8 @@ class SourceV2Spec extends SparkSpec {
     val expected = Map("membersRead" -> members, "corruptSpans" -> spans, "compressedBytesRead" -> len)
     val split = scan.planInputPartitions().toSeq
     assert(split.size > 1)
-    assert(metricsOf(Seq(WarcFilePartition(file, 0L, len, len))) == expected, "whole-file plan")
+    assert(metricsOf(Seq(WarcPartition(Seq(WarcFilePartition(file, 0L, len, len))))) == expected,
+      "whole-file plan")
     assert(metricsOf(split) == expected, "split plan")
 
     // the same sums through Spark's SQL metrics of an executed scan
