@@ -2,7 +2,9 @@ package graft
 
 import graft.formats.ZipNum
 import graft.sources.ZipNumScan
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftDatasets, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,6 +22,11 @@ import org.apache.spark.sql.functions._
   *   filter=status:200 etc.     -> withFilter (plain Column predicates)
   *   fl=urlkey,timestamp        -> withFields (output projection)
   *   limit=N / sort=reverse     -> limit / latest
+  *
+  * A lookup whose idx selection is at most
+  * [[ZipNumScan.BlocksPerPartition]] blocks reads those blocks on the
+  * driver when its DataFrame is built, not at the action; larger
+  * selections are read by the parallel scan when the action runs.
   */
 final class CdxServer(spark: SparkSession, clusterDir: String) {
 
@@ -36,26 +43,32 @@ final class CdxServer(spark: SparkSession, clusterDir: String) {
       clusterDir, spark.sparkContext.hadoopConfiguration, lo, hi)
   }
 
-  private def scan(prefixKey: Option[String]): DataFrame = {
-    // project to the pywb response fields: the source also exposes its
-    // internal `blockseq` ordering column, which must never leak into a
-    // server response (caught by the CdxMatrixSpec parameter sweep)
-    val df = spark.read.format("zipnum").load(clusterDir)
-      .select("urlkey", "ts", "json")
-    prefixKey match {
-      case None => df
-      case Some(p) =>
-        val pruned = df.filter(col("urlkey").startsWith(p))
-        // The scan selects the same idx range (further pushed filters only
-        // narrow it), so a selection of at most BlocksPerPartition blocks
-        // plans one input partition. coalesce(1) over it is narrow and
-        // reports SinglePartition, which satisfies every orderBy, window
-        // and aggregate above: the lookup runs as ONE job, with no
-        // RangePartitioner sample re-reading the blocks and no shuffle.
-        // Costs one more bounded idx search (the scan runs its own).
-        if (idxFor(p).size <= ZipNumScan.BlocksPerPartition) pruned.coalesce(1)
-        else pruned
-    }
+  /** the V2 relation, projected to the pywb response fields: the source
+    * also exposes its internal `blockseq` ordering column, which must
+    * never leak into a server response (caught by the CdxMatrixSpec
+    * parameter sweep). Resolved once per server; every query still
+    * builds its own scan, which re-reads cluster.idx. */
+  private lazy val relation: DataFrame =
+    spark.read.format("zipnum").load(clusterDir).select("urlkey", "ts", "json")
+
+  private def scan(prefixKey: Option[String]): DataFrame = prefixKey match {
+    case None => relation
+    case Some(p) =>
+      val blocks = idxFor(p)
+      // A selection that would fit one scan partition is read here, on
+      // the driver, into a LocalRelation; coalesce(1) over it reports
+      // SinglePartition, which satisfies every orderBy, window and
+      // aggregate above. GraftExtensions' FoldLocalRelation folds a
+      // sort-shaped lookup over it whole (no job); any other lookup runs
+      // as ONE job with no exchange. Larger selections keep the
+      // parallel V2 scan, which runs its own idx search.
+      if (blocks.size <= ZipNumScan.BlocksPerPartition) {
+        val schema = relation.schema
+        val rows = ZipNumScan.readRows(
+          clusterDir, blocks, schema.fieldNames, spark.sparkContext.hadoopConfiguration)
+        GraftDatasets.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+          .filter(col("urlkey").startsWith(p)).coalesce(1)
+      } else relation.filter(col("urlkey").startsWith(p))
   }
 
   /** all captures of one canonical URL key, oldest first */

@@ -749,5 +749,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       override def preColumnarTransitions =
         graft.sources.NameWarcScanRdds
     })
+    ext.injectOptimizerRule(_ => graft.sources.FoldLocalRelation)
   }
 }

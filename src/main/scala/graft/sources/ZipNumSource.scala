@@ -338,8 +338,7 @@ final class ZipNumScan(
     * partition so a huge cluster doesn't explode the task count */
   override def planInputPartitions(): Array[InputPartition] =
     selectedBlocks.grouped(ZipNumScan.BlocksPerPartition).map { group =>
-      ZipNumBlockPartition(
-        group.map(e => (dir + "/" + e.shard, e.offset, e.length, e.seq)).toArray): InputPartition
+      ZipNumBlockPartition(group.map(ZipNumScan.blockOf(dir, _)).toArray): InputPartition
     }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -356,10 +355,28 @@ object ZipNumScan {
   val MaxRuntimeKeys = 1024
 
   /** contiguous blocks per input partition. A selection of at most this
-    * many blocks plans ONE partition — the fact `CdxServer` and
-    * `ZipNum.readBlockLines` use to plan a lookup without a range
-    * exchange. */
+    * many blocks would plan ONE partition: `CdxServer` reads such a
+    * selection on the driver ([[readRows]]) instead of planning this
+    * scan, and `ZipNum.readBlockLines` reads it in one task. Larger
+    * selections keep the parallel scan. */
   val BlocksPerPartition = 64
+
+  /** the reader's (file, offset, length, seq) tuple for an idx entry */
+  def blockOf(dir: String, e: ZipNum.IdxEntry): (String, Long, Long, Long) =
+    (dir + "/" + e.shard, e.offset, e.length, e.seq)
+
+  /** Reads `blocks` on the calling thread through the reader a scan task
+    * uses, so the rows equal one partition of this scan over the same
+    * blocks, in the same order. */
+  def readRows(
+      dir: String, blocks: Seq[ZipNum.IdxEntry], fields: Array[String],
+      conf: Configuration): Vector[InternalRow] = {
+    val reader = new ZipNumPartitionReader(
+      blocks.map(blockOf(dir, _)).toArray, fields, new SerializableHadoopConf(conf))
+    // next() builds a fresh row each call, so the rows need no copy
+    try Iterator.continually(reader).takeWhile(_.next()).map(_.get()).toVector
+    finally reader.close()
+  }
 
   /** driver-side idx read — delegates to the single idx parser */
   def readIdxStatic(

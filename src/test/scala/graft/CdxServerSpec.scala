@@ -5,9 +5,12 @@ import java.nio.file.{Files, Paths}
 import graft.formats.{Warc, ZipNum}
 import graft.sources.ZipNumScan
 import org.apache.spark.ListenerBusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.col
 
@@ -196,22 +199,58 @@ class CdxServerSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("lookups whose idx selection fits one scan partition run one job, no exchange") {
+  /** the same cluster served from a GraftExtensions session */
+  private lazy val extServer: CdxServer = { server; new CdxServer(SparkSpec.withExtensions, dir) }
+
+  test("small-selection lookups: exact job counts per session, same rows in both") {
     val key = "com,example)/path?a=1&b=2"
-    val lookups = Seq[(String, () => DataFrame)](
-      "exactUrl" -> (() => server.exactUrl(key)),
-      "host" -> (() => server.host("com,example")),
-      "prefix" -> (() => server.prefix("com,example)/")),
-      "domain" -> (() => server.domain("org,iana")),
-      "closest" -> (() => server.closest(key, "20150301000000", 1)),
-      "captures" -> (() => server.captures(key, "20150101000000", "20151231000000")),
-      "collapse" -> (() => server.collapse("com,example)/", 6)),
-      "latest" -> (() => server.latest("com,example)/")),
-      "timemap" -> (() => server.timemap(key)),
-      "miss" -> (() => server.exactUrl("com,absent)/")))
-    lookups.foreach { case (name, df) =>
-      assert(jobsAndShuffles(df()) == (1, 0), name)
+    // (name, lookup, (jobs, exchanges) in the plain session, the same
+    // under GraftExtensions). Plain: one job over the coalesced local
+    // leaf, and Spark's PropagateEmptyRelation folds the miss. Under
+    // GraftExtensions FoldLocalRelation folds every sort-shaped lookup;
+    // the window lookups keep their one job.
+    val lookups = Seq[(String, CdxServer => DataFrame, (Int, Int), (Int, Int))](
+      ("exactUrl", _.exactUrl(key), (1, 0), (0, 0)),
+      ("host", _.host("com,example"), (1, 0), (0, 0)),
+      ("prefix", _.prefix("com,example)/"), (1, 0), (0, 0)),
+      ("domain", _.domain("org,iana"), (1, 0), (0, 0)),
+      ("closest", _.closest(key, "20150301000000", 1), (1, 0), (0, 0)),
+      ("captures", _.captures(key, "20150101000000", "20151231000000"), (1, 0), (0, 0)),
+      ("collapse", _.collapse("com,example)/", 6), (1, 0), (1, 0)),
+      ("latest", _.latest("com,example)/"), (1, 0), (1, 0)),
+      ("timemap", _.timemap(key), (1, 0), (1, 0)),
+      ("miss", _.exactUrl("com,absent)/"), (0, 0), (0, 0)))
+    lookups.foreach { case (name, lookup, plain, folded) =>
+      assert(jobsAndShuffles(lookup(server)) == plain, s"$name, plain session")
+      assert(jobsAndShuffles(lookup(extServer)) == folded, s"$name, GraftExtensions")
+      assert(lookup(extServer).collect().toSeq == lookup(server).collect().toSeq, s"$name rows")
     }
+    // a folded lookup is one driver-local scan
+    val exact = extServer.exactUrl(key)
+    assert(exact.collect().length == 2)
+    assert(exact.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec])
+  }
+
+  test("closest over a small selection compiles no class per target under GraftExtensions") {
+    val key = "com,example)/path?a=1&b=2"
+    def closestTs(target: String): Seq[String] =
+      extServer.closest(key, target, 1).select("ts").as[String].collect().toSeq
+    closestTs("20150301000000") // the first call compiles the shared shapes
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(closestTs("20150101000000") == Seq("20150215012345"))
+    assert(closestTs("20160101000000") == Seq("20150402083000"))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled)
+  }
+
+  test("under GraftExtensions a selection over BlocksPerPartition blocks keeps the V2 scan") {
+    val dir = "/tmp/graft_test/server_zipnum_ext_wide"
+    val hot = "com,extwide)/hot"
+    val n = ZipNumScan.BlocksPerPartition + 6
+    val lines = (0 until n).map(i => f"""$hot 2020${i / 28 + 1}%02d${i % 28 + 1}%02d000000 {"n":$i}""")
+    ZipNum.write(lines.reverse.toDF("line"), dir, shards = 1, linesPerBlock = 1)
+    val exact = new CdxServer(SparkSpec.withExtensions, dir).exactUrl(hot)
+    assert(exact.select("ts").as[String].collect().toSeq == lines.map(_.split(" ")(1)))
+    assert(collect(exact.queryExecution.executedPlan) { case b: BatchScanExec => b }.size == 1)
   }
 
   test("a prefix spanning more than one scan partition keeps a parallel scan") {

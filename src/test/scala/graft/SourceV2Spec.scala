@@ -205,7 +205,6 @@ class SourceV2Spec extends SparkSpec {
   test("WARC scan RDDs carry the glob as their name (stage attribution)") {
     setup()
     import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
-    import org.apache.spark.sql.SparkSession
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val plan = graft.sources.NameWarcScanRdds(
       spark.read.format("warc").load(warcFile).queryExecution.executedPlan)
@@ -217,9 +216,7 @@ class SourceV2Spec extends SparkSpec {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         e.stageInfo.rddInfos.foreach(r => names.add(r.name))
     }
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val ext = SparkSession.builder().withExtensions(new graft.functions.GraftExtensions).getOrCreate()
+    val ext = SparkSpec.withExtensions
     spark.sparkContext.addSparkListener(listener)
     try {
       assert(ext ne spark)
@@ -228,11 +225,7 @@ class SourceV2Spec extends SparkSpec {
       val deadline = System.currentTimeMillis() + 10000
       while (!names.contains(warcFile) && System.currentTimeMillis() < deadline) Thread.sleep(20)
       assert(names.contains(warcFile), names.toString)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("format(warc) loads a directory of WARCs, not just file globs") {

@@ -27,4 +27,18 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** A second session on the same SparkContext, built with
+    * GraftExtensions (as `GraftSession` sessions are); [[session]] stays
+    * the default and active one. */
+  lazy val withExtensions: SparkSession = {
+    session
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try SparkSession.builder().withExtensions(new graft.functions.GraftExtensions).getOrCreate()
+    finally {
+      SparkSession.setDefaultSession(session)
+      SparkSession.setActiveSession(session)
+    }
+  }
 }
