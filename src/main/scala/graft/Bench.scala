@@ -33,7 +33,7 @@ object Bench {
 
   /** The heavy file-IO write lines whose run-to-run swing on this host is
     * ±70% even idle (BASELINE round-13 rows: sink_wet 3.9↔12.1 s,
-    * sink_warc_revisit_write 8.8↔12.2 s — all BenchOne-stable warm, so
+    * sink_warc_revisit_write 8.8↔12.2 s — each stable warm alone, so
     * the swing is ambient FS/page-cache state, not plan variance). These
     * are measured as the MEDIAN OF 3 back-to-back samples (round-14
     * protocol, BASELINE row documents it): one cold-cache outlier can no
@@ -66,10 +66,28 @@ object Bench {
       .map(m => m.group(1) -> m.group(2).toDouble)
       .filter { case (k, _) => k != "value" }.toMap
 
+  /** `Bench` runs the whole suite; `Bench <key> [reps]` runs one key
+    * `reps` times (default 3), with no warm-up, and prints each rep's wall
+    * time — a bench outlier reproduced and profiled in isolation. */
   def main(args: Array[String]): Unit = {
+    val one = args.headOption.map(name => name -> SparkEntry.queries.getOrElse(name,
+      throw new IllegalArgumentException(s"unknown query '$name'")))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.harness()
     spark.sparkContext.setLogLevel("WARN")
+    one match {
+      case Some((name, fn)) =>
+        (1 to args.lift(1).fold(3)(_.toInt)).foreach { i =>
+          val t0 = System.nanoTime()
+          val n = fn(spark, sfDir).count()
+          println(f"[bench] $name rep $i: ${(System.nanoTime() - t0) / 1e9}%.3f s, $n rows")
+        }
+      case None => suite(spark, sfDir)
+    }
+    spark.stop()
+  }
+
+  private def suite(spark: SparkSession, sfDir: String): Unit = {
     // untimed warm-up: JIT + codegen + shuffle/window machinery + parquet
     // footer caches (one representative query per physical-plan family).
     // The two writers are in the family because a cold tmp FS otherwise
@@ -80,7 +98,7 @@ object Bench {
     // (nothing else warms ZipNumScan), and the ANN/skew lines are the
     // CPU-heaviest per-row kernels.
     // join_range_block joined the family in round 6: it is the only
-    // broadcast-NLJ-heavy ~10-stage plan, and BenchOne showed a 24.7 s
+    // broadcast-NLJ-heavy ~10-stage plan, and `Bench <key>` showed a 24.7 s
     // cold / 2.4 s warm split — the driver's r5 10.3 s line was that cold
     // cost plus contention, not a plan regression.
     // cdx_fl_projection joined in round 8: it builds the zipnum cluster
@@ -88,7 +106,7 @@ object Bench {
     // driver line was 9.9 s cold / 2.6 s warm with identical rows.
     // html_links joined in round 15: it is the only member of the
     // heavy-regex HTML-extraction expression family (nested HOF lambdas
-    // over ~40 regex kernels), and BenchOne showed a 10.5 s cold / 3.4 s
+    // over ~40 regex kernels), and `Bench <key>` showed a 10.5 s cold / 3.4 s
     // warm split — the JIT/codegen warm-up every other family amortizes
     // through its own warm-up member was landing entirely on this line
     // (html_main_content, which runs immediately after it, measured
@@ -229,6 +247,5 @@ object Bench {
     println(compact)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json + "\n")
-    spark.stop()
   }
 }

@@ -5,8 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Opinionated SparkSession factory for the engine — the confs a 100 TB
   * deployment wants on, in one place: [[builder]] is the library entry
   * point for cluster use, [[local]] its development variant. The harness
-  * mains (Bench, BenchOne, Verify, Plans, PlanDump) share one env-driven
-  * session, [[harness]], which does not (yet) use [[builder]]'s confs.
+  * mains (Bench, Verify, Plans) run on [[local]] too, through [[harness]].
   */
 object GraftSession {
 
@@ -54,26 +53,8 @@ object GraftSession {
     s
   }
 
-  /** The harness mains' session: `local[$SPARK_GRAFT_CPUS]` (default 4)
-    * with as many shuffle partitions, and the UI off. Each main sets its
-    * own log level. */
-  private[graft] def harness(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // events.parquet carries nanos timestamps; set the legacy flag once,
-      // up front, so no query mutates session conf mid-run (Verify plans
-      // queries concurrently)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // transformWithState (stream_frontier) requires the RocksDB state
-      // store provider even batch-run; inert for every other query
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // the CDX derivations assume UTC: an unpinned TZ would bench a
-      // different row set than the one correctness-verified
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  /** The harness mains' session: [[local]] with `$SPARK_GRAFT_CPUS`
+    * (default 4) threads. Each main sets its own log level. */
+  private[graft] def harness(): SparkSession =
+    local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 }

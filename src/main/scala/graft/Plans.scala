@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps the FINAL physical plans of flagship queries to PLANS.md — the
@@ -9,6 +11,13 @@ import org.apache.spark.sql.execution.ExplainMode
   * what gets printed, not the pre-adaptive placeholder.
   *
   * `sbt "runMain graft.Plans [sfDir] [outFile]"`
+  *
+  * `sbt "runMain graft.Plans <sfDir> <outDir> key1,key2,..."` instead
+  * writes `explain("formatted")` of each named [[SparkEntry.queries]]
+  * key, unexecuted, to `<outDir>/<key>.txt`: the before/after plan
+  * evidence an optimization round commits next to its bench numbers
+  * (`plans/r15/`). Formatted mode shows Exchange placement, join
+  * strategy and build side, PushedFilters and ReadSchema.
   */
 object Plans {
 
@@ -153,7 +162,24 @@ object Plans {
     val outFile = args.lift(1).getOrElse("PLANS.md")
     val spark = GraftSession.harness()
     spark.sparkContext.setLogLevel("ERROR")
+    if (args.length > 2) dumpFormatted(spark, sfDir, outFile, args(2))
+    else writePlansMd(spark, sfDir, outFile)
+    spark.stop()
+  }
 
+  private def dumpFormatted(spark: SparkSession, sfDir: String, outDir: String,
+      keys: String): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    keys.split(',').map(_.trim).filter(_.nonEmpty).foreach { k =>
+      val fn = SparkEntry.queries.getOrElse(k,
+        throw new IllegalArgumentException(s"unknown query '$k'"))
+      val txt = fn(spark, sfDir).queryExecution.explainString(ExplainMode.fromString("formatted"))
+      Files.writeString(Paths.get(outDir, s"$k.txt"), txt)
+      println(s"[plans] $k -> $outDir/$k.txt (${txt.length} chars)")
+    }
+  }
+
+  private def writePlansMd(spark: SparkSession, sfDir: String, outFile: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — final physical plans of the flagship queries\n\n")
     sb.append(s"Generated by `graft.Plans` on `$sfDir` (AQE final plans, ")
@@ -170,8 +196,7 @@ object Plans {
         .mkString("\n")
       sb.append(s"\n## $name\n\n$why\n\n```\n$capped\n```\n")
     }
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), sb.toString)
+    Files.writeString(Paths.get(outFile), sb.toString)
     println(s"[plans] wrote ${flagship.size} plans to $outFile")
-    spark.stop()
   }
 }

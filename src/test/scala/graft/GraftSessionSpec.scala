@@ -1,22 +1,25 @@
 package graft
 
-/** The session factory registers the native functions via extensions and
-  * pins the engine confs. (Uses the shared test session's JVM — building a
+/** The session factory pins the engine confs, and the native functions
+  * register from SQL. (Uses the shared test session's JVM — building a
   * second session in the same context shares the SparkContext.) */
 class GraftSessionSpec extends SparkSpec {
 
-  test("builder carries the engine confs and extension registration") {
-    // inspect the builder's config through a session it produces
-    val s2 = GraftSession.builder("graft-spec")
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      assert(s2.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
-      assert(s2.conf.get("spark.sql.session.timeZone") == "UTC")
-    } finally {
-      // don't stop: shares the JVM-wide context with the other specs
-    }
+  test("builder carries the engine confs and leaves the shared session alone") {
+    val shared = Seq("spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.files.maxPartitionBytes")
+    val before = shared.map(spark.conf.get)
+    val s2 = SparkSpec.isolated(GraftSession.builder("graft-spec").getOrCreate())
+    // don't stop: shares the JVM-wide context with the other specs
+    assert(shared.map(spark.conf.get) == before)
+    assert(s2 ne spark)
+    assert(s2.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
+    assert(s2.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s2.conf.get("spark.sql.files.maxPartitionBytes") == "256m")
+    // the extensions are a static conf: Spark applies them only when the
+    // builder creates the SparkContext, as GraftSession.local does in a
+    // fresh JVM, so here they can be checked as requested, not as loaded
+    assert(s2.conf.get("spark.sql.extensions") == "graft.functions.GraftExtensions")
   }
 
   test("native functions usable from SQL after register") {
