@@ -18,6 +18,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * evidence an optimization round commits next to its bench numbers
   * (`plans/r15/`). Formatted mode shows Exchange placement, join
   * strategy and build side, PushedFilters and ReadSchema.
+  *
+  * Both outputs go through [[normalize]], so two runs over the same plans
+  * write the same text.
   */
 object Plans {
 
@@ -156,6 +159,28 @@ object Plans {
     "emb_kmeans" -> "assignment is ONE narrow codegen pq_encode pass against literal centroids — no centroid join, no argmin window, no explode; the only exchange is the output sort",
     "graph_kcore" -> "per H-operator round: one neighbors join + a node-partitioned window-rank H-index (no neighbor-list collection — hub state stays one long) + one hash agg, off a checkpointed neighbor list")
 
+  /** `plan` with the tokens that differ between runs of one plan made
+    * stable: expression ids (`#n`), exchange ids (`plan_id=n`), AQE query
+    * stage ids and whole-stage-codegen ids (`*(n)`) are renumbered by
+    * first appearance, so references between operators survive and stages
+    * that finish in another order print alike; TransformWithState run ids
+    * and batch timestamps, lambda class numbers, identity hashes and the
+    * session tag of shared scratch dirs are masked. */
+  private[graft] def normalize(plan: String): String = {
+    val masked = Seq(
+      """runId = [0-9a-f-]{36}""" -> "runId = <runId>",
+      """(stateStoreCkptIds = [^,]*, )\d+""" -> "$1<batchTimestampMs>",
+      """\$\$Lambda(\$\d+)?/0x[0-9a-f]+""" -> "\\$\\$Lambda",
+      """(?<=[\w$])@[0-9a-f]{1,8}\b""" -> "@<hash>",
+      """(?<=/\w{1,64}_)[0-9a-f]{12}\b""" -> "<tag>"
+    ).foldLeft(plan) { case (text, (re, to)) => re.r.replaceAllIn(text, to) }
+    Seq("#", "plan_id=", "QueryStage ", "*(").foldLeft(masked) { (text, marker) =>
+      val ids = scala.collection.mutable.HashMap.empty[String, Int]
+      (java.util.regex.Pattern.quote(marker) + "(\\d+)").r.replaceAllIn(text, m =>
+        marker + ids.getOrElseUpdate(m.group(1), ids.size))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
@@ -173,7 +198,8 @@ object Plans {
     keys.split(',').map(_.trim).filter(_.nonEmpty).foreach { k =>
       val fn = SparkEntry.queries.getOrElse(k,
         throw new IllegalArgumentException(s"unknown query '$k'"))
-      val txt = fn(spark, sfDir).queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val txt = normalize(
+        fn(spark, sfDir).queryExecution.explainString(ExplainMode.fromString("formatted")))
       Files.writeString(Paths.get(outDir, s"$k.txt"), txt)
       println(s"[plans] $k -> $outDir/$k.txt (${txt.length} chars)")
     }
@@ -187,7 +213,7 @@ object Plans {
     flagship.foreach { case (name, why) =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect() // drive AQE to its final plan
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("simple"))
+      val plan = normalize(df.queryExecution.explainString(ExplainMode.fromString("simple")))
       // cap pathological lines: a plan-literal model artifact (e.g. the
       // ~60 KB serialized bloom filter) would otherwise dump as one
       // megascreen hex line and drown the plan it rides in

@@ -630,27 +630,6 @@ object Wacz {
   def scanIndex(spark: SparkSession, pathGlob: String): DataFrame =
     archiveLineRows(spark, pathGlob, "scanIndex")(indexLines)
 
-  /** pure block selection for [[lookupPrefix]]: block i covers keys in
-    * [firstKey_i, firstKey_{i+1}] — the CLOSED upper bound because a run
-    * of equal urlkeys can straddle a block boundary — so it can hold a
-    * prefix match iff firstKey_i < (prefix + U+10FFFF) and
-    * firstKey_{i+1} ≥ prefix. Comparisons are UTF-8 BYTE order via
-    * [[ZipNum.utf8Compare]] with [[ZipNum.MaxCodePoint]] as the
-    * sentinel: the index was sorted by Spark (UTF-8 bytes), and Java's
-    * UTF-16 compareTo inverts supplementary characters vs [U+E000,
-    * U+FFFF] — the exact silent-block-drop ZipNum's reader documents.
-    * Over-selection is harmless (lines are re-filtered);
-    * under-selection would silently drop captures. */
-  private[graft] def selectBlocks(
-      firstKeys: IndexedSeq[String], prefix: String): Seq[Int] = {
-    val hi = prefix + ZipNum.MaxCodePoint
-    firstKeys.indices.filter { i =>
-      ZipNum.utf8Compare(firstKeys(i), hi) < 0 &&
-        (i + 1 >= firstKeys.length ||
-          ZipNum.utf8Compare(firstKeys(i + 1), prefix) >= 0)
-    }
-  }
-
   /** one idx pointer: (firstKey, member name under indexes/, offset,
     * length). BOTH public pointer dialects parse: the TAB cluster.idx
     * form this writer emits (`key TAB member TAB offset TAB length`)
@@ -729,8 +708,11 @@ object Wacz {
 
   /** Bounded PREFIX LOOKUP over the big-archive index form (`write`
     * with `indexLinesPerBlock > 0`): per archive, read the small
-    * `indexes/index.idx` (one pointer line per block), [[selectBlocks]]
-    * the blocks whose key range can hold the prefix, and positioned-read
+    * `indexes/index.idx` (one pointer line per block), select the blocks
+    * whose key range can hold the prefix by ZipNum's pruning rule
+    * ([[ZipNum.selectBlocks]] over [[ZipNum.prefixBounds]]: a run of equal
+    * keys can straddle a block boundary, so the predecessor of the first
+    * block at or above the prefix is kept), and positioned-read
     * ONLY those gzip members out of the STORED `indexes/index.cdx.gz` —
     * O(idx + matching blocks) bytes, never the whole index: the ZipNum
     * cluster.idx discipline served through a ZIP. Plain-index archives
@@ -757,10 +739,13 @@ object Wacz {
                 s"$shortName: $member must be STORED for block-positioned reads")
               dataOffset(read, e)
             })
-          selectBlocks(blocks.map(_._1), prefix).flatMap { i =>
-            val (_, member, off, blen) = blocks(i)
-            val buf = new Array[Byte](blen.toInt)
-            read(baseOf(member) + off, buf)
+          val idx = blocks.zipWithIndex.map { case ((key, member, off, blen), i) =>
+            ZipNum.IdxEntry(key, member, off, blen, i)
+          }
+          val (lo, hi) = ZipNum.prefixBounds(prefix)
+          ZipNum.selectBlocks(idx, lo, hi).flatMap { e =>
+            val buf = new Array[Byte](e.length.toInt)
+            read(baseOf(e.shard) + e.offset, buf)
             memberLines(buf)
           }
         case None =>

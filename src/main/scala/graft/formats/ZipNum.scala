@@ -266,8 +266,10 @@ object ZipNum {
     *    serving path already reads);
     *  - one task per output shard streams ONLY the input blocks
     *    overlapping its range (idx-pruned via [[selectBlocks]], the
-    *    same pruning the serving path uses), k-way-merges the
-    *    per-input sorted line streams, and feeds the shard writer.
+    *    same pruning the serving path uses), each input's blocks in idx
+    *    order through one [[BlockReader]] (the scan's block reader),
+    *    k-way-merges the per-input sorted line streams, and feeds the
+    *    shard writer.
     *
     * Data moves exactly once: input block bytes → task → output shard.
     * Each output shard goes through the V2 task writer
@@ -338,8 +340,8 @@ object ZipNum {
             excludePrefixes.isEmpty || !excludePrefixes.exists(line.startsWith)
           // one sorted, range-filtered line stream per input cluster
           val live = scala.collection.mutable.ArrayBuffer.from(inputs.map { case (d, entries) =>
-            blockLineIterator(d, entries, taskConf)
-              .filter(l => inRange(l) && kept(l)).buffered
+            blockLines(entries.iterator.map(ZipNumScan.blockOf(d, _)), taskConf)
+              .map(_._3).filter(l => inRange(l) && kept(l)).buffered
           }.filter(_.hasNext))
           val w = new graft.sources.ZipNumDataWriter(
             outDir, pid, ctx.taskAttemptId(), 0, linesPerBlock, sconf)
@@ -373,41 +375,60 @@ object ZipNum {
   private type MergeWork =
     (Int, Option[String], Option[String], Seq[(String, Seq[IdxEntry])])
 
-  /** Sorted line stream over the given idx blocks of one cluster (task
-    * side; entries must be in idx order). Forward-only: one open handle
-    * per shard file, sequential seeks — the mergeSorted read kernel. */
-  private def blockLineIterator(
-      dir: String, entries: Seq[IdxEntry],
-      conf: Configuration): Iterator[String] = {
-    var in: org.apache.hadoop.fs.FSDataInputStream = null
-    var openShard: String = null
-    val it = entries.iterator
-    // close on abnormal task exit too (same hygiene as readBlockLines)
-    Option(org.apache.spark.TaskContext.get())
-      .foreach(_.addTaskCompletionListener[Unit](_ =>
-        try { if (in != null) in.close() } catch { case _: Throwable => }))
-    new Iterator[String] {
-      private var current: Iterator[String] = Iterator.empty
-      override def hasNext: Boolean = {
-        while (!current.hasNext && it.hasNext) {
-          val e = it.next()
-          if (e.shard != openShard) {
-            if (in != null) in.close()
-            val p = new Path(dir, e.shard)
-            in = p.getFileSystem(conf).open(p)
-            openShard = e.shard
-          }
-          val buf = new Array[Byte](e.length.toInt)
-          in.seek(e.offset); in.readFully(buf)
-          val member = Gzip.members(new java.io.ByteArrayInputStream(buf)).next()
-          current = new String(member.bytes, UTF_8).split("\n").iterator.filter(_.nonEmpty)
-        }
-        val has = current.hasNext
-        if (!has && in != null) { in.close(); in = null }
-        has
+  /** THE ZipNum block reader: every block the V2 scan
+    * ([[graft.sources.ZipNumPartitionReader]], and so the driver-local
+    * [[ZipNumScan.readRows]]), [[readBlockLines]] and [[mergeSorted]] read
+    * is read by one of these. A block is read as exactly `length` bytes at
+    * `offset` of its shard file, gunzipped as ONE member and split into
+    * its non-empty lines. One open handle per shard file, reused while
+    * consecutive blocks stay in that shard; [[close]] is idempotent, and a
+    * later read re-opens. */
+  private[graft] final class BlockReader(conf: Configuration) extends java.io.Closeable {
+    private var openFile: String = _
+    private var in: org.apache.hadoop.fs.FSDataInputStream = _
+    private var blocks = 0L
+    private var bytes = 0L
+
+    def blocksRead: Long = blocks
+    def compressedBytesRead: Long = bytes
+
+    /** the non-empty lines of the block at (`file`, `offset`, `length`) */
+    def lines(file: String, offset: Long, length: Long): Array[String] = {
+      if (file != openFile) {
+        close()
+        val path = new Path(file)
+        in = path.getFileSystem(conf).open(path)
+        openFile = file
       }
-      override def next(): String = current.next()
+      val buf = new Array[Byte](length.toInt)
+      in.seek(offset); in.readFully(buf)
+      blocks += 1
+      bytes += length
+      val member = Gzip.members(new java.io.ByteArrayInputStream(buf)).next()
+      new String(member.bytes, UTF_8).split("\n").filter(_.nonEmpty)
     }
+
+    override def close(): Unit = if (in != null) {
+      val open = in
+      in = null
+      openFile = null
+      open.close()
+    }
+  }
+
+  /** Every line of `blocks` ([[ZipNumScan.blockOf]] tuples, read in the
+    * given order) through one [[BlockReader]], as (block seq, line number
+    * in the block, line). The reader closes once the lines are drained,
+    * and at task end for a task that stops early. */
+  private def blockLines(
+      blocks: Iterator[(String, Long, Long, Long)],
+      conf: Configuration): Iterator[(Long, Int, String)] = {
+    val reader = new BlockReader(conf)
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ =>
+      try reader.close() catch { case _: Throwable => }))
+    blocks.flatMap { case (file, offset, length, seq) =>
+      reader.lines(file, offset, length).iterator.zipWithIndex.map { case (l, i) => (seq, i, l) }
+    } ++ { reader.close(); Iterator.empty }
   }
 
   /** UTF-8 byte order as a string Ordering (the writer's sort order) */
@@ -614,60 +635,22 @@ object ZipNum {
 
   /** Read exactly the given idx blocks (the pagination path — pywb zipnum
     * §pagination: a page is a run of idx blocks), filtering lines to
-    * `prefix` when given. At most [[ZipNumScan.BlocksPerPartition]] blocks
-    * are read by one task and ordered within it (one job, no exchange);
-    * more are spread over tasks and ordered by a range exchange. */
+    * `prefix` when given. `selected` must be in idx order. The selection
+    * is split into tasks by the scan's own rule
+    * ([[ZipNumScan.taskGroups]]: contiguous runs of at most
+    * [[ZipNumScan.BlocksPerPartition]] blocks) and each task reads its run
+    * through one [[BlockReader]]. A selection that is one run is ordered
+    * within its task (one job, no exchange); more runs are ordered by a
+    * range exchange on (blockseq, lineno). */
   def readBlockLines(
       spark: SparkSession, dir: String, selected: Seq[IdxEntry],
       prefix: Option[String], ordered: Boolean = true): DataFrame = {
     import spark.implicits._
-    // sort work by (file, offset) so a partition reads each shard file
-    // with ONE open handle and forward-only seeks — at object-store scale
-    // this turns per-block GETs into a few ranged sequential reads
-    val work = selected.map(e => (dir + "/" + e.shard, e.offset, e.length, e.seq))
-      .sortBy(w => (w._1, w._2))
+    val groups = ZipNumScan.taskGroups(dir, selected)
     val sconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    // a selection that fits one scan partition is read by one task and
-    // sorted within it: no range exchange, one job
-    val onePartition = work.size <= ZipNumScan.BlocksPerPartition
-    val slices =
-      if (onePartition) 1
-      else math.min(work.size, math.max(32, spark.sparkContext.defaultParallelism))
     val lines = spark.sparkContext
-      .parallelize(work, slices)
-      .mapPartitions { it =>
-        val conf = sconf.value
-        var openFile: String = null
-        var in: org.apache.hadoop.fs.FSDataInputStream = null
-        val closer = () => if (in != null) in.close()
-        // close on early termination (limit/exception), not just on drain
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ =>
-            try closer() catch { case _: Throwable => }))
-        new Iterator[(Long, Int, String)] {
-          private var current: Iterator[(Long, Int, String)] = Iterator.empty
-          override def hasNext: Boolean = {
-            while (!current.hasNext && it.hasNext) {
-              val (file, offset, length, seq) = it.next()
-              if (file != openFile) {
-                closer()
-                val path = new Path(file)
-                in = path.getFileSystem(conf).open(path)
-                openFile = file
-              }
-              val buf = new Array[Byte](length.toInt)
-              in.seek(offset); in.readFully(buf)
-              val member = Gzip.members(new java.io.ByteArrayInputStream(buf)).next()
-              current = new String(member.bytes, UTF_8).split("\n").iterator
-                .filter(_.nonEmpty).zipWithIndex.map { case (l, i) => (seq, i, l) }
-            }
-            val has = current.hasNext
-            if (!has) closer()
-            has
-          }
-          override def next(): (Long, Int, String) = current.next()
-        }
-      }
+      .parallelize(groups, math.max(groups.size, 1))
+      .mapPartitions(it => blockLines(it.flatMap(_.iterator), sconf.value))
     // stable global order: block sequence, then line position in block
     val pruned = lines.toDF("blockseq", "lineno", "line")
     val filtered = prefix match {
@@ -675,7 +658,7 @@ object ZipNum {
       case None => pruned
     }
     if (!ordered) filtered.select("line")
-    else if (onePartition) filtered.sortWithinPartitions("blockseq", "lineno").select("line")
+    else if (groups.size <= 1) filtered.sortWithinPartitions("blockseq", "lineno").select("line")
     else filtered.orderBy("blockseq", "lineno").select("line")
   }
 }

@@ -2,9 +2,8 @@ package graft.sources
 
 import java.util
 
-import graft.formats.{Gzip, SerializableHadoopConf, ZipNum}
+import graft.formats.{SerializableHadoopConf, ZipNum}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -278,7 +277,7 @@ final class ZipNumScan(
   private lazy val staticBlocks: Seq[ZipNum.IdxEntry] = {
     val selected =
       if (range.lo.isEmpty && range.hi.isEmpty)
-        ZipNumScan.readIdxStatic(dir, sessionConf)
+        ZipNum.readIdx(dir, sessionConf)
       else ZipNum.scanIdxRange(dir, sessionConf, range.lo, range.hi)
     limit match {
       case Some(n) if limitFromEnd => selected.takeRight(n)
@@ -334,12 +333,10 @@ final class ZipNumScan(
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     Array(new BlocksReadMetric, new BytesReadMetric)
 
-  /** grouped ≤[[ZipNumScan.BlocksPerPartition]] contiguous blocks per
-    * partition so a huge cluster doesn't explode the task count */
+  /** one partition per [[ZipNumScan.taskGroups]] run, so a huge cluster
+    * doesn't explode the task count */
   override def planInputPartitions(): Array[InputPartition] =
-    selectedBlocks.grouped(ZipNumScan.BlocksPerPartition).map { group =>
-      ZipNumBlockPartition(group.map(ZipNumScan.blockOf(dir, _)).toArray): InputPartition
-    }.toArray
+    ZipNumScan.taskGroups(dir, selectedBlocks).map(ZipNumBlockPartition(_): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val sconf = conf
@@ -354,16 +351,24 @@ object ZipNumScan {
   /** runtime-filter key budget: each key costs O(log idx) driver seeks */
   val MaxRuntimeKeys = 1024
 
-  /** contiguous blocks per input partition. A selection of at most this
-    * many blocks would plan ONE partition: `CdxServer` reads such a
+  /** the most blocks one task reads ([[taskGroups]]). A selection of at
+    * most this many blocks is one task: `CdxServer` reads such a
     * selection on the driver ([[readRows]]) instead of planning this
-    * scan, and `ZipNum.readBlockLines` reads it in one task. Larger
-    * selections keep the parallel scan. */
+    * scan, and `ZipNum.readBlockLines` reads it in one task ordered
+    * within it. Larger selections run one task per group. */
   val BlocksPerPartition = 64
 
   /** the reader's (file, offset, length, seq) tuple for an idx entry */
   def blockOf(dir: String, e: ZipNum.IdxEntry): (String, Long, Long, Long) =
     (dir + "/" + e.shard, e.offset, e.length, e.seq)
+
+  /** THE task split of a block selection (in idx order): contiguous runs
+    * of at most [[BlocksPerPartition]] blocks, as reader tuples. The scan
+    * plans one input partition per run and `ZipNum.readBlockLines` one
+    * task per run. */
+  def taskGroups(
+      dir: String, blocks: Seq[ZipNum.IdxEntry]): Seq[Array[(String, Long, Long, Long)]] =
+    blocks.grouped(BlocksPerPartition).map(_.map(blockOf(dir, _)).toArray).toSeq
 
   /** Reads `blocks` on the calling thread through the reader a scan task
     * uses, so the rows equal one partition of this scan over the same
@@ -377,11 +382,6 @@ object ZipNumScan {
     try Iterator.continually(reader).takeWhile(_.next()).map(_.get()).toVector
     finally reader.close()
   }
-
-  /** driver-side idx read — delegates to the single idx parser */
-  def readIdxStatic(
-      dir: String, conf: Configuration = new Configuration()): Seq[ZipNum.IdxEntry] =
-    ZipNum.readIdx(dir, conf)
 }
 
 /** UI-visible scan metrics: with `numOutputRows` these make pruning
@@ -414,39 +414,17 @@ final class ZipNumPartitionReader(
   // a urlkey-only (or blockseq-only) scan takes the indexOf fast path
   private val needSplit = fields.contains("ts") || fields.contains("json")
 
-  private var blocksRead = 0L
-  private var bytesRead = 0L
+  private val reader = new ZipNum.BlockReader(sconf.value)
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(new TaskMetric("blocksRead", blocksRead),
-      new TaskMetric("compressedBytesRead", bytesRead))
+    Array(new TaskMetric("blocksRead", reader.blocksRead),
+      new TaskMetric("compressedBytesRead", reader.compressedBytesRead))
 
-  private def conf = sconf.value
   private var blockIdx = 0
-  private var lines: Iterator[(String, Long)] = Iterator.empty
+  // the current block's lines, the next one to emit, and the block's seq
+  private var lines: Array[String] = Array.empty
+  private var lineIdx = 0
+  private var seq = 0L
   private var row: InternalRow = _
-  // one open handle per shard file, reused across the partition's blocks
-  private var openFile: String = null
-  private var in: org.apache.hadoop.fs.FSDataInputStream = null
-
-  private def loadNextBlock(): Boolean = {
-    if (blockIdx >= blocks.length) return false
-    val (file, offset, length, seq) = blocks(blockIdx)
-    blockIdx += 1
-    if (file != openFile) {
-      if (in != null) in.close()
-      val path = new Path(file)
-      in = path.getFileSystem(conf).open(path)
-      openFile = file
-    }
-    val buf = new Array[Byte](length.toInt)
-    in.seek(offset); in.readFully(buf)
-    blocksRead += 1
-    bytesRead += length
-    val member = Gzip.members(new java.io.ByteArrayInputStream(buf)).next()
-    lines = new String(member.bytes, "UTF-8").split("\n").iterator
-      .filter(_.nonEmpty).map(l => (l, seq))
-    true
-  }
 
   // per-field extractors resolved ONCE at reader construction — next()
   // runs per line of the scan, so the hot loop must not re-dispatch on
@@ -466,8 +444,16 @@ final class ZipNumPartitionReader(
   }
 
   override def next(): Boolean = {
-    while (!lines.hasNext) if (!loadNextBlock()) return false
-    val (line, seq) = lines.next()
+    while (lineIdx >= lines.length) {
+      if (blockIdx >= blocks.length) return false
+      val (file, offset, length, blockSeq) = blocks(blockIdx)
+      blockIdx += 1
+      lines = reader.lines(file, offset, length)
+      lineIdx = 0
+      seq = blockSeq
+    }
+    val line = lines(lineIdx)
+    lineIdx += 1
     val parts = if (needSplit) line.split(" ", 3) else null
     val values = new Array[Any](extractors.length)
     var i = 0
@@ -480,5 +466,5 @@ final class ZipNumPartitionReader(
   }
 
   override def get(): InternalRow = row
-  override def close(): Unit = if (in != null) in.close()
+  override def close(): Unit = reader.close()
 }

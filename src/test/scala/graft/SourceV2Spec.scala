@@ -372,7 +372,7 @@ class SourceV2Spec extends SparkSpec {
 
   test("limit pushdown caps planned blocks; stats shrink with pruning") {
     setup()
-    val idx = graft.sources.ZipNumScan.readIdxStatic(zipDir)
+    val idx = ZipNum.readIdx(spark, zipDir)
     assert(idx.size > 1)
     // limit=1 plans exactly 1 block (each block holds >= 1 line)
     def blocksOf(scan: graft.sources.ZipNumScan): Int =
@@ -448,7 +448,7 @@ class SourceV2Spec extends SparkSpec {
     assert(desc.toSeq == ascAll.reverse.take(2).toSeq)
     assert(total > 2)
     // the scan itself: desc cap takes the LAST blocks
-    val idx = graft.sources.ZipNumScan.readIdxStatic(zipDir)
+    val idx = ZipNum.readIdx(spark, zipDir)
     val descScan = new graft.sources.ZipNumScan(
       zipDir, ZipNumSource.KeyRange(None, None), ZipNumSource.schema,
       Some(1), limitFromEnd = true)
@@ -481,7 +481,7 @@ class SourceV2Spec extends SparkSpec {
       zipDir, ZipNumSource.KeyRange(None, None), ZipNumSource.schema)
     assert(scan.supportedCustomMetrics().map(_.name()).toSeq
       == Seq("blocksRead", "compressedBytesRead"))
-    val idx = graft.sources.ZipNumScan.readIdxStatic(zipDir)
+    val idx = ZipNum.readIdx(spark, zipDir)
     val parts = scan.planInputPartitions()
     val factory = scan.createReaderFactory()
     var blocks = 0L
@@ -499,7 +499,7 @@ class SourceV2Spec extends SparkSpec {
 
   test("zipnum pushdown plans fewer partitions than a full scan") {
     setup()
-    val idx = graft.sources.ZipNumScan.readIdxStatic(zipDir)
+    val idx = ZipNum.readIdx(spark, zipDir)
     val all = new graft.sources.ZipNumScan(zipDir,
       ZipNumSource.KeyRange(None, None), ZipNumSource.schema).planInputPartitions()
     val pruned = new graft.sources.ZipNumScan(zipDir,

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.formats.Wacz
+import graft.formats.{Wacz, ZipNum}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -234,22 +234,31 @@ class WaczSpec extends SparkSpec {
     assert(ver.values.forall(identity), ver.toString)
   }
 
+  /** the blocks `lookupPrefix` reads for `prefix` out of an index whose
+    * blocks start at `firstKeys`: ZipNum's pruning rule over its prefix
+    * bounds, as block numbers */
+  private def selectBlocks(firstKeys: IndexedSeq[String], prefix: String): Seq[Int] = {
+    val (lo, hi) = ZipNum.prefixBounds(prefix)
+    val idx = firstKeys.zipWithIndex.map { case (k, i) => ZipNum.IdxEntry(k, "", 0, 0, i) }
+    ZipNum.selectBlocks(idx, lo, hi).map(_.seq.toInt)
+  }
+
   test("selectBlocks is tight and lossless, including boundary-straddling key runs") {
     val fks = IndexedSeq("a", "c", "c", "f")
     // a run of 'c' keys can straddle blocks 0-2 (closed upper bounds)
-    assert(Wacz.selectBlocks(fks, "c") == Seq(0, 1, 2))
-    assert(Wacz.selectBlocks(fks, "a") == Seq(0))
-    assert(Wacz.selectBlocks(fks, "b") == Seq(0))
+    assert(selectBlocks(fks, "c") == Seq(0, 1, 2))
+    assert(selectBlocks(fks, "a") == Seq(0))
+    assert(selectBlocks(fks, "b") == Seq(0))
     // block 2 covers [c, f] CLOSED — it may end with an 'f' key, so the
     // lossless selection includes it alongside the block that starts at f
-    assert(Wacz.selectBlocks(fks, "f") == Seq(2, 3))
-    assert(Wacz.selectBlocks(fks, "g") == Seq(3)) // last block is open-ended
+    assert(selectBlocks(fks, "f") == Seq(2, 3))
+    assert(selectBlocks(fks, "g") == Seq(3)) // last block is open-ended
 
     // SCALE SHAPE: a point prefix selects O(1) blocks no matter how many
     // the index holds — the pruning that makes a packaged 100 GB archive
     // answer a lookup in two positioned reads
     val many = (0 until 100000).map(i => f"k$i%06d").toIndexedSeq
-    val sel = Wacz.selectBlocks(many, "k050000")
+    val sel = selectBlocks(many, "k050000")
     assert(sel.size <= 2, s"point prefix selected ${sel.size} of 100k blocks")
     assert(sel.contains(50000))
   }
@@ -261,7 +270,7 @@ class WaczSpec extends SparkSpec {
     // either mistake silently drops the straddling block for an
     // emoji/supplementary prefix.
     val fks = IndexedSeq("com/a", "com/｡a", "com/😀x")
-    val sel = Wacz.selectBlocks(fks, "com/😀")
+    val sel = selectBlocks(fks, "com/😀")
     assert(sel == Seq(1, 2), s"got $sel")
   }
 

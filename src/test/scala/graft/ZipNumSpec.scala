@@ -451,13 +451,28 @@ class ZipNumSpec extends SparkSpec {
 
   test("prefix pruning touches fewer blocks than a full read") {
     written
+    val conf = spark.sparkContext.hadoopConfiguration
     val idx = ZipNum.readIdx(spark, dir)
     val p = "org,host1)"
-    // mirror of readLines' selection logic
-    val hi = p + "￿"
-    val selected = idx.zipAll(idx.drop(1).map(e => Some(e.firstKey)), null, None)
-      .collect { case (e, next) if e != null => (e, next) }
-      .count { case (e, next) => e.firstKey < hi && next.forall(_ >= p) }
-    assert(selected > 0 && selected < idx.size)
+    // readLines' selection for the prefix, read through the block reader
+    // against a read of every block
+    val (lo, hi) = ZipNum.prefixBounds(p)
+    def read(blocks: Seq[ZipNum.IdxEntry]): (Long, Seq[String]) = {
+      val reader = new ZipNum.BlockReader(conf)
+      try {
+        val lines = blocks.flatMap { e =>
+          val (file, offset, length, _) = graft.sources.ZipNumScan.blockOf(dir, e)
+          reader.lines(file, offset, length).toSeq
+        }
+        (reader.blocksRead, lines)
+      } finally reader.close()
+    }
+    val (selected, prunedLines) = read(ZipNum.scanIdxRange(dir, conf, lo, hi))
+    val (all, allLines) = read(idx)
+    assert(all == idx.size)
+    assert(selected > 0 && selected < all)
+    val matches = allLines.filter(_.startsWith(p))
+    assert(matches.nonEmpty && prunedLines.filter(_.startsWith(p)) == matches,
+      "the pruned read must hold every line under the prefix")
   }
 }
