@@ -380,7 +380,7 @@ object Pipeline {
 
   /** Continuous ZipNum indexing: each micro-batch of arriving CDX lines
     * becomes its own (small, sorted) cluster under `outBase/batch-N`;
-    * [[graft.formats.ZipNum.merge]] periodically compacts them into the
+    * [[graft.formats.ZipNum.mergeSorted]] periodically compacts them into the
     * serving cluster — the streaming form of the reference's re-run-with-
     * --skip-existing loop, with the source's offset log as the skip set.
     * A cluster itself can't be appended to (total order), so batch-then-
@@ -492,6 +492,6 @@ object Pipeline {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch-"))
       .map(_.getPath.toString).sorted.toSeq
     require(batchDirs.nonEmpty, s"no batch-* clusters under $outBase")
-    ZipNum.merge(spark, batchDirs, servingDir, shards, linesPerBlock)
+    ZipNum.mergeSorted(spark, batchDirs, servingDir, shards, linesPerBlock)
   }
 }

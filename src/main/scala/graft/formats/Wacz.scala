@@ -759,71 +759,24 @@ object Wacz {
     * offset, length) where offset/length come from the CDXJ index and
     * filename names the inner WARC. Each request costs ONE positioned
     * read of `length` bytes at (entry data offset + offset) — the STORED
-    * framing is what makes the arithmetic legal. Same strict member
-    * decode + record parser as Warc.scan/fetchRecords; wrong pointers
-    * fail loudly. */
+    * framing is what makes the arithmetic legal; the data offsets are
+    * resolved once per opened archive. [[Warc.replay]] does the reading:
+    * the scan's row builder, strict member decode, wrong pointers fail
+    * loudly. */
   def fetchRecords(spark: SparkSession, requests: DataFrame, dir: String): DataFrame = {
     val need = Seq("wacz", "filename", "offset", "length")
     require(need.forall(requests.columns.contains),
       s"Wacz.fetchRecords needs [${need.mkString(", ")}]; got [${requests.columns.mkString(", ")}]")
-    val sconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val rows = requests.select(
-        col("wacz").cast("string"), col("filename").cast("string"),
-        col("offset").cast("long"), col("length").cast("long"))
-      .dropDuplicates(need)
-      .repartition(col("wacz"))
-      .sortWithinPartitions("wacz", "filename", "offset")
-      .rdd.mapPartitions { it =>
-        var in: org.apache.hadoop.fs.FSDataInputStream = null
-        var current: String = null
-        var dataOffsets: Map[String, Long] = null
-        var prev: (String, Long) = null
-        def close(): Unit =
-          if (in != null) { try in.close() catch { case _: Throwable => }; in = null }
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => close()))
-        val out = it.flatMap { r =>
-          val wacz = r.getString(0)
-          val fname = r.getString(1)
-          val off = r.getLong(2)
-          val len = r.getLong(3)
-          require(len > 0 && len <= Gzip.MaxMemberBytes.toLong + (1L << 20),
-            s"Wacz.fetchRecords: implausible member length $len for $wacz!$fname@$off")
-          if (wacz != current) {
-            close()
-            val p = new Path(dir, wacz)
-            val pfs = p.getFileSystem(sconf.value)
-            in = pfs.open(p)
-            val dirEntries =
-              centralDirectory(positionedReader(in), pfs.getFileStatus(p).getLen)
-            dataOffsets = dirEntries
-              .filter(e => e.name.startsWith("archive/") && e.method == 0)
-              .map(e => e.name.stripPrefix("archive/") -> dataOffset(positionedReader(in), e)).toMap
-            current = wacz
-            prev = null
-          }
-          require(prev == null || prev != ((fname, off)),
-            s"Wacz.fetchRecords: conflicting lengths for $wacz!$fname@$off — " +
-              "stale index; refusing to guess")
-          prev = (fname, off)
-          val base = dataOffsets.getOrElse(fname,
-            throw new IllegalArgumentException(
-              s"Wacz.fetchRecords: $wacz has no STORED archive/$fname entry"))
-          val buf = new Array[Byte](len.toInt)
-          in.readFully(base + off, buf)
-          // per-member attribution (the Warc.fetchRecords contract): a
-          // coalesced multi-member slice emits each record with ITS OWN
-          // member's (offset, length), so returned pointers re-fetch
-          // exactly one member each
-          Gzip.members(new java.io.ByteArrayInputStream(buf)).flatMap(m =>
-            Warc.parseRecords(m.bytes, off + m.offset, m.compressedLength, fname))
-        }
-        new Iterator[Row] {
-          override def hasNext: Boolean = { val h = out.hasNext; if (!h) close(); h }
-          override def next(): Row = out.next()
-        }
-      }
-    spark.createDataFrame(rows, Warc.schema)
+    Warc.replay(spark, requests.withColumnRenamed("wacz", "container"), dir,
+      "Wacz.fetchRecords") { (fs, p, in) =>
+      val read = positionedReader(in)
+      val dataOffsets = centralDirectory(read, fs.getFileStatus(p).getLen)
+        .filter(e => e.name.startsWith("archive/") && e.method == 0)
+        .map(e => e.name.stripPrefix("archive/") -> dataOffset(read, e)).toMap
+      fname => dataOffsets.getOrElse(fname,
+        throw new IllegalArgumentException(
+          s"Wacz.fetchRecords: ${p.getName} has no STORED archive/$fname entry"))
+    }
   }
 
   /** Verify every archive against its own manifest: recompute sha256 +

@@ -4,14 +4,18 @@ import java.io.{ByteArrayInputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{functions, DataFrame, Row, SparkSession}
+import graft.sources.WarcRows
+import org.apache.hadoop.fs.{FileSystem, FSDataInputStream, Path}
+import org.apache.spark.sql.{functions, DataFrame, GraftDatasets, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** WARC (ISO 28500) + legacy ARC container support: a `.warc.gz`/`.arc.gz`
   * is one gzip member per record. WARC records are `WARC/1.0\r\n` + headers
   * + CRLF CRLF + block; ARC v1/v2 records are a single space-separated
   * header line (`url ip date mime length` / the 10-field v2 form) + LF +
-  * the raw HTTP response. [[parseRecords]] sniffs the member prefix and
+  * the raw HTTP response. [[parseMember]] sniffs the member prefix and
   * dispatches — pre-2010 crawls are ARC, and the reference reads both
   * through pywb's ArchiveIterator (SURVEY §1.1).
   *
@@ -212,9 +216,9 @@ object Warc {
   /** Receives one parsed record's own fields (record_type, url, ts14,
     * digest, status (nullable), mime, payload, segment); the member it
     * came from supplies (offset, length, filename). `segment` is null
-    * unless the walk is segment-aware and the record is WARC. The row
-    * builders sit behind it: the V2 reader builds InternalRows,
-    * [[parseRecords]] external Rows. */
+    * unless the walk is segment-aware and the record is WARC. The one
+    * row builder sits behind it: [[graft.sources.WarcRows]], shared by
+    * the V2 scan and [[replay]]. */
   private[graft] type Emit =
     (String, String, String, String, Integer, String, Array[Byte], Segment) => Unit
 
@@ -327,16 +331,6 @@ object Warc {
       bytes: Array[Byte], withPayload: Boolean, segments: Boolean, emit: Emit): Unit =
     if (isWarc(bytes)) parseWarc(bytes, withPayload, segments, emit)
     else parseArc(bytes, withPayload, emit)
-
-  /** [[parseMember]] as external Rows — the replay paths
-    * ([[fetchRecords]], WACZ) that build DataFrames from Rows. */
-  private[graft] def parseRecords(
-      bytes: Array[Byte], offset: Long, length: Long, filename: String): Seq[Row] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-    parseMember(bytes, withPayload = true, segments = false,
-      (t, u, ts, d, st, m, p, _) => out += Row(t, u, ts, d, st, m, offset, length, filename, p))
-    out.toSeq
-  }
 
   /** ARC v1 (5-field) / v2 (10-field) URL-record:
     * `url ip date mime length` / `url ip date mime result checksum
@@ -724,62 +718,75 @@ object Warc {
       (s"<html>split payload $i " + ("x" * (i % 97)) + "</html>").getBytes(UTF_8))
   }
 
-  /** The REPLAY primitive: fetch exactly the gzip members that CDX
+  /** The REPLAY primitive: fetch exactly the members that CDX
     * `(filename, offset, length)` pointers name — the range-request path
     * pywb serves captures through, and the whole reason the index stores
-    * those two byte columns (SURVEY §1.2). Requests repartition by
-    * filename and sort by offset, so each task opens a file ONCE and
-    * reads its ranges in ascending order (sequential on local/HDFS,
-    * coalescing-friendly positioned reads on s3a); every fetched range
-    * goes through the SAME member reader and record parser as the full
-    * [[scan]], so fetched rows are bit-identical to scanned ones
-    * (WarcSpec pins the round trip). At serving scale the request list
-    * is query-sized — the corpus is never scanned. Wrong pointers fail
-    * loudly (strict member decode): a serving stack must know its index
-    * is stale, not silently skip. */
+    * those two byte columns (SURVEY §1.2). The file is `dir/filename` and
+    * offsets count from its start; [[replay]] does the reading. At
+    * serving scale the request list is query-sized — the corpus is never
+    * scanned. */
   def fetchRecords(spark: SparkSession, requests: DataFrame, dir: String): DataFrame = {
     val need = Seq("filename", "offset", "length")
     require(need.forall(requests.columns.contains),
       s"fetchRecords needs [${need.mkString(", ")}]; got [${requests.columns.mkString(", ")}]")
+    replay(spark, requests.withColumn("container", functions.col("filename")), dir,
+      "fetchRecords")((_, _, _) => _ => 0L)
+  }
+
+  /** Pointer replay, the one kernel behind [[fetchRecords]] and
+    * [[Wacz.fetchRecords]]: `pointers` = (container, filename, offset,
+    * length), where `dir/container` is the file read and `filename` the
+    * archive inside it. `bases(fs, path, in)` runs once per opened
+    * container and maps a filename to the container byte its offsets
+    * count from.
+    *
+    * Pointers are deduped — a multi-record member's N records share ONE
+    * re-fetch unit, so a scan/index over it emits N identical pointers —
+    * then repartitioned by container and sorted by (container, filename,
+    * offset), so each task opens a container ONCE and reads its ranges in
+    * ascending order with positioned reads. The columns are cast, so an
+    * INT-typed index works. Each range is decoded strictly (`.zst` as
+    * zstd frames, with the dictionary that a dict-mode archive parks at
+    * its base loaded once per archive; anything else as gzip members) and
+    * every member becomes rows through the scan's own row builder
+    * ([[graft.sources.WarcRows]]) with ITS OWN (offset, length), so
+    * fetched rows are bit-identical to scanned ones (WarcSpec pins the
+    * round trip). Wrong pointers fail loudly — an implausible length, two
+    * pointers at one offset with different lengths, or a range that is
+    * not whole members: a serving stack must know its index is stale, not
+    * silently skip. Ranges are never re-synchronized on member boundaries
+    * the way the scan's byte ranges are: that would quietly return the
+    * record after a stale pointer. */
+  private[graft] def replay(
+      spark: SparkSession, pointers: DataFrame, dir: String, caller: String)(
+      bases: (FileSystem, Path, FSDataInputStream) => String => Long): DataFrame = {
     val sconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    // dedupe pointers: a multi-record member's N records all share ONE
-    // (filename, offset, length) re-fetch unit, so a scan/index over it
-    // emits N identical pointers — fetching each would parse the member
-    // N times and return N×N rows, breaking fetch == scan identity.
-    // Casts make any numeric index schema (INT offsets from a hand-built
-    // frame) work instead of ClassCastException-ing in the task. Length
-    // CONFLICTS (two pointers at one offset disagreeing on length — a
-    // stale index) are detected in-task below off the existing sort:
-    // after the 3-column dedupe, a repeated (filename, offset) can only
-    // mean differing lengths, and it must fail loudly, not parse the
-    // member twice and silently duplicate rows.
-    val rows = requests.select(
+    val key = Seq("container", "filename", "offset")
+    val rows = pointers.select(
+        functions.col("container").cast("string"),
         functions.col("filename").cast("string"),
         functions.col("offset").cast("long"),
         functions.col("length").cast("long"))
-      .dropDuplicates(need)
-      .repartition(functions.col("filename"))
-      .sortWithinPartitions("filename", "offset")
+      .dropDuplicates(key :+ "length")
+      .repartition(functions.col("container"))
+      .sortWithinPartitions(key.map(functions.col): _*)
       .rdd.mapPartitions { it =>
-        var fs: org.apache.hadoop.fs.FileSystem = null
-        var in: org.apache.hadoop.fs.FSDataInputStream = null
-        var current: String = null
-        var prevOffset: Long = -1L
-        // per-file warcio dictionary (dict-mode .warc.zst): the dict lives
-        // in the file's LEADING skippable frame, outside every fetched
-        // (offset, length) slice, so it must be loaded separately — lazily,
-        // on the first member whose plain decode fails (plain archives
-        // never pay the extra read). Loaded-but-absent is remembered so a
-        // genuinely corrupt member doesn't re-read offset 0 per pointer.
-        var zdict: Array[Byte] = null
-        var zdictLoaded = false
+        val build = new WarcRows(schema.fieldNames, segments = false)
+        var fs: FileSystem = null
+        var in: FSDataInputStream = null
+        var container: String = null
+        var baseOf: String => Long = null
+        var file: String = null
+        var name: UTF8String = null
+        var base = 0L
+        var dict: Array[Byte] = null
+        var prevOffset = -1L
         def close(): Unit = if (in != null) { try in.close() catch { case _: Throwable => }; in = null }
         Option(org.apache.spark.TaskContext.get())
           .foreach(_.addTaskCompletionListener[Unit](_ => close()))
         val out = it.flatMap { r =>
-          val fname = r.getString(0)
-          val off = r.getLong(1)
-          val len = r.getLong(2)
+          val (c, f, off, len) = (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))
+          def at = if (c == f) s"$f@$off" else s"$c!$f@$off"
           // MaxMemberBytes caps DECOMPRESSED size; this len is the
           // COMPRESSED member, which for incompressible data runs
           // ~0.03% + header bytes LARGER (deflate stored blocks), so a
@@ -787,61 +794,51 @@ object Warc {
           // rejected here — allow 1 MiB of framing slack (and stay
           // under Int.MaxValue for the buffer allocation)
           require(len > 0 && len <= Gzip.MaxMemberBytes.toLong + (1L << 20),
-            s"fetchRecords: implausible member length $len for $fname@$off")
-          if (fname != current) {
+            s"$caller: implausible member length $len for $at")
+          if (c != container) {
             close()
-            val p = new org.apache.hadoop.fs.Path(dir, fname)
+            val p = new Path(dir, c)
             if (fs == null) fs = p.getFileSystem(sconf.value)
             in = fs.open(p)
-            current = fname
-            prevOffset = -1L
-            zdict = null
-            zdictLoaded = false
+            baseOf = bases(fs, p, in)
+            container = c
+            file = null
           }
-          // sorted by (filename, offset) and exact-triple-deduped above:
-          // a repeated offset here means two pointers disagree on length
+          if (f != file) {
+            base = baseOf(f)
+            dict =
+              if (f.endsWith(".zst")) ZstdMembers.leadingDict((p, b) => in.readFully(base + p, b))
+              else null
+            file = f
+            name = UTF8String.fromString(f)
+            prevOffset = -1L
+          }
+          // sorted by offset and exact-pointer-deduped above: a repeated
+          // offset here means two pointers disagree on length
           require(off != prevOffset,
-            s"fetchRecords: conflicting lengths for $fname@$off — the index " +
-              "is stale (two pointers at one offset); refusing to guess")
+            s"$caller: conflicting lengths for $at — the index is stale " +
+              "(two pointers at one offset); refusing to guess")
           prevOffset = off
           val buf = new Array[Byte](len.toInt)
-          in.readFully(off, buf) // positioned read — no seek-state coupling
-          // member decode dispatches on extension exactly like scan, so
-          // zst indexes replay through the same fetch path — INCLUDING
-          // dict-mode archives: on a plain-decode failure the leading
-          // skippable frame is fetched from offset 0 and the decode
-          // retried against it (the scan discovers the same dict in-stream)
-          if (fname.endsWith(".zst")) {
-            def decodeZst(d: Array[Byte]): Seq[Row] = {
-              val es = ZstdMembers.entries(
-                new java.io.ByteArrayInputStream(buf), permissive = false, presetDict = d)
-              // strict decode can throw mid-iteration — es holds a native
-              // context with no finalizer, so close on every path
-              try es.collect { case m: Gzip.Member => m }.flatMap(m =>
-                parseRecords(m.bytes, off + m.offset, m.compressedLength, fname)).toSeq
-              finally es.close()
-            }
-            try decodeZst(zdict)
-            catch {
-              case e: Exception if !zdictLoaded =>
-                zdictLoaded = true
-                zdict = ZstdMembers.leadingDict((at, b) => in.readFully(at, b))
-                if (zdict == null) throw e
-                // the PLAIN error stands if the dict doesn't help either
-                try decodeZst(zdict) catch { case _: Exception => throw e }
-            }
-          } else {
-            val ms = Gzip.members(new java.io.ByteArrayInputStream(buf))
-            ms.flatMap(m =>
-              parseRecords(m.bytes, off + m.offset, m.compressedLength, fname)).toSeq
-          }
+          in.readFully(base + off, buf)
+          val bytes = new ByteArrayInputStream(buf)
+          val got = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+          if (f.endsWith(".zst")) {
+            // strict decode can throw mid-iteration — es holds a native
+            // context with no finalizer, so close on every path
+            val es = ZstdMembers.entries(bytes, permissive = false, dict)
+            try es.foreach(e => build.append(e, off + e.offset, e.compressedLength, name, got))
+            finally es.close()
+          } else Gzip.entries(bytes, permissive = false)
+            .foreach(e => build.append(e, off + e.offset, e.compressedLength, name, got))
+          got
         }
-        new Iterator[Row] {
+        new Iterator[InternalRow] {
           override def hasNext: Boolean = { val h = out.hasNext; if (!h) close(); h }
-          override def next(): Row = out.next()
+          override def next(): InternalRow = out.next()
         }
       }
-    spark.createDataFrame(rows, schema)
+    GraftDatasets.ofInternalRows(spark, rows, schema)
   }
 
   /** Deterministic WET-style fixture: `conversion` records carrying the

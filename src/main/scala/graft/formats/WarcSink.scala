@@ -232,8 +232,8 @@ object WarcSink {
         // loads into the reused task context ONCE — every record frame
         // compresses against it — and each output file opens with the
         // dict parked (itself zstd-compressed) in the leading skippable
-        // slot, where the scan's in-stream capture and fetchRecords'
-        // offset-0 reload both find it
+        // slot, where the scan's in-stream capture and the pointer
+        // replay's offset-0 load both find it
         if (zctx != null && zstdDict != null) zctx.loadDict(zstdDict)
         val dictSlot =
           if (zstdDict != null)

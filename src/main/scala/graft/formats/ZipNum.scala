@@ -235,28 +235,13 @@ object ZipNum {
       .mode("overwrite").save(dir)
   }
 
-  /** Merge clusters into one (the reference's operational loop: last
+  /** Merge clusters into one — the reference's operational loop (last
     * month's index + this month's captures → next index;
-    * zipnumclusterjob.py is re-run over unioned inputs the same way,
-    * recon ~L20–40). Inputs are read WITHOUT their per-cluster order
-    * (`ordered=false` — no wasted sort), unioned, and rewritten through
-    * [[write]], whose single range exchange re-establishes the total
-    * order; Catalyst sees one plan, so there is exactly one shuffle for
-    * any number of input clusters. */
-  def merge(
-      spark: SparkSession, dirs: Seq[String], outDir: String,
-      shards: Int, linesPerBlock: Int): Unit = {
-    require(dirs.nonEmpty, "merge needs at least one input cluster")
-    val all = dirs.map(readLines(spark, _, ordered = false)).reduce(_.union(_))
-    write(all.toDF("line"), outDir, shards, linesPerBlock)
-  }
-
-  /** Exchange-free merge of ALREADY-SORTED clusters — LSM-style
-    * compaction. [[merge]] re-range-exchanges the full union per
-    * generation: correct, and the right tool when inputs are unsorted,
-    * but at 100 TB an incremental index merge that reshuffles 100% of
-    * the data to fold in 1% new captures pays the whole cluster's
-    * shuffle every month. This form never shuffles:
+    * zipnumclusterjob.py is re-run over unioned inputs, recon ~L20–40) as
+    * LSM-style compaction. Every input is a cluster, so already sorted,
+    * and the merge never shuffles: at 100 TB a merge that re-exchanged
+    * 100% of the data to fold in 1% new captures would pay the whole
+    * cluster's shuffle every month.
     *
     *  - the driver picks output shard boundaries from the INPUT idx
     *    entries (equal-block splits over the union of firstKeys —
@@ -280,8 +265,8 @@ object ZipNum {
     * Boundary blocks straddle ranges, so lines are re-filtered by FULL
     * line against the bounds — every line lands in exactly one shard
     * because the bounds partition the line space under the same UTF-8
-    * order the writer sorts by. ZipNumSpec pins byte-equality of the
-    * read-back against [[merge]]'s output on the same inputs.
+    * order the writer sorts by. ZipNumSpec pins the read-back against
+    * the inputs' union sorted in UTF-8 byte order.
     *
     * `excludePrefixes`: lines whose urlkey starts with any of these are
     * DROPPED during the merge — tombstone application at compaction
@@ -617,12 +602,9 @@ object ZipNum {
   def prefixBounds(prefix: String): (Option[String], Option[String]) =
     (Some(prefix), Some(prefix + MaxCodePoint))
 
-  /** Read lines back, pruning blocks through cluster.idx when a key prefix
-    * is given. `ordered=false` skips the final global sort when the caller
-    * re-orders anyway (one less range exchange). */
-  def readLines(
-      spark: SparkSession, dir: String, prefix: Option[String] = None,
-      ordered: Boolean = true): DataFrame = {
+  /** Read lines back in cluster order, pruning blocks through cluster.idx
+    * when a key prefix is given. */
+  def readLines(spark: SparkSession, dir: String, prefix: Option[String] = None): DataFrame = {
     val selected = prefix match {
       case None => readIdx(spark, dir)
       case Some(p) =>
@@ -630,7 +612,7 @@ object ZipNum {
         val (lo, hi) = prefixBounds(p)
         scanIdxRange(dir, spark.sparkContext.hadoopConfiguration, lo, hi)
     }
-    readBlockLines(spark, dir, selected, prefix, ordered)
+    readBlockLines(spark, dir, selected, prefix)
   }
 
   /** Read exactly the given idx blocks (the pagination path — pywb zipnum
@@ -644,7 +626,7 @@ object ZipNum {
     * range exchange on (blockseq, lineno). */
   def readBlockLines(
       spark: SparkSession, dir: String, selected: Seq[IdxEntry],
-      prefix: Option[String], ordered: Boolean = true): DataFrame = {
+      prefix: Option[String]): DataFrame = {
     import spark.implicits._
     val groups = ZipNumScan.taskGroups(dir, selected)
     val sconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
@@ -657,8 +639,7 @@ object ZipNum {
       case Some(p) => pruned.filter(col("line").startsWith(p))
       case None => pruned
     }
-    if (!ordered) filtered.select("line")
-    else if (groups.size <= 1) filtered.sortWithinPartitions("blockseq", "lineno").select("line")
+    if (groups.size <= 1) filtered.sortWithinPartitions("blockseq", "lineno").select("line")
     else filtered.orderBy("blockseq", "lineno").select("line")
   }
 }

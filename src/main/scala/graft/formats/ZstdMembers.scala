@@ -38,11 +38,6 @@ object ZstdMembers {
     * unbuffered) */
   private val DictCap = 16 << 20
 
-  /** strict form: members only, corruption throws (the fetchRecords
-    * contract — a stale index must fail loudly) */
-  def members(in: InputStream): Iterator[Gzip.Member] =
-    entries(in, permissive = false).collect { case m: Gzip.Member => m }
-
   /** warcio dictionary slot from `content` (the first skippable frame's
     * body): raw bytes, or — compressed-dict convention — a zstd frame
     * whose payload is the dictionary. An undecodable slot falls back to
@@ -60,11 +55,12 @@ object ZstdMembers {
 
   /** The warcio dictionary parked at FILE offset 0, via positioned reads
     * (`pread(absoluteOffset, intoBuffer)` must fill the buffer fully) —
-    * the fetchRecords replay path needs this because a CDX pointer's
-    * (offset, length) slice excludes the leading skippable frame the
-    * dictionary lives in. Returns null when the file does not begin with
-    * a dict-sized skippable frame (plain `.warc.zst`, or any read
-    * failure — the caller's plain-decode error is the real diagnosis). */
+    * a mid-file scan range and the pointer replay load it once per
+    * archive, because their slices exclude the leading skippable frame
+    * the dictionary lives in. Returns null when the file does not begin
+    * with a dict-sized skippable frame (plain `.warc.zst`, or any read
+    * failure — a frame that then fails to decode is the real
+    * diagnosis). */
   def leadingDict(pread: (Long, Array[Byte]) => Unit): Array[Byte] = {
     val hdr = new Array[Byte](8)
     try pread(0L, hdr) catch { case _: Exception => return null }
@@ -80,8 +76,9 @@ object ZstdMembers {
   }
 
   /** `presetDict` seeds the dictionary slot for streams that START
-    * mid-file (fetchRecords range replay — the in-file skippable frame is
-    * outside the fetched slice); frames still try a plain decode first.
+    * mid-file (a scan range past offset 0, the pointer replay's slices —
+    * the in-file skippable frame is outside them); frames still try a
+    * plain decode first, so a plain archive's frames never use it.
     * The returned iterator is [[java.io.Closeable]]: early termination
     * (limit/take, or a strict-mode decode error) must close it, or the
     * reused native decompress context leaks for the executor's lifetime —
@@ -109,7 +106,7 @@ object ZstdMembers {
       // fast path — a ZstdInputStream per frame costs a native context
       // alloc/init per record, the hot-loop overhead that dominated the
       // read-back at sf0.1. Closed on exhaustion AND by close() — callers
-      // that may stop early (scan's task listener, fetchRecords' strict
+      // that may stop early (scan's task listener, the replay's strict
       // decode) must close(); there is no finalizer to fall back on.
       private var dctxRef: com.github.luben.zstd.ZstdDecompressCtx = _
       // SECOND reused context for dict-mode frames: the dictionary is

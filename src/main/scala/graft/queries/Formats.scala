@@ -639,8 +639,7 @@ object Formats extends QueryModule {
       ZipNum.write(lines.filter(length(col("line")) % 2 === 0), dirA, 4, 100)
       ZipNum.write(lines.filter(length(col("line")) % 2 === 1), dirB, 4, 100)
       // exchange-free k-way merge of the sorted generations (LSM-style
-      // compaction; ZipNum.merge stays as the unsorted-input path and
-      // ZipNumSpec pins their outputs byte-equal)
+      // compaction)
       ZipNum.mergeSorted(s, Seq(dirA, dirB), out, shards = 8, linesPerBlock = 100)
       ZipNum.readLines(s, out) // cluster order == sorted line order
     }),

@@ -251,12 +251,9 @@ final class WarcRangesReader(
   * Boundaries are found by [[Warc.syncToMemberBoundary]] (magic scan +
   * strict one-member decode).
   * A dict-mode `.warc.zst` keeps its dictionary in the offset-0 skippable
-  * frame, outside every mid-file range, so ranges preload it by
-  * positioned read (the fetchRecords discipline).
-  *
-  * `fields` are column names of [[Warc.segMetaSchema]] (whose first ten
-  * are [[Warc.schema]]); `segments` makes the record walk read the §5
-  * segment headers (the table's column set decides it, not `fields`).
+  * frame, outside every mid-file range, so ranges load it once by
+  * positioned read (the pointer replay, [[Warc.replay]], does the same).
+  * Rows are built by [[WarcRows]] from `fields` and `segments`.
   *
   * Task metrics: `membersRead`, `corruptSpans`, and
   * `compressedBytesRead` = the file bytes from the range's first
@@ -308,45 +305,13 @@ final class WarcPartitionReader(
   private[sources] def counts: Array[Long] = Array(membersRead, corruptSpans, bytesRead)
   override def currentMetricsValues(): Array[CustomTaskMetric] = WarcPartitionReader.metrics(counts)
 
-  // positions in Warc.segMetaSchema of the columns to emit, in output order
-  private val cols: Array[Int] = fields.map(Warc.segMetaSchema.fieldIndex)
-  private val withPayload = cols.contains(Warc.schema.fieldIndex("payload"))
+  private val rows = new WarcRows(fields, segments)
 
   // a (non-conforming but real) multi-record member yields several rows
   // from one entry — buffered between next()s
   private val pending = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
   private var pendingAt = 0
   private var row: InternalRow = _
-  private var memberOffset = 0L
-  private var memberLength = 0L
-
-  private def utf8(s: String): UTF8String =
-    if (s == null) null else UTF8String.fromString(s)
-
-  private val emit: Warc.Emit = (recordType, url, ts, digest, status, mime, payload, seg) => {
-    val v = new Array[Any](cols.length)
-    var i = 0
-    while (i < cols.length) {
-      v(i) = (cols(i): @switch) match {
-        case 0 => utf8(recordType)
-        case 1 => utf8(url)
-        case 2 => utf8(ts)
-        case 3 => utf8(digest)
-        case 4 => status
-        case 5 => utf8(mime)
-        case 6 => memberOffset
-        case 7 => memberLength
-        case 8 => filename
-        case 9 => payload
-        case 10 => if (seg == null) null else utf8(seg.recordId)
-        case 11 => if (seg == null) null else seg.num
-        case 12 => if (seg == null) null else utf8(seg.origin)
-        case 13 => if (seg == null) null else seg.total
-      }
-      i += 1
-    }
-    pending += new GenericInternalRow(v)
-  }
 
   override def next(): Boolean = {
     while (pendingAt >= pending.length) {
@@ -354,18 +319,15 @@ final class WarcPartitionReader(
       pendingAt = 0
       if (done || !entries.hasNext) return false
       val e = entries.next()
-      memberOffset = start + e.offset
+      val memberOffset = start + e.offset
       if (memberOffset >= stop) { done = true; return false }
-      e match {
-        case m: Gzip.Member =>
-          membersRead += 1
-          memberLength = m.compressedLength
-          Warc.parseMember(m.bytes, withPayload, segments, emit)
-        case s: Gzip.CorruptSpan =>
+      val memberLength = e match {
+        case _: Gzip.Member => membersRead += 1; e.compressedLength
+        case _: Gzip.CorruptSpan =>
           corruptSpans += 1
-          memberLength = math.min(s.compressedLength, stop - memberOffset)
-          emit("corrupt", null, null, null, null, null, null, null)
+          math.min(e.compressedLength, stop - memberOffset)
       }
+      rows.append(e, memberOffset, memberLength, filename, pending)
       bytesRead = memberOffset + memberLength - start
     }
     row = pending(pendingAt)
@@ -383,6 +345,68 @@ final class WarcPartitionReader(
       case _ =>
     }
     if (in != null) in.close()
+  }
+}
+
+/** One archive entry → its [[InternalRow]]s: the row builder of the V2
+  * scan ([[WarcPartitionReader]]) and of the pointer replay
+  * ([[Warc.replay]]). `fields` are column names of [[Warc.segMetaSchema]]
+  * (whose first ten are [[Warc.schema]]) in output order; `segments`
+  * makes the record walk read the §5 segment headers (the table's column
+  * set decides it, not `fields`). A member yields its records (several
+  * for a non-conforming multi-record member), a corrupt span one
+  * `corrupt` row; every row carries the (offset, length, filename) it is
+  * given. */
+private[graft] final class WarcRows(fields: Array[String], segments: Boolean) {
+  // positions in Warc.segMetaSchema of the columns to emit, in output order
+  private val cols: Array[Int] = fields.map(Warc.segMetaSchema.fieldIndex)
+  private val withPayload = cols.contains(Warc.schema.fieldIndex("payload"))
+
+  private var offset = 0L
+  private var length = 0L
+  private var filename: UTF8String = _
+  private var out: scala.collection.mutable.Growable[InternalRow] = _
+
+  private def utf8(s: String): UTF8String =
+    if (s == null) null else UTF8String.fromString(s)
+
+  private val emit: Warc.Emit = (recordType, url, ts, digest, status, mime, payload, seg) => {
+    val v = new Array[Any](cols.length)
+    var i = 0
+    while (i < cols.length) {
+      v(i) = (cols(i): @switch) match {
+        case 0 => utf8(recordType)
+        case 1 => utf8(url)
+        case 2 => utf8(ts)
+        case 3 => utf8(digest)
+        case 4 => status
+        case 5 => utf8(mime)
+        case 6 => offset
+        case 7 => length
+        case 8 => filename
+        case 9 => payload
+        case 10 => if (seg == null) null else utf8(seg.recordId)
+        case 11 => if (seg == null) null else seg.num
+        case 12 => if (seg == null) null else utf8(seg.origin)
+        case 13 => if (seg == null) null else seg.total
+      }
+      i += 1
+    }
+    out += new GenericInternalRow(v)
+  }
+
+  /** Appends `e`'s rows to `to`. */
+  def append(
+      e: Gzip.Entry, offset: Long, length: Long, filename: UTF8String,
+      to: scala.collection.mutable.Growable[InternalRow]): Unit = {
+    this.offset = offset
+    this.length = length
+    this.filename = filename
+    out = to
+    e match {
+      case m: Gzip.Member => Warc.parseMember(m.bytes, withPayload, segments, emit)
+      case _: Gzip.CorruptSpan => emit("corrupt", null, null, null, null, null, null, null)
+    }
   }
 }
 

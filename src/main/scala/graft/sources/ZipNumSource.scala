@@ -52,15 +52,8 @@ object ZipNumSource {
     StructField("blockseq", org.apache.spark.sql.types.LongType)))
 
   /** key range [lo, hi) implied by the pushed urlkey filters; None =
-    * unbounded. Block intersection delegates to ZipNum.selectBlocks'
-    * rule (single source of truth for the pruning boundary). */
-  final case class KeyRange(lo: Option[String], hi: Option[String]) {
-    def intersectBlock(firstKey: String, nextKey: Option[String]): Boolean =
-      ZipNum.selectBlocks(
-        Seq(ZipNum.IdxEntry(firstKey, "", 0, 0, 0)).++(
-          nextKey.map(k => ZipNum.IdxEntry(k, "", 0, 0, 1))),
-        lo, hi).exists(_.seq == 0)
-  }
+    * unbounded. Blocks are selected by [[ZipNum.selectBlocks]]. */
+  final case class KeyRange(lo: Option[String], hi: Option[String])
 
   def rangeFromFilters(filters: Seq[Filter]): KeyRange = {
     var lo: Option[String] = None
@@ -227,13 +220,9 @@ final class ZipNumScanBuilder(dir: String, conf: SerializableHadoopConf)
 
 final class ZipNumScan(
     dir: String, range: ZipNumSource.KeyRange, required: StructType,
-    limit: Option[Int] = None, limitFromEnd: Boolean = false,
-    // captured at CONSTRUCTION on the caller thread (the default covers
-    // direct/test construction; the V2 path always passes the conf the
-    // builder captured at analysis time)
-    conf: SerializableHadoopConf = new SerializableHadoopConf(
-      org.apache.spark.sql.SparkSession.getActiveSession
-        .map(_.sparkContext.hadoopConfiguration).getOrElse(new Configuration())))
+    limit: Option[Int], limitFromEnd: Boolean,
+    // the session's conf, captured by the builder at analysis time
+    conf: SerializableHadoopConf)
   extends Scan with Batch with SupportsReportStatistics
   with SupportsRuntimeFiltering {
 
@@ -265,7 +254,6 @@ final class ZipNumScan(
     * re-resolved from getActiveSession, which is a thread-local that AQE
     * planning threads may not carry (SourceV2Spec pins a custom key
     * surviving to here) */
-  private def sessionConf: Configuration = conf.value
   private[graft] def hadoopConf: Configuration = conf.value
 
   /** idx entries surviving block pruning (and the pushed limit cap).
@@ -277,8 +265,8 @@ final class ZipNumScan(
   private lazy val staticBlocks: Seq[ZipNum.IdxEntry] = {
     val selected =
       if (range.lo.isEmpty && range.hi.isEmpty)
-        ZipNum.readIdx(dir, sessionConf)
-      else ZipNum.scanIdxRange(dir, sessionConf, range.lo, range.hi)
+        ZipNum.readIdx(dir, hadoopConf)
+      else ZipNum.scanIdxRange(dir, hadoopConf, range.lo, range.hi)
     limit match {
       case Some(n) if limitFromEnd => selected.takeRight(n)
       case Some(n) => selected.take(n)
@@ -305,7 +293,7 @@ final class ZipNumScan(
     if (cached != null && (cached._1 eq keys)) return cached._2
     val computed = keys match {
       case Some(ks) if ks.length <= ZipNumScan.MaxRuntimeKeys =>
-        val conf = sessionConf
+        val conf = hadoopConf
         val wanted = ks.iterator.flatMap { k =>
           ZipNum.scanIdxRange(dir, conf, Some(k), Some(k + ZipNum.MaxCodePoint))
         }.map(_.seq).toSet

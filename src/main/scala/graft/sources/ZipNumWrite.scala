@@ -35,7 +35,7 @@ import org.apache.spark.sql.connector.write._
   * the whole child plan, then the map stage runs it again. A DSv2
   * `Write` cannot persist its own input, so a caller with an expensive
   * derive persists it first ([[graft.Pipeline.warcToZipNum]] does);
-  * cheap inputs (`merge`, the streaming batches) are read twice.
+  * cheap inputs (the streaming batches) are read twice.
   */
 final case class ZipNumCommit(pid: Int, blocks: Long) extends WriterCommitMessage
 
@@ -81,7 +81,7 @@ final class ZipNumWrite(
     require(!fs.exists(new Path(p, "cluster.idx")),
       s"zipnum cluster already exists at $dir — appending would break the " +
         "global sort order; use mode(\"overwrite\") to replace it, or " +
-        "ZipNum.merge(spark, Seq(old, new), out, ...) to combine clusters")
+        "ZipNum.mergeSorted(spark, Seq(old, new), out, ...) to combine clusters")
     fs.mkdirs(p)
     new ZipNumBatchWrite(dir, lineIdx, linesPerBlock, sconf)
   }

@@ -14,6 +14,15 @@ class SourceV2Spec extends SparkSpec {
   private val warcFile = "/tmp/graft_test/v2.warc.gz"
   private val zipDir = "/tmp/graft_test/v2_zipnum"
 
+  /** a scan built by hand over the test session's Hadoop conf, as
+    * `ZipNumScanBuilder.build` would build it */
+  private def zipNumScan(
+      dir: String, range: ZipNumSource.KeyRange,
+      required: org.apache.spark.sql.types.StructType,
+      limit: Option[Int] = None, limitFromEnd: Boolean = false) =
+    new graft.sources.ZipNumScan(dir, range, required, limit, limitFromEnd,
+      new graft.formats.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+
   private def setup(): Unit = {
     Files.createDirectories(Paths.get(warcFile).getParent)
     Warc.writeFixture(warcFile, Warc.fixtureRecords)
@@ -358,16 +367,23 @@ class SourceV2Spec extends SparkSpec {
 
   test("KeyRange block selection logic (unit)") {
     import ZipNumSource._
+    // is the first of two blocks, starting at `firstKey` and `nextKey`,
+    // selected for the range? (the last block of an idx has no next key)
+    def first(r: KeyRange, firstKey: String, nextKey: Option[String]): Boolean =
+      ZipNum.selectBlocks(
+        (firstKey +: nextKey.toSeq).zipWithIndex.map { case (k, i) =>
+          ZipNum.IdxEntry(k, "", 0, 0, i) },
+        r.lo, r.hi).exists(_.seq == 0)
     val r = rangeFromFilters(Seq(StringStartsWith("urlkey", "com,b)")))
     assert(r.lo.contains("com,b)") && r.hi.exists(_.startsWith("com,b)")))
     // blocks: [com,a ..., com,c), [com,c ..., end)
-    assert(r.intersectBlock("com,a)/x 2015", Some("com,c)/y 2015")) === true)
-    assert(r.intersectBlock("com,c)/y 2015", None) === false)
+    assert(first(r, "com,a)/x 2015", Some("com,c)/y 2015")) === true)
+    assert(first(r, "com,c)/y 2015", None) === false)
     val range = rangeFromFilters(Seq(
       GreaterThanOrEqual("urlkey", "com,b)"), LessThan("urlkey", "com,c)")))
-    assert(range.intersectBlock("com,a)/x 2015", Some("com,b)/x 2015")) === true) // boundary kept
-    assert(range.intersectBlock("com,c)/x 2015", None) === false)
-    assert(range.intersectBlock("com,b)/x 2015", Some("com,b)/z 2015")) === true)
+    assert(first(range, "com,a)/x 2015", Some("com,b)/x 2015")) === true) // boundary kept
+    assert(first(range, "com,c)/x 2015", None) === false)
+    assert(first(range, "com,b)/x 2015", Some("com,b)/z 2015")) === true)
   }
 
   test("limit pushdown caps planned blocks; stats shrink with pruning") {
@@ -378,7 +394,7 @@ class SourceV2Spec extends SparkSpec {
     def blocksOf(scan: graft.sources.ZipNumScan): Int =
       scan.planInputPartitions()
         .map(_.asInstanceOf[graft.sources.ZipNumBlockPartition].blocks.length).sum
-    val limited = new graft.sources.ZipNumScan(
+    val limited = zipNumScan(
       zipDir, ZipNumSource.KeyRange(None, None), ZipNumSource.schema, Some(1))
     assert(blocksOf(limited) == 1)
     // Spark still applies its own Limit: end-to-end row count is exact
@@ -386,9 +402,9 @@ class SourceV2Spec extends SparkSpec {
     // reported sizeInBytes shrinks when pruning shrinks the block set
     def sizeOf(scan: graft.sources.ZipNumScan): Long =
       scan.estimateStatistics().sizeInBytes().getAsLong
-    val full = new graft.sources.ZipNumScan(
+    val full = zipNumScan(
       zipDir, ZipNumSource.KeyRange(None, None), ZipNumSource.schema)
-    val pruned = new graft.sources.ZipNumScan(
+    val pruned = zipNumScan(
       zipDir,
       ZipNumSource.rangeFromFilters(Seq(StringStartsWith("urlkey", "org,iana"))),
       ZipNumSource.schema)
@@ -398,7 +414,7 @@ class SourceV2Spec extends SparkSpec {
 
   test("runtime filtering prunes to the join keys' blocks; results unchanged") {
     setup()
-    val full = new graft.sources.ZipNumScan(
+    val full = zipNumScan(
       zipDir, ZipNumSource.KeyRange(None, None), ZipNumSource.schema)
     def blocksOf(s: graft.sources.ZipNumScan): Int =
       s.planInputPartitions()
@@ -408,7 +424,7 @@ class SourceV2Spec extends SparkSpec {
     // a known key prunes; the scan still returns its rows
     val key = spark.read.format("zipnum").load(zipDir)
       .select("urlkey").orderBy("urlkey").as[String].first()
-    val filtered = new graft.sources.ZipNumScan(
+    val filtered = zipNumScan(
       zipDir, ZipNumSource.KeyRange(None, None), ZipNumSource.schema)
     filtered.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("urlkey", Array(key))))
@@ -417,12 +433,12 @@ class SourceV2Spec extends SparkSpec {
     // a below-all key prunes to zero blocks; an above-all key keeps only
     // the conservative straddling final block (its upper key is unknown
     // from the idx — same rule as every other pruning path)
-    val below = new graft.sources.ZipNumScan(
+    val below = zipNumScan(
       zipDir, ZipNumSource.KeyRange(None, None), ZipNumSource.schema)
     below.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("urlkey", Array("aa,absent)/x"))))
     assert(blocksOf(below) == 0)
-    val above = new graft.sources.ZipNumScan(
+    val above = zipNumScan(
       zipDir, ZipNumSource.KeyRange(None, None), ZipNumSource.schema)
     above.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("urlkey", Array("zz,absent)/x"))))
@@ -449,7 +465,7 @@ class SourceV2Spec extends SparkSpec {
     assert(total > 2)
     // the scan itself: desc cap takes the LAST blocks
     val idx = ZipNum.readIdx(spark, zipDir)
-    val descScan = new graft.sources.ZipNumScan(
+    val descScan = zipNumScan(
       zipDir, ZipNumSource.KeyRange(None, None), ZipNumSource.schema,
       Some(1), limitFromEnd = true)
     val planned = descScan.planInputPartitions()
@@ -477,7 +493,7 @@ class SourceV2Spec extends SparkSpec {
 
   test("scan reports blocksRead/compressedBytesRead task metrics") {
     setup()
-    val scan = new graft.sources.ZipNumScan(
+    val scan = zipNumScan(
       zipDir, ZipNumSource.KeyRange(None, None), ZipNumSource.schema)
     assert(scan.supportedCustomMetrics().map(_.name()).toSeq
       == Seq("blocksRead", "compressedBytesRead"))
@@ -500,9 +516,9 @@ class SourceV2Spec extends SparkSpec {
   test("zipnum pushdown plans fewer partitions than a full scan") {
     setup()
     val idx = ZipNum.readIdx(spark, zipDir)
-    val all = new graft.sources.ZipNumScan(zipDir,
+    val all = zipNumScan(zipDir,
       ZipNumSource.KeyRange(None, None), ZipNumSource.schema).planInputPartitions()
-    val pruned = new graft.sources.ZipNumScan(zipDir,
+    val pruned = zipNumScan(zipDir,
       ZipNumSource.rangeFromFilters(Seq(StringStartsWith("urlkey", "org,iana"))),
       ZipNumSource.schema).planInputPartitions()
     val allBlocks = all.map(_.asInstanceOf[graft.sources.ZipNumBlockPartition].blocks.length).sum
@@ -532,11 +548,11 @@ class SourceV2Spec extends SparkSpec {
     // drops blocks entirely below the cursor
     val range = ZipNumSource.rangeFromFilters(Seq(
       StringStartsWith("urlkey", "com,"), GreaterThanOrEqual("urlkey", k)))
-    val allBlocks = new graft.sources.ZipNumScan(dir,
+    val allBlocks = zipNumScan(dir,
       ZipNumSource.KeyRange(None, None), ZipNumSource.schema)
       .planInputPartitions()
       .map(_.asInstanceOf[graft.sources.ZipNumBlockPartition].blocks.length).sum
-    val cursorBlocks = new graft.sources.ZipNumScan(dir, range, ZipNumSource.schema)
+    val cursorBlocks = zipNumScan(dir, range, ZipNumSource.schema)
       .planInputPartitions()
       .map(_.asInstanceOf[graft.sources.ZipNumBlockPartition].blocks.length).sum
     assert(allBlocks == 20)
@@ -565,7 +581,7 @@ class SourceV2Spec extends SparkSpec {
       EqualTo("urlkey", hot),
       GreaterThanOrEqual("ts", "20150220000000"), LessThanOrEqual("ts", "20150223000000")))
     def blocksOf(r: ZipNumSource.KeyRange) =
-      new graft.sources.ZipNumScan(dir, r, ZipNumSource.schema)
+      zipNumScan(dir, r, ZipNumSource.schema)
         .planInputPartitions()
         .map(_.asInstanceOf[graft.sources.ZipNumBlockPartition].blocks.length).sum
     val urlOnly = blocksOf(ZipNumSource.rangeFromFilters(Seq(EqualTo("urlkey", hot))))

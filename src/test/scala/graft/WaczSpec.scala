@@ -35,6 +35,20 @@ class WaczSpec extends SparkSpec {
       spark.sparkContext.parallelize(rows, 2), schema)
   }
 
+  /** Each wrong form of the one-row pointer frame `one` must fail the
+    * replay with an exception: an offset inside a member, a length one
+    * byte short, and two pointers at one offset with different lengths. */
+  private def assertWrongPointersFail(one: org.apache.spark.sql.DataFrame, dir: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    val wrong = Seq(
+      "offset inside a member" -> one
+        .withColumn("offset", col("offset") + 1).withColumn("length", col("length") - 1),
+      "length one byte short" -> one.withColumn("length", col("length") - 1),
+      "conflicting lengths" -> one.unionAll(one.withColumn("length", col("length") + 1)))
+    for ((what, ptr) <- wrong)
+      withClue(what) { intercept[Exception](Wacz.fetchRecords(spark, ptr, dir).collect()) }
+  }
+
   private def writeFixture(dir: String): Unit = {
     val p = Paths.get(dir)
     if (Files.exists(p))
@@ -82,6 +96,8 @@ class WaczSpec extends SparkSpec {
       "text/html", "alpha")))
     assert(got.map(_._5).toSeq.sorted ==
       Seq("alpha", "beta-body", "gamma \"quoted\"", "{\"x\":1}").sorted)
+
+    assertWrongPointersFail(ptrs.orderBy("wacz", "filename", "offset").limit(1), dir)
   }
 
   test("JDK ZipFile agrees: entries STORED, inventory complete, pages correct") {
@@ -223,6 +239,9 @@ class WaczSpec extends SparkSpec {
       .select("payload").collect()
       .map(r => new String(r.getAs[Array[Byte]](0), "UTF-8")).sorted.toSeq
     assert(got == Seq("alpha", "beta-body", "gamma \"quoted\"", "{\"x\":1}").sorted)
+    // wrong pointers into the SECOND member fail loudly too
+    assertWrongPointersFail(
+      ptrs.filter(col("filename") === "w-1.warc.gz").limit(1), dir)
 
     // manifest verifies every inner member + the index + pages + seal
     val ver = Wacz.verify(spark, s"$dir/*.wacz")

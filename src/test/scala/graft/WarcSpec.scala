@@ -398,6 +398,17 @@ class WarcSpec extends SparkSpec {
       (Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage)
         .filter(_ != null)).mkString(" | ")
     assert(rootMsg(e).contains("conflicting lengths"), rootMsg(e))
+    // pointers that name no whole member fail loudly too: an offset
+    // inside a member, and a length one byte short of the member's end
+    val one = pick.limit(1)
+    val wrong = Seq(
+      "offset inside a member" ->
+        one.select(col("filename"), (col("offset") + 1).as("offset"),
+          (col("length") - 1).as("length")),
+      "length one byte short" ->
+        one.select(col("filename"), col("offset"), (col("length") - 1).as("length")))
+    for ((what, ptr) <- wrong)
+      withClue(what) { intercept[Exception](Warc.fetchRecords(spark, ptr, dir).collect()) }
   }
 
   test("zstd WARC: gz and zst scans agree record-for-record; skippable frame is silent") {
@@ -531,9 +542,9 @@ class WarcSpec extends SparkSpec {
     assert(canon(dir.resolve("f.warc.zst").toString) == gz, "zst surface diverged")
     assert(canon(dir.resolve("d.warc.zst").toString) == gz, "zst-dict surface diverged")
     // pointer replay on ALL THREE containers — payloads byte-identical
-    // again; d.warc.zst exercises the dict-reload path (the fetched slice
-    // excludes the leading skippable frame, so fetchRecords must pull the
-    // dictionary from offset 0 on its plain-decode failure)
+    // again; d.warc.zst exercises the replay's dictionary load (the
+    // fetched slice excludes the leading skippable frame, so fetchRecords
+    // must read the dictionary from offset 0 when it opens the file)
     for (f <- Seq("f.warc.gz", "f.warc.zst", "d.warc.zst")) {
       val p = dir.resolve(f).toString
       val scanned = Warc.scan(spark, p)
@@ -578,7 +589,7 @@ class WarcSpec extends SparkSpec {
     assert(dc.size == 400 && dc == canon(plainDir),
       "dict and self-contained modes must scan to the same records")
     // pointer replay: fetchRecords' slice excludes the offset-0 dict
-    // slot, so this exercises the lazy dict reload on plain-decode failure
+    // slot, so this exercises the dictionary the replay loads per file
     val scanned = Warc.scan(spark, dictDir + "/*.warc.zst")
     val fetched = Warc.fetchRecords(spark,
       scanned.select("filename", "offset", "length"), dictDir)

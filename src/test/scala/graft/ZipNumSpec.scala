@@ -221,21 +221,19 @@ class ZipNumSpec extends SparkSpec {
     assert(all == inputLines.sorted)
   }
 
-  test("mergeSorted == merge: exchange-free compaction is lossless and ordered") {
-    // two disjoint sorted generations (odd/even split), merged both ways:
-    // the shuffle-free k-way merge must read back EXACTLY what the
-    // re-range-exchange merge produces — same lines, same global order —
-    // and its output must satisfy the same idx invariants
+  test("mergeSorted == sorted union: exchange-free compaction is lossless and ordered") {
+    // two disjoint sorted generations (odd/even split): the k-way merge
+    // must read back EXACTLY the inputs' union in UTF-8 byte order — same
+    // lines, same global order — and its output must satisfy the idx
+    // invariants
     val (a, b) = inputLines.partition(_.hashCode % 2 == 0)
     val dirA = "/tmp/graft_test/zipnum_msrt_a"
     val dirB = "/tmp/graft_test/zipnum_msrt_b"
-    val viaShuffle = "/tmp/graft_test/zipnum_msrt_shuffle"
     val viaMerge = "/tmp/graft_test/zipnum_msrt_kway"
     ZipNum.write(a.toDF("line"), dirA, shards = 3, linesPerBlock = 37)
     ZipNum.write(b.toDF("line"), dirB, shards = 4, linesPerBlock = 41)
-    ZipNum.merge(spark, Seq(dirA, dirB), viaShuffle, shards = 5, linesPerBlock = 29)
     ZipNum.mergeSorted(spark, Seq(dirA, dirB), viaMerge, shards = 5, linesPerBlock = 29)
-    val expect = ZipNum.readLines(spark, viaShuffle).as[String].collect().toSeq
+    val expect = (a ++ b).sorted(ZipNum.utf8Ordering)
     val got = ZipNum.readLines(spark, viaMerge).as[String].collect().toSeq
     assert(got == expect, s"k-way merge diverged: ${got.size} vs ${expect.size} lines")
     // idx invariants hold on the merged output: seq dense, keys sorted,
