@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions._
   *
   * A lookup whose idx selection is at most
   * [[ZipNumScan.BlocksPerPartition]] blocks reads those blocks on the
-  * driver when its DataFrame is built, not at the action; larger
+  * driver when its DataFrame is built, not at the action, and keeps only
+  * the lines under its urlkey prefix (pywb's block-local scan); larger
   * selections are read by the parallel scan when the action runs.
   */
 final class CdxServer(spark: SparkSession, clusterDir: String) {
@@ -56,18 +57,20 @@ final class CdxServer(spark: SparkSession, clusterDir: String) {
     case Some(p) =>
       val blocks = idxFor(p)
       // A selection that would fit one scan partition is read here, on
-      // the driver, into a LocalRelation; coalesce(1) over it reports
-      // SinglePartition, which satisfies every orderBy, window and
-      // aggregate above. GraftExtensions' FoldLocalRelation folds a
-      // sort-shaped lookup over it whole (no job); any other lookup runs
-      // as ONE job with no exchange. Larger selections keep the
-      // parallel V2 scan, which runs its own idx search.
+      // the driver, into a LocalRelation that holds only the lines under
+      // the prefix (the reader drops the rest before building rows);
+      // coalesce(1) over it reports SinglePartition, which satisfies every
+      // orderBy, window and aggregate above. GraftExtensions'
+      // FoldLocalRelation folds a sort-shaped lookup over it whole (no
+      // job); any other lookup runs as ONE job with no exchange. Larger
+      // selections keep the parallel V2 scan, which runs its own idx
+      // search from the pushed-down filter.
       if (blocks.size <= ZipNumScan.BlocksPerPartition) {
         val schema = relation.schema
         val rows = ZipNumScan.readRows(
-          clusterDir, blocks, schema.fieldNames, spark.sparkContext.hadoopConfiguration)
+          clusterDir, blocks, schema.fieldNames, spark.sparkContext.hadoopConfiguration, Some(p))
         GraftDatasets.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
-          .filter(col("urlkey").startsWith(p)).coalesce(1)
+          .coalesce(1)
       } else relation.filter(col("urlkey").startsWith(p))
   }
 

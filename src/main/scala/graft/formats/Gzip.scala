@@ -159,99 +159,17 @@ object Gzip {
     private var offset = 0L
     private var nextEntry: Entry = _
     private var done = false
-    // ONE Inflater + one set of buffers per ITERATOR, reset() per member
-    // (the writeMember reused-Deflater twin): a per-member native
-    // init+end pair is measurable on a 100k-member scan. end() fires at
-    // EOF below; an abandoned iterator (limit/take) is reclaimed by the
-    // JDK Inflater's own Cleaner — unlike zstd-jni there is no native
-    // leak class here.
-    private val inflater = new Inflater(true)
+    // one decoder per ITERATOR; its end() fires at EOF below, and an
+    // abandoned iterator (limit/take) leaves it to the Inflater's Cleaner
+    private val decoder = new MemberDecoder
     private val out = new ByteArrayOutputStream()
-    private val inBuf = new Array[Byte](8192)
-    private val outBuf = new Array[Byte](8192)
 
     private def decodeOne(): Unit = {
-      val first = cs.readByte()
-      if (first < 0) { done = true; inflater.end(); return }
-      val magic2 = cs.readByte()
-      if (first != 0x1f || magic2 != 0x8b) {
-        // magic2 may itself open a real member (1 garbage byte before a
-        // good header) — hand it back so the resync scan can see it
-        if (magic2 >= 0) cs.pushBack(Array(magic2.toByte), 0, 1)
-        throw new IllegalStateException(f"bad gzip magic at offset $offset: $first%02x")
-      }
-      val fixed = new Array[Byte](8) // CM, FLG, MTIME(4), XFL, OS
-      if (!cs.readFully(fixed)) throw new EOFException("truncated gzip header")
-      val flags = fixed(1) & 0xff
-      var headerLen = 10L
-      if ((flags & FEXTRA) != 0) {
-        val lenBytes = new Array[Byte](2)
-        if (!cs.readFully(lenBytes)) throw new EOFException("truncated FEXTRA")
-        val xlen = (lenBytes(0) & 0xff) | ((lenBytes(1) & 0xff) << 8)
-        if (!cs.readFully(new Array[Byte](xlen))) throw new EOFException("truncated FEXTRA body")
-        headerLen += 2 + xlen
-      }
-      def skipZeroTerminated(): Unit = {
-        var b = cs.readByte()
-        headerLen += 1
-        while (b > 0) { b = cs.readByte(); headerLen += 1 }
-        if (b < 0) throw new EOFException("truncated zero-terminated field")
-      }
-      if ((flags & FNAME) != 0) skipZeroTerminated()
-      if ((flags & FCOMMENT) != 0) skipZeroTerminated()
-      if ((flags & FHCRC) != 0) {
-        if (!cs.readFully(new Array[Byte](2))) throw new EOFException("truncated FHCRC")
-        headerLen += 2
-      }
-      // inflate the deflate body, tracking compressed bytes consumed
-      inflater.reset()
       out.reset()
-      val crc = new CRC32()
-      var fedTotal = 0L
-      var lastN = 0
-      try {
-        while (!inflater.finished()) {
-          if (inflater.needsInput()) {
-            val n = cs.read(inBuf, 0, inBuf.length)
-            if (n < 0) throw new EOFException("truncated deflate body")
-            inflater.setInput(inBuf, 0, n)
-            fedTotal += n
-            lastN = n
-          }
-          val n = inflater.inflate(outBuf)
-          if (n > 0) {
-            out.write(outBuf, 0, n); crc.update(outBuf, 0, n)
-            if (out.size > MaxMemberBytes)
-              throw new IllegalStateException(
-                s"gzip member at offset $offset exceeds $MaxMemberBytes decompressed bytes")
-          }
-        }
-        // leftover bytes sit at the tail of the last fed chunk; they are
-        // the trailer plus (possibly) the start of the next member
-        val leftover = inflater.getRemaining
-        val deflateLen = fedTotal - leftover
-        if (leftover > 0) cs.pushBack(inBuf, lastN - leftover, leftover)
-        val trailer = new Array[Byte](8)
-        if (!cs.readFully(trailer)) throw new EOFException("truncated gzip trailer")
-        // verify CRC32 + ISIZE like GZIPInputStream: structurally-valid
-        // deflate over flipped bits can still "succeed" with wrong bytes,
-        // and silently indexing garbage is worse than skipping the member
-        def le32(b: Array[Byte], at: Int): Long =
-          (b(at) & 0xffL) | ((b(at + 1) & 0xffL) << 8) |
-            ((b(at + 2) & 0xffL) << 16) | ((b(at + 3) & 0xffL) << 24)
-        if (le32(trailer, 0) != crc.getValue || le32(trailer, 4) != (out.size & 0xffffffffL))
-          throw new IllegalStateException(
-            s"gzip CRC/ISIZE mismatch for member at offset $offset")
-        val compLen = headerLen + deflateLen + 8
-        nextEntry = Member(offset, compLen, out.toByteArray)
-        offset += compLen
-      } catch {
-        case e: java.util.zip.DataFormatException =>
-          // rescue the unconsumed tail for the resync scan before rethrow
-          val leftover = inflater.getRemaining
-          if (leftover > 0) cs.pushBack(inBuf, lastN - leftover, leftover)
-          throw new IllegalStateException(s"corrupt deflate body: ${e.getMessage}", e)
-      }
+      val compLen = decoder.decode(cs, offset, out)
+      if (compLen < 0) { done = true; decoder.end(); return }
+      nextEntry = Member(offset, compLen, out.toByteArray)
+      offset += compLen
     }
 
     /** scan forward for `1f 8b 08` + sane FLG; position the stream on the
@@ -307,6 +225,124 @@ object Gzip {
       advance()
       if (nextEntry == null) throw new NoSuchElementException
       val m = nextEntry; nextEntry = null; m
+    }
+  }
+
+  /** THE gzip member decoder: header parsing, the inflate loop, the
+    * [[MaxMemberBytes]] ceiling, the truncation errors and the CRC32/ISIZE
+    * trailer check, in one place. Inflated bytes go to a caller-supplied
+    * sink chunk by chunk, so a caller that scans them (the ZipNum block
+    * reader's line walk) never holds the member whole; [[entries]] passes
+    * a `ByteArrayOutputStream`. The sink has seen every byte of a member
+    * before its trailer is checked, so a caller that must not act on
+    * unverified bytes acts only once [[decodeMember]] returns.
+    *
+    * ONE Inflater + one set of buffers per decoder, reset() per member
+    * (the writeMember reused-Deflater twin): a per-member native
+    * init+end pair is measurable on a 100k-member scan. [[end]] frees the
+    * native state; a decoder abandoned without it is reclaimed by the JDK
+    * Inflater's own Cleaner. */
+  private[graft] final class MemberDecoder {
+    private val inflater = new Inflater(true)
+    private val inBuf = new Array[Byte](8192)
+    private val outBuf = new Array[Byte](8192)
+
+    def end(): Unit = inflater.end()
+
+    /** Decode the one member that `in` holds from its first byte, whose
+      * position is `offset` in the file (error messages name it), into
+      * `sink`. Returns the member's compressed length; bytes of `in` after
+      * it are consumed or left unread. Throws on an empty stream. */
+    def decodeMember(in: InputStream, offset: Long, sink: OutputStream): Long = {
+      val compLen = decode(new CarryStream(in), offset, sink)
+      if (compLen < 0) throw new EOFException(s"no gzip member at offset $offset")
+      compLen
+    }
+
+    /** one member of `cs` into `sink`: its compressed length, or -1 when
+      * `cs` is at EOF */
+    private[Gzip] def decode(cs: CarryStream, offset: Long, sink: OutputStream): Long = {
+      val first = cs.readByte()
+      if (first < 0) return -1L
+      val magic2 = cs.readByte()
+      if (first != 0x1f || magic2 != 0x8b) {
+        // magic2 may itself open a real member (1 garbage byte before a
+        // good header) — hand it back so the resync scan can see it
+        if (magic2 >= 0) cs.pushBack(Array(magic2.toByte), 0, 1)
+        throw new IllegalStateException(f"bad gzip magic at offset $offset: $first%02x")
+      }
+      val fixed = new Array[Byte](8) // CM, FLG, MTIME(4), XFL, OS
+      if (!cs.readFully(fixed)) throw new EOFException("truncated gzip header")
+      val flags = fixed(1) & 0xff
+      var headerLen = 10L
+      if ((flags & FEXTRA) != 0) {
+        val lenBytes = new Array[Byte](2)
+        if (!cs.readFully(lenBytes)) throw new EOFException("truncated FEXTRA")
+        val xlen = (lenBytes(0) & 0xff) | ((lenBytes(1) & 0xff) << 8)
+        if (!cs.readFully(new Array[Byte](xlen))) throw new EOFException("truncated FEXTRA body")
+        headerLen += 2 + xlen
+      }
+      def skipZeroTerminated(): Unit = {
+        var b = cs.readByte()
+        headerLen += 1
+        while (b > 0) { b = cs.readByte(); headerLen += 1 }
+        if (b < 0) throw new EOFException("truncated zero-terminated field")
+      }
+      if ((flags & FNAME) != 0) skipZeroTerminated()
+      if ((flags & FCOMMENT) != 0) skipZeroTerminated()
+      if ((flags & FHCRC) != 0) {
+        if (!cs.readFully(new Array[Byte](2))) throw new EOFException("truncated FHCRC")
+        headerLen += 2
+      }
+      // inflate the deflate body, tracking compressed bytes consumed
+      inflater.reset()
+      val crc = new CRC32()
+      var size = 0L
+      var fedTotal = 0L
+      var lastN = 0
+      try {
+        while (!inflater.finished()) {
+          if (inflater.needsInput()) {
+            val n = cs.read(inBuf, 0, inBuf.length)
+            if (n < 0) throw new EOFException("truncated deflate body")
+            inflater.setInput(inBuf, 0, n)
+            fedTotal += n
+            lastN = n
+          }
+          val n = inflater.inflate(outBuf)
+          if (n > 0) {
+            size += n
+            if (size > MaxMemberBytes)
+              throw new IllegalStateException(
+                s"gzip member at offset $offset exceeds $MaxMemberBytes decompressed bytes")
+            crc.update(outBuf, 0, n)
+            sink.write(outBuf, 0, n)
+          }
+        }
+        // leftover bytes sit at the tail of the last fed chunk; they are
+        // the trailer plus (possibly) the start of the next member
+        val leftover = inflater.getRemaining
+        val deflateLen = fedTotal - leftover
+        if (leftover > 0) cs.pushBack(inBuf, lastN - leftover, leftover)
+        val trailer = new Array[Byte](8)
+        if (!cs.readFully(trailer)) throw new EOFException("truncated gzip trailer")
+        // verify CRC32 + ISIZE like GZIPInputStream: structurally-valid
+        // deflate over flipped bits can still "succeed" with wrong bytes,
+        // and silently indexing garbage is worse than skipping the member
+        def le32(b: Array[Byte], at: Int): Long =
+          (b(at) & 0xffL) | ((b(at + 1) & 0xffL) << 8) |
+            ((b(at + 2) & 0xffL) << 16) | ((b(at + 3) & 0xffL) << 24)
+        if (le32(trailer, 0) != crc.getValue || le32(trailer, 4) != (size & 0xffffffffL))
+          throw new IllegalStateException(
+            s"gzip CRC/ISIZE mismatch for member at offset $offset")
+        headerLen + deflateLen + 8
+      } catch {
+        case e: java.util.zip.DataFormatException =>
+          // rescue the unconsumed tail for the resync scan before rethrow
+          val leftover = inflater.getRemaining
+          if (leftover > 0) cs.pushBack(inBuf, lastN - leftover, leftover)
+          throw new IllegalStateException(s"corrupt deflate body: ${e.getMessage}", e)
+      }
     }
   }
 

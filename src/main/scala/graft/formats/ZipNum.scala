@@ -360,40 +360,106 @@ object ZipNum {
   private type MergeWork =
     (Int, Option[String], Option[String], Seq[(String, Seq[IdxEntry])])
 
+  /** Receives the lines of one block from [[BlockReader.read]]: bytes
+    * `[from, until)` of `bytes`, a buffer the reader reuses, so a sink
+    * copies what it keeps. A line is never empty and holds no `\n`. */
+  private[graft] trait LineSink {
+    def line(bytes: Array[Byte], from: Int, until: Int): Unit
+  }
+
   /** THE ZipNum block reader: every block the V2 scan
     * ([[graft.sources.ZipNumPartitionReader]], and so the driver-local
     * [[ZipNumScan.readRows]]), [[readBlockLines]] and [[mergeSorted]] read
-    * is read by one of these. A block is read as exactly `length` bytes at
-    * `offset` of its shard file, gunzipped as ONE member and split into
-    * its non-empty lines. One open handle per shard file, reused while
-    * consecutive blocks stay in that shard; [[close]] is idempotent, and a
-    * later read re-opens. */
+    * is read by one of these. A block is the `length` bytes at `offset` of
+    * its shard file and must be exactly one gzip member: a block holding
+    * anything after its member fails, as does a short one. The member is
+    * streamed through [[Gzip.MemberDecoder]] (CRC32/ISIZE checked) into a
+    * line walk that hands each non-empty line to a [[LineSink]] as a
+    * slice of the inflated chunk, so no block-sized array is allocated: a
+    * line that straddles two chunks is carried in a small buffer the
+    * reader reuses. One open handle per shard file, reused while
+    * consecutive blocks stay in that shard, and one decoder (one native
+    * Inflater) for all blocks; [[close]] is idempotent and releases both,
+    * and a later read re-creates them. */
   private[graft] final class BlockReader(conf: Configuration) extends java.io.Closeable {
     private var openFile: String = _
     private var in: org.apache.hadoop.fs.FSDataInputStream = _
+    private var decoder: Gzip.MemberDecoder = _
     private var blocks = 0L
     private var bytes = 0L
+    // the partial line at the end of the last inflated chunk
+    private var carry = new Array[Byte](1024)
+    private var carryLen = 0
 
     def blocksRead: Long = blocks
     def compressedBytesRead: Long = bytes
 
-    /** the non-empty lines of the block at (`file`, `offset`, `length`) */
-    def lines(file: String, offset: Long, length: Long): Array[String] = {
+    /** Hands every non-empty line of the block at (`file`, `offset`,
+      * `length`) to `sink`, in block order. The sink sees the lines while
+      * the block is still being decoded: its trailer is verified only when
+      * this returns, and a block that fails throws here after some of its
+      * lines were handed out, so a sink holds a block's lines back until
+      * then. */
+    def read(file: String, offset: Long, length: Long, sink: LineSink): Unit = {
       if (file != openFile) {
-        close()
+        closeFile()
         val path = new Path(file)
         in = path.getFileSystem(conf).open(path)
         openFile = file
       }
-      val buf = new Array[Byte](length.toInt)
-      in.seek(offset); in.readFully(buf)
+      if (decoder == null) decoder = new Gzip.MemberDecoder
+      in.seek(offset)
       blocks += 1
       bytes += length
-      val member = Gzip.members(new java.io.ByteArrayInputStream(buf)).next()
-      new String(member.bytes, UTF_8).split("\n").filter(_.nonEmpty)
+      carryLen = 0
+      val walk = new java.io.OutputStream {
+        override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+        override def write(buf: Array[Byte], off: Int, len: Int): Unit = {
+          val end = off + len
+          var start = off
+          var i = off
+          while (i < end) {
+            if (buf(i) == '\n') {
+              if (carryLen > 0) { append(buf, start, i); sink.line(carry, 0, carryLen); carryLen = 0 }
+              else if (i > start) sink.line(buf, start, i)
+              start = i + 1
+            }
+            i += 1
+          }
+          append(buf, start, end)
+        }
+      }
+      val range = org.apache.commons.io.input.BoundedInputStream.builder()
+        .setInputStream(in).setMaxCount(length).get()
+      val memberLen = decoder.decodeMember(range, offset, walk)
+      if (memberLen != length)
+        throw new IllegalStateException(
+          s"block at offset $offset of $file is not one gzip member: " +
+            s"its member ends after $memberLen of $length bytes")
+      if (carryLen > 0) { sink.line(carry, 0, carryLen); carryLen = 0 }
     }
 
-    override def close(): Unit = if (in != null) {
+    private def append(buf: Array[Byte], from: Int, until: Int): Unit = if (until > from) {
+      val n = until - from
+      if (carryLen + n > carry.length)
+        carry = java.util.Arrays.copyOf(carry, math.max(carry.length * 2, carryLen + n))
+      System.arraycopy(buf, from, carry, carryLen, n)
+      carryLen += n
+    }
+
+    /** the non-empty lines of the block at (`file`, `offset`, `length`) */
+    def lines(file: String, offset: Long, length: Long): Array[String] = {
+      val out = Array.newBuilder[String]
+      read(file, offset, length, (b, from, until) => out += new String(b, from, until - from, UTF_8))
+      out.result()
+    }
+
+    override def close(): Unit = {
+      if (decoder != null) { decoder.end(); decoder = null }
+      closeFile()
+    }
+
+    private def closeFile(): Unit = if (in != null) {
       val open = in
       in = null
       openFile = null

@@ -14,7 +14,9 @@ import org.apache.spark.sql.catalyst.trees.TreePattern.LOCAL_RELATION
   * `InterpretedOrdering`) and coalesce(1) (`Repartition(1, shuffle =
   * false)`). That covers the sort-shaped cdx-server lookups over
   * [[graft.CdxServer]]'s driver-read leaf: Sort/Project/Filter/Limit over
-  * Filter + coalesce(1) over a LocalRelation.
+  * coalesce(1) over a LocalRelation that holds only the lookup's lines
+  * (the block reader drops the lines outside its urlkey prefix), so the
+  * interpreted predicates and ordering here run over those lines alone.
   *
   * All or nothing: a plan holding any other node (Window, Aggregate,
   * Join, ...), a nondeterministic or unevaluable expression, or a

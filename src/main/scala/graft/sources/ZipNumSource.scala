@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 
 import graft.formats.{SerializableHadoopConf, ZipNum}
@@ -331,7 +332,7 @@ final class ZipNumScan(
     val fields = required.fieldNames
     (partition: InputPartition) =>
       new ZipNumPartitionReader(
-        partition.asInstanceOf[ZipNumBlockPartition].blocks, fields, sconf)
+        partition.asInstanceOf[ZipNumBlockPartition].blocks, fields, sconf, None)
   }
 }
 
@@ -360,13 +361,15 @@ object ZipNumScan {
 
   /** Reads `blocks` on the calling thread through the reader a scan task
     * uses, so the rows equal one partition of this scan over the same
-    * blocks, in the same order. */
+    * blocks, in the same order, filtered to the urlkeys under `prefix`
+    * when one is given. The lines outside the prefix never become rows:
+    * `CdxServer`'s driver-local leaf holds only its lookup's lines. */
   def readRows(
       dir: String, blocks: Seq[ZipNum.IdxEntry], fields: Array[String],
-      conf: Configuration): Vector[InternalRow] = {
+      conf: Configuration, prefix: Option[String]): Vector[InternalRow] = {
     val reader = new ZipNumPartitionReader(
-      blocks.map(blockOf(dir, _)).toArray, fields, new SerializableHadoopConf(conf))
-    // next() builds a fresh row each call, so the rows need no copy
+      blocks.map(blockOf(dir, _)).toArray, fields, new SerializableHadoopConf(conf), prefix)
+    // next() hands out each row once, so the rows need no copy
     try Iterator.continually(reader).takeWhile(_.next()).map(_.get()).toVector
     finally reader.close()
   }
@@ -393,14 +396,38 @@ private final class TaskMetric(metricName: String, v: Long)
 final case class ZipNumBlockPartition(blocks: Array[(String, Long, Long, Long)])
   extends InputPartition
 
+/** The scan's rows from blocks read through one [[ZipNum.BlockReader]]:
+  * each line becomes (urlkey, ts, json, blockseq) as `line.split(" ", 3)`
+  * splits it (no space: ts and json null; one space: json null), built
+  * from the line's bytes with one copy per field. A line that is not
+  * well-formed UTF-8 is decoded as a `String` first, so its replacement
+  * characters are the JDK decoder's. With a `prefix`, only lines whose
+  * urlkey starts with it become rows; the test compares UTF-8 bytes. The
+  * rows of a block are handed out only after its trailer has verified. */
 final class ZipNumPartitionReader(
     blocks: Array[(String, Long, Long, Long)], fields: Array[String],
-    sconf: SerializableHadoopConf)
-  extends PartitionReader[InternalRow] {
+    sconf: SerializableHadoopConf, prefix: Option[String])
+  extends PartitionReader[InternalRow] with ZipNum.LineSink {
 
-  // parse only what the projection needs: ts/json force the 3-way split;
-  // a urlkey-only (or blockseq-only) scan takes the indexOf fast path
+  // parse only what the projection needs: ts/json need the second
+  // space, a urlkey-only (or blockseq-only, or empty) scan stops at the
+  // first one
+  private val needKey = fields.contains("urlkey")
   private val needSplit = fields.contains("ts") || fields.contains("json")
+  // each output field's position in the source schema (urlkey, ts, json,
+  // blockseq), resolved once rather than per row
+  private val sources: Array[Int] = fields.map(ZipNumSource.schema.fieldIndex)
+  // The prefix's UTF-8 bytes, tested against a line's first bytes before
+  // anything else, so most lines outside the prefix cost a few byte
+  // compares. The test is exact for a prefix that has a UTF-8 form and no
+  // U+FFFD: a urlkey decodes to text starting with such a prefix only if
+  // its bytes start with the prefix's bytes. Any other prefix (one with an
+  // unpaired surrogate, or U+FFFD, which a malformed urlkey decodes to)
+  // leaves this null, and every line takes the String test.
+  private val prefixBytes: Array[Byte] = prefix
+    .filter(p => !p.contains('\uFFFD'))
+    .map(_.getBytes(UTF_8)).filter(b => new String(b, UTF_8) == prefix.get).orNull
+  private val byteTest = prefix.isEmpty || prefixBytes != null
 
   private val reader = new ZipNum.BlockReader(sconf.value)
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
@@ -408,51 +435,81 @@ final class ZipNumPartitionReader(
       new TaskMetric("compressedBytesRead", reader.compressedBytesRead))
 
   private var blockIdx = 0
-  // the current block's lines, the next one to emit, and the block's seq
-  private var lines: Array[String] = Array.empty
-  private var lineIdx = 0
+  // the current block's rows and the next one to hand out
+  private val rows = new scala.collection.mutable.ArrayBuffer[InternalRow]
+  private var rowIdx = 0
   private var seq = 0L
-  private var row: InternalRow = _
-
-  // per-field extractors resolved ONCE at reader construction — next()
-  // runs per line of the scan, so the hot loop must not re-dispatch on
-  // column-name strings (parts == null exactly when needSplit is false)
-  private val extractors: Array[(String, Array[String], Long) => Any] = fields.map {
-    case "urlkey" => (line: String, parts: Array[String], _: Long) =>
-      if (parts != null) UTF8String.fromString(parts(0))
-      else {
-        val sp = line.indexOf(' ')
-        UTF8String.fromString(if (sp < 0) line else line.substring(0, sp))
-      }
-    case "ts" => (_: String, parts: Array[String], _: Long) =>
-      if (parts.length > 1) UTF8String.fromString(parts(1)) else null
-    case "json" => (_: String, parts: Array[String], _: Long) =>
-      if (parts.length > 2) UTF8String.fromString(parts(2)) else null
-    case "blockseq" => (_: String, _: Array[String], seq: Long) => seq
-  }
 
   override def next(): Boolean = {
-    while (lineIdx >= lines.length) {
+    while (rowIdx >= rows.length) {
       if (blockIdx >= blocks.length) return false
       val (file, offset, length, blockSeq) = blocks(blockIdx)
       blockIdx += 1
-      lines = reader.lines(file, offset, length)
-      lineIdx = 0
+      rows.clear()
+      rowIdx = 0
       seq = blockSeq
+      reader.read(file, offset, length, this)
     }
-    val line = lines(lineIdx)
-    lineIdx += 1
-    val parts = if (needSplit) line.split(" ", 3) else null
-    val values = new Array[Any](extractors.length)
-    var i = 0
-    while (i < extractors.length) {
-      values(i) = extractors(i)(line, parts, seq)
-      i += 1
-    }
-    row = new GenericInternalRow(values)
+    rowIdx += 1
     true
   }
 
-  override def get(): InternalRow = row
+  override def get(): InternalRow = rows(rowIdx - 1)
   override def close(): Unit = reader.close()
+
+  /** one line of the block being read: a row, unless the prefix drops it */
+  override def line(b: Array[Byte], from: Int, until: Int): Unit =
+    if (prefixBytes == null || startsWith(b, from, until, prefixBytes)) {
+      // Spark's validity test accepts exactly what the JDK decoder
+      // decodes without a replacement
+      if (byteTest && UTF8String.fromBytes(b, from, until - from).isValid) {
+        val sp = indexOfSpace(b, from, until)
+        val keyEnd = if (sp < 0) until else sp
+        // the prefix lies within the urlkey, not across its space
+        if (prefixBytes == null || keyEnd - from >= prefixBytes.length) {
+          var ts: UTF8String = null
+          var json: UTF8String = null
+          if (needSplit && sp >= 0) {
+            val sp2 = indexOfSpace(b, sp + 1, until)
+            ts = slice(b, sp + 1, if (sp2 < 0) until else sp2)
+            if (sp2 >= 0) json = slice(b, sp2 + 1, until)
+          }
+          rows += row(if (needKey) slice(b, from, keyEnd) else null, ts, json)
+        }
+      } else {
+        val parts = new String(b, from, until - from, UTF_8).split(" ", 3)
+        if (prefix.forall(parts(0).startsWith))
+          rows += row(UTF8String.fromString(parts(0)),
+            if (parts.length > 1) UTF8String.fromString(parts(1)) else null,
+            if (parts.length > 2) UTF8String.fromString(parts(2)) else null)
+      }
+    }
+
+  private def row(urlkey: UTF8String, ts: UTF8String, json: UTF8String): InternalRow = {
+    val values = new Array[Any](sources.length)
+    var i = 0
+    while (i < sources.length) {
+      values(i) = sources(i) match {
+        case 0 => urlkey
+        case 1 => ts
+        case 2 => json
+        case _ => seq
+      }
+      i += 1
+    }
+    new GenericInternalRow(values)
+  }
+
+  /** a copy, so no row pins the reader's buffer */
+  private def slice(b: Array[Byte], from: Int, until: Int): UTF8String =
+    UTF8String.fromBytes(util.Arrays.copyOfRange(b, from, until))
+
+  private def indexOfSpace(b: Array[Byte], from: Int, until: Int): Int = {
+    var i = from
+    while (i < until && b(i) != ' ') i += 1
+    if (i < until) i else -1
+  }
+
+  private def startsWith(b: Array[Byte], from: Int, until: Int, p: Array[Byte]): Boolean =
+    until - from >= p.length && util.Arrays.equals(b, from, from + p.length, p, 0, p.length)
 }

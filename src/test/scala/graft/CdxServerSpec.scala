@@ -8,6 +8,7 @@ import org.apache.spark.ListenerBusDrain
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -229,6 +230,55 @@ class CdxServerSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val exact = extServer.exactUrl(key)
     assert(exact.collect().length == 2)
     assert(exact.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec])
+  }
+
+  test("the driver-local leaf holds exactly the selected blocks' lines under the lookup's key") {
+    server
+    val conf = spark.sparkContext.hadoopConfiguration
+    val cluster = ZipNum.readLines(spark, dir).as[String].collect().toSeq
+    Seq("com,example)/path?a=1&b=2", "com,example)").foreach { k =>
+      val leaves = server.prefix(k).queryExecution.analyzed.collect { case r: LocalRelation => r }
+      assert(leaves.size == 1, s"$k: one local leaf")
+      val held = leaves.head.data.map(r => (0 until 3).map(i => r.getUTF8String(i).toString).mkString(" "))
+      assert(held == cluster.filter(_.split(" ", 2)(0).startsWith(k)), k)
+      // the blocks the leaf was read from hold other keys' lines too
+      val (lo, hi) = ZipNum.prefixBounds(k)
+      val reader = new ZipNum.BlockReader(conf)
+      val read = try ZipNum.scanIdxRange(dir, conf, lo, hi).flatMap { e =>
+        val (file, offset, length, _) = ZipNumScan.blockOf(dir, e)
+        reader.lines(file, offset, length).toSeq
+      } finally reader.close()
+      assert(read.size > held.size, s"$k: the selection holds only the key's lines")
+    }
+  }
+
+  test("a lookup in a block whose CRC does not verify throws and returns no rows") {
+    server
+    val conf = spark.sparkContext.hadoopConfiguration
+    val key = "com,example)/other"
+    val copy = Paths.get("/tmp/graft_test/server_zipnum_crc")
+    if (Files.exists(copy)) Files.list(copy).toArray.foreach(f => Files.delete(f.asInstanceOf[java.nio.file.Path]))
+    Files.createDirectories(copy)
+    Files.list(Paths.get(dir)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(f => !f.getFileName.toString.startsWith("."))
+      .foreach(f => Files.copy(f, copy.resolve(f.getFileName)))
+    val (lo, hi) = ZipNum.prefixBounds(key)
+    val reader = new ZipNum.BlockReader(conf)
+    val block = try ZipNum.scanIdxRange(copy.toString, conf, lo, hi).find { e =>
+      val (file, offset, length, _) = ZipNumScan.blockOf(copy.toString, e)
+      reader.lines(file, offset, length).exists(_.startsWith(key + " "))
+    }.get finally reader.close()
+    // flip the first byte of the block's CRC32 trailer
+    val shard = copy.resolve(block.shard)
+    val bytes = Files.readAllBytes(shard)
+    val at = (block.offset + block.length - 8).toInt
+    bytes(at) = (bytes(at) ^ 0xff).toByte
+    Files.write(shard, bytes)
+    Seq(spark, SparkSpec.withExtensions).foreach { session =>
+      val e = intercept[IllegalStateException](
+        new CdxServer(session, copy.toString).exactUrl(key).collect())
+      assert(e.getMessage.contains("gzip CRC/ISIZE mismatch"), e.getMessage)
+    }
   }
 
   test("closest over a small selection compiles no class per target under GraftExtensions") {

@@ -513,6 +513,30 @@ class SourceV2Spec extends SparkSpec {
     assert(bytes == idx.map(_.length).sum)
   }
 
+  test("a driver-local read counts exactly the blocks it selected") {
+    setup()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fields = ZipNumSource.schema.fieldNames
+    val (lo, hi) = ZipNum.prefixBounds("com,example)/")
+    Seq(
+      ZipNum.scanIdxRange(zipDir, conf, lo, hi) -> Some("com,example)/"),
+      ZipNum.readIdx(zipDir, conf) -> None).foreach { case (selected, prefix) =>
+      // the reader ZipNumScan.readRows drains on the calling thread
+      val reader = new graft.sources.ZipNumPartitionReader(
+        selected.map(graft.sources.ZipNumScan.blockOf(zipDir, _)).toArray, fields,
+        new graft.formats.SerializableHadoopConf(conf), prefix)
+      var rows = 0
+      val m = try {
+        while (reader.next()) { reader.get(); rows += 1 }
+        reader.currentMetricsValues().map(t => t.name() -> t.value()).toMap
+      } finally reader.close()
+      assert(selected.size > 1 && rows > 0)
+      assert(m("blocksRead") == selected.size, s"$prefix: read ${m("blocksRead")} of ${selected.size} blocks")
+      assert(m("compressedBytesRead") == selected.map(_.length).sum, s"$prefix")
+      assert(rows == graft.sources.ZipNumScan.readRows(zipDir, selected, fields, conf, prefix).size)
+    }
+  }
+
   test("zipnum pushdown plans fewer partitions than a full scan") {
     setup()
     val idx = ZipNum.readIdx(spark, zipDir)

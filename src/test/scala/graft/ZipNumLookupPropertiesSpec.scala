@@ -1,6 +1,10 @@
 package graft
 
-import graft.formats.ZipNum
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import graft.formats.{Gzip, ZipNum}
+import graft.sources.ZipNumScan
 import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -16,6 +20,13 @@ import org.scalacheck.rng.Seed
   *  - `format("zipnum")` filtered by `urlkey startsWith`, as a multiset
   *  - the pages of `CdxServer.page`, concatenated in page order
   *  - `mergeSorted` of two halves, read back whole
+  *
+  * The rows the block reader builds from line bytes must be the rows of
+  * the `String` path (decode the block, split it on `\n`, split each line
+  * with `split(" ", 3)`), byte for byte, for lines of every shape that
+  * split treats specially and for lines that are not well-formed UTF-8;
+  * and a read with a urlkey prefix must equal the full read filtered by
+  * `urlkey startsWith`.
   */
 class ZipNumLookupPropertiesSpec extends SparkSpec {
   import spark.implicits._
@@ -108,6 +119,133 @@ class ZipNumLookupPropertiesSpec extends SparkSpec {
       same(back, sorted, s"mergeSorted read-back: $ctx")
     }
     assert(wide > 0, "no trial exercised the multi-task split")
+  }
+
+  // byte sequences the JDK's UTF-8 decoder replaces: a stray continuation,
+  // overlong forms, an encoded surrogate, truncated sequences, a code point
+  // above U+10FFFF and bytes that never occur in UTF-8
+  private val malformed: Gen[Array[Byte]] = Gen.oneOf(
+    Seq(0x80), Seq(0xc0, 0x80), Seq(0xc1, 0xbf), Seq(0xe0, 0x80, 0x80), Seq(0xed, 0xa0, 0x80),
+    Seq(0xe2, 0x82), Seq(0xf0, 0x9f, 0x98), Seq(0xf4, 0x90, 0x80, 0x80), Seq(0xfe), Seq(0xff)
+  ).map(_.map(_.toByte).toArray)
+
+  /** key characters, one time in five with malformed bytes among them */
+  private val field: Gen[Array[Byte]] = for {
+    cs <- keyChars
+    bad <- Gen.frequency(4 -> Gen.const(Array.emptyByteArray), 1 -> malformed)
+    at <- Gen.choose(0, cs.size)
+  } yield cs.take(at).mkString.getBytes(UTF_8) ++ bad ++ cs.drop(at).mkString.getBytes(UTF_8)
+
+  /** one line, in each shape `split(" ", 3)` treats specially; one in ten
+    * is longer than the decoder's 8 KB chunk */
+  private val rawLine: Gen[Array[Byte]] = for {
+    k <- field
+    ts <- field
+    json <- field
+    shape <- Gen.choose(0, 7)
+    pad <- Gen.frequency(9 -> Gen.const(0), 1 -> Gen.choose(8200, 20000))
+  } yield {
+    val sp = Array[Byte](' ')
+    (shape match {
+      case 0 => k // no space
+      case 1 => k ++ sp ++ ts // one space
+      case 2 => k ++ sp ++ ts ++ sp ++ json
+      case 3 => k ++ sp ++ sp ++ ts // double space
+      case 4 => k ++ sp // trailing space after the urlkey
+      case 5 => k ++ sp ++ ts ++ sp // trailing space: json ""
+      case 6 => sp ++ ts ++ sp ++ json // empty urlkey
+      case _ => k ++ sp ++ ts ++ sp ++ json ++ sp ++ json // a space inside json
+    }) ++ Array.fill[Byte](pad)('j')
+  }
+
+  /** block payloads: runs of lines joined by `\n`, some with an empty
+    * line in them and some without a final `\n` */
+  private val payloads: Gen[List[Array[Byte]]] = Gen.choose(20, 40).flatMap(n =>
+    Gen.listOfN(n, for {
+      lines <- Gen.choose(1, 40).flatMap(Gen.listOfN(_, rawLine))
+      blank <- Gen.frequency(4 -> false, 1 -> true)
+      last <- Gen.oneOf(true, false)
+    } yield {
+      val joined = lines.map(_ ++ Array[Byte]('\n')).reduce(_ ++ _)
+      val withBlank = if (blank) joined ++ Array[Byte]('\n') ++ joined else joined
+      if (last) withBlank else withBlank.dropRight(1)
+    }))
+
+  /** cuts of key-character runs, mostly hits */
+  private val rowPrefixes: Gen[List[String]] =
+    Gen.listOfN(5, keyChars.flatMap(cs => Gen.choose(1, cs.size).map(cs.take(_).mkString)))
+
+  /** prefixes the reader cannot test on raw bytes: U+FFFD, which the
+    * urlkey of a malformed line can start with once decoded, and an
+    * unpaired high surrogate, which starts a U+1F600 urlkey as a String */
+  private val stringOnlyPrefixes = Seq("\uFFFD", "a\uFFFD", "\uD83D")
+
+  test("readRows with a prefix equals readRows filtered by urlkey, both equal to the String path") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val all = Array("urlkey", "ts", "json", "blockseq")
+    val projections = Seq(all, Array("urlkey"), Array("ts", "json"), Array("blockseq"), Array.empty[String])
+    var malformedLines = 0
+    var longLines = 0
+    var stringOnlyHits = 0
+    (0 until 4).foreach { i =>
+      val seed = 20261020L + i
+      val blocks = payloads.pureApply(Gen.Parameters.default, Seed(seed))
+      val prefixes = ("" :: rowPrefixes.pureApply(Gen.Parameters.default, Seed(seed + 100))) ++
+        stringOnlyPrefixes
+      // two shards, blocks alternating between them, read shard by shard
+      val dir = s"$base/rows$i"
+      Files.createDirectories(Paths.get(dir))
+      val outs = Seq(new java.io.ByteArrayOutputStream, new java.io.ByteArrayOutputStream)
+      val entries = blocks.zipWithIndex.map { case (payload, seq) =>
+        val out = outs(seq % 2)
+        val offset = out.size.toLong
+        val length = Gzip.writeMember(out, payload)
+        ZipNum.IdxEntry("", s"cdx-0000${seq % 2}.gz", offset, length, seq.toLong)
+      }.sortBy(e => (e.shard, e.seq))
+      outs.zipWithIndex.foreach { case (o, s) =>
+        Files.write(Paths.get(dir, s"cdx-0000$s.gz"), o.toByteArray)
+      }
+      // the String path: the block decoded whole, split on \n, each line
+      // split(" ", 3), one value per field of `all`
+      val expected: Seq[Seq[Any]] = entries.flatMap { e =>
+        val payload = blocks(e.seq.toInt)
+        new String(payload, UTF_8).split("\n").filter(_.nonEmpty).toSeq.map { l =>
+          val parts = l.split(" ", 3)
+          Seq(Some(parts(0)), parts.lift(1), parts.lift(2)).map(_.map(_.getBytes(UTF_8).toSeq)) :+ e.seq
+        }
+      }
+      blocks.foreach { b =>
+        val ls = new String(b, UTF_8).split("\n")
+        malformedLines += ls.count(_.contains('\uFFFD'))
+        longLines += ls.count(_.length > 8192)
+      }
+      def read(fields: Array[String], prefix: Option[String]): Seq[Seq[Any]] =
+        ZipNumScan.readRows(dir, entries, fields, conf, prefix).map { r =>
+          fields.indices.map { f =>
+            if (fields(f) == "blockseq") r.getLong(f)
+            else Option(r.getUTF8String(f)).map(_.getBytes.toSeq)
+          }
+        }
+      def project(rows: Seq[Seq[Any]], fields: Array[String]): Seq[Seq[Any]] =
+        rows.map(r => fields.toSeq.map(f => r(all.indexOf(f))))
+      def urlkey(r: Seq[Any]): String =
+        new String(r.head.asInstanceOf[Option[Seq[Byte]]].get.toArray, UTF_8)
+
+      val whole = read(all, None)
+      assert(whole == expected, s"seed=$seed: rows differ from the String path")
+      prefixes.foreach { p =>
+        val under = expected.filter(urlkey(_).startsWith(p))
+        if (stringOnlyPrefixes.contains(p)) stringOnlyHits += under.size
+        assert(read(all, Some(p)) == under, s"seed=$seed prefix='$p'")
+        assert(whole.filter(urlkey(_).startsWith(p)) == under, s"seed=$seed prefix='$p'")
+        projections.foreach { fields =>
+          assert(read(fields, Some(p)) == project(under, fields),
+            s"seed=$seed prefix='$p' fields=${fields.mkString(",")}")
+        }
+      }
+    }
+    assert(malformedLines > 0 && longLines > 0 && stringOnlyHits > 0,
+      s"$malformedLines malformed lines, $longLines long lines, $stringOnlyHits rows under U+FFFD/surrogate prefixes")
   }
 }
 

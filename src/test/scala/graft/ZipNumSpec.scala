@@ -447,6 +447,34 @@ class ZipNumSpec extends SparkSpec {
     assert(pruned.nonEmpty)
   }
 
+  test("a block range that is not exactly one gzip member fails; the reader re-opens after close") {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val d = "/tmp/graft_test/zipnum_tiling"
+    ZipNum.write(inputLines.toDF("line"), d, shards = 1, linesPerBlock = 37)
+    val idx = ZipNum.readIdx(d, conf)
+    val Seq(a, b) = idx.take(2)
+    val file = s"$d/${a.shard}"
+    val reader = new ZipNum.BlockReader(conf)
+    try {
+      val first = reader.lines(file, a.offset, a.length).toSeq
+      // two adjacent members under one range, and a range one byte short
+      val e = intercept[IllegalStateException](reader.lines(file, a.offset, a.length + b.length))
+      assert(e.getMessage.contains("not one gzip member"), e.getMessage)
+      intercept[java.io.EOFException](reader.lines(file, a.offset, a.length - 1))
+      reader.close()
+      assert(reader.lines(file, a.offset, a.length).toSeq == first, "a read after close re-opens")
+    } finally reader.close()
+    // the same merge written into cluster.idx fails the read, where taking
+    // the first member alone would drop the second block's lines
+    val merged = ZipNum.IdxEntry(a.firstKey, a.shard, a.offset, a.length + b.length, a.seq) +: idx.drop(2)
+    Files.deleteIfExists(Paths.get(d, ".cluster.idx.crc")) // the local FS's checksum of the old idx
+    Files.write(Paths.get(d, "cluster.idx"), merged.map(e =>
+      s"${e.firstKey}\t${e.shard}\t${e.offset}\t${e.length}\t${e.seq}\n").mkString.getBytes("UTF-8"))
+    val failed = intercept[Exception](ZipNum.readLines(spark, d).collect())
+    assert(failed.getMessage.contains("not one gzip member"), failed.getMessage)
+  }
+
   test("prefix pruning touches fewer blocks than a full read") {
     written
     val conf = spark.sparkContext.hadoopConfiguration
