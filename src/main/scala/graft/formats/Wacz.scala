@@ -53,9 +53,11 @@ import org.apache.spark.sql.functions._
   * merged urlkey-sorted index), and every reader resolves any number of
   * `archive/` members. The spec's big-archive index form
   * (`indexes/index.cdx.gz` blocks + `indexes/index.idx` pointers) is
-  * supported BOTH ways: `write(indexLinesPerBlock > 0)` emits it and
-  * [[lookupPrefix]] serves prefix queries off it reading only the idx +
-  * matching blocks. Fidelity bounds (documented, loud where reachable):
+  * supported BOTH ways: `write(indexLinesPerBlock > 0)` emits it, and
+  * `spark.read.format("wacz")` ([[graft.sources.WaczSource]], the one
+  * index reader) serves a urlkey-bounded query off it reading only the
+  * idx + matching blocks ([[indexBlocks]]). Fidelity bounds (documented,
+  * loud where reachable):
   * encrypted or signed datapackage extensions (WACZ signing spec) are
   * out of scope.
   */
@@ -187,9 +189,9 @@ object Wacz {
     * instead of the plain `index.cdx`: `indexes/index.cdx.gz` (CDXJ
     * lines in gzip-member blocks of that many lines — the ZipNum block
     * unit) plus `indexes/index.idx` (one `firstKey TAB index.cdx.gz TAB
-    * offset TAB length` line per block), so [[lookupPrefix]] answers a
-    * prefix query reading only the idx and the matching blocks — never
-    * the whole index. [[scanIndex]] and the V2 source read both forms. */
+    * offset TAB length` line per block), so `format("wacz")` answers a
+    * urlkey-bounded query reading only the idx and the matching blocks —
+    * never the whole index. The reader reads both forms. */
   def write(df: DataFrame, dir: String, indexLinesPerBlock: Int = 0): Unit = {
     val need = Seq("shard", "urlkey", "url", "ts", "status", "mime", "payload")
     require(need.forall(df.columns.contains),
@@ -606,53 +608,108 @@ object Wacz {
       in: org.apache.hadoop.fs.FSDataInputStream): (Long, Array[Byte]) => Unit =
     (pos, buf) => in.readFully(pos, buf)
 
-  /** The per-archive index extraction [[scanIndex]] and the V2 source
-    * ([[graft.sources.WaczSource]]) share: central directory → every
-    * `indexes/` entry ending `.cdx` (plain, STORED or DEFLATED) or
-    * `.cdx.gz` (gzip members, the py-wacz compressed form) → lines. */
+  /** Every index line of an archive whose central directory is `dir`:
+    * every `indexes/` entry ending `.cdx` (plain, STORED or DEFLATED) or
+    * `.cdx.gz` (gzip members, the py-wacz compressed form), read whole.
+    * The unbounded read of [[graft.sources.WaczSource]], and its read of
+    * an archive without `indexes/index.idx`. */
   private[graft] def indexLines(
-      read: (Long, Array[Byte]) => Unit, fileLen: Long, shortName: String): Seq[String] = {
-    val dir = centralDirectory(read, fileLen)
+      read: (Long, Array[Byte]) => Unit, dir: Seq[Entry], shortName: String): Seq[String] = {
     val idx = dir.filter(e => e.name.startsWith("indexes/") &&
       (e.name.endsWith(".cdx") || e.name.endsWith(".cdx.gz")))
     require(idx.nonEmpty, s"$shortName: no indexes/*.cdx[.gz] entry " +
       s"(entries: ${dir.map(_.name).mkString(", ")})")
     idx.flatMap { e =>
       val raw = entryBytes(read, e)
-      if (e.name.endsWith(".gz")) memberLines(raw)
-      else new String(raw, UTF_8).split("\n", -1).toSeq.filter(_.nonEmpty)
+      val texts =
+        if (e.name.endsWith(".gz"))
+          Gzip.members(new java.io.ByteArrayInputStream(raw)).map(_.bytes)
+        else Iterator(raw)
+      texts.flatMap(new String(_, UTF_8).split("\n", -1)).filter(_.nonEmpty).toSeq
     }
   }
 
-  /** Scan the CDXJ index out of every `.wacz` matching `pathGlob` —
-    * rows (wacz, line). The archive member is never touched: one tail
-    * read + the directory + the index entry per file. */
-  def scanIndex(spark: SparkSession, pathGlob: String): DataFrame =
-    archiveLineRows(spark, pathGlob, "scanIndex")(indexLines)
+  /** The blocks of the big-archive index (`indexes/index.idx`) that can
+    * hold a urlkey in [`lo`, `hi`), as (absolute offset in the archive,
+    * length) in idx order; None when the archive has no idx. Blocks are
+    * selected by ZipNum's pruning rule ([[ZipNum.selectBlocks]]), which
+    * keeps the predecessor of the first block at or above `lo` because a
+    * run of equal keys can straddle a block boundary. The idx's first
+    * keys are urlkeys only, so the bounds must be urlkey bounds.
+    *
+    * Pointers are outside input and are checked before any block is
+    * read: each names a STORED entry under `indexes/`, and its offset and
+    * length must lie inside that entry (0 <= offset, 0 < length,
+    * offset + length <= entry size), so no pointer reaches the archive's
+    * WARC bytes or past the file. A pointer that fails fails the read,
+    * naming the archive and the idx line. */
+  private[graft] def indexBlocks(
+      read: (Long, Array[Byte]) => Unit, dir: Seq[Entry], shortName: String,
+      lo: Option[String], hi: Option[String]): Option[Seq[(Long, Long)]] = {
+    val byName = dir.map(e => e.name -> e).toMap
+    byName.get("indexes/index.idx").map { idxEntry =>
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      // pointers name their member (sharded cdx.gz parts are spec-legal):
+      // each member's entry and data offset are resolved once
+      val members = scala.collection.mutable.HashMap.empty[String, (Entry, Long)]
+      val lines = new String(entryBytes(read, idxEntry), UTF_8)
+        .split("\n", -1).toIndexedSeq.filter(_.nonEmpty)
+      // each entry's offset is its block's absolute offset in the archive
+      val idx = lines.zipWithIndex.map { case (l, i) =>
+        val (key, name, off, len) = parseIdxLine(l, shortName, mapper)
+        val (e, base) = members.getOrElseUpdate(name, {
+          val e = byName.getOrElse(s"indexes/$name",
+            throw new IllegalArgumentException(
+              s"$shortName: idx line '$l' points at missing indexes/$name"))
+          require(e.method == 0,
+            s"$shortName: indexes/$name must be STORED for block-positioned reads")
+          (e, dataOffset(read, e))
+        })
+        require(off <= e.compressedSize - len,
+          s"$shortName: idx line '$l' points past the end of indexes/$name " +
+            s"(${e.compressedSize} bytes)")
+        ZipNum.IdxEntry(key, name, base + off, len, i)
+      }
+      ZipNum.selectBlocks(idx, lo, hi).map(e => (e.offset, e.length))
+    }
+  }
 
   /** one idx pointer: (firstKey, member name under indexes/, offset,
     * length). BOTH public pointer dialects parse: the TAB cluster.idx
     * form this writer emits (`key TAB member TAB offset TAB length`)
     * and the CDXJ-json form (`key [ts] {"offset":..,"length":..,
-    * "filename":..}`, the wabac.js compressed-index shape). */
+    * "filename":..}`, the wabac.js compressed-index shape). Offset and
+    * length must be digit strings or, in the json form, integral numbers:
+    * a negative, fractional or non-numeric field fails naming the line,
+    * and a length must be positive. */
   private def parseIdxLine(
       l: String, shortName: String,
       mapper: com.fasterxml.jackson.databind.ObjectMapper)
       : (String, String, Long, Long) = {
-    val tabs = l.split("\t")
-    if (tabs.length >= 4)
-      (tabs(0).split(" ")(0), tabs(1), tabs(2).toLong, tabs(3).toLong)
-    else {
-      val brace = l.indexOf('{')
-      require(brace > 0, s"$shortName: unrecognized idx line '$l'")
-      val key = l.substring(0, brace).trim.split(" ")(0)
-      val j = mapper.readTree(l.substring(brace))
-      require(j.get("offset") != null && j.get("length") != null,
-        s"$shortName: idx json without offset/length: '$l'")
-      (key,
-        Option(j.get("filename")).map(_.asText()).getOrElse("index.cdx.gz"),
-        j.get("offset").asLong(), j.get("length").asLong())
+    def field(what: String, v: String): Long = {
+      require(v.nonEmpty && v.length <= 18 && v.forall(c => c >= '0' && c <= '9'),
+        s"$shortName: idx $what '$v' is not a non-negative integer in line '$l'")
+      v.toLong
     }
+    val tabs = l.split("\t")
+    val (key, member, off, len) =
+      if (tabs.length >= 4)
+        (tabs(0).split(" ")(0), tabs(1), field("offset", tabs(2)), field("length", tabs(3)))
+      else {
+        val brace = l.indexOf('{')
+        require(brace > 0, s"$shortName: unrecognized idx line '$l'")
+        val j = mapper.readTree(l.substring(brace))
+        def num(f: String): Long = {
+          val n = j.get(f)
+          require(n != null, s"$shortName: idx json without $f: '$l'")
+          field(f, if (n.isTextual) n.textValue() else n.toString)
+        }
+        (l.substring(0, brace).trim.split(" ")(0),
+          Option(j.get("filename")).map(_.asText()).getOrElse("index.cdx.gz"),
+          num("offset"), num("length"))
+      }
+    require(len > 0, s"$shortName: idx length $len is not positive in line '$l'")
+    (key, member, off, len)
   }
 
   /** Resolve an archive glob to (path, length) pairs — the one lister of
@@ -672,87 +729,6 @@ object Wacz {
     }.map(st => (st.getPath.toString, st.getLen))
     require(paths.nonEmpty, s"$what: no archive files match $glob")
     paths
-  }
-
-  /** lines of one decoded index payload: gzip members → text → lines */
-  private def memberLines(raw: Array[Byte]): Seq[String] =
-    Gzip.members(new java.io.ByteArrayInputStream(raw))
-      .flatMap(m => new String(m.bytes, UTF_8).split("\n", -1))
-      .filter(_.nonEmpty).toSeq
-
-  /** shared per-archive scaffolding for the (wacz, line) readers: glob,
-    * one partition per archive, positioned-read fn per file */
-  private def archiveLineRows(spark: SparkSession, pathGlob: String, what: String)(
-      fn: ((Long, Array[Byte]) => Unit, Long, String) => Seq[String]): DataFrame = {
-    val sc = spark.sparkContext
-    val sconf = new SerializableHadoopConf(sc.hadoopConfiguration)
-    val glob = new Path(pathGlob)
-    val fs = glob.getFileSystem(sc.hadoopConfiguration)
-    val paths = archiveFiles(fs, glob, s"Wacz.$what")
-    val rows = sc.parallelize(paths, math.max(paths.size, 1)).flatMap {
-      case (file, len) =>
-        val shortName = file.substring(file.lastIndexOf('/') + 1)
-        val p = new Path(file)
-        val pfs = p.getFileSystem(sconf.value)
-        val in = pfs.open(p)
-        try fn(positionedReader(in), len, shortName)
-          .map(line => org.apache.spark.sql.Row(shortName, line)).iterator
-        finally in.close()
-    }
-    spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("wacz",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("line",
-        org.apache.spark.sql.types.StringType))))
-  }
-
-  /** Bounded PREFIX LOOKUP over the big-archive index form (`write`
-    * with `indexLinesPerBlock > 0`): per archive, read the small
-    * `indexes/index.idx` (one pointer line per block), select the blocks
-    * whose key range can hold the prefix by ZipNum's pruning rule
-    * ([[ZipNum.selectBlocks]] over [[ZipNum.prefixBounds]]: a run of equal
-    * keys can straddle a block boundary, so the predecessor of the first
-    * block at or above the prefix is kept), and positioned-read
-    * ONLY those gzip members out of the STORED `indexes/index.cdx.gz` —
-    * O(idx + matching blocks) bytes, never the whole index: the ZipNum
-    * cluster.idx discipline served through a ZIP. Plain-index archives
-    * fall back to a full index read + filter. Rows (wacz, line). */
-  def lookupPrefix(spark: SparkSession, pathGlob: String, prefix: String): DataFrame = {
-    require(prefix.nonEmpty, "Wacz.lookupPrefix: empty prefix (use scanIndex)")
-    archiveLineRows(spark, pathGlob, "lookupPrefix") { (read, len, shortName) =>
-      val byName = centralDirectory(read, len).map(e => e.name -> e).toMap
-      val lines: Seq[String] = byName.get("indexes/index.idx") match {
-        case Some(idxEntry) =>
-          val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-          val blocks = new String(entryBytes(read, idxEntry), UTF_8)
-            .split("\n", -1).toIndexedSeq.filter(_.nonEmpty)
-            .map(parseIdxLine(_, shortName, mapper))
-          // pointers name their member (sharded cdx.gz parts are
-          // spec-legal) — resolve each member's data offset once
-          val memberBase = scala.collection.mutable.HashMap.empty[String, Long]
-          def baseOf(member: String): Long =
-            memberBase.getOrElseUpdate(member, {
-              val e = byName.getOrElse(s"indexes/$member",
-                throw new IllegalArgumentException(
-                  s"$shortName: idx points at missing indexes/$member"))
-              require(e.method == 0,
-                s"$shortName: $member must be STORED for block-positioned reads")
-              dataOffset(read, e)
-            })
-          val idx = blocks.zipWithIndex.map { case ((key, member, off, blen), i) =>
-            ZipNum.IdxEntry(key, member, off, blen, i)
-          }
-          val (lo, hi) = ZipNum.prefixBounds(prefix)
-          ZipNum.selectBlocks(idx, lo, hi).flatMap { e =>
-            val buf = new Array[Byte](e.length.toInt)
-            read(baseOf(e.shard) + e.offset, buf)
-            memberLines(buf)
-          }
-        case None =>
-          indexLines(read, len, shortName)
-      }
-      lines.filter(_.startsWith(prefix))
-    }
   }
 
   /** Replay single records through the ZIP: `requests` = (wacz, filename,

@@ -1275,19 +1275,15 @@ object Formats extends QueryModule {
     // WACZ packaging round trip (Webrecorder spec 1.1.1, the pywb-stack
     // portable-archive container): one .wacz per WARC shard — STORED
     // inner WARC + sorted CDXJ index + pages list + self-verifying
-    // datapackage — then the CDXJ read back through the engine's own
-    // central-directory scan (ONE bounded tail read + the index entry
-    // per file; the archive member is never touched — O(index), not
-    // O(archive)). The oracle replays urlkey/ts/url/status/mime from
-    // the cdx CTE, so the whole pack→locate→parse path must be faithful.
+    // datapackage — then the CDXJ read back through format("wacz")
+    // (ONE bounded tail read + the index entry per file; the archive
+    // member is never touched — O(index), not O(archive)). The oracle
+    // replays urlkey/ts/url/status/mime from the cdx CTE, so the whole
+    // pack→locate→parse path must be faithful.
     "sink_wacz" -> ((s, d) => {
       val dir = waczCorpus(s, d)
-      graft.formats.Wacz.scanIndex(s, dir + "/*.wacz")
-        .select(col("wacz") +: Cdx.lineCols(col("line")): _*)
-        .select(col("wacz"), col("urlkey"), col("ts"),
-          get_json_object(col("json"), "$.url").as("url"),
-          get_json_object(col("json"), "$.status").cast("int").as("status"),
-          get_json_object(col("json"), "$.mime").as("mime"))
+      s.read.format("wacz").load(dir + "/*.wacz")
+        .select("wacz", "urlkey", "ts", "url", "status", "mime")
         .orderBy("wacz", "urlkey", "ts", "url", "status", "mime")
     }),
 
@@ -1298,13 +1294,9 @@ object Formats extends QueryModule {
     // keeps the replay query-sized, the serving reality.
     "wacz_fetch_record" -> ((s, d) => {
       val dir = waczCorpus(s, d)
-      val ptrs = graft.formats.Wacz.scanIndex(s, dir + "/*.wacz")
-        .select(col("wacz") +: Cdx.lineCols(col("line")): _*)
+      val ptrs = s.read.format("wacz").load(dir + "/*.wacz")
         .where(col("urlkey").startsWith("org,example,u"))
-        .select(col("wacz"),
-          get_json_object(col("json"), "$.filename").as("filename"),
-          get_json_object(col("json"), "$.offset").cast("long").as("offset"),
-          get_json_object(col("json"), "$.length").cast("long").as("length"))
+        .select("wacz", "filename", "offset", "length")
       graft.formats.Wacz.fetchRecords(s, ptrs, dir)
         .where(col("record_type") === "response")
         .select(col("url"), col("ts"), col("status"), col("mime"),
@@ -1332,32 +1324,30 @@ object Formats extends QueryModule {
     // WARC shard (the py-wacz packaging), the merged CDXJ urlkey-sorted
     // ACROSS members by the partition sort and written as index.cdx.gz
     // blocks + index.idx pointers. This key reads the WHOLE blocked
-    // index back through scanIndex; wacz_prefix_lookup serves the
+    // index back through format("wacz"); wacz_prefix_lookup serves the
     // pruned path off the same archives. The oracle replays
     // (wacz, urlkey, ts, member) from the cdx CTE, so the grouping, the
     // cross-member sort, the member attribution, AND the block framing
     // round trip are all pinned.
     "sink_wacz_collection" -> ((s, d) => {
       val dir = waczCollCorpus(s, d)
-      graft.formats.Wacz.scanIndex(s, dir + "/*.wacz")
-        .select(col("wacz") +: Cdx.lineCols(col("line")): _*)
-        .select(col("wacz"), col("urlkey"), col("ts"),
-          get_json_object(col("json"), "$.filename").as("member"))
+      s.read.format("wacz").load(dir + "/*.wacz")
+        .select(col("wacz"), col("urlkey"), col("ts"), col("filename").as("member"))
         .orderBy("wacz", "urlkey", "ts", "member")
     }),
 
     // bounded prefix lookup THROUGH the ZIP (the serving shape a
-    // packaged big archive answers): index.idx block pointers select
-    // only the blocks whose key range can hold the prefix; those gzip
-    // members positioned-read out of the STORED index.cdx.gz — the
-    // ZipNum cluster.idx discipline inside a container. Oracle = the
-    // prefix-filtered inventory, so pruning must be lossless.
+    // packaged big archive answers): the pushed prefix bounds the key
+    // range, so format("wacz") reads index.idx and only the blocks whose
+    // key range can hold the prefix, positioned-read out of the STORED
+    // index.cdx.gz — the ZipNum cluster.idx discipline inside a
+    // container. Oracle = the prefix-filtered inventory, so pruning must
+    // be lossless.
     "wacz_prefix_lookup" -> ((s, d) => {
       val dir = waczCollCorpus(s, d)
-      graft.formats.Wacz.lookupPrefix(s, dir + "/*.wacz", "org,example,medium)")
-        .select(col("wacz") +: Cdx.lineCols(col("line")): _*)
-        .select(col("wacz"), col("urlkey"), col("ts"),
-          get_json_object(col("json"), "$.filename").as("member"))
+      s.read.format("wacz").load(dir + "/*.wacz")
+        .where(col("urlkey").startsWith("org,example,medium)"))
+        .select(col("wacz"), col("urlkey"), col("ts"), col("filename").as("member"))
         .orderBy("wacz", "urlkey", "ts", "member")
     }),
 
@@ -1399,12 +1389,8 @@ object Formats extends QueryModule {
       val bad = graft.formats.Wacz.verify(s, dir + "/*.wacz")
         .where(!col("ok")).limit(1).collect()
       require(bad.isEmpty, s"wacz publish failed verification: ${bad.mkString(", ")}")
-      val ptrs = graft.formats.Wacz.scanIndex(s, dir + "/*.wacz")
-        .select(col("wacz") +: Cdx.lineCols(col("line")): _*)
-        .select(col("wacz"),
-          get_json_object(col("json"), "$.filename").as("filename"),
-          get_json_object(col("json"), "$.offset").cast("long").as("offset"),
-          get_json_object(col("json"), "$.length").cast("long").as("length"))
+      val ptrs = s.read.format("wacz").load(dir + "/*.wacz")
+        .select("wacz", "filename", "offset", "length")
       graft.formats.Wacz.fetchRecords(s, ptrs, dir)
         .select(col("url"), col("ts"), col("status"), col("mime"),
           sha2(col("payload"), 256).as("body_sha256"))

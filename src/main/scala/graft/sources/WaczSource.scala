@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util
 
-import graft.formats.{SerializableHadoopConf, Wacz}
+import graft.formats.{SerializableHadoopConf, Wacz, ZipNum}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
@@ -18,8 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** DataSource V2 for WACZ archives: `spark.read.format("wacz").load(glob)`
   * exposes the parsed CDXJ index — the query surface a packaged archive
   * serves — WITHOUT extracting anything: per archive the reader pays one
-  * bounded tail read for the ZIP central directory plus the index entry
-  * itself (the [[Wacz.scanIndex]] discipline), never O(archive) bytes.
+  * bounded tail read for the ZIP central directory plus the index it
+  * needs, never O(archive) bytes. It is the only reader of an archive's
+  * index: the full scan and the prefix lookup are both this source.
   *
   * Completes the format family next to [[WarcSource]] ("warc") and
   * [[ZipNumSource]] ("zipnum"). Pushdown surface:
@@ -29,8 +30,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    as the zipnum reader's.
   *  - `SupportsPushDownFilters`: urlkey string predicates are applied to
   *    the line PREFIX before any JSON parse — a prefix lookup touches
-  *    the JSON of matching lines only. Always residual (Spark re-checks;
-  *    the skip is a parse-cost optimization, not a correctness claim).
+  *    the JSON of matching lines only. When they bound the key range
+  *    ([[ZipNumSource.rangeFromFilters]]) and the archive has the
+  *    big-archive index (`indexes/index.idx`), only the idx and the
+  *    blocks it selects are read ([[Wacz.indexBlocks]], each block
+  *    through one [[graft.formats.ZipNum.BlockReader]]); otherwise every
+  *    index line is read ([[Wacz.indexLines]]). Always residual (Spark
+  *    re-checks), so neither the skip nor the pruning can change rows.
   */
 class WaczSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "wacz"
@@ -105,6 +111,8 @@ final class WaczScanBuilder(pathGlob: String, conf: SerializableHadoopConf)
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = WaczSource.schema
 
+  // No ts predicate is pushed: index.idx first keys are urlkeys only,
+  // so a ts bound would prune blocks that still hold matching lines.
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter {
       case EqualTo("urlkey", _: String) => true
@@ -169,15 +177,31 @@ final class WaczPartitionReader(
     required.fieldNames.exists(WaczSource.jsonFields.contains)
   private val mapper =
     if (needsJson) new com.fasterxml.jackson.databind.ObjectMapper() else null
+  private val blockReader = new ZipNum.BlockReader(sconf.value)
 
-  // the whole read is the index entry: central directory + one entry
+  // Central directory, then either the idx-selected blocks of the
+  // big-archive index (a urlkey-bounded scan of an archive that has
+  // indexes/index.idx) or every index line. A block's lines are handed
+  // out only once its gzip trailer has verified: BlockReader.lines
+  // returns after the whole member is read.
   private val lines: Iterator[String] = {
+    val range = ZipNumSource.rangeFromFilters(pushed)
     val p = new Path(file)
     val in = p.getFileSystem(sconf.value).open(p)
-    try {
+    val index = try {
       val read: (Long, Array[Byte]) => Unit = (pos, buf) => in.readFully(pos, buf)
-      Wacz.indexLines(read, fileLen, shortName).iterator
+      val dir = Wacz.centralDirectory(read, fileLen)
+      val blocks =
+        if (range.lo.isEmpty && range.hi.isEmpty) None
+        else Wacz.indexBlocks(read, dir, shortName, range.lo, range.hi)
+      blocks.toRight(Wacz.indexLines(read, dir, shortName))
     } finally in.close()
+    index match {
+      case Left(all) => all.iterator
+      case Right(blocks) => blocks.iterator.flatMap { case (offset, length) =>
+        blockReader.lines(file, offset, length)
+      }
+    }
   }
 
   private var row: InternalRow = _
@@ -235,5 +259,5 @@ final class WaczPartitionReader(
   }
 
   override def get(): InternalRow = row
-  override def close(): Unit = ()
+  override def close(): Unit = blockReader.close()
 }

@@ -49,43 +49,89 @@ class WaczSpec extends SparkSpec {
       withClue(what) { intercept[Exception](Wacz.fetchRecords(spark, ptr, dir).collect()) }
   }
 
-  private def writeFixture(dir: String): Unit = {
+  /** a fresh, empty directory */
+  private def freshDir(dir: String): java.nio.file.Path = {
     val p = Paths.get(dir)
     if (Files.exists(p))
       Files.walk(p).sorted(java.util.Comparator.reverseOrder())
         .forEach(q => Files.deleteIfExists(q))
     Files.createDirectories(p)
+  }
+
+  private def writeFixture(dir: String): Unit = {
+    freshDir(dir)
     Wacz.write(fixtureDf, dir)
   }
+
+  /** the non-empty lines of a plain index entry, read by the JDK */
+  private def jdkIndexLines(wacz: String, entry: String = "indexes/index.cdx"): Seq[String] = {
+    val zf = new java.util.zip.ZipFile(wacz)
+    try new String(zf.getInputStream(zf.getEntry(entry)).readAllBytes(), "UTF-8")
+      .split("\n").filter(_.nonEmpty).toSeq
+    finally zf.close()
+  }
+
+  /** a ZIP of STORED entries, in the given order */
+  private def storedZip(p: java.nio.file.Path, entries: (String, Array[Byte])*): Unit = {
+    val out = new java.util.zip.ZipOutputStream(Files.newOutputStream(p))
+    try entries.foreach { case (name, bytes) =>
+      val e = new java.util.zip.ZipEntry(name)
+      e.setMethod(java.util.zip.ZipEntry.STORED)
+      e.setSize(bytes.length.toLong)
+      e.setCompressedSize(bytes.length.toLong)
+      val c = new java.util.zip.CRC32(); c.update(bytes)
+      e.setCrc(c.getValue)
+      e.setTimeLocal(java.time.LocalDateTime.of(2020, 1, 1, 0, 0, 0))
+      out.putNextEntry(e); out.write(bytes); out.closeEntry()
+    } finally out.close()
+  }
+
+  private def gz(lines: String): Array[Byte] =
+    graft.formats.Gzip.compressMember(lines.getBytes("UTF-8"))
+
+  /** each entry's data offset in the archive at `path` */
+  private def dataOffsets(path: java.nio.file.Path): Map[String, Long] = {
+    val bytes = Files.readAllBytes(path)
+    val read: (Long, Array[Byte]) => Unit =
+      (pos, buf) => System.arraycopy(bytes, pos.toInt, buf, 0, buf.length)
+    Wacz.centralDirectory(read, bytes.length.toLong)
+      .map(e => e.name -> Wacz.dataOffset(read, e)).toMap
+  }
+
+  /** every message on an exception's cause chain */
+  private def messages(t: Throwable): Seq[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(x => Option(x.getMessage).getOrElse("")).toSeq
 
   test("round trip: index scan + range fetch reproduce every record") {
     val dir = s"$base/rt"
     writeFixture(dir)
     assert(Files.list(Paths.get(dir)).filter(_.toString.endsWith(".wacz")).count() == 2)
 
-    val idx = Wacz.scanIndex(spark, s"$dir/*.wacz")
-      .select(org.apache.spark.sql.functions.col("wacz") +:
-        Cdx.lineCols(org.apache.spark.sql.functions.col("line")): _*)
+    val idx = spark.read.format("wacz").load(s"$dir/*.wacz")
+      .select("wacz", "urlkey", "url", "status", "filename")
       .collect().sortBy(r => (r.getString(0), r.getString(1)))
     assert(idx.length == 4)
     assert(idx.map(_.getString(0)).distinct.toSeq == Seq("w-0.wacz", "w-1.wacz"))
-    // sorted by urlkey within each wacz, json carries the pointer fields
+    // sorted by urlkey within each wacz, with the pointer fields
     assert(idx(0).getString(1) == "com,example)/a")
-    val j0 = idx(0).getString(3)
-    assert(j0.contains("\"url\":\"http://example.com/a\""))
-    assert(j0.contains("\"status\":\"200\""))
-    assert(j0.contains("\"filename\":\"w-0.warc.gz\""))
-    // the resource row indexes without a status field
-    assert(!idx(2).getString(3).contains("\"status\""))
+    assert(idx(0).getString(2) == "http://example.com/a")
+    assert(idx(0).getInt(3) == 200)
+    assert(idx(0).getString(4) == "w-0.warc.gz")
+    assert(idx(2).isNullAt(3)) // the resource row
+    // the raw CDXJ dialect, read by the JDK: numbers as strings, no
+    // status on the resource row, filename naming the inner member
+    val raw = jdkIndexLines(s"$dir/w-0.wacz")
+    assert(raw.length == 3 && raw(0).startsWith("com,example)/a "))
+    assert(raw(0).contains("\"url\":\"http://example.com/a\""))
+    assert(raw(0).contains("\"status\":\"200\""))
+    assert(raw(0).contains("\"filename\":\"w-0.warc.gz\""))
+    assert(raw(2).startsWith("com,example)/r ") && !raw(2).contains("\"status\""))
 
     // fetch EVERY pointer back through the ZIP and compare payloads
     import org.apache.spark.sql.functions._
-    val ptrs = Wacz.scanIndex(spark, s"$dir/*.wacz")
-      .select(col("wacz") +: Cdx.lineCols(col("line")): _*)
-      .select(col("wacz"),
-        get_json_object(col("json"), "$.filename").as("filename"),
-        get_json_object(col("json"), "$.offset").cast("long").as("offset"),
-        get_json_object(col("json"), "$.length").cast("long").as("length"))
+    val ptrs = spark.read.format("wacz").load(s"$dir/*.wacz")
+      .select("wacz", "filename", "offset", "length")
     val got = Wacz.fetchRecords(spark, ptrs, dir)
       .select("url", "ts", "status", "mime", "payload")
       .collect().map(r => (r.getString(0), r.getString(1),
@@ -229,12 +275,8 @@ class WaczSpec extends SparkSpec {
 
     // every pointer replays through ITS member
     import org.apache.spark.sql.functions._
-    val ptrs = Wacz.scanIndex(spark, s"$dir/*.wacz")
-      .select(col("wacz") +: Cdx.lineCols(col("line")): _*)
-      .select(col("wacz"),
-        get_json_object(col("json"), "$.filename").as("filename"),
-        get_json_object(col("json"), "$.offset").cast("long").as("offset"),
-        get_json_object(col("json"), "$.length").cast("long").as("length"))
+    val ptrs = spark.read.format("wacz").load(s"$dir/*.wacz")
+      .select("wacz", "filename", "offset", "length")
     val got = Wacz.fetchRecords(spark, ptrs, dir)
       .select("payload").collect()
       .map(r => new String(r.getAs[Array[Byte]](0), "UTF-8")).sorted.toSeq
@@ -253,7 +295,7 @@ class WaczSpec extends SparkSpec {
     assert(ver.values.forall(identity), ver.toString)
   }
 
-  /** the blocks `lookupPrefix` reads for `prefix` out of an index whose
+  /** the blocks a prefix read selects out of an index whose
     * blocks start at `firstKeys`: ZipNum's pruning rule over its prefix
     * bounds, as block numbers */
   private def selectBlocks(firstKeys: IndexedSeq[String], prefix: String): Seq[Int] = {
@@ -293,50 +335,33 @@ class WaczSpec extends SparkSpec {
     assert(sel == Seq(1, 2), s"got $sel")
   }
 
-  test("lookupPrefix parses the CDXJ-json idx dialect and honors its filename field") {
+  test("a prefix read prunes through a CDXJ-json idx and honors its filename field") {
     val dir = s"$base/jsonidx"
-    Files.createDirectories(Paths.get(dir))
-    val p = Paths.get(s"$dir/jsonidx.wacz")
-    def gz(lines: String): Array[Byte] =
-      graft.formats.Gzip.compressMember(lines.getBytes("UTF-8"))
+    freshDir(dir)
+    // two block members: a pointer that ignored its filename would read
+    // the com block at offset 0 of index.cdx.gz for the org prefix
     val b1 = gz("com,a)/ 20200101000000 {\"url\":\"http://a/\"}\n" +
       "com,b)/ 20200102000000 {\"url\":\"http://b/\"}\n")
     val b2 = gz("org,c)/ 20200103000000 {\"url\":\"http://c/\"}\n")
-    val cdxGz = b1 ++ b2
     val idx = (s"""com,a)/ 20200101000000 {"offset": 0, "length": ${b1.length}, "filename": "index.cdx.gz"}""" +
       "\n" +
-      s"""org,c)/ 20200103000000 {"offset": ${b1.length}, "length": ${b2.length}, "filename": "index.cdx.gz"}""" +
+      s"""org,c)/ 20200103000000 {"offset": 0, "length": ${b2.length}, "filename": "part-1.cdx.gz"}""" +
       "\n").getBytes("UTF-8")
-    val out = new java.util.zip.ZipOutputStream(Files.newOutputStream(p))
-    try {
-      def stored(name: String, bytes: Array[Byte]): Unit = {
-        val e = new java.util.zip.ZipEntry(name)
-        e.setMethod(java.util.zip.ZipEntry.STORED)
-        e.setSize(bytes.length.toLong)
-        e.setCompressedSize(bytes.length.toLong)
-        val c = new java.util.zip.CRC32(); c.update(bytes)
-        e.setCrc(c.getValue)
-        e.setTimeLocal(java.time.LocalDateTime.of(2020, 1, 1, 0, 0, 0))
-        out.putNextEntry(e); out.write(bytes); out.closeEntry()
-      }
-      stored("indexes/index.cdx.gz", cdxGz)
-      stored("indexes/index.idx", idx)
-    } finally out.close()
-    val got = Wacz.lookupPrefix(spark, s"$dir/*.wacz", "org,")
-      .collect().map(_.getString(1)).toSeq
-    assert(got == Seq("org,c)/ 20200103000000 {\"url\":\"http://c/\"}"), got.toString)
-    val all = Wacz.lookupPrefix(spark, s"$dir/*.wacz", "com,")
-      .collect().map(_.getString(1)).sorted.toSeq
-    assert(all.length == 2 && all.forall(_.startsWith("com,")), all.toString)
+    storedZip(Paths.get(s"$dir/jsonidx.wacz"),
+      "indexes/index.cdx.gz" -> b1, "indexes/part-1.cdx.gz" -> b2, "indexes/index.idx" -> idx)
+    import org.apache.spark.sql.functions.col
+    def read(prefix: String): Seq[(String, String, String)] =
+      spark.read.format("wacz").load(s"$dir/*.wacz")
+        .where(col("urlkey").startsWith(prefix)).select("urlkey", "ts", "url")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).sorted.toSeq
+    assert(read("org,") == Seq(("org,c)/", "20200103000000", "http://c/")))
+    assert(read("com,") == Seq(("com,a)/", "20200101000000", "http://a/"),
+      ("com,b)/", "20200102000000", "http://b/")))
   }
 
   test("big-archive index form: blocked cdx.gz + idx; pruned lookup == filtered scan") {
     val dir = s"$base/blocked"
-    val p = Paths.get(dir)
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => Files.deleteIfExists(q))
-    Files.createDirectories(p)
+    freshDir(dir)
     Wacz.write(fixtureDf.withColumn(
       "collection", org.apache.spark.sql.functions.lit("big")), dir,
       indexLinesPerBlock = 2)
@@ -358,18 +383,152 @@ class WaczSpec extends SparkSpec {
     } finally zf.close()
 
     // the full scan reads the blocked form transparently
-    val full = Wacz.scanIndex(spark, s"$dir/*.wacz")
-      .collect().map(_.getString(1)).sorted.toSeq
+    import org.apache.spark.sql.functions.col
+    val scan = spark.read.format("wacz").load(s"$dir/*.wacz")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.collect().map(_.toSeq).sortBy(_.mkString(" ")).toSeq
+    val full = rows(scan)
     assert(full.length == 4)
-    // pruned lookup == prefix filter of the full scan (losslessness)
-    val pruned = Wacz.lookupPrefix(spark, s"$dir/*.wacz", "com,example)")
-      .collect().map(_.getString(1)).sorted.toSeq
-    assert(pruned == full.filter(_.startsWith("com,example)")), pruned.toString)
+    // pruned read == prefix filter of the full scan (losslessness)
+    val pruned = rows(scan.where(col("urlkey").startsWith("com,example)")))
+    assert(pruned == full.filter(_(1).toString.startsWith("com,example)")), pruned.toString)
     assert(pruned.length == 3)
     // and the manifest still verifies (5 resources + the seal)
     val ver = Wacz.verify(spark, s"$dir/*.wacz").select("path", "ok")
       .collect().map(r => (r.getString(0), r.getBoolean(1))).toMap
     assert(ver.size == 6 && ver.values.forall(identity), ver.toString)
+  }
+
+  test("a prefix read skips unselected blocks: a corrupt one fails only the full read") {
+    val dir = s"$base/prune"
+    freshDir(dir)
+    Wacz.write(fixtureDf.withColumn(
+      "collection", org.apache.spark.sql.functions.lit("big")), dir,
+      indexLinesPerBlock = 2)
+    val f = Paths.get(s"$dir/big.wacz")
+    // block 0 holds com,example)/a and /b; the prefix org, selects only
+    // block 1 (its first key com,example)/r is below org, but block 0
+    // ends below it)
+    val idx = jdkIndexLines(f.toString, "indexes/index.idx").map(_.split("\t"))
+    assert(idx.map(_(0)) == Seq("com,example)/a", "com,example)/r"))
+    val block0 = (dataOffsets(f)("indexes/index.cdx.gz") + idx(0)(2).toLong).toInt
+    val len0 = idx(0)(3).toInt
+    val bytes = Files.readAllBytes(f)
+    // a byte of block 0's deflate data (after the 10-byte gzip header,
+    // before the 8-byte trailer) whose flip still inflates to as many
+    // bytes from the same input, so only the CRC check can catch it
+    val deflate = bytes.slice(block0 + 10, block0 + len0 - 8)
+    def inflatesWhole(d: Array[Byte]): Option[Array[Byte]] = {
+      val inf = new java.util.zip.Inflater(true)
+      try {
+        inf.setInput(d)
+        val out = new Array[Byte](4096)
+        val n = inf.inflate(out)
+        if (inf.finished() && inf.getRemaining == 0) Some(out.take(n)) else None
+      } catch { case _: java.util.zip.DataFormatException => None } finally inf.end()
+    }
+    val clean = inflatesWhole(deflate).get
+    val at = deflate.indices.find { i =>
+      val d = deflate.clone(); d(i) = (d(i) ^ 0x01).toByte
+      inflatesWhole(d).exists(o => o.length == clean.length && !o.sameElements(clean))
+    }.get
+    bytes(block0 + 10 + at) = (bytes(block0 + 10 + at) ^ 0x01).toByte
+    Files.write(f, bytes)
+
+    import org.apache.spark.sql.functions.col
+    val scan = spark.read.format("wacz").load(f.toString)
+    val pruned = scan.where(col("urlkey").startsWith("org,"))
+      .select("urlkey", "url", "filename").collect().map(_.toSeq).toSeq
+    assert(pruned == Seq(Seq("org,example)/c", "http://example.org/c", "w-1.warc.gz")))
+    val msgs = messages(intercept[Exception](scan.collect()))
+    assert(msgs.exists(_.contains("CRC")), msgs.mkString(" | "))
+  }
+
+  /** An archive with a WARC member and a two-block index whose idx is
+    * `idx(rel, w, b1, b2)`: `rel` is the WARC member's data offset
+    * relative to index.cdx.gz's (negative: it comes first), `w` its
+    * length, b1 and b2 the block lengths. The WARC member decodes to a
+    * well-formed index line under the prefix org,, so a pointer that
+    * reaches it yields a wrong row. */
+  private def lyingArchive(dir: String)(idx: (Long, Int, Int, Int) => String): String = {
+    freshDir(dir)
+    val warc = gz("org,evil)/ 20200101000000 {\"url\":\"http://evil/\"}\n")
+    val b1 = gz("org,a)/ 20200101000000 {\"url\":\"http://a/\"}\n")
+    val b2 = gz("org,b)/ 20200102000000 {\"url\":\"http://b/\"}\n")
+    val cdxName = "indexes/index.cdx.gz"
+    // STORED entries with no extra field: data follows a 30-byte local
+    // header and the name
+    val rel = -(warc.length + 30L + cdxName.length)
+    val path = s"$dir/lie.wacz"
+    storedZip(Paths.get(path), "archive/x.warc.gz" -> warc, cdxName -> (b1 ++ b2),
+      "indexes/index.idx" -> idx(rel, warc.length, b1.length, b2.length).getBytes("UTF-8"))
+    val off = dataOffsets(Paths.get(path))
+    assert(off("archive/x.warc.gz") - off(cdxName) == rel)
+    path
+  }
+
+  /** the prefix read of `path` must fail naming the archive and `line` */
+  private def assertLieFails(path: String, line: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    val msgs = messages(intercept[Exception](spark.read.format("wacz").load(path)
+      .where(col("urlkey").startsWith("org,")).collect()))
+    assert(msgs.exists(m => m.contains("lie.wacz") && m.contains(line)), msgs.mkString(" | "))
+  }
+
+  test("an idx pointer with a negative offset into the WARC bytes fails loudly") {
+    var line = ""
+    val path = lyingArchive(s"$base/lie_negative_offset") { (rel, w, b1, b2) =>
+      line = s"org,a)/\tindex.cdx.gz\t$rel\t$w"
+      s"$line\norg,b)/\tindex.cdx.gz\t$b1\t$b2\n"
+    }
+    assertLieFails(path, line)
+  }
+
+  test("an idx pointer with a zero or negative length fails loudly") {
+    for (len <- Seq("0", "-7")) {
+      var line = ""
+      val path = lyingArchive(s"$base/lie_length") { (_, _, b1, b2) =>
+        line = s"org,b)/\tindex.cdx.gz\t$b1\t$len"
+        s"org,a)/\tindex.cdx.gz\t0\t$b1\n$line\n"
+      }
+      withClue(len) { assertLieFails(path, line) }
+    }
+  }
+
+  test("an idx pointer past the end of its entry fails loudly") {
+    var line = ""
+    val path = lyingArchive(s"$base/lie_oversized") { (_, _, b1, b2) =>
+      line = s"org,b)/\tindex.cdx.gz\t$b1\t${b2 + 1}"
+      s"org,a)/\tindex.cdx.gz\t0\t$b1\n$line\n"
+    }
+    assertLieFails(path, line)
+  }
+
+  test("an idx json pointer with a non-numeric offset fails loudly") {
+    var line = ""
+    val path = lyingArchive(s"$base/lie_json_text") { (_, _, b1, b2) =>
+      line = s"""org,b)/ 20200102000000 {"offset": "x", "length": $b2}"""
+      s"""org,a)/ 20200101000000 {"offset": 0, "length": $b1}\n$line\n"""
+    }
+    assertLieFails(path, line)
+  }
+
+  test("an idx json pointer with a negative offset fails loudly") {
+    var line = ""
+    val path = lyingArchive(s"$base/lie_json_negative") { (rel, w, b1, b2) =>
+      line = s"""org,a)/ 20200101000000 {"offset": $rel, "length": $w}"""
+      s"""$line\norg,b)/ 20200102000000 {"offset": $b1, "length": $b2}\n"""
+    }
+    assertLieFails(path, line)
+  }
+
+  test("an idx json pointer with a fractional length fails loudly") {
+    var line = ""
+    val path = lyingArchive(s"$base/lie_json_fraction") { (_, _, b1, b2) =>
+      line = s"""org,b)/ 20200102000000 {"offset": $b1, "length": $b2.9}"""
+      s"""org,a)/ 20200101000000 {"offset": 0, "length": $b1}\n$line\n"""
+    }
+    assertLieFails(path, line)
   }
 
   test("a truncated DEFLATED entry fails loudly instead of hanging") {
@@ -403,7 +562,7 @@ class WaczSpec extends SparkSpec {
     java.util.Arrays.fill(bytes, dataStart + (dataEnd - dataStart) / 2, dataEnd, 0.toByte)
     Files.write(p, bytes)
     val ex = intercept[Exception] {
-      Wacz.scanIndex(spark, s"$dir/trunc.wacz").collect()
+      spark.read.format("wacz").load(s"$dir/trunc.wacz").collect()
     }
     assert(ex.getMessage != null)
   }
@@ -441,7 +600,7 @@ class WaczSpec extends SparkSpec {
     } finally ch.close()
   }
 
-  test("scanIndex reads a foreign DEFLATED index entry") {
+  test("format(wacz) reads a foreign DEFLATED index entry") {
     val dir = s"$base/foreign"
     Files.createDirectories(Paths.get(dir))
     val p = Paths.get(s"$dir/foreign.wacz")
@@ -453,10 +612,10 @@ class WaczSpec extends SparkSpec {
       out.write("com,x)/ 20200101000000 {\"url\":\"http://x.com/\"}\n".getBytes("UTF-8"))
       out.closeEntry()
     } finally out.close()
-    val lines = Wacz.scanIndex(spark, s"$dir/*.wacz").collect()
-    assert(lines.length == 1)
-    assert(lines.head.getString(0) == "foreign.wacz")
-    assert(lines.head.getString(1).startsWith("com,x)/ 20200101000000"))
+    val rows = spark.read.format("wacz").load(s"$dir/*.wacz")
+      .select("wacz", "urlkey", "ts", "url").collect()
+    assert(rows.map(_.toSeq).toSeq ==
+      Seq(Seq("foreign.wacz", "com,x)/", "20200101000000", "http://x.com/")))
   }
 
   test("write pre-flight rejects EMPTY normalized basenames (trailing '/', bare extension)") {
@@ -496,25 +655,24 @@ class WaczSpec extends SparkSpec {
     assert(Files.list(Paths.get(dir)).filter(_.toString.endsWith(".wacz")).count() == 0)
   }
 
-  test("scanIndex/verify expand a directory match to its .wacz children; dir with none fails loudly") {
+  test("format(wacz) and verify expand a directory to its .wacz children") {
     val dir = s"$base/dirglob"
     writeFixture(dir)
     // the glob matches the DIRECTORY itself — readers expand to children
-    val viaDir = Wacz.scanIndex(spark, dir).collect().map(_.getString(1)).sorted.toSeq
-    val viaGlob = Wacz.scanIndex(spark, s"$dir/*.wacz").collect().map(_.getString(1)).sorted.toSeq
-    assert(viaDir == viaGlob && viaDir.length == 4, viaDir.toString)
+    def index(path: String): Seq[String] = spark.read.format("wacz").load(path)
+      .select("wacz", "urlkey", "ts").collect().map(_.mkString(" ")).sorted.toSeq
+    val viaDir = index(dir)
+    assert(viaDir == index(s"$dir/*.wacz") && viaDir.length == 4, viaDir.toString)
     assert(Wacz.verify(spark, dir).count() == 8)
     // a directory with NO archives fails loudly, not an empty frame
     val empty = s"$base/dirglob_empty"
     Files.createDirectories(Paths.get(empty))
     val ex = intercept[IllegalArgumentException] {
-      Wacz.scanIndex(spark, empty)
+      Wacz.verify(spark, empty)
     }
     assert(ex.getMessage.contains("no archive files"), ex.getMessage)
     // the V2 source lists archives through the same rule
-    val ev = intercept[Exception](spark.read.format("wacz").load(empty).count())
-    val msgs = Iterator.iterate(ev: Throwable)(_.getCause).takeWhile(_ != null)
-      .map(t => Option(t.getMessage).getOrElse("")).toSeq
+    val msgs = messages(intercept[Exception](spark.read.format("wacz").load(empty).count()))
     assert(msgs.exists(_.contains("no archive files")), msgs.mkString(" | "))
   }
 
