@@ -1,12 +1,19 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.formats.ZipNum
-import graft.sources.ZipNumScan
+import graft.sources.{FoldLocalRelation, ZipNumScan}
 import org.apache.spark.sql.{DataFrame, GraftDatasets, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{JoinedRow, Literal}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{Limit, LocalRelation, LogicalPlan, Repartition}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The pywb cdx-server query surface (SURVEY §2.9 — the consumer contract
   * the reference's output format exists to serve), answered natively over
@@ -23,11 +30,20 @@ import org.apache.spark.sql.functions._
   *   fl=urlkey,timestamp        -> withFields (output projection)
   *   limit=N / sort=reverse     -> limit / latest
   *
-  * A lookup whose idx selection is at most
-  * [[ZipNumScan.BlocksPerPartition]] blocks reads those blocks on the
-  * driver when its DataFrame is built, not at the action, and keeps only
-  * the lines under its urlkey prefix (pywb's block-local scan); larger
-  * selections are read by the parallel scan when the action runs.
+  * The sort-shaped lookups (exactUrl, captures, prefix, host, domain,
+  * closest) are each one description over the response columns plus the
+  * call's values as parameter columns. The server analyzes each
+  * description once, over a row-less leaf, the first time it serves that
+  * shape; the session time zone `closest` parses with is read then. A
+  * lookup whose idx selection is at most [[ZipNumScan.BlocksPerPartition]]
+  * blocks reads those blocks on the driver when its DataFrame is built,
+  * keeping only the lines under its urlkey prefix (or of its exact key),
+  * evaluates the analyzed description over them with
+  * [[FoldLocalRelation.fold]] and returns one DataFrame over the result
+  * rows: no analysis of the lookup's operators, no Spark job. Larger
+  * selections apply the same description to the parallel V2 scan, which
+  * reads its blocks when the action runs. The other lookups compose
+  * DataFrame operators over a sort-shaped lookup's result.
   */
 final class CdxServer(spark: SparkSession, clusterDir: String) {
 
@@ -50,71 +66,121 @@ final class CdxServer(spark: SparkSession, clusterDir: String) {
     * parameter sweep). Resolved once per server; every query still
     * builds its own scan, which re-reads cluster.idx. */
   private lazy val relation: DataFrame =
-    spark.read.format("zipnum").load(clusterDir).select("urlkey", "ts", "json")
+    spark.read.format("zipnum").load(clusterDir).select(CdxServer.Response.map(col): _*)
 
-  private def scan(prefixKey: Option[String]): DataFrame = prefixKey match {
-    case None => relation
-    case Some(p) =>
-      val blocks = idxFor(p)
-      // A selection that would fit one scan partition is read here, on
-      // the driver, into a LocalRelation that holds only the lines under
-      // the prefix (the reader drops the rest before building rows);
-      // coalesce(1) over it reports SinglePartition, which satisfies every
-      // orderBy, window and aggregate above. GraftExtensions'
-      // FoldLocalRelation folds a sort-shaped lookup over it whole (no
-      // job); any other lookup runs as ONE job with no exchange. Larger
-      // selections keep the parallel V2 scan, which runs its own idx
-      // search from the pushed-down filter.
-      if (blocks.size <= ZipNumScan.BlocksPerPartition) {
-        val schema = relation.schema
-        val rows = ZipNumScan.readRows(
-          clusterDir, blocks, schema.fieldNames, spark.sparkContext.hadoopConfiguration, Some(p))
-        GraftDatasets.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
-          .coalesce(1)
-      } else relation.filter(col("urlkey").startsWith(p))
+  private val shapesAnalyzed = new AtomicInteger
+
+  /** how many lookup shapes this server has analyzed */
+  private[graft] def analyzedShapes: Int = shapesAnalyzed.get
+
+  /** One sort-shaped lookup: `describe` over a frame of the response
+    * columns and the parameter columns, analyzed once over a row-less
+    * leaf. Analysis leaves runtime-replaceable expressions (such as
+    * `try_to_timestamp`) for the optimizer, so they are replaced here,
+    * once, and the plan is evaluable as it stands. An `exactKey` shape
+    * reads only the lines of the key `p_key`; any other reads every line
+    * under it. */
+  private final class Shape(val exactKey: Boolean)(val describe: DataFrame => DataFrame) {
+    shapesAnalyzed.incrementAndGet()
+    private val plan: LogicalPlan = ReplaceExpressions(describe(GraftDatasets.ofRows(spark,
+      LocalRelation(DataTypeUtils.toAttributes(CdxServer.leafSchema))))
+      .select(CdxServer.Response.map(col): _*).queryExecution.analyzed)
+
+    /** the analyzed plan over `rows` under coalesce(1), in place of the
+      * row-less leaf */
+    def over(rows: Seq[InternalRow]): LogicalPlan = plan.transformUp {
+      case leaf: LocalRelation => Repartition(1, shuffle = false, leaf.copy(data = rows))
+    }
+  }
+
+  private lazy val exactShape = new Shape(exactKey = true)(
+    _.filter(col("urlkey") === col("p_key")).orderBy("ts"))
+  private lazy val capturesShape = new Shape(exactKey = true)(
+    _.filter(col("urlkey") === col("p_key") &&
+      col("ts") >= col("p_from") && col("ts") <= col("p_to")).orderBy("ts"))
+  private lazy val prefixShape = new Shape(exactKey = false)(_.orderBy("urlkey", "ts"))
+  private lazy val domainShape = new Shape(exactKey = false)(
+    _.filter(col("urlkey").startsWith(concat(col("p_key"), lit(")"))) ||
+      col("urlkey").startsWith(concat(col("p_key"), lit(","))))
+      .orderBy("urlkey", "ts"))
+  // try_to_timestamp, not to_timestamp: under Spark 4's default ANSI
+  // mode one malformed ts in the cluster would abort the whole query;
+  // a null dist sorts LAST so a corrupt row can never be the "best".
+  // The distance is ordering-only: the response drops it
+  private lazy val closestShape = new Shape(exactKey = true)(
+    _.filter(col("urlkey") === col("p_key"))
+      .withColumn("dist", abs(
+        unix_timestamp(try_to_timestamp(col("ts"), lit("yyyyMMddHHmmss"))) -
+          unix_timestamp(try_to_timestamp(col("p_target"), lit("yyyyMMddHHmmss")))))
+      .orderBy(col("dist").asc_nulls_last, col("ts")))
+
+  /** `shape` over the lines under `params.key`, with `params` as its
+    * parameter columns and at most `limit` rows. Over a small selection
+    * the result is one LocalRelation of the lookup's rows, under
+    * coalesce(1) when `single` (the single partition the windows and
+    * aggregates composed over it run in). */
+  private def lookup(
+      shape: Shape, params: CdxServer.Params,
+      limit: Option[Int] = None, single: Boolean = false): DataFrame = {
+    val blocks = idxFor(params.key)
+    if (blocks.size > ZipNumScan.BlocksPerPartition) {
+      // the parallel scan runs its own idx search from the pushed filter
+      val leaf = relation.filter(col("urlkey").startsWith(params.key)).select(
+        col("*") +: CdxServer.ParamColumns.zip(params.values).map { case (name, v) =>
+          lit(v).cast(StringType).as(name)
+        }: _*)
+      val df = shape.describe(leaf).select(CdxServer.Response.map(col): _*)
+      limit.fold(df)(df.limit)
+    } else {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val values = InternalRow.fromSeq(params.values.map(UTF8String.fromString))
+      val rows = ZipNumScan.readRows(
+        clusterDir, blocks, CdxServer.Response.toArray, conf, Some(params.key), shape.exactKey)
+      val over = shape.over(rows.map(new JoinedRow(_, values)))
+      val plan = limit.fold(over)(n => Limit(Literal(n), over))
+      GraftDatasets.withActive(spark)(FoldLocalRelation.fold(plan)) match {
+        case Some(result) =>
+          val r = result.newInstance()
+          GraftDatasets.ofAnalyzed(spark, if (single) Repartition(1, shuffle = false, r) else r)
+        case None => GraftDatasets.ofRows(spark, plan)
+      }
+    }
   }
 
   /** all captures of one canonical URL key, oldest first */
-  def exactUrl(urlkey: String): DataFrame =
-    scan(Some(urlkey)).filter(col("urlkey") === urlkey).orderBy("ts")
+  def exactUrl(urlkey: String): DataFrame = exactRows(urlkey, single = false)
+
+  private def exactRows(urlkey: String, single: Boolean): DataFrame =
+    lookup(exactShape, CdxServer.Params(urlkey), single = single)
 
   /** every capture under a SURT path prefix */
-  def prefix(surtPrefix: String): DataFrame =
-    scan(Some(surtPrefix)).orderBy("urlkey", "ts")
+  def prefix(surtPrefix: String): DataFrame = prefixRows(surtPrefix, single = false)
+
+  private def prefixRows(surtPrefix: String, single: Boolean): DataFrame =
+    lookup(prefixShape, CdxServer.Params(surtPrefix), single = single)
 
   /** host-only query (pywb matchType=host): every capture of exactly
     * this host — keys under `com,example)` but NOT subdomains
     * (`com,example,sub)...`), the level between exact and [[domain]] */
-  def host(reversedHost: String): DataFrame =
-    scan(Some(reversedHost + ")")).orderBy("urlkey", "ts")
+  def host(reversedHost: String): DataFrame = prefix(reversedHost + ")")
 
   /** whole-domain query: all captures under `com,example)` including
     * subdomains (`com,example,sub)...`), i.e. keys starting with the
     * reversed host with either `)` or `,` next */
   def domain(reversedHost: String): DataFrame =
-    scan(Some(reversedHost))
-      .filter(col("urlkey").startsWith(reversedHost + ")") ||
-        col("urlkey").startsWith(reversedHost + ","))
-      .orderBy("urlkey", "ts")
+    lookup(domainShape, CdxServer.Params(reversedHost))
 
   /** time-boxed captures of a key (from/to are 14-digit inclusive bounds) */
   def captures(urlkey: String, from: String, to: String): DataFrame =
-    exactUrl(urlkey).filter(col("ts") >= from && col("ts") <= to)
+    lookup(capturesShape, CdxServer.Params(urlkey, from = from, to = to))
 
   /** k captures nearest the target timestamp (sort=closest&limit=k);
     * the distance is ordering-only — the result keeps the scan schema
     * (pywb's closest response carries no distance field) */
-  def closest(urlkey: String, target: String, k: Int): DataFrame =
-    exactUrl(urlkey)
-      // try_to_timestamp, not to_timestamp: under Spark 4's default ANSI
-      // mode one malformed ts in the cluster would abort the whole query;
-      // a null dist sorts LAST so a corrupt row can never be the "best"
-      .withColumn("dist", abs(
-        unix_timestamp(try_to_timestamp(col("ts"), lit("yyyyMMddHHmmss"))) -
-          unix_timestamp(try_to_timestamp(lit(target), lit("yyyyMMddHHmmss")))))
-      .orderBy(col("dist").asc_nulls_last, col("ts"))
-      .limit(k)
-      .drop("dist")
+  def closest(urlkey: String, target: String, k: Int): DataFrame = {
+    require(k >= 0, s"closest needs k >= 0, got $k")
+    lookup(closestShape, CdxServer.Params(urlkey, target = target), limit = Some(k))
+  }
 
   /** collapse=timestamp:N — first capture per ts-prefix granule per key.
     * Tie-break on json: real clusters hold duplicate (urlkey, ts) runs
@@ -125,7 +191,7 @@ final class CdxServer(spark: SparkSession, clusterDir: String) {
     val w = Window
       .partitionBy(col("urlkey"), substring(col("ts"), 1, tsPrefixLen))
       .orderBy("ts", "json")
-    prefix(surtPrefix)
+    prefixRows(surtPrefix, single = true)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn")
@@ -140,7 +206,7 @@ final class CdxServer(spark: SparkSession, clusterDir: String) {
     // (ts, json) total order: duplicate (urlkey, ts) peers otherwise
     // make the run-length comparison order-nondeterministic
     val w = Window.partitionBy("urlkey").orderBy("ts", "json")
-    prefix(surtPrefix)
+    prefixRows(surtPrefix, single = true)
       .withColumn("digest", get_json_object(col("json"), "$.digest"))
       .withColumn("prev_digest", lag(col("digest"), 1).over(w))
       .filter(!(col("digest") <=> col("prev_digest")))
@@ -152,7 +218,7 @@ final class CdxServer(spark: SparkSession, clusterDir: String) {
     * (ts, json) desc so duplicate-ts peers resolve deterministically */
   def latest(surtPrefix: String): DataFrame = {
     val w = Window.partitionBy("urlkey").orderBy(col("ts").desc, col("json").desc)
-    prefix(surtPrefix)
+    prefixRows(surtPrefix, single = true)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn")
@@ -190,7 +256,7 @@ final class CdxServer(spark: SparkSession, clusterDir: String) {
       monName, lit(" "), substring(col("ts"), 1, 4), lit(" "),
       substring(col("ts"), 9, 2), lit(":"), substring(col("ts"), 11, 2),
       lit(":"), substring(col("ts"), 13, 2), lit(" GMT"))
-    exactUrl(urlkey)
+    exactRows(urlkey, single = true)
       .filter(col("ts").rlike("^\\d{14}$") &&
         try_to_date(substring(col("ts"), 1, 8), "yyyyMMdd").isNotNull)
       .withColumn("ft", min("ts").over(w))
@@ -216,13 +282,13 @@ final class CdxServer(spark: SparkSession, clusterDir: String) {
     * the base prefix through cluster.idx. */
   def fuzzyMatch(urlkey: String): DataFrame = {
     val base = urlkey.takeWhile(_ != '?')
-    val exact = exactUrl(urlkey)
+    val exact = exactRows(urlkey, single = true)
     val hit = exact.agg(count(lit(1)).as("n_exact"))
     // scan on the bare base so the QUERY-LESS capture of the same URL
     // (urlkey exactly `base` — SURT keys carry no '?' for a bare URL, the
     // most natural fuzzy target) matches too; the filter then excludes
     // unrelated longer paths that share the prefix
-    val fallback = scan(Some(base))
+    val fallback = prefixRows(base, single = true)
       .filter(col("urlkey") === base || col("urlkey").startsWith(base + "?"))
       .crossJoin(broadcast(hit)).filter(col("n_exact") === 0).drop("n_exact")
     exact.select("urlkey", "ts", "json").withColumn("is_fuzzy", lit(false))
@@ -273,9 +339,9 @@ final class CdxServer(spark: SparkSession, clusterDir: String) {
     // prefix), just less pruned. Exact hits serve either way.
     val queryOnly = rule.forall(CdxServer.queryOnlyPattern)
     val probePrefix = if (queryOnly) base else rule.map(_.prefix).getOrElse(base)
-    val exact = exactUrl(urlkey)
+    val exact = exactRows(urlkey, single = true)
     val hit = exact.agg(count(lit(1)).as("n_exact"))
-    val candidates = scan(Some(probePrefix).filter(_.nonEmpty))
+    val candidates = prefixRows(probePrefix, single = true)
     val fallback = (
       if (queryOnly) candidates.filter(
         col("urlkey") === base || col("urlkey").startsWith(base + "?"))
@@ -328,7 +394,7 @@ final class CdxServer(spark: SparkSession, clusterDir: String) {
         val jsonAfter = if (j == null) col("json").isNotNull else col("json") > lit(j)
         col("ts") > afterTs || (col("ts") === afterTs && jsonAfter)
     }
-    scan(Some(surtPrefix))
+    prefixRows(surtPrefix, single = true)
       .filter(col("urlkey") >= afterUrlkey && // pushable bound: idx pruning
         (col("urlkey") > afterUrlkey || (col("urlkey") === afterUrlkey && afterKey)))
       .select("urlkey", "ts", "json") // the pywb response fields
@@ -432,6 +498,24 @@ final class CdxServer(spark: SparkSession, clusterDir: String) {
 }
 
 object CdxServer {
+
+  /** the pywb response fields every lookup returns */
+  private val Response = Seq("urlkey", "ts", "json")
+
+  /** a sort-shaped lookup's parameter columns, one value per call */
+  private val ParamColumns = Seq("p_key", "p_target", "p_from", "p_to")
+
+  /** the values of [[ParamColumns]], in order; null where a shape has
+    * none. `key` (the urlkey, SURT prefix or reversed host) also bounds
+    * the lines a lookup reads. */
+  private final case class Params(
+      key: String, target: String = null, from: String = null, to: String = null) {
+    def values: Seq[String] = Seq(key, target, from, to)
+  }
+
+  /** the leaf every lookup shape is described over */
+  private val leafSchema =
+    StructType((Response ++ ParamColumns).map(StructField(_, StringType)))
 
   /** one pywb rules.yaml-style fuzzy rule: under SURT keys starting with
     * `prefix`, canonicalize by replacing every `pattern` match with

@@ -12,18 +12,21 @@ import org.apache.spark.sql.catalyst.trees.TreePattern.LOCAL_RELATION
   * [[ConvertToLocalRelation]] folds Project, Filter and Limit one node at
   * a time; this rule adds the global Sort (stable, by an
   * `InterpretedOrdering`) and coalesce(1) (`Repartition(1, shuffle =
-  * false)`). That covers the sort-shaped cdx-server lookups over
-  * [[graft.CdxServer]]'s driver-read leaf: Sort/Project/Filter/Limit over
-  * coalesce(1) over a LocalRelation that holds only the lookup's lines
-  * (the block reader drops the lines outside its urlkey prefix), so the
-  * interpreted predicates and ordering here run over those lines alone.
+  * false)`).
+  *
+  * Two callers. [[graft.CdxServer]] calls [[fold]] directly on each
+  * driver-local sort-shaped lookup: its description, analyzed once per
+  * server, over the lines its block reader kept, so the lookup is
+  * evaluated here in any session and returns only its result rows.
+  * Registered by [[graft.functions.GraftExtensions]], the rule folds the
+  * same way the plans composed over those rows (`withFilter`,
+  * `withFields`, `pageByKey`, a caller's own sort or limit).
   *
   * All or nothing: a plan holding any other node (Window, Aggregate,
   * Join, ...), a nondeterministic or unevaluable expression, or a
   * streaming relation comes back exactly as it was. Its coalesce(1) then
   * still hands the operators above a single partition, where dropping it
-  * alone would plan a range exchange under the Sort. Registered by
-  * [[graft.functions.GraftExtensions]]. */
+  * alone would plan a range exchange under the Sort. */
 object FoldLocalRelation extends Rule[LogicalPlan] {
 
   // Spark's EliminateSorts runs in a later batch than this rule: applied
@@ -37,7 +40,7 @@ object FoldLocalRelation extends Rule[LogicalPlan] {
     es.forall(e => e.deterministic && !ConvertToLocalRelation.hasUnevaluableExpr(e))
 
   /** the plan's rows as one relation, or None when any node cannot fold */
-  private def fold(plan: LogicalPlan): Option[LocalRelation] = plan match {
+  def fold(plan: LogicalPlan): Option[LocalRelation] = plan match {
     case r: LocalRelation => if (r.isStreaming) None else Some(r)
     case Repartition(1, false, child) => fold(child)
     case GlobalLimit(IntegerLiteral(n), child) => fold(child).map(r => r.copy(data = r.data.take(n)))

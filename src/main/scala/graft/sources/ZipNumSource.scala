@@ -362,13 +362,14 @@ object ZipNumScan {
   /** Reads `blocks` on the calling thread through the reader a scan task
     * uses, so the rows equal one partition of this scan over the same
     * blocks, in the same order, filtered to the urlkeys under `prefix`
-    * when one is given. The lines outside the prefix never become rows:
-    * `CdxServer`'s driver-local leaf holds only its lookup's lines. */
+    * when one is given, or equal to it when `exact` is set. The other
+    * lines never become rows: `CdxServer`'s driver-local leaf holds only
+    * its lookup's lines. */
   def readRows(
       dir: String, blocks: Seq[ZipNum.IdxEntry], fields: Array[String],
-      conf: Configuration, prefix: Option[String]): Vector[InternalRow] = {
+      conf: Configuration, prefix: Option[String], exact: Boolean = false): Vector[InternalRow] = {
     val reader = new ZipNumPartitionReader(
-      blocks.map(blockOf(dir, _)).toArray, fields, new SerializableHadoopConf(conf), prefix)
+      blocks.map(blockOf(dir, _)).toArray, fields, new SerializableHadoopConf(conf), prefix, exact)
     // next() hands out each row once, so the rows need no copy
     try Iterator.continually(reader).takeWhile(_.next()).map(_.get()).toVector
     finally reader.close()
@@ -402,11 +403,13 @@ final case class ZipNumBlockPartition(blocks: Array[(String, Long, Long, Long)])
   * from the line's bytes with one copy per field. A line that is not
   * well-formed UTF-8 is decoded as a `String` first, so its replacement
   * characters are the JDK decoder's. With a `prefix`, only lines whose
-  * urlkey starts with it become rows; the test compares UTF-8 bytes. The
-  * rows of a block are handed out only after its trailer has verified. */
+  * urlkey starts with it become rows, or, when `exact` is set, only lines
+  * whose urlkey is the prefix itself: the line `prefix` alone or a line
+  * starting with `prefix + " "`. The test compares UTF-8 bytes. The rows
+  * of a block are handed out only after its trailer has verified. */
 final class ZipNumPartitionReader(
     blocks: Array[(String, Long, Long, Long)], fields: Array[String],
-    sconf: SerializableHadoopConf, prefix: Option[String])
+    sconf: SerializableHadoopConf, prefix: Option[String], exact: Boolean = false)
   extends PartitionReader[InternalRow] with ZipNum.LineSink {
 
   // parse only what the projection needs: ts/json need the second
@@ -459,7 +462,8 @@ final class ZipNumPartitionReader(
 
   /** one line of the block being read: a row, unless the prefix drops it */
   override def line(b: Array[Byte], from: Int, until: Int): Unit =
-    if (prefixBytes == null || startsWith(b, from, until, prefixBytes)) {
+    if (prefixBytes == null || startsWith(b, from, until, prefixBytes) &&
+        (!exact || keyEndsAt(b, from + prefixBytes.length, until))) {
       // Spark's validity test accepts exactly what the JDK decoder
       // decodes without a replacement
       if (byteTest && UTF8String.fromBytes(b, from, until - from).isValid) {
@@ -478,7 +482,7 @@ final class ZipNumPartitionReader(
         }
       } else {
         val parts = new String(b, from, until - from, UTF_8).split(" ", 3)
-        if (prefix.forall(parts(0).startsWith))
+        if (prefix.forall(p => if (exact) parts(0) == p else parts(0).startsWith(p)))
           rows += row(UTF8String.fromString(parts(0)),
             if (parts.length > 1) UTF8String.fromString(parts(1)) else null,
             if (parts.length > 2) UTF8String.fromString(parts(2)) else null)
@@ -509,6 +513,10 @@ final class ZipNumPartitionReader(
     while (i < until && b(i) != ' ') i += 1
     if (i < until) i else -1
   }
+
+  /** the line ends at `at` or has a space there */
+  private def keyEndsAt(b: Array[Byte], at: Int, until: Int): Boolean =
+    at == until || b(at) == ' '
 
   private def startsWith(b: Array[Byte], from: Int, until: Int, p: Array[Byte]): Boolean =
     until - from >= p.length && util.Arrays.equals(b, from, from + p.length, p, 0, p.length)

@@ -8,7 +8,7 @@ import org.apache.spark.ListenerBusDrain
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
 import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -206,17 +206,16 @@ class CdxServerSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("small-selection lookups: exact job counts per session, same rows in both") {
     val key = "com,example)/path?a=1&b=2"
     // (name, lookup, (jobs, exchanges) in the plain session, the same
-    // under GraftExtensions). Plain: one job over the coalesced local
-    // leaf, and Spark's PropagateEmptyRelation folds the miss. Under
-    // GraftExtensions FoldLocalRelation folds every sort-shaped lookup;
-    // the window lookups keep their one job.
+    // under GraftExtensions). A sort-shaped lookup is evaluated on the
+    // driver in either session and returns its result rows (no job); the
+    // window lookups keep their one job over those rows.
     val lookups = Seq[(String, CdxServer => DataFrame, (Int, Int), (Int, Int))](
-      ("exactUrl", _.exactUrl(key), (1, 0), (0, 0)),
-      ("host", _.host("com,example"), (1, 0), (0, 0)),
-      ("prefix", _.prefix("com,example)/"), (1, 0), (0, 0)),
-      ("domain", _.domain("org,iana"), (1, 0), (0, 0)),
-      ("closest", _.closest(key, "20150301000000", 1), (1, 0), (0, 0)),
-      ("captures", _.captures(key, "20150101000000", "20151231000000"), (1, 0), (0, 0)),
+      ("exactUrl", _.exactUrl(key), (0, 0), (0, 0)),
+      ("host", _.host("com,example"), (0, 0), (0, 0)),
+      ("prefix", _.prefix("com,example)/"), (0, 0), (0, 0)),
+      ("domain", _.domain("org,iana"), (0, 0), (0, 0)),
+      ("closest", _.closest(key, "20150301000000", 1), (0, 0), (0, 0)),
+      ("captures", _.captures(key, "20150101000000", "20151231000000"), (0, 0), (0, 0)),
       ("collapse", _.collapse("com,example)/", 6), (1, 0), (1, 0)),
       ("latest", _.latest("com,example)/"), (1, 0), (1, 0)),
       ("timemap", _.timemap(key), (1, 0), (1, 0)),
@@ -232,23 +231,93 @@ class CdxServerSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(exact.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec])
   }
 
-  test("the driver-local leaf holds exactly the selected blocks' lines under the lookup's key") {
+  test("lookup shapes are analyzed once per server; a lookup's plan holds its rows") {
+    server
+    val fresh = new CdxServer(spark, dir)
+    val key = "com,example)/path?a=1&b=2"
+    assert(fresh.analyzedShapes == 0)
+    // (lookup, whether its result sits under coalesce(1)): the window
+    // lookups compose over the single-partition form of a shape's rows
+    val lookups = Seq[(String => DataFrame, Boolean)](
+      (fresh.exactUrl, false),
+      (k => fresh.captures(k, "20150101000000", "20151231000000"), false),
+      (k => fresh.closest(k, "20150301000000", 1), false),
+      (fresh.prefix, false),
+      (_ => fresh.host("com,example"), false),
+      (_ => fresh.domain("com,example"), false),
+      (fresh.timemap, true),
+      (_ => fresh.collapse("com,example)/", 6), true))
+    Seq(key, "com,example)/other", "com,absent)/").foreach { k =>
+      lookups.foreach { case (lookup, single) =>
+        val df = lookup(k)
+        val rows = df.collect().toSeq.map(r => (0 until 3).map(r.getString))
+        val plan = df.queryExecution.analyzed
+        if (single) assert(plan.exists {
+          case Repartition(1, false, _: LocalRelation) => true
+          case _ => false
+        }, plan)
+        else plan match {
+          case r: LocalRelation =>
+            val held = r.data.map(row =>
+              (0 until 3).map(i => Option(row.getUTF8String(i)).map(_.toString).orNull))
+            assert(held == rows, k)
+          case other => fail(s"not one LocalRelation: $other")
+        }
+      }
+    }
+    // exact, captures, closest, prefix (host too), domain
+    assert(fresh.analyzedShapes == 5)
+  }
+
+  test("readRows holds exactly the selected blocks' lines under the lookup's key") {
     server
     val conf = spark.sparkContext.hadoopConfiguration
     val cluster = ZipNum.readLines(spark, dir).as[String].collect().toSeq
+    val fields = Array("urlkey", "ts", "json")
     Seq("com,example)/path?a=1&b=2", "com,example)").foreach { k =>
-      val leaves = server.prefix(k).queryExecution.analyzed.collect { case r: LocalRelation => r }
-      assert(leaves.size == 1, s"$k: one local leaf")
-      val held = leaves.head.data.map(r => (0 until 3).map(i => r.getUTF8String(i).toString).mkString(" "))
-      assert(held == cluster.filter(_.split(" ", 2)(0).startsWith(k)), k)
-      // the blocks the leaf was read from hold other keys' lines too
       val (lo, hi) = ZipNum.prefixBounds(k)
+      val selected = ZipNum.scanIdxRange(dir, conf, lo, hi)
+      val held = ZipNumScan.readRows(dir, selected, fields, conf, Some(k))
+        .map(r => (0 until 3).map(i => r.getUTF8String(i).toString).mkString(" "))
+      assert(held == cluster.filter(_.split(" ", 2)(0).startsWith(k)), k)
+      // the blocks the rows were read from hold other keys' lines too
       val reader = new ZipNum.BlockReader(conf)
-      val read = try ZipNum.scanIdxRange(dir, conf, lo, hi).flatMap { e =>
+      val read = try selected.flatMap { e =>
         val (file, offset, length, _) = ZipNumScan.blockOf(dir, e)
         reader.lines(file, offset, length).toSeq
       } finally reader.close()
       assert(read.size > held.size, s"$k: the selection holds only the key's lines")
+    }
+  }
+
+  test("an exact-key read keeps the key's lines, its one-field line, no longer key") {
+    val dir = "/tmp/graft_test/server_zipnum_exactkey"
+    val k = "com,exact)/k"
+    val lines = Seq(
+      "com,exact)/j 20200101000000 {}",
+      k, // one field: ts and json null
+      s"$k 20200103000000",
+      s"""$k 20200102000000 {"n":1}""",
+      s"""$k?x=1 20200101000000 {"n":2}""",
+      s"""$k/more 20200101000000 {"n":3}""",
+      s"""${k}z 20200101000000 {"n":4}""")
+    ZipNum.write(lines.toDF("line"), dir, shards = 1, linesPerBlock = 2)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val (lo, hi) = ZipNum.prefixBounds(k)
+    val selected = ZipNum.scanIdxRange(dir, conf, lo, hi)
+    def keys(exact: Boolean): Seq[String] =
+      ZipNumScan.readRows(dir, selected, Array("urlkey", "ts"), conf, Some(k), exact)
+        .map(r => r.getUTF8String(0).toString + " " + Option(r.getUTF8String(1)).getOrElse("-"))
+    assert(keys(exact = false) == lines.filter(_.startsWith(k)).sorted(ZipNum.utf8Ordering)
+      .map { l => val f = l.split(" "); f(0) + " " + f.lift(1).getOrElse("-") })
+    assert(keys(exact = true) == Seq(s"$k -", s"$k 20200102000000", s"$k 20200103000000"))
+    Seq(new CdxServer(spark, dir), new CdxServer(SparkSpec.withExtensions, dir)).foreach { srv =>
+      val got = srv.exactUrl(k).collect().toSeq
+        .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      assert(got == Seq(
+        (k, null, null), (k, "20200102000000", """{"n":1}"""), (k, "20200103000000", null)))
+      assert(srv.closest(k, "20200101000000", 5).select("ts").as[String].collect().toSeq ==
+        Seq("20200102000000", "20200103000000", null))
     }
   }
 
@@ -281,15 +350,17 @@ class CdxServerSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("closest over a small selection compiles no class per target under GraftExtensions") {
+  test("closest over a small selection compiles no class per target in either session") {
     val key = "com,example)/path?a=1&b=2"
-    def closestTs(target: String): Seq[String] =
-      extServer.closest(key, target, 1).select("ts").as[String].collect().toSeq
-    closestTs("20150301000000") // the first call compiles the shared shapes
-    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    assert(closestTs("20150101000000") == Seq("20150215012345"))
-    assert(closestTs("20160101000000") == Seq("20150402083000"))
-    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled)
+    Seq(server, extServer).foreach { srv =>
+      def closestTs(target: String): Seq[String] =
+        srv.closest(key, target, 1).select("ts").as[String].collect().toSeq
+      closestTs("20150301000000") // the first call compiles the shared shapes
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(closestTs("20150101000000") == Seq("20150215012345"))
+      assert(closestTs("20160101000000") == Seq("20150402083000"))
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled)
+    }
   }
 
   test("under GraftExtensions a selection over BlocksPerPartition blocks keeps the V2 scan") {

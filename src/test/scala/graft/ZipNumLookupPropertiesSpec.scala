@@ -5,6 +5,10 @@ import java.nio.file.{Files, Paths}
 
 import graft.formats.{Gzip, ZipNum}
 import graft.sources.ZipNumScan
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -26,9 +30,14 @@ import org.scalacheck.rng.Seed
   * with `split(" ", 3)`), byte for byte, for lines of every shape that
   * split treats specially and for lines that are not well-formed UTF-8;
   * and a read with a urlkey prefix must equal the full read filtered by
-  * `urlkey startsWith`.
+  * `urlkey startsWith` (by `urlkey ==` for an exact-key read).
+  *
+  * Every sort-shaped `CdxServer` lookup must equal a brute-force filter
+  * and stable sort of the cluster's lines, both over a cluster of few
+  * blocks, where it is evaluated on the driver, and over the same lines at
+  * one line per block, where its selection takes the parallel scan.
   */
-class ZipNumLookupPropertiesSpec extends SparkSpec {
+class ZipNumLookupPropertiesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
   import ZipNumLookupPropertiesSpec.Trial
 
@@ -187,6 +196,7 @@ class ZipNumLookupPropertiesSpec extends SparkSpec {
     var malformedLines = 0
     var longLines = 0
     var stringOnlyHits = 0
+    var exactHits = 0
     (0 until 4).foreach { i =>
       val seed = 20261020L + i
       val blocks = payloads.pureApply(Gen.Parameters.default, Seed(seed))
@@ -242,14 +252,166 @@ class ZipNumLookupPropertiesSpec extends SparkSpec {
           assert(read(fields, Some(p)) == project(under, fields),
             s"seed=$seed prefix='$p' fields=${fields.mkString(",")}")
         }
+        // the exact-key read: only lines whose urlkey is `p` itself
+        val exact = ZipNumScan.readRows(dir, entries, all, conf, Some(p), exact = true)
+          .map(r => all.indices.map { f =>
+            if (f == 3) r.getLong(f) else Option(r.getUTF8String(f)).map(_.getBytes.toSeq)
+          })
+        assert(exact == expected.filter(urlkey(_) == p), s"seed=$seed exact key='$p'")
+        exactHits += exact.size
       }
     }
-    assert(malformedLines > 0 && longLines > 0 && stringOnlyHits > 0,
-      s"$malformedLines malformed lines, $longLines long lines, $stringOnlyHits rows under U+FFFD/surrogate prefixes")
+    assert(malformedLines > 0 && longLines > 0 && stringOnlyHits > 0 && exactHits > 0,
+      s"$malformedLines malformed lines, $longLines long lines, $stringOnlyHits rows under " +
+        s"U+FFFD/surrogate prefixes, $exactHits exact-key rows")
+  }
+
+  // timestamps of every kind a cluster can hold: valid, calendar-invalid
+  // (month 13, Feb 30, Feb 29 of a common year, hour 25) and malformed
+  private val validTs: Gen[String] =
+    Gen.choose(946684800L, 1893456000L).map(e => ZipNumLookupPropertiesSpec.Ts14.format(
+      java.time.Instant.ofEpochSecond(e)))
+  private val anyTs: Gen[String] = Gen.frequency(
+    8 -> validTs,
+    1 -> Gen.oneOf("20201301000000", "20200230120000", "20210229000000", "20200101250000"),
+    1 -> Gen.oneOf("2020", "abcdefghijklmn", "2020010100000x", "2020-01-01T00"))
+
+  /** a host of one to three labels, and a key under it */
+  private val hostGen: Gen[String] =
+    Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, Gen.oneOf("a", "b", "\uE000",
+      new String(Character.toChars(0x1F600))))).map(_.mkString(","))
+  private def keyUnder(host: String): Gen[String] =
+    Gen.choose(0, 3).flatMap(n => Gen.listOfN(n, keyChar)).map(p => host + ")/" + p.mkString)
+
+  /** one capture line: 1, 2 (json NULL) or 3 fields */
+  private def lineOf(key: String): Gen[String] = for {
+    ts <- anyTs
+    fields <- Gen.frequency(1 -> 1, 2 -> 2, 12 -> 3)
+    n <- Gen.choose(0, 9)
+  } yield fields match {
+    case 1 => key
+    case 2 => s"$key $ts"
+    case _ => s"""$key $ts {"n":$n}"""
+  }
+
+  private val lookupTrial: Gen[(List[String], List[String])] = for {
+    hosts <- Gen.listOfN(3, hostGen)
+    hot <- Gen.sequence[List[String], String](hosts.map(keyUnder))
+    hotLines <- Gen.sequence[List[List[String]], List[String]](hot.map(k =>
+      Gen.choose(70, 110).flatMap(n => Gen.listOfN(n, lineOf(k)))))
+    coldKeys <- Gen.listOfN(120,
+      Gen.oneOf(keyChars.map(_.mkString), Gen.oneOf(hosts).flatMap(keyUnder)))
+    coldLines <- Gen.sequence[List[List[String]], List[String]](coldKeys.map(k =>
+      Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, lineOf(k)))))
+    // (urlkey, ts) peers: copies of hot lines under another json
+    dups <- Gen.listOfN(30, Gen.oneOf(hotLines.flatten).map(l =>
+      l.split(" ", 3).take(2).mkString(" ") + " {\"dup\":1}"))
+  } yield (hosts, hotLines.flatten ++ coldLines.flatten ++ dups)
+
+  test("sort-shaped lookups equal a brute-force filter on the driver-local and the parallel path") {
+    import ZipNumLookupPropertiesSpec.{Cap, epoch}
+    val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    var parallel = 0
+    (0 until 3).foreach { i =>
+      val seed = 20261021L + i
+      val (hosts, lines) = lookupTrial.pureApply(Gen.Parameters.default, Seed(seed))
+      val caps = lines.sorted(ZipNum.utf8Ordering).map(Cap(_))
+      val local = s"$base/lookup$i/local"
+      val wide = s"$base/lookup$i/wide"
+      ZipNum.write(lines.toDF("line"), local, shards = 1, linesPerBlock = (lines.size + 39) / 40)
+      ZipNum.write(lines.toDF("line"), wide, shards = 2, linesPerBlock = 1)
+      assert(ZipNum.readIdx(local, conf).size <= ZipNumScan.BlocksPerPartition)
+      val servers = Seq(local -> new CdxServer(spark, local), wide -> new CdxServer(spark, wide))
+      val r = new scala.util.Random(seed)
+      val hotKeys = caps.groupBy(_.urlkey).filter(_._2.size > ZipNumScan.BlocksPerPartition)
+        .keys.toSeq.sorted(ZipNum.utf8Ordering)
+      val keys = hotKeys ++ Seq(caps(r.nextInt(caps.size)).urlkey, hotKeys.head + "-absent")
+      val byTs = Ordering.Option(Ordering.String)
+      val byKeyTs: Ordering[Cap] = (a: Cap, b: Cap) => {
+        val c = ZipNum.utf8Compare(a.urlkey, b.urlkey)
+        if (c != 0) c else byTs.compare(a.ts, b.ts)
+      }
+      // (name, lookup, brute-force rows in full order, row limit, sort key)
+      type Case = (String, CdxServer => DataFrame, Seq[Cap], Int, Cap => Any)
+      val cases: Seq[Case] = keys.flatMap { k =>
+        val own = caps.filter(_.urlkey == k)
+        val valid = own.flatMap(_.ts).filter(epoch(_, zone).nonEmpty).sorted
+        val (from, to) =
+          if (valid.isEmpty) ("20000101000000", "20991231000000")
+          else (valid(valid.size / 4), valid(valid.size * 3 / 4))
+        val target = if (valid.isEmpty) "20150101000000" else valid(r.nextInt(valid.size))
+        def dist(c: Cap): Option[Long] =
+          for (t <- c.ts; a <- epoch(t, zone); b <- epoch(target, zone)) yield math.abs(a - b)
+        // a null distance sorts last
+        val closest = own.sortBy(c => (dist(c).getOrElse(Long.MaxValue), c.ts))(
+          Ordering.Tuple2(Ordering.Long, byTs))
+        val inBox = own.filter(c => c.ts.exists(t => t >= from && t <= to))
+        Seq[Case](
+          (s"exactUrl($k)", _.exactUrl(k), own.sortBy(_.ts)(byTs), Int.MaxValue, _.ts),
+          (s"captures($k, $from, $to)", _.captures(k, from, to), inBox.sortBy(_.ts)(byTs),
+            Int.MaxValue, _.ts)) ++
+          Seq(1, 5, own.size + 3).map(n => (s"closest($k, $target, $n)",
+            (s: CdxServer) => s.closest(k, target, n), closest, n,
+            (c: Cap) => (dist(c), c.ts)): Case)
+      } ++ hosts.distinct.flatMap { h =>
+        val under = (p: String) => caps.filter(_.urlkey.startsWith(p)).sorted(byKeyTs)
+        Seq[Case](
+          (s"host($h)", _.host(h), under(h + ")"), Int.MaxValue, c => (c.urlkey, c.ts)),
+          (s"domain($h)", _.domain(h), caps.filter(c => c.urlkey.startsWith(h + ")") ||
+            c.urlkey.startsWith(h + ",")).sorted(byKeyTs), Int.MaxValue, c => (c.urlkey, c.ts)),
+          // a host's first label is one whole key character
+          (s"prefix(${h.split(",").head})", _.prefix(h.split(",").head), under(h.split(",").head),
+            Int.MaxValue, c => (c.urlkey, c.ts)))
+      }
+      for ((dir, server) <- servers; (name, lookup, all, limit, sortKey) <- cases) {
+        val at = s"seed=$seed $dir $name"
+        val df = lookup(server)
+        val got = df.collect().toSeq
+          .map(r => Cap(r.getString(0), Option(r.getString(1)), Option(r.getString(2))))
+        val expect = all.take(limit)
+        if (dir == local) {
+          // evaluated on the driver: peers keep the cluster's line order
+          assert(df.queryExecution.analyzed.isInstanceOf[LocalRelation], at)
+          assert(got == expect, at)
+        } else {
+          // the parallel sort does not promise an order among peers, nor
+          // which peers a limit keeps: same keys in the same order, each
+          // row one of its key's rows
+          assert(got.map(sortKey) == expect.map(sortKey), at)
+          got.groupBy(sortKey).foreach { case (key, rows) =>
+            assert(rows.diff(all.filter(sortKey(_) == key)).isEmpty, s"$at: rows of $key")
+          }
+          parallel += collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }.size
+        }
+      }
+    }
+    assert(parallel > 0, "no lookup took the parallel scan")
   }
 }
 
 object ZipNumLookupPropertiesSpec {
+  val Ts14: java.time.format.DateTimeFormatter =
+    java.time.format.DateTimeFormatter.ofPattern("uuuuMMddHHmmss").withZone(java.time.ZoneOffset.UTC)
+
+  /** seconds since the epoch of a 14-digit timestamp that names a real
+    * instant in `zone`, as `try_to_timestamp(ts, "yyyyMMddHHmmss")` */
+  def epoch(ts: String, zone: java.time.ZoneId): Option[Long] =
+    if (!ts.matches("\\d{14}")) None
+    else scala.util.Try(java.time.LocalDateTime.parse(ts,
+      java.time.format.DateTimeFormatter.ofPattern("uuuuMMddHHmmss")
+        .withResolverStyle(java.time.format.ResolverStyle.STRICT))
+      .atZone(zone).toEpochSecond).toOption
+
+  /** one cluster line as a lookup returns it */
+  final case class Cap(urlkey: String, ts: Option[String], json: Option[String])
+  object Cap {
+    def apply(line: String): Cap = {
+      val f = line.split(" ", 3)
+      Cap(f(0), f.lift(1), f.lift(2))
+    }
+  }
+
   /** one random cluster: its input lines, both layouts, and the lookups */
   final case class Trial(
       lines: Seq[String], shards: Int, linesPerBlock: Int,
